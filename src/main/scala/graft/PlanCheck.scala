@@ -75,28 +75,6 @@ object PlanCheck {
           .filter(_.onto == "src").collect().toSeq).toDF()
     }
 
-    // 7. candidate join is size-conditional: forced hint broadcasts even
-    // with stats disabled; the default defers to Catalyst/AQE statistics
-    // (no broadcast once autoBroadcastJoinThreshold is off)
-    {
-      import graft.operators.index
-      val posting = index.postingsFromText(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
-      val q = posting.limit(50).select(col("class_id").as("query_id"), col("token"))
-      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        check("candidates: forced broadcast hint survives stats-off",
-          wanted = Seq("BroadcastHashJoin")) {
-          index.idfCandidates(q, posting, 500, 5, broadcastPostings = Some(true))
-        }
-        check("candidates: default join mode defers to size statistics",
-          wanted = Seq.empty, unwanted = Seq("BroadcastHashJoin")) {
-          index.idfCandidates(q, posting, 500, 5)
-        }
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    }
-
     // 9. width pins survive: the candidate fan-out join (per token,
     // |q-docs| × df output rows) must run as a BROADCAST of the
     // catalog-bounded postings (r7: forced hint — without it the SMJ

@@ -45,6 +45,18 @@ object align {
       scored.select(col("to_id").as("entity1"), col("from_id").as("entity2"),
         col("score").as("value"))
 
+  /** Distinct class counts of both catalog sides in ONE action:
+    * (dSrc, dTgt). Each is the IDF `D` of the direction searching that
+    * side and the gate of its forced postings broadcast
+    * (`route.broadcastCatalog`). */
+  def sideSizes(srcLabels: DataFrame, tgtLabels: DataFrame): (Long, Long) = {
+    val sizes = srcLabels.select(lit("src").as("s"), col("id"))
+      .unionByName(tgtLabels.select(lit("tgt").as("s"), col("id")))
+      .groupBy("s").agg(countDistinct("id").as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    (sizes.getOrElse("src", 0L), sizes.getOrElse("tgt", 0L))
+  }
+
   /** Threshold filter (onto_eval.py:104-106, onto_extend.py:125-129). */
   def atThreshold(mappings: DataFrame, t: Double): DataFrame =
     mappings.filter(col("value") >= lit(t))

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import graft.plans.route
 import graft.plans.stage.implicits._
 
 /**
@@ -30,86 +32,53 @@ object canonical {
    * graph would never finish; this variant finishes in ~20.
    * `edges` must carry (entity1, entity2). Returns (id, canonical).
    */
-  /** Spark SQL's total order for the local fast path: numeric natural
-    * order; strings in UTF-8 byte order (UTF8String.compareTo — NOT
-    * java.lang.String.compareTo, which is UTF-16-code-unit ordered and
-    * disagrees above the BMP). Types without a cheap local twin return
-    * None and route to the distributed loop. */
-  private def localLt(dt: org.apache.spark.sql.types.DataType)
-      : Option[(Any, Any) => Boolean] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some((x, y) => x.asInstanceOf[Number].longValue < y.asInstanceOf[Number].longValue)
-      case StringType =>
-        Some((x, y) => graft.operators.vocab.utf8Lt(x.asInstanceOf[String], y.asInstanceOf[String]))
-      case _ => None
-    }
-  }
-
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           maxIter: Int = 20,
                           maxLocalEdges: Long = 5000000L): DataFrame = {
-    var e = edges.select(col("entity1").as("a"), col("entity2").as("b"))
+    val e = edges.select(col("entity1").as("a"), col("entity2").as("b"))
       .unionByName(edges.select(col("entity2").as("a"), col("entity1").as("b")))
       .distinct()
       .materialize
-    // r7 fast path: a GUARDED driver-local union-find for dup-graph-sized
-    // edge lists — the learnMergesLocal/trie-linker pattern. The iterative
-    // loop costs ~3 actions/round + 2 count jobs/compression pass in pure
-    // scheduler latency; measured on q60's 25-edge graph it was ~8.5 s of
-    // a 15.1 s query. The directed edge list is already materialized (the
-    // one corpus-proportional computation either way), so the guard count
-    // is ~free and the collect is bounded: maxLocalEdges=5M double-sided
-    // rows ≈ hundreds of MB of driver heap worst-case (strings) — the same
-    // budget class as maxDictEntities. Result ≡ the distributed loop's
-    // converged answer: min entity per component with union-by-min —
-    // CanonicalSpec pins local ≡ distributed on mixed shapes. Graphs past
-    // the guard (the 100 TB dedup-graph regime) take the distributed
-    // pointer-jumping loop below, unchanged.
-    val fastLt = localLt(e.schema("a").dataType)
-    if (fastLt.isDefined && e.count() <= maxLocalEdges) {
-      val lt = fastLt.get
-      val rows = e.collect()
-      // null endpoints take the distributed loop (its joins define the
-      // null semantics; a local comparator on null would NPE)
-      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return connectedComponentsLoop(spark, e, maxIter)
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      rows.foreach { row =>
-        val a = row.get(0)
-        val b = row.get(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      val idType = e.schema("a").dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("canonical", idType)))
-      val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
-      val it = parent.keySet().iterator()
-      while (it.hasNext) {
-        val id = it.next()
-        out.add(org.apache.spark.sql.Row(id, find(id)))
-      }
-      return spark.createDataFrame(out, schema)
+    // Dup-graph-sized edge lists are solved driver-local by union-by-min,
+    // the loop's converged answer (CanonicalSpec pins local ≡ distributed).
+    // The loop's scheduler latency (~3 actions a round) dominates small
+    // graphs; graphs past maxLocalEdges (~hundreds of MB of driver heap at
+    // 5M string rows) take the distributed pointer-jumping loop below.
+    route.local(e, maxLocalEdges, "connectedComponents", Seq("a", "b")) match {
+      case Some(rows) => componentsLocal(spark, rows, e.schema("a").dataType)
+      case None => connectedComponentsLoop(spark, e, maxIter)
     }
-    connectedComponentsLoop(spark, e, maxIter)
+  }
+
+  /** Union-find with the min id (Spark's order) as every set's root. */
+  private def componentsLocal(spark: SparkSession, rows: Array[Row],
+                              idType: DataType): DataFrame = {
+    val lt = route.lt(idType)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    rows.foreach { row =>
+      val a = row.get(0)
+      val b = row.get(1)
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+    }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(parent.keySet().asScala.toSeq.map(id => Row(id, find(id))).asJava,
+      StructType(Seq(StructField("id", idType), StructField("canonical", idType))))
   }
 
   /** The distributed pointer-jumping loop over a materialized, double-
     * sided, distinct (a, b) edge list — the 100 TB path (and the null-id /
-    * unsupported-id-type fallback of the local fast path above). */
+    * unsupported-id-type fallback of the local route above). */
   private def connectedComponentsLoop(spark: SparkSession, e0: DataFrame,
                                       maxIter: Int): DataFrame = {
     var e = e0

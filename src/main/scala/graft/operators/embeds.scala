@@ -58,15 +58,16 @@ object embeds {
     val qTokens = index.postingsFromText(fromLabels, "id", "label", 0, tokenizer)
       .withColumnRenamed("class_id", "query_id")
     val toPost = index.postingsFromText(toLabels, "id", "label", 0, tokenizer)
-    // r7: force the postings broadcast — catalog-dimension contract, same
+    // force the postings broadcast while the to-side is catalog-sized, same
     // rationale as nes.alignOneSide (without it the token fan-out was
     // shuffled at full volume into the (query, class) agg; measured
     // 180.8 MB at sf0.1 — see nes.scala for the full plan argument)
+    val bc = graft.plans.route.broadcastCatalog(d, "embeds postings")
     val cands = (if (fixedPointIdf)
         index.idfCandidatesFixedPoint(qTokens, toPost, d, candidateLimit,
-          broadcastPostings = Some(true), widthHint = w)
+          broadcastPostings = bc, widthHint = w)
       else index.idfCandidates(qTokens, toPost, d, candidateLimit,
-        broadcastPostings = Some(true), widthHint = w))
+        broadcastPostings = bc, widthHint = w))
       .select(col("query_id").as("from_id"), col("class_id").as("to_id"))
     val scored = cands
       .join(fromVecs.select(col("id").as("from_id"), col("emb").as("fv")), "from_id")
@@ -90,17 +91,14 @@ object embeds {
     // session CacheManager forever, checkpoint blocks release on GC
     val srcVecs = classEmbeddings(spark, srcLabels, dim).materialize
     val tgtVecs = classEmbeddings(spark, tgtLabels, dim).materialize
-    val sizes = srcLabels.select(lit("s").as("side"), col("id"))
-      .unionByName(tgtLabels.select(lit("t").as("side"), col("id")))
-      .groupBy("side").agg(countDistinct("id").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
     val s2t = align.orient(
       alignOneSide(srcLabels, tgtLabels, srcVecs, tgtVecs,
-        sizes.getOrElse("t", 0L), candidateLimit, nbest, tokenizer),
+        dTgt, candidateLimit, nbest, tokenizer),
       fromIsSrc = true)
     val t2s = align.orient(
       alignOneSide(tgtLabels, srcLabels, tgtVecs, srcVecs,
-        sizes.getOrElse("s", 0L), candidateLimit, nbest, tokenizer),
+        dSrc, candidateLimit, nbest, tokenizer),
       fromIsSrc = false)
     align.atThreshold(align.combine(s2t, t2s), threshold)
   }

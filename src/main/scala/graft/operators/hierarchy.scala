@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import graft.plans.route
 import graft.plans.stage.implicits._
 
 /**
@@ -20,21 +22,20 @@ object hierarchy {
   /** (id, depth) with depth = length of the LONGEST path to a root when
     * `longest`, else the shortest. Roots (no parent) have depth 0.
     *
-    * r7 fast path: hierarchy edge lists are catalog-dimension by contract
-    * (ontology is-a edges — even million-class ontologies are a few MB),
-    * and the frontier loop costs ~3 actions × DAG-height rounds in pure
-    * scheduler latency (measured: 1.9 s for a height-6 DAG at sf0.1, all
-    * overhead). Edge lists under `maxLocalEdges` with a supported id type
-    * are collected once (the distinct edge list is materialized either
-    * way) and solved exactly with a driver-local Kahn topological pass —
-    * ≡ the converged frontier relaxation (HierarchySpec pins local ≡
-    * distributed). Cyclic inputs and big graphs keep the distributed
-    * loop (a cycle never drains the Kahn queue — detected, not wrong). */
+    * Hierarchy edge lists are catalog-dimension by contract (ontology is-a
+    * edges: even million-class ontologies are a few MB), and the frontier
+    * loop costs ~3 actions per DAG level in scheduler latency. Edge lists
+    * the route admits (at most `maxLocalEdges`, integral or string ids, no
+    * nulls) are solved exactly by a driver-local Kahn pass, ≡ the converged
+    * frontier relaxation (HierarchySpec pins local ≡ distributed). Cyclic
+    * inputs and everything else keep the distributed loop (a cycle never
+    * drains the Kahn queue: detected, not wrong). */
   def depth(spark: SparkSession, edges: DataFrame, longest: Boolean,
             maxRounds: Int = 64, maxLocalEdges: Long = 5000000L): DataFrame = {
     val e = edges.select(col("child_iri"), col("parent_iri")).distinct()
       .materialize
-    val localOut = depthLocal(spark, e, longest, maxLocalEdges)
+    val localOut = route.local(e, maxLocalEdges, "hierarchy.depth", Seq("child_iri", "parent_iri"))
+      .flatMap(depthLocal(spark, _, e.schema("child_iri").dataType, longest))
     if (localOut.isDefined) return localOut.get
     val nodes = e.select(col("child_iri").as("id"))
       .unionByName(e.select(col("parent_iri").as("id"))).distinct()
@@ -72,27 +73,14 @@ object hierarchy {
     depths
   }
 
-  /** Driver-local exact depth over a collected DISTINCT edge list (must
-    * already be materialized — the collect re-reads cached blocks). Returns
-    * None when the graph is too big, the id type has no local ordering
-    * twin, or a cycle is detected (Kahn queue does not drain) — callers
-    * then run the distributed loop. Depth arithmetic is identical:
-    * longest/shortest path from the root set, roots = nodes with no
-    * parent, every node finalized only after all its parents (Kahn), so
-    * the result equals the converged frontier relaxation. */
-  private def depthLocal(spark: SparkSession, e: DataFrame, longest: Boolean,
-                         maxLocalEdges: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
-    val idType = e.schema("child_iri").dataType
-    val supported = idType match {
-      case ByteType | ShortType | IntegerType | LongType | StringType => true
-      case _ => false
-    }
-    if (!supported || e.count() > maxLocalEdges) return None
-    val rows = e.collect()
-    // null endpoints take the distributed loop (its joins define the null
-    // semantics)
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+  /** Driver-local exact depth over a collected DISTINCT edge list: None
+    * when a cycle is detected (the Kahn queue does not drain) and the
+    * distributed loop decides. Depth arithmetic is identical: longest or
+    * shortest path from the root set, roots = nodes with no parent, every
+    * node finalized only after all its parents (Kahn), so the result
+    * equals the converged frontier relaxation. */
+  private def depthLocal(spark: SparkSession, rows: Array[Row], idType: DataType,
+                         longest: Boolean): Option[DataFrame] = {
     import scala.collection.mutable
     val children = new mutable.HashMap[Any, mutable.ArrayBuffer[Any]]()
     val nParents = new mutable.HashMap[Any, Int]()
@@ -128,8 +116,8 @@ object hierarchy {
     if (visited != nodes.size) return None // cycle: distributed loop decides
     val schema = StructType(Seq(StructField("id", idType),
       StructField("depth", LongType)))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](depth.size)
-    nodes.foreach { n => out.add(org.apache.spark.sql.Row(n, depth(n))) }
+    val out = new java.util.ArrayList[Row](depth.size)
+    nodes.foreach { n => out.add(Row(n, depth(n))) }
     Some(spark.createDataFrame(out, schema))
   }
 

@@ -51,9 +51,9 @@ object nes {
     val qTokens = index.postingsFromText(from, "id", "label", 0, tokenizer)
       .withColumnRenamed("class_id", "query_id")
     val toPost = index.postingsFromText(to, "id", "label", 0, tokenizer)
-    // r7: force the postings broadcast — the to-side is a catalog dimension
-    // by this operator's contract (same bound as the classifier mode's
-    // alignOneSide, which already forces it). Without the hint Catalyst's
+    // force the postings broadcast while the to-side is catalog-sized
+    // (`d` within route.MaxCatalog, the classifier mode's gate too; past it
+    // Spark's size statistics decide). Without the hint Catalyst's
     // size estimate of the exploded postings routed this to a sort-merge
     // join: both sides exchanged by token and, decisively, the hot-token
     // fan-out OUTPUT was then token-partitioned, so the (query, class) agg
@@ -62,11 +62,12 @@ object nes {
     // in the width-pinned hash(query_id) partitioning where the partial
     // aggregation collapses it COMPLETELY before any exchange — and the
     // agg + top-k window reuse that one exchange (guide §3.1/§2.3).
+    val bc = graft.plans.route.broadcastCatalog(d, "nes postings")
     val cands = (if (fixedPointIdf)
         index.idfCandidatesFixedPoint(qTokens, toPost, d, candidateLimit,
-          broadcastPostings = Some(true), widthHint = w)
+          broadcastPostings = bc, widthHint = w)
       else index.idfCandidates(qTokens, toPost, d, candidateLimit,
-        broadcastPostings = Some(true), widthHint = w))
+        broadcastPostings = bc, widthHint = w))
       .select(col("query_id").as("from_id"), col("class_id").as("to_id"))
     val pairs = cands
       .join(from.select(col("id").as("from_id"), col("label").as("l1")), "from_id")

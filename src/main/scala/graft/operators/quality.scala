@@ -143,9 +143,10 @@ object quality {
    * are one map-side pass plus one (id)-keyed partial-combined agg.
    * Shingles travel as `dedup.contentKey` (8 bytes), never as strings.
    *
-   * The broadcast is GUARDED, not assumed (the `maxDictEntities`/
-   * `linker=auto` pattern): one dimension-side count of the distinct
-   * bench keys routes the plan — under `maxBenchShingles` (default 20M ≈
+   * The broadcast is GUARDED, not assumed: one exact dimension-side count
+   * of the distinct bench keys routes the plan (a count, not
+   * `route.local`'s bounded probe, because the persisted bench side feeds
+   * the join on both routes; the fallback prints `route.note`'s line) — under `maxBenchShingles` (default 20M ≈
    * ~1 GB of broadcast hash relation) the bench set broadcasts; over it —
    * a caller "decontaminating" against a corpus slice rather than an eval
    * suite — the operator falls back to a width-pinned co-partitioned
@@ -180,11 +181,10 @@ object quality {
         trainSh.join(broadcast(benchSh), Seq("shk"))
           .groupBy("id").agg(count(lit(1)).as("n_overlap"))
       } else {
-        System.err.println(s"[graft] decontaminate: $nBench distinct bench " +
-          s"shingle keys exceed maxBenchShingles=$maxBenchShingles — " +
-          "falling back to a width-pinned shuffled join (the bench side " +
-          "does not look like an eval suite; raise maxBenchShingles " +
-          "explicitly if the broadcast is intended)")
+        // the bench side does not look like an eval suite: a width-pinned
+        // shuffled join (raise maxBenchShingles if the broadcast is intended)
+        graft.plans.route.note("decontaminate bench shingles", maxBenchShingles,
+          nBench.toString, "over bound")
         val w = if (widthHint > 0) widthHint
           else train.sparkSession.sparkContext.defaultParallelism
         // materialize the per-doc overlap NOW so the over-cap bench cache

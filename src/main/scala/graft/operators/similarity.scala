@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.route
 
 /**
  * Similarity search over an embedding column (array<float>) — approximate
@@ -112,38 +113,36 @@ object similarity {
       .drop("_vn", "_sims")
   }
 
-  /** Collect a centroid table to the driver, sorted by ascending cell id:
-    * Some(cell ids as longs, matrix) — or None when the table exceeds
-    * `maxLiteralCentroids` (the `limit` bounds the probe itself, so an
-    * over-bound table costs max+1 rows, never an OOM) and the caller
-    * should take the broadcast path instead. The within-bound collect is
-    * the same driver-memory cost the broadcast already paid. */
+  /** A centroid table on the driver, sorted by ascending cell id:
+    * Some(cell ids, matrix) when the route admits it (at most
+    * `maxLiteralCentroids` rows, integral cells, no null cell), else None
+    * and the caller takes the broadcast path. Integral cells are read as
+    * they are, so the literal path orders the ids the broadcast window
+    * orders; string, decimal and null cells keep the window's own order. */
   private def collectCentroids(centroids: DataFrame)
-      : Option[(Seq[Long], Seq[Seq[Double]])] = {
-    val rows = centroids
-      .select(col("cell").cast("long").as("cell"), toDoubleArray(col("cvec")).as("cv"))
-      .limit(maxLiteralCentroids + 1).collect()
-    if (rows.length > maxLiteralCentroids) return None
-    val sorted = rows.sortBy(_.getLong(0))
-    Some((sorted.toSeq.map(_.getLong(0)), sorted.toSeq.map(_.getSeq[Double](1))))
-  }
+      : Option[(Seq[Long], Seq[Seq[Double]])] =
+    route.local(centroids.select(col("cell"), toDoubleArray(col("cvec")).as("cv")),
+        maxLiteralCentroids, "assignCells literal", Seq("cell"), route.Integral)
+      .map { rows =>
+        val sorted = rows.toSeq.map(r => (r.getAs[Number](0).longValue, r.getSeq[Double](1)))
+          .sortBy(_._1)
+        (sorted.map(_._1), sorted.map(_._2))
+      }
 
-  /** Assign each vector to its nearest centroid (IVF cell). `centroids`
-    * must be small (the same bound the previous broadcast paid). Returns
+  /** Assign each vector to its nearest centroid (IVF cell). Returns
     * input + (cell).
     *
     * Plan shape: ONE zero-shuffle projection — the centroid matrix is
-    * collected once (bounded, guarded) and inlined as a literal, and the
-    * per-row nearest cell is `nearestIdxExpr`. The previous shape
-    * (crossJoin(broadcast(cen)) → k rows per vector → window partitionBy
-    * id) shuffled and sorted the ENTIRE vector table by id just to pick a
-    * per-row argmax; at 10^10 vectors that exchange is the dominant cost
-    * of IVF assignment and it carries the vectors themselves. Same
-    * per-pair cosine arithmetic, same (sim desc, cell asc) tie-break —
-    * results are bit-identical (SimilaritySpec + q26/q57/q75 oracles).
-    * Centroid tables past `maxLiteralCentroids` use
-    * `assignCellsBroadcast` — the old plan, kept for the many-cells
-    * regime where a literal would bloat every task closure. */
+    * collected once through the route and inlined as a literal, and the
+    * per-row nearest cell is `withNearestIdx`. `assignCellsBroadcast`
+    * (crossJoin + id-keyed window) shuffles and sorts the whole vector
+    * table by id to pick a per-row argmax; at 10^10 vectors that exchange
+    * dominates IVF assignment. Same per-pair cosine arithmetic, same
+    * (sim desc, cell asc) tie-break — results are bit-identical
+    * (DedupSimSpec + q26/q57/q75 oracles). Centroid tables the route
+    * declines (past `maxLiteralCentroids`, where a literal would bloat
+    * every task closure, or with non-integral or null cells) take
+    * `assignCellsBroadcast`. */
   def assignCells(vectors: DataFrame, centroids: DataFrame,
                   idCol: String, vecCol: String): DataFrame =
     collectCentroids(centroids) match {
@@ -158,13 +157,13 @@ object similarity {
             .withColumn("cell",
               element_at(typedLit(cells), (col("_ix") + 1).cast("int")).cast(cellType))
             .select("id", "v", "cell")
-      case None => // many-cells regime: the literal would bloat the plan
+      case None =>
         assignCellsBroadcast(vectors, centroids, idCol, vecCol)
     }
 
-  /** The pre-round-7 assignment plan (crossJoin broadcast + id-keyed
-    * window): the fallback for centroid tables too big to inline as a
-    * literal. Bit-identical results to `assignCells`. */
+  /** The broadcast assignment plan (crossJoin broadcast + id-keyed
+    * window): the fallback for centroid tables the literal path declines.
+    * Bit-identical results to `assignCells`. */
   def assignCellsBroadcast(vectors: DataFrame, centroids: DataFrame,
                            idCol: String, vecCol: String): DataFrame = {
     val v = vectors.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
@@ -361,21 +360,22 @@ object similarity {
     requireDim(vectors, vecCol, m * subDim, "pqFitCodebooks")
     // one guard count for all m fits — the input is the same every time
     val nFit = vectors.count()
-    // r7: the m fits are INDEPENDENT jobs over the same input — submit
+    // the m fits are INDEPENDENT jobs over the same input — submit
     // them from concurrent driver threads so each fit's small per-round
     // jobs back-fill the executors the others leave idle (guide §2.6).
     // Each fit is deterministic on its own slice; the union order is the
-    // subspace order, unchanged.
-    import scala.concurrent.{Await, Future}
+    // subspace order, unchanged. `blocking` lets the global pool add a
+    // thread while a fit waits on its jobs instead of starving other users.
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    (0 until m).map { s => Future {
+    (0 until m).map { s => Future { blocking {
       val sub = vectors.select(col(idCol).as("id"),
         slice(col(vecCol), s * subDim + 1, subDim).as("sv"))
       fitCentroidsForIvf(kmeansFit(sub, "id", "sv", k, iters, maxFitRows,
           preCountedRows = Some(nFit)))
         .select(lit(s).as("subspace"), col("cell"), col("cvec"))
-    } }.map(Await.result(_, Duration.Inf)).reduce(_ union _)
+    } } }.map(Await.result(_, Duration.Inf)).reduce(_ union _)
   }
 
   /**
@@ -387,39 +387,37 @@ object similarity {
    * difference between an ANN index that fits in executor memory at
    * 10^10 vectors and one that doesn't.
    *
-   * One broadcast join (codebook is m·k rows) + one per-(id, subspace)
-   * bounded window — no shuffle of the vector table beyond its own width.
+   * One zero-shuffle projection over the inlined codebook (m·k rows), or
+   * `pqEncodeBroadcast` when the route declines the codebook.
    */
   def pqEncode(vectors: DataFrame, codebooks: DataFrame,
                idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame = {
     requireDim(vectors, vecCol, m * subDim, "pqEncode")
-    // codebooks are m·k rows by contract (they were broadcast before) —
-    // collect once and inline per-subspace matrices as literals. The
-    // encode is then ONE zero-shuffle projection: the old shape exploded
-    // every vector m ways, broadcast-joined the codebook and ran a
-    // (id, subspace)-keyed window — a full shuffle + sort of m rows per
-    // vector, carrying the sliced vectors, just to pick a per-row argmax.
-    // Same cosine arithmetic and (sim desc, cell asc) tie-break via
-    // nearestIdxExpr over ascending-cell matrices — bit-identical codes
-    // (q65/q66 oracles).
+    // codebooks are m·k rows by contract — collect once and inline
+    // per-subspace matrices as literals, so the encode is ONE zero-shuffle
+    // projection instead of pqEncodeBroadcast's m-way explode + (id,
+    // subspace)-keyed window. Same cosine arithmetic and (sim desc, cell
+    // asc) tie-break via withNearestIdx over ascending-cell matrices —
+    // bit-identical codes (q65/q66 oracles).
     val cellType = codebooks.schema("cell").dataType
-    val cbRows = codebooks
-      .select(col("subspace").cast("int").as("s"), col("cell").cast("long").as("cell"),
-        toDoubleArray(col("cvec")).as("cv"))
-      .limit(maxLiteralCentroids + 1).collect()
-    // codebooks past the literal bound (large m·k configurations) keep the
-    // pre-r7 broadcast-join + window shape — slower but any-size-safe
-    if (cbRows.length > maxLiteralCentroids)
-      return pqEncodeBroadcast(vectors, codebooks, idCol, vecCol, m, subDim)
+    // codebooks the route declines (large m·k configurations, non-integral
+    // or null ids) keep the broadcast-join + window shape
+    val cbRows = route.local(codebooks.select(col("subspace"), col("cell"),
+        toDoubleArray(col("cvec")).as("cv")), maxLiteralCentroids, "pqEncode literal",
+        Seq("subspace", "cell"), route.Integral) match {
+      case Some(rows) => rows
+      case None => return pqEncodeBroadcast(vectors, codebooks, idCol, vecCol, m, subDim)
+    }
     val v = vectors.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-    val bySub = cbRows.groupBy(_.getInt(0))
+    val bySub = cbRows.groupBy(_.getAs[Number](0).intValue)
     // only subspaces present in the codebook emit codes (the old join
     // semantics); a fully empty codebook emits no rows
     val present = bySub.keys.toSeq.sorted
     if (present.isEmpty)
       return v.filter(lit(false))
         .select(col("id"), lit(0).as("subspace"), lit(null).cast(cellType).as("code"))
-    val sortedBySub = present.map(s => s -> bySub(s).sortBy(_.getLong(1)))
+    def cell(r: Row): Long = r.getAs[Number](1).longValue
+    val sortedBySub = present.map(s => s -> bySub(s).sortBy(cell))
     var df = v
     sortedBySub.foreach { case (s, sorted) =>
       df = withNearestIdx(
@@ -430,16 +428,16 @@ object similarity {
     }
     val codeStructs = sortedBySub.map { case (s, sorted) =>
       struct(lit(s).as("subspace"),
-        element_at(typedLit(sorted.toSeq.map(_.getLong(1))),
+        element_at(typedLit(sorted.toSeq.map(cell)),
           (col(s"_ix$s") + 1).cast("int")).cast(cellType).as("code"))
     }
     df.select(col("id"), explode(array(codeStructs: _*)).as("e"))
       .select(col("id"), col("e.subspace").as("subspace"), col("e.code").as("code"))
   }
 
-  /** The pre-round-7 encode plan (explode × m → broadcast codebook join →
-    * (id, subspace)-keyed window): the fallback for codebooks too big to
-    * inline as a literal. Bit-identical results to `pqEncode`. */
+  /** The broadcast encode plan (explode × m → broadcast codebook join →
+    * (id, subspace)-keyed window): the fallback for codebooks the literal
+    * path declines. Bit-identical results to `pqEncode`. */
   def pqEncodeBroadcast(vectors: DataFrame, codebooks: DataFrame,
                         idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame = {
     val v = vectors.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))

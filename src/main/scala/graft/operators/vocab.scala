@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.text
+import graft.plans.route
 
 /**
  * WordPiece/BPE vocabulary induction over a document corpus — the
@@ -180,6 +181,11 @@ object vocab {
     merges.toSeq
   }
 
+  /** Merge-eligibility floor and driver-heap guard (see `learnMerges`),
+    * shared by `learnMerges`' defaults and `induce`. */
+  val MinCount = 2L
+  val MaxLocalHistWords = 1000000L
+
   /**
    * Learn `nMerges` BPE merges from a word histogram. Returns
    * (merge_ord, left, right, merged, pair_count) — the merge table IS the
@@ -204,21 +210,43 @@ object vocab {
    * transcript table (`wordHistogram` is the only corpus-proportional job).
    */
   def learnMerges(spark: SparkSession, hist: DataFrame, nMerges: Int,
-                  minCount: Long = 2L,
-                  maxLocalHistWords: Long = 1000000L): DataFrame = {
+                  minCount: Long = MinCount,
+                  maxLocalHistWords: Long = MaxLocalHistWords): DataFrame = {
     import spark.implicits._
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    // r7: ONE bounded limit(guard+1).collect() replaces the count job +
-    // full collect — within the guard the limit returns the complete
-    // histogram (the maxDictEntities-collect pattern); past it the extra
-    // row routes to the distributed loop, guard exactly as loud
-    val rows = hist.select(col("word").cast("string"), col("cnt").cast("long"))
-      .limit(math.min(maxLocalHistWords + 1, Int.MaxValue.toLong).toInt)
-      .as[(String, Long)].collect()
-    if (rows.length <= maxLocalHistWords) {
-      return learnMergesLocal(rows, nMerges, minCount)
-        .toDF("merge_ord", "left", "right", "merged", "pair_count")
-    }
+    merges(spark, hist, nMerges, minCount, localHist(hist, maxLocalHistWords))
+      .toDF("merge_ord", "left", "right", "merged", "pair_count")
+  }
+
+  /** The histogram as driver rows when the route admits it. */
+  private def localHist(hist: DataFrame, bound: Long): Option[Array[(String, Long)]] = {
+    import hist.sparkSession.implicits._
+    route.local(hist.select(col("word").cast("string"), col("cnt").cast("long"))
+      .as[(String, Long)], bound, "vocab histogram")
+  }
+
+  /** A WordPiece piece set from a word histogram: the base characters plus
+    * `nMerges` BPE merges at the default `MinCount` floor, i.e.
+    * `vocabFrom(hist, learnMerges(hist, nMerges))`. One route probe
+    * serves both: within `MaxLocalHistWords` the collected rows feed the
+    * driver-local trainer and the base set with no further job; past it
+    * the distributed loop and `vocabFrom` run without a second probe.
+    * A pure function of the histogram either way. */
+  def induce(spark: SparkSession, hist: DataFrame, nMerges: Int): Set[String] = {
+    val rows = localHist(hist, MaxLocalHistWords)
+    rows.fold(baseSymbols(spark, hist))(_.iterator.flatMap(r => initSymbols(r._1)).toSet) ++
+      merges(spark, hist, nMerges, MinCount, rows).map(_._4)
+  }
+
+  /** Merges from the route's rows when it admitted the histogram, else by
+    * the distributed loop: one small job per merge over the histogram. */
+  private def merges(spark: SparkSession, hist: DataFrame, nMerges: Int, minCount: Long,
+                     rows: Option[Array[(String, Long)]]): Seq[(Int, String, String, String, Long)] =
+    rows.fold(learnMergesLoop(spark, hist, nMerges, minCount))(learnMergesLocal(_, nMerges, minCount))
+
+  private def learnMergesLoop(spark: SparkSession, hist: DataFrame, nMerges: Int,
+      minCount: Long): Seq[(Int, String, String, String, Long)] = {
+    import spark.implicits._
     val toSym = udf((w: String) => initSymbols(w))
     var sym = graft.plans.stage.materialize(
       hist.select(toSym(col("word")).as("sym"), col("cnt"))
@@ -254,7 +282,7 @@ object vocab {
           round += 1
       }
     }
-    merges.toSeq.toDF("merge_ord", "left", "right", "merged", "pair_count")
+    merges.toSeq
   }
 
   /** The piece set implied by a merge table plus the base characters of
@@ -266,10 +294,12 @@ object vocab {
   def vocabFrom(spark: SparkSession, hist: DataFrame,
                 merges: DataFrame): Set[String] = {
     import spark.implicits._
-    val base = hist.select(explode(
-        udf((w: String) => initSymbols(w)).apply(col("word"))).as("s"))
+    baseSymbols(spark, hist) ++ merges.select(col("merged")).as[String].collect().toSet
+  }
+
+  private def baseSymbols(spark: SparkSession, hist: DataFrame): Set[String] = {
+    import spark.implicits._
+    hist.select(explode(udf((w: String) => initSymbols(w)).apply(col("word"))).as("s"))
       .distinct().as[String].collect().toSet
-    val learned = merges.select(col("merged")).as[String].collect().toSet
-    base ++ learned
   }
 }

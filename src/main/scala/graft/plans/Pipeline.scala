@@ -32,7 +32,7 @@ object Pipeline {
                                     // reference's three mapping modes
                                     // (run_bertmap.py:293-367 dispatch)
       candidateLimit: Int = 25,     // config.json:41-47 uses {25..200}
-      maxDictEntities: Long = 5000000L, // guard on the driver-side catalog
+      maxDictEntities: Long = route.MaxCatalog, // guard on the driver-side catalog
                                     // collect feeding the broadcast trie —
                                     // larger catalogs must use the
                                     // join-based linker (operators.link)
@@ -110,16 +110,17 @@ object Pipeline {
                    p: Params): DataFrame = {
     val qTokens = fromPostings.withColumnRenamed("class_id", "query_id")
 
-    // the postings side is a catalog dimension (bounded) — force the
-    // broadcast; callers with unbounded candidate sides use the default
-    // None and let AQE's size statistics pick the join strategy
+    // the postings side is a catalog dimension: force the broadcast while
+    // `d` is within route.MaxCatalog, past it let AQE's size statistics
+    // pick the join strategy.
     // widthHint pins ONE query_id exchange at cluster parallelism: the IDF
     // aggregation, the top-k window AND the downstream scorer kernel all
     // run that wide — AQE sizes partitions by bytes and would otherwise
     // coalesce this CPU-dense catalog-side chain to single-task stages
     // (measured: 2.1 s single-task scorer stages)
     val cands = index.idfCandidates(qTokens, toPostings, d, p.candidateLimit,
-        p.maxDfFrac, p.saltBuckets, broadcastPostings = Some(true),
+        p.maxDfFrac, p.saltBuckets,
+        broadcastPostings = route.broadcastCatalog(d, "alignOneSide postings"),
         widthHint = spark.sparkContext.defaultParallelism)
       .select(col("query_id").as("from_id"), col("class_id").as("to_id"))
 
@@ -142,8 +143,7 @@ object Pipeline {
                   p: Params): DataFrame = p.mode match {
     case "classifier" => rawMappingsClassifier(spark, srcLabels, tgtLabels, p)
     case "nes" =>
-      val dSrc = srcLabels.select("id").distinct().count()
-      val dTgt = tgtLabels.select("id").distinct().count()
+      val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
       val tok = tokenizerFor(spark, p)
       align.combine(
         align.orient(nes.alignOneSide(srcLabels, tgtLabels, dTgt,
@@ -165,14 +165,7 @@ object Pipeline {
     val tok = tokenizerFor(spark, p)
     val srcPost = sidePostings(srcLabels, p.tokenCut, tok).cache()
     val tgtPost = sidePostings(tgtLabels, p.tokenCut, tok).cache()
-    // one action for both catalog sizes (every extra tiny SQL execution
-    // costs real wall time on the serial critical path)
-    val sizes = srcLabels.select(lit("src").as("s"), col("id"))
-      .unionByName(tgtLabels.select(lit("tgt").as("s"), col("id")))
-      .groupBy("s").agg(countDistinct("id").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dSrc = sizes.getOrElse("src", 0L)
-    val dTgt = sizes.getOrElse("tgt", 0L)
+    val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
     // each direction is an independent ~40-operator DAG whose Catalyst
     // analysis/optimization is serial driver CPU (~2s each measured);
     // plan + materialize them on concurrent threads
@@ -185,10 +178,18 @@ object Pipeline {
     val t2sF = Future(align.orient(
       alignOneSide(spark, tgtLabels, srcLabels, tgtPost, srcPost, dSrc, p),
       fromIsSrc = false).materialize)
-    align.combine(Await.result(s2tF, Duration.Inf), Await.result(t2sF, Duration.Inf))
+    val (s2t, t2s) = (Await.result(s2tF, Duration.Inf), Await.result(t2sF, Duration.Inf))
+    // both directions are materialized: nothing reads the postings again
+    srcPost.unpersist(blocking = false)
+    tgtPost.unpersist(blocking = false)
+    align.combine(s2t, t2s)
   }
 
   /** Full run over in-memory inputs; returns (mappings, triples).
+    *
+    * The label caches are released once `repaired` is materialized. The
+    * two edge caches stay: the returned triples are lazy and read them
+    * (the `broader` predicate).
     *
     * @param precomputedRaw thresholded raw mappings from an earlier
     *        materialized stage (spark-submit resume path): when given, the
@@ -215,28 +216,19 @@ object Pipeline {
       val dictDs = classes.filter(col("onto") === "src")
       require(Seq("auto", "trie", "join").contains(p.linker),
         s"linker must be auto|trie|join, got ${p.linker}")
-      // r7: ONE bounded collect decides the route AND feeds the trie — the
-      // old shape paid a count() job for the guard and then a second full
-      // collect for the trie build. limit(maxDictEntities + 1) keeps the
-      // guard exactly as loud (a catalog past the bound yields max+1 rows
-      // → join route / trie require fails) while a within-bound catalog
-      // arrives complete in one job. Same guard, same dictionary, one
-      // catalog-side job fewer per run.
-      val dictBound = math.min(p.maxDictEntities + 1, Int.MaxValue.toLong).toInt
-      val collected =
-        if (p.linker == "join") Array.empty[graft.model.ClassText]
-        else dictDs.limit(dictBound).collect()
-      val useJoin = p.linker == "join" ||
-        (p.linker == "auto" && collected.length > p.maxDictEntities)
-      if (p.linker == "trie") {
-        require(collected.length <= p.maxDictEntities,
-          s"catalog has > maxDictEntities=${p.maxDictEntities} entities: " +
-            "the driver-side collect + broadcast-trie path would OOM the " +
-            "driver; use linker=join (distributed n-gram dictionary join)")
+      // one route probe decides trie vs join AND feeds the trie; a catalog
+      // past maxDictEntities takes the join linker (auto) or fails (trie)
+      val dict =
+        if (p.linker == "join") None
+        else route.local(dictDs, p.maxDictEntities, "linker dictionary")
+      require(p.linker != "trie" || dict.isDefined,
+        s"catalog has > maxDictEntities=${p.maxDictEntities} entities: " +
+          "the driver-side collect + broadcast-trie path would OOM the " +
+          "driver; use linker=join (distributed n-gram dictionary join)")
+      val detected = dict match {
+        case Some(d) => mentions.detect(spark, turns, d.toSeq)
+        case None => mentions.detectJoin(spark, turns, dictDs)
       }
-      val detected =
-        if (useJoin) mentions.detectJoin(spark, turns, dictDs)
-        else mentions.detect(spark, turns, collected.toSeq)
       // transcript-proportional exchange at cluster width (the catalog-side
       // shuffle.partitions default is sized for tiny dimension stages)
       val m = mentions.stabilize(detected.toDF(),
@@ -284,6 +276,8 @@ object Pipeline {
 
     val repaired = repair.repairMappings(extended, srcEdges, tgtEdges)
       .materialize
+    srcLabels.unpersist(blocking = false)
+    tgtLabels.unpersist(blocking = false)
     mark("repair done")
 
     val mens = Await.result(mensF, Duration.Inf)
@@ -318,44 +312,16 @@ object Pipeline {
   }
 
   /** A real WordPiece vocab induced from the catalog's OWN label words
-    * (wordHistogram → BPE merges → piece set): the production index
-    * tokenizer, mirroring the reference's always-real-vocab flagship
+    * (`vocab.induce` over the catalog's word histogram): the production
+    * index tokenizer, mirroring the reference's always-real-vocab flagship
     * (onto_index.py:38-47) without an external checkpoint file. The
-    * histogram is catalog-dimension (never transcript-proportional), the
-    * merge loop runs driver-local behind `learnMerges`' size guard, and
-    * the result is a pure function of the catalog — deterministic at any
+    * histogram is catalog-dimension (never transcript-proportional) and
+    * the result is a pure function of the catalog, deterministic at any
     * parallelism (VocabSpec). */
   def induceCatalogVocab(spark: SparkSession, classes: Dataset[ClassText],
-                         nMerges: Int = 200): Set[String] = {
-    val hist = classes.toDF()
-      .select(explode(text.normalizeLabelsCol(col("labels"))).as("label"))
-      .select(explode(text.wordTokensCol(col("label"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-    // r7: one histogram JOB instead of five. learnMerges + vocabFrom each
-    // re-derived the catalog histogram (count job, collect job,
-    // base-symbol explode job per flagship run, ×4 flagship-family
-    // queries per battery). The catalog histogram is dimension-sized by
-    // contract, so ONE bounded limit(guard+1).collect() both enforces the
-    // same maxLocalHistWords guard learnMerges applies AND delivers the
-    // complete histogram when within it (limit past the actual size
-    // returns everything — the maxDictEntities-collect pattern); the
-    // driver-local trainer (proven ≡ distributed by VocabSpec) and the
-    // base piece set then derive from the same rows. Histograms past the
-    // guard keep the original distributed path — identical semantics,
-    // identical result (the vocab is a pure function of the histogram).
-    val guard = 1000000L
-    import spark.implicits._
-    val rows = hist.select(col("word").cast("string"), col("cnt").cast("long"))
-      .limit(math.min(guard + 1, Int.MaxValue.toLong).toInt)
-      .as[(String, Long)].collect()
-    if (rows.length <= guard) {
-      val merges = vocab.learnMergesLocal(rows, nMerges, 2L)
-      val base = rows.iterator.flatMap(r => vocab.initSymbols(r._1)).toSet
-      base ++ merges.map(_._4)
-    } else {
-      vocab.vocabFrom(spark, hist, vocab.learnMerges(spark, hist, nMerges))
-    }
-  }
+                         nMerges: Int = 200): Set[String] =
+    vocab.induce(spark, vocab.wordHistogram(classes.toDF()
+      .select(explode(text.normalizeLabelsCol(col("labels"))).as("label")), "label"), nMerges)
 
   /** Tiny flagship for the driver smoke-check (rows>0 at sf0.001-ish
     * scale). Runs the PRODUCTION index path: a real induced WordPiece

@@ -38,6 +38,13 @@ class CanonicalSpec extends SparkSuite {
     val distL = canonical.connectedComponents(spark, eLong, maxLocalEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(localL == distL)
+    // doubles are outside the route's id whitelist: the loop decides both
+    val eDbl = Seq((2.0, 1.0), (2.0, 3.0), (10.0, 11.0)).toDF("entity1", "entity2")
+    val localD = canonical.connectedComponents(spark, eDbl)
+      .as[(Double, Double)].collect().toMap
+    val distD = canonical.connectedComponents(spark, eDbl, maxLocalEdges = 0L)
+      .as[(Double, Double)].collect().toMap
+    assert(localD == distD && localD(3.0) == 1.0 && localD(11.0) == 10.0)
   }
 
   test("canonicalize rewrites endpoints to representatives") {

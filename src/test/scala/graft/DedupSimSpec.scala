@@ -148,6 +148,38 @@ class DedupSimSpec extends SparkSuite {
     assert(lit == bc && lit.size == 8)
   }
 
+  test("assignCells / pqEncode: string, tied and null cells give the broadcast plan's answer") {
+    val vecs = Seq(
+      (1L, Seq(1.0f, 0.0f, 1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f, 0.0f, 1.0f)),
+      (3L, Seq(0.6f, 0.8f, 0.8f, 0.6f))
+    ).toDF("vid", "vec")
+    // "9" and "10" share a centroid: Spark's string order breaks the tie to
+    // "10" (read as numbers it would be 9), and "07" must stay "07"
+    val strCells = Seq(("9", Seq(1.0f, 0.0f, 1.0f, 0.0f)), ("10", Seq(1.0f, 0.0f, 1.0f, 0.0f)),
+      ("07", Seq(0.0f, 1.0f, 0.0f, 1.0f))).toDF("cell", "cvec")
+    val nullCells = Seq((Some(1L), Seq(1.0f, 0.0f, 1.0f, 0.0f)), (None, Seq(0.0f, 1.0f, 0.0f, 1.0f)))
+      .toDF("cell", "cvec")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    for (cen <- Seq(strCells, nullCells))
+      assert(rows(similarity.assignCells(vecs, cen, "vid", "vec").select("id", "cell")) ==
+        rows(similarity.assignCellsBroadcast(vecs, cen, "vid", "vec").select("id", "cell")))
+    val byId = similarity.assignCells(vecs, strCells, "vid", "vec")
+      .select("id", "cell").as[(Long, String)].collect().toMap
+    assert(byId(1L) == "10" && byId(2L) == "07")
+
+    val strBook = Seq(0, 1).flatMap(s => Seq((s, "9", Seq(1.0f, 0.0f)),
+      (s, "10", Seq(1.0f, 0.0f)), (s, "07", Seq(0.0f, 1.0f)))).toDF("subspace", "cell", "cvec")
+    val nullBook = Seq(0, 1).flatMap(s => Seq((s, Some(1L), Seq(1.0f, 0.0f)),
+      (s, Option.empty[Long], Seq(0.0f, 1.0f)))).toDF("subspace", "cell", "cvec")
+    for (cb <- Seq(strBook, nullBook))
+      assert(rows(similarity.pqEncode(vecs, cb, "vid", "vec", 2, 2)) ==
+        rows(similarity.pqEncodeBroadcast(vecs, cb, "vid", "vec", 2, 2)))
+    val codes = similarity.pqEncode(vecs, strBook, "vid", "vec", 2, 2)
+      .as[(Long, Int, String)].collect().toSet
+    assert(codes.filter(_._1 == 1L).map(_._3) == Set("10") &&
+      codes.filter(_._1 == 2L).map(_._3) == Set("07"))
+  }
+
   test("ivfTopK probes nearest cells and matches brute force on clean clusters") {
     val vecs = Seq(
       (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.95f, 0.05f)), (2L, Seq(0.9f, 0.1f)),

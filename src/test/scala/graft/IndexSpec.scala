@@ -121,4 +121,34 @@ class IndexSpec extends SparkSuite {
       .select("class_id").as[Long].collect().toList
     assert(a == b)
   }
+
+  test("candidates: a forced broadcast survives stats-off; the default defers to size statistics") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s.implicits._
+    val posting = index.postings(Seq((1L, Seq("heart failure")), (2L, Seq("heart attack")))
+      .toDF("cid", "labels"), "cid", "labels")
+    val q = Seq((10L, "heart"), (10L, "failure")).toDF("query_id", "token")
+    def broadcasts(hint: Option[Boolean]) =
+      index.idfCandidates(q, posting, 2, 5, broadcastPostings = hint)
+        .queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
+    assert(broadcasts(Some(true)))
+    assert(!broadcasts(None))
+  }
+
+  test("postings broadcast is forced only while the to-side is within route.MaxCatalog") {
+    import graft.operators.nes
+    import graft.plans.route
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s.implicits._
+    val from = Seq(("s1", "acute heart failure")).toDF("id", "label")
+    val to = Seq(("t1", "acute heart failure"), ("t2", "kidney stone")).toDF("id", "label")
+    def broadcasts(d: Long) = nes.alignOneSide(from, to, d, 5, 1)
+      .queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
+    assert(route.broadcastCatalog(route.MaxCatalog, "spec") == Some(true))
+    assert(route.broadcastCatalog(route.MaxCatalog + 1, "spec").isEmpty)
+    assert(broadcasts(2L))
+    assert(!broadcasts(route.MaxCatalog + 1))
+  }
 }

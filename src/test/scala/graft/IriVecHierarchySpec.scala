@@ -76,6 +76,12 @@ class IriVecHierarchySpec extends SparkSuite {
         .as[(String, Long)].collect().toMap
       assert(local == dist, s"longest=$longest")
     }
+    // doubles are outside the route's id whitelist: the loop decides both
+    val eDbl = Seq((1.0, 0.0), (2.0, 1.0), (2.0, 0.0)).toDF("child_iri", "parent_iri")
+    val localD = hierarchy.depthMax(spark, eDbl).as[(Double, Long)].collect().toMap
+    val distD = hierarchy.depth(spark, eDbl, longest = true, maxLocalEdges = 0L)
+      .as[(Double, Long)].collect().toMap
+    assert(localD == distD && localD == Map(0.0 -> 0L, 1.0 -> 1L, 2.0 -> 2L))
     // cycle: Kahn cannot drain -> local path declines, distributed loop
     // decides (cycle nodes get no depth in either)
     val cyc = Seq(("x", "y"), ("y", "x"), ("z", "x"), ("a", "r"))

@@ -41,6 +41,15 @@ class PipelineE2ESpec extends SparkSuite {
     assert(triples.filter($"pred" === "sameAs").count() > 0)
   }
 
+  test("run releases its label caches; the lazy triples still read") {
+    val (_, trip) = Pipeline.run(spark, turns, classes, edges)
+    val cm = spark.sharedState.cacheManager
+    for (side <- Seq("src", "tgt"))
+      assert(cm.lookupCachedData(Pipeline.sideLabels(classes, side)
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty, side)
+    assert(trip.filter($"pred" === "broader").count() > 0)
+  }
+
   test("flagship entry returns non-empty triples (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
