@@ -657,23 +657,10 @@ object SparkEntry {
     // same argument as q40g: the pipeline is partition-invariant by
     // DeterminismSpec and the fixture is a pure function of seed 42, so
     // the triple multiset — hence any content digest of it — is a constant
-    // of the code). Per-row md5 folded to 31 bits then summed: order-free,
-    // sensitive to every (subj, pred, obj, round(score,6)) value and to
-    // multiplicity. Closes the one rows-only gap: q40's emitted triples
-    // are now hash-compared by the driver, not just counted. -------------
-    "q40t_triples_hash" -> ((s, dir) => {
-      val trip = Pipeline.flagship(s)
-      val rowKey = concat_ws("\u0001", col("subj"), col("pred"), col("obj"),
-        round(col("score"), 6).cast("string"))
-      val h = pmod(conv(substring(md5(rowKey), 1, 15), 16, 10).cast("long"),
-        lit(2147483648L))
-      trip.agg(
-        count(lit(1)).as("n_triples"),
-        sum(when(col("pred") === "sameAs", 1L).otherwise(0L)).as("n_sameas"),
-        sum(when(col("pred") === "mentions", 1L).otherwise(0L)).as("n_mentions"),
-        sum(when(col("pred") === "broader", 1L).otherwise(0L)).as("n_broader"),
-        sum(h).as("hash_sum"))
-    }),
+    // of the code; canonical.tripleDigest). Closes the one rows-only gap:
+    // q40's emitted triples are now hash-compared by the driver, not just
+    // counted. -----------------------------------------------------------
+    "q40t_triples_hash" -> ((s, dir) => canonical.tripleDigest(Pipeline.flagship(s))),
 
     // --- index-tokenizer cross-path gate: the flagship now runs the
     // PRODUCTION index path (real induced WordPiece vocab — q40/q40g/q40t);
@@ -689,16 +676,7 @@ object SparkEntry {
         graft.sources.fixtures.transcripts(s, cfg),
         graft.sources.fixtures.classes(s, cfg),
         graft.sources.fixtures.edges(s, cfg))
-      val rowKey = concat_ws("\u0001", col("subj"), col("pred"), col("obj"),
-        round(col("score"), 6).cast("string"))
-      val h = pmod(conv(substring(md5(rowKey), 1, 15), 16, 10).cast("long"),
-        lit(2147483648L))
-      trip.agg(
-        count(lit(1)).as("n_triples"),
-        sum(when(col("pred") === "sameAs", 1L).otherwise(0L)).as("n_sameas"),
-        sum(when(col("pred") === "mentions", 1L).otherwise(0L)).as("n_mentions"),
-        sum(when(col("pred") === "broader", 1L).otherwise(0L)).as("n_broader"),
-        sum(h).as("hash_sum"))
+      canonical.tripleDigest(trip)
     }),
 
     // --- BPE/WordPiece vocab induction (tokenizer training): the merge
@@ -2003,8 +1981,8 @@ object SparkEntry {
       "q61_subword_flagship" -> {
         // SAME constants as q40t by design: the vocab-free sub-word index
         // (fallback) must land the identical flagship triple set as the
-        // production induced-WordPiece index (ProbeWp: digest invariant
-        // across nMerges 30/100/400 and the splitter path)
+        // production induced-WordPiece index (PipelineE2ESpec pins the
+        // digest invariant across nMerges 30/100/400)
         """SELECT CAST(476 AS BIGINT) AS n_triples,
           |  CAST(100 AS BIGINT) AS n_sameas, CAST(280 AS BIGINT) AS n_mentions,
           |  CAST(96 AS BIGINT) AS n_broader,

@@ -77,10 +77,6 @@ object text {
           transform(sequence(lit(piece + 1), length(w), lit(piece)),
             i => concat(lit("##"), w.substr(i, lit(piece))))))))
 
-  /** Sub-word token filter from the reference: keep tokens with
-    * length > cut (onto_index.py:55-58; cut defaults 0, config.json:11). */
-  def keepToken(t: String, cut: Int): Boolean = t.length > cut
-
   // -------------------------------------------------------------------------
   // Vocab-driven WordPiece (onto_index.py:38-47 tokenizes with a real BERT
   // vocab via AutoTokenizer; this is that algorithm — greedy longest-match

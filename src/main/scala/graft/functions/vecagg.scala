@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /**
@@ -45,7 +45,4 @@ object vecagg {
     override def outputEncoder: Encoder[Array[Double]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
-
-  /** Column form for untyped groupBy().agg(...) use. */
-  def vector_mean: TypedColumn[Array[Double], Array[Double]] = VectorMean.toColumn
 }

@@ -169,4 +169,22 @@ object canonical {
       col("parent_iri").as("obj"), lit(1.0).as("score"))
     a.unionByName(m).unionByName(b)
   }
+
+  /** One-row, partition-invariant digest of a triple table: counts per
+    * predicate plus the sum of per-row md5 prefixes folded to 31 bits over
+    * (subj, pred, obj, round(score, 6)). Order-free, and sensitive to every
+    * value and to multiplicity. The q40t/q61 oracles pin it as constants. */
+  def tripleDigest(triples: DataFrame): DataFrame = {
+    val rowKey = concat_ws("\u0001", col("subj"), col("pred"), col("obj"),
+      round(col("score"), 6).cast("string"))
+    val h = pmod(conv(substring(md5(rowKey), 1, 15), 16, 10).cast("long"),
+      lit(2147483648L))
+    def n(pred: String) = sum(when(col("pred") === pred, 1L).otherwise(0L))
+    triples.agg(
+      count(lit(1)).as("n_triples"),
+      n("sameAs").as("n_sameas"),
+      n("mentions").as("n_mentions"),
+      n("broader").as("n_broader"),
+      sum(h).as("hash_sum"))
+  }
 }

@@ -169,8 +169,9 @@ object quality {
     // guard exists for. On the under-cap broadcast path the cache is
     // dropped again before building the result: an InMemoryRelation in
     // the lineage blocks AQE's runtime broadcast conversion of the final
-    // id-keyed left join (PlanCheck #12 catches the SortMergeJoin), and
-    // re-deriving an eval-suite-small side is cheap by contract.
+    // id-keyed left join (the SortMergeJoin is caught by PlanShapeSpec
+    // "decontaminate: all joins broadcast, train side never sort-merged"),
+    // and re-deriving an eval-suite-small side is cheap by contract.
     val benchSh = dedup.shingles(bench, idCol, textCol, k)
       .select(dedup.contentKey(col("shingle")).as("shk")).distinct()
       .persist()

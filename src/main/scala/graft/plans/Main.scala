@@ -65,7 +65,8 @@ object Main {
     // existing scan for free. The previous typed .map accumulator was a
     // deserialize-everything barrier below mention-detect's 3-column
     // projection — it decoded all 6 transcript columns at 10^12-turn scale
-    // and multi-counted on Dataset reuse. PlanCheck pins the pruning.
+    // and multi-counted on Dataset reuse. PlanShapeSpec "Main-path observed
+    // scan still prunes" pins the pruning.
     val turnMetrics = Observation("graft_turns")
     val observedTurns = turns.observe(turnMetrics, count(lit(1)).as("turns"))
 

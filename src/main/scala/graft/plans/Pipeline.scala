@@ -168,16 +168,18 @@ object Pipeline {
     val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
     // each direction is an independent ~40-operator DAG whose Catalyst
     // analysis/optimization is serial driver CPU (~2s each measured);
-    // plan + materialize them on concurrent threads
-    import scala.concurrent.{Await, Future}
+    // plan + materialize them on concurrent threads. `blocking` tells the
+    // global pool (parallelism = nproc) that each body parks on Spark
+    // jobs, so a small host still runs both directions side by side.
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val s2tF = Future(align.orient(
+    val s2tF = Future(blocking(align.orient(
       alignOneSide(spark, srcLabels, tgtLabels, srcPost, tgtPost, dTgt, p),
-      fromIsSrc = true).materialize)
-    val t2sF = Future(align.orient(
+      fromIsSrc = true).materialize))
+    val t2sF = Future(blocking(align.orient(
       alignOneSide(spark, tgtLabels, srcLabels, tgtPost, srcPost, dSrc, p),
-      fromIsSrc = false).materialize)
+      fromIsSrc = false).materialize))
     val (s2t, t2s) = (Await.result(s2tF, Duration.Inf), Await.result(t2sF, Duration.Inf))
     // both directions are materialized: nothing reads the postings again
     srcPost.unpersist(blocking = false)
@@ -199,20 +201,18 @@ object Pipeline {
   def run(spark: SparkSession, turns: Dataset[Turn], classes: Dataset[ClassText],
           edges: Dataset[Edge], p: Params = Params(),
           precomputedRaw: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val phaseLog = sys.env.contains("SPARK_GRAFT_PHASE_LOG")
-    val t00 = System.nanoTime()
-    def mark(name: String): Unit = if (phaseLog)
-      println(f"[phase] $name%-22s t+${(System.nanoTime() - t00) / 1e9}%6.2f s")
 
     // The transcript-proportional stage (mention detect over 10^12 turns at
     // target scale) is independent of the catalog-side alignment chain —
     // submit it concurrently so the alignment chain's many small jobs hide
     // behind the big scan instead of serializing after it. On a cluster
     // these are two independent stage DAGs the scheduler runs side by side.
-    val mensF = Future {
+    // `blocking`: the route probe below parks this global-pool thread on
+    // a Spark job.
+    val mensF = Future(blocking {
       val dictDs = classes.filter(col("onto") === "src")
       require(Seq("auto", "trie", "join").contains(p.linker),
         s"linker must be auto|trie|join, got ${p.linker}")
@@ -247,9 +247,8 @@ object Pipeline {
       // rejected the eager `.cache()+count` variant: columnar build + GC.)
       // The single final action computes the fused scan→detect→stabilize
       // DAG exactly once instead.
-      mark("mentions planned")
       m
-    }
+    })
 
     // catalog sides are dimension tables: cache once, reused ~6 times
     val srcLabels = sideLabels(classes, "src").cache()
@@ -258,7 +257,6 @@ object Pipeline {
     val raw = precomputedRaw.getOrElse(
       align.atThreshold(rawMappings(spark, srcLabels, tgtLabels, p), p.threshold)
         .materialize)
-    mark("raw mappings done")
 
     val srcEdges = edges.toDF().filter(col("onto") === "src")
       .select("child_iri", "parent_iri").cache()
@@ -267,7 +265,6 @@ object Pipeline {
 
     val expansion = extend.extendMappings(spark, raw, srcEdges, tgtEdges,
       srcLabels, tgtLabels, p.kappa, p.maxExtendIter, p.scorer)
-    mark("extension done")
     // lazy: raw and the expansion parts are already materialized, so the
     // downstream re-reads recompute only a small groupBy — cheaper than a
     // dedicated checkpoint execution on the serial path
@@ -278,10 +275,8 @@ object Pipeline {
       .materialize
     srcLabels.unpersist(blocking = false)
     tgtLabels.unpersist(blocking = false)
-    mark("repair done")
 
     val mens = Await.result(mensF, Duration.Inf)
-    mark("mentions awaited")
 
     // repaired is 1-to-1 by construction (repair.oneToOne), so components
     // are single edges — the O(1)-round rule replaces the iterative CC
@@ -306,7 +301,6 @@ object Pipeline {
       .filter(col("child_iri") =!= col("parent_iri"))
       .distinct()
 
-    mark("canonicalize planned")
     val trip = canonical.triples(repaired, mensCanon, broaderCanon)
     (repaired, trip)
   }

@@ -36,13 +36,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  */
 object stage {
 
-  def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize", "local") match {
-      case "local"    => df.localCheckpoint(true)
-      case "reliable" => df.checkpoint(true)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize must be local|reliable, got '$other'")
-    }
+  def materialize(df: DataFrame): DataFrame = materializeDs(df)
 
   def materializeDs[T](ds: Dataset[T]): Dataset[T] =
     ds.sparkSession.conf.get("spark.graft.materialize", "local") match {

@@ -110,25 +110,6 @@ object tables {
       .select(col("Entity1").as("entity1"), col("Entity2").as("entity2"),
         col("Value").as("value"))
 
-  /** Classtexts persistence (reference: save/load_classtexts JSON,
-    * onto_text.py:87-99 — parquet is the production form, json the
-    * human-readable debug form). */
-  def writeClasstexts(df: DataFrame, path: String, debugJson: Boolean = false): Unit = {
-    df.write.mode("overwrite").parquet(s"$path/parquet")
-    if (debugJson) df.coalesce(1).write.mode("overwrite").json(s"$path/json")
-  }
-
-  def readClasstexts(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/parquet")
-
-  /** Long-form corpus persistence (reference: nested corpus dict JSON,
-    * basic_corpus.py:155-164 — we keep the long relational form). */
-  def writeCorpus(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").partitionBy("kind").parquet(path)
-
-  def readCorpus(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Eval report CSV sink/scan (reference: report.to_csv eval_bertmap.py:242,
     * pd.read_csv onto_map.py:152) — threshold-sweep tables are tiny; one
     * headerful CSV part. */

@@ -137,6 +137,18 @@ class PipelineE2ESpec extends SparkSuite {
         s"only-wp=${(wpSet -- defSet).take(3)} only-def=${(defSet -- wpSet).take(3)}")
   }
 
+  test("induced-vocab flagship digest is the q40t constant at nMerges 30, 100 and 400") {
+    // the q40t/q61 oracle constants do not depend on how many merges
+    // built the induced vocab
+    for (n <- Seq(30, 100, 400)) {
+      val (_, trip) = Pipeline.run(spark, turns, classes, edges,
+        Pipeline.Params(wordpieceVocab = Some(Pipeline.induceCatalogVocab(spark, classes, n))))
+      val d = graft.operators.canonical.tripleDigest(trip).head()
+      assert((0 until 5).map(d.getLong) == Seq(476L, 100L, 280L, 96L, 485655843568L),
+        s"nMerges=$n digest=$d")
+    }
+  }
+
   test("wordpieceVocab: a whole-word vocab reproduces the word-tokenizer pipeline exactly") {
     // greedy longest-match against a vocab containing every catalog word
     // matches each word whole — so the wordpiece-indexed pipeline must be
