@@ -105,7 +105,7 @@ object SparkEntry {
       val posting = index.postingsFromText(docs, "doc_id", "text")
       val q = posting.filter(col("class_id") < 20)
         .select(col("class_id").as("query_id"), col("token"))
-      index.idfCandidatesFixedPoint(q, posting, docs.count(), 10)
+      index.idfCandidates(q, posting, docs.count(), 10, fixedPointIdf = true)
         .withColumnRenamed("rank", "rnk")
     }),
 
@@ -441,10 +441,10 @@ object SparkEntry {
       // r7: postings side is the bounded catalog of this query — force the
       // broadcast so the token fan-out aggregates inside the query_id-
       // pinned partitioning instead of shuffling at full volume (measured
-      // 143 MB at sf0.1; same argument as nes.alignOneSide)
-      index.idfCandidatesFixedPoint(qTok, post, to.count(), 5,
+      // 143 MB at sf0.1; same argument as align.direction)
+      index.idfCandidates(qTok, post, to.count(), 5,
           broadcastPostings = Some(true),
-          widthHint = s.sparkContext.defaultParallelism)
+          widthHint = s.sparkContext.defaultParallelism, fixedPointIdf = true)
         .withColumnRenamed("rank", "rnk")
     }),
 

@@ -163,15 +163,16 @@ object text {
   }
 
   /** Token-set Jaccard over word tokens. */
-  def tokenJaccard(a: String, b: String): Double = {
-    val sa = wordTokens(a).toSet
-    val sb = wordTokens(b).toSet
+  def tokenJaccard(a: String, b: String): Double =
+    jaccard(wordTokens(a).toSet, wordTokens(b).toSet)
+
+  /** Set Jaccard; two empty sets are identical (1.0). */
+  def jaccard(sa: Set[String], sb: Set[String]): Double =
     if (sa.isEmpty && sb.isEmpty) 1.0
     else {
       val inter = sa.intersect(sb).size
       inter.toDouble / (sa.size + sb.size - inter)
     }
-  }
 
   // -------------------------------------------------------------------------
   // Text analysis for training-data pipelines (graft additions)

@@ -12,6 +12,43 @@ import org.apache.spark.sql.expressions.Window
  */
 object align {
 
+  /** One alignment direction, the one loop every mapping mode runs
+    * (onto_map.py:55-66; the modes swap only the scorer, run_bertmap.py:
+    * 243-367): the from-side postings query the to-side postings for the
+    * top-`limit` IDF candidates, `hop` scores the candidate class pairs
+    * (from_id, to_id) into (from_id, to_id, score), n-best per from-class.
+    *
+    * `d` is the to-side class count: the IDF `D` and the gate of the
+    * forced postings broadcast (`route.broadcastCatalog`). Without the
+    * hint Catalyst's size estimate of the exploded postings picks a
+    * sort-merge join: the hot-token fan-out OUTPUT is then token-partitioned
+    * and the (query, class) agg shuffles all of it (measured at sf0.1:
+    * 180.8 MB, ~30 core-s). The candidate chain is pinned at cluster width:
+    * from a single-split scan through broadcast joins AQE would otherwise
+    * coalesce the whole CPU-dense direction (IDF agg, top-k window, scorer)
+    * onto one task (measured: 14 s of 1-task CPU at sf0.1). The IDF sums
+    * are associative, so the pin never changes results. */
+  def direction(fromPost: DataFrame, toPost: DataFrame, d: Long, limit: Int,
+                nbest: Int, maxDfFrac: Double = 1.0, saltBuckets: Int = 1,
+                fixedPointIdf: Boolean = false)
+               (hop: DataFrame => DataFrame): DataFrame = {
+    val cands = index.idfCandidates(fromPost.withColumnRenamed("class_id", "query_id"),
+        toPost, d, limit, maxDfFrac, saltBuckets,
+        broadcastPostings = graft.plans.route.broadcastCatalog(d, "candidate postings"),
+        widthHint = fromPost.sparkSession.sparkContext.defaultParallelism,
+        fixedPointIdf = fixedPointIdf)
+      .select(col("query_id").as("from_id"), col("class_id").as("to_id"))
+    nBest(hop(cands), nbest)
+  }
+
+  /** Candidate class pairs joined to their label cross-pairs:
+    * (from_id, to_id, l1, l2) from (id, label) long-form sides. */
+  def labelPairs(cands: DataFrame, fromLabels: DataFrame, toLabels: DataFrame): DataFrame =
+    cands
+      .join(fromLabels.select(col("id").as("from_id"), col("label").as("l1")), "from_id")
+      .join(toLabels.select(col("id").as("to_id"), col("label").as("l2")), "to_id")
+      .select("from_id", "to_id", "l1", "l2")
+
   /** n-best per from-class (nbest default 1, config.json:49; top-`keep`
     * slice at log re-parse, onto_map.py:131-143). Deterministic tie-break:
     * score desc, then to_id asc (the reference inherits Python sort

@@ -15,7 +15,7 @@ import graft.functions.text
  *     → explode labels → explode tokens → filter len>cut   = postings
  *   postings.groupBy(token).count                           = document freq
  *   queryTokens ⋈ postings on token                          (broadcast/salted)
- *     → groupBy(query, candidate).sum(log10(D/df))           = summed IDF
+ *     → groupBy(query, candidate).sum(idf weight)            = summed IDF
  *     → window top-k per query (desc score, asc candidate)   = candidates
  *
  * Scale notes (100 TB): the posting table of a catalog is small relative to
@@ -101,25 +101,40 @@ object index {
    *                     (token, salt) join keys instead — see the salted
    *                     branch: without it AQE coalesces the salted
    *                     partitions back onto one task and undoes the salt.
+   * @param fixedPointIdf the token weight: log10(D/df) as a double
+   *                     (default), or the integer surrogate
+   *                     floor(1e6 * D / df) summed as BIGINT — exact,
+   *                     associative arithmetic whose ranking is
+   *                     bit-reproducible across engines and partitionings
+   *                     (the double path can differ in the last ulp across
+   *                     platforms, which matters only for cross-engine
+   *                     golden comparison: both weights strictly decrease
+   *                     in df)
    *
-   * Tie-break: the reference inherits Python's stable sort over insertion
-   * order (onto_box.py:87-89); we pin (score desc, class_id asc) explicitly
-   * so results are reproducible across partitionings.
+   * Returns (query_id, class_id, idf_w, rank): the summed weight and the
+   * 1-based rank within the query. Tie-break: the reference inherits
+   * Python's stable sort over insertion order (onto_box.py:87-89); we pin
+   * (idf_w desc, class_id asc) explicitly so results are reproducible
+   * across partitionings.
    */
   def idfCandidates(queryTokens: DataFrame, posting: DataFrame, totalDocs: Long,
                     limit: Int, maxDfFrac: Double = 1.0,
                     saltBuckets: Int = 1,
                     broadcastPostings: Option[Boolean] = None,
-                    widthHint: Int = 0): DataFrame = {
+                    widthHint: Int = 0,
+                    fixedPointIdf: Boolean = false): DataFrame = {
     val df0 = docFreq(posting)
     val dfKept =
       if (maxDfFrac >= 1.0) df0
       else df0.filter(col("df") <= lit(math.max(1.0, maxDfFrac * totalDocs)))
-    // token -> (class_id, idf); idf = log10(D/df)
+    val weight =
+      if (fixedPointIdf) floor(lit(1000000L) * lit(totalDocs) / col("df")).cast("long")
+      else log10(lit(totalDocs.toDouble) / col("df"))
+    // token -> (class_id, w)
     val tokenIdf = posting
       .join(dfKept, "token")
-      .withColumn("idf", log10(lit(totalDocs.toDouble) / col("df")))
-      .select("token", "class_id", "idf")
+      .withColumn("w", weight)
+      .select("token", "class_id", "w")
 
     // widthHint pins explicit exchanges BEFORE the token join — the join
     // is the fan-out stage (per token: |q-docs| × df output rows; measured
@@ -178,62 +193,12 @@ object index {
       }
 
     val summed =
-      joined.groupBy("query_id", "class_id").agg(sum("idf").as("idf_score"))
+      joined.groupBy("query_id", "class_id").agg(sum("w").as("idf_w"))
 
     val w = Window.partitionBy("query_id")
-      .orderBy(col("idf_score").desc, col("class_id").asc)
+      .orderBy(col("idf_w").desc, col("class_id").asc)
     summed
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= limit)
-      .drop("rank")
   }
-
-  /**
-   * Fixed-point IDF candidate selection: identical dataflow to
-   * `idfCandidates` but with the integer IDF surrogate
-   * `floor(1e6 * D / df)` summed as BIGINT — exact, associative arithmetic
-   * whose ranking is bit-reproducible across engines and partitionings
-   * (the double log10 path can differ in the last ulp across platforms,
-   * which matters only for cross-engine golden comparison, not semantics:
-   * both weights are strictly decreasing in df).
-   */
-  def idfCandidatesFixedPoint(queryTokens: DataFrame, posting: DataFrame,
-                              totalDocs: Long, limit: Int,
-                              maxDfFrac: Double = 1.0,
-                              broadcastPostings: Option[Boolean] = None,
-                              widthHint: Int = 0): DataFrame = {
-    val df0 = docFreq(posting)
-    val dfKept =
-      if (maxDfFrac >= 1.0) df0
-      else df0.filter(col("df") <= lit(math.max(1.0, maxDfFrac * totalDocs)))
-    val tokenW = posting.join(dfKept, "token")
-      .withColumn("w", floor(lit(1000000L) * lit(totalDocs) / col("df")).cast("long"))
-      .select("token", "class_id", "w")
-    // same pre-join widthHint as idfCandidates: pin BOTH fan-out join
-    // inputs (query side on query_id, posting side on token unless
-    // force-broadcast) so the probe side is wide whichever side Catalyst
-    // broadcasts
-    val qIn = if (widthHint > 0)
-      queryTokens.select(col("query_id"), col("token"))
-        .repartition(widthHint, col("query_id"))
-    else queryTokens.select(col("query_id"), col("token"))
-    val pIn = if (widthHint > 0 && !broadcastPostings.contains(true))
-      tokenW.repartition(widthHint, col("token"))
-    else tokenW
-    val summed = qIn
-      .join(if (broadcastPostings.contains(true)) broadcast(pIn) else pIn,
-        "token")
-      .groupBy("query_id", "class_id")
-      .agg(sum("w").as("idf_w"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("idf_w").desc, col("class_id").asc)
-    summed.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= limit)
-  }
-
-  /** Convenience: query tokens from a labels-bag table (same tokenizer as
-    * the postings so query and index agree). */
-  def queryTokens(classes: DataFrame, idCol: String, labelsCol: String,
-                  cut: Int = 0): DataFrame =
-    postings(classes, idCol, labelsCol, cut).withColumnRenamed("class_id", "query_id")
 }

@@ -19,7 +19,7 @@ import graft.functions.text
  * the same physical contract a real broadcast-weights batched-inference hop
  * would use (north_star: "batched inference, broadcast model weights,
  * Arrow-ish batching"). Swapping in an ONNX/embedding scorer changes only
- * `ScorerParams`/`scoreBatch`, never the plan around it.
+ * `ScorerParams`/`kernel`, never the plan around it.
  */
 object score {
 
@@ -29,27 +29,24 @@ object score {
       editWeight: Double = 0.5,
       batchSize: Int = 32) // config.json batch_size=32
 
-  /** Deterministic pair score in [0,1]. Pure function — the per-element
-    * kernel the batch loop vectorizes over. */
-  def scorePair(p: ScorerParams, a: String, b: String): Double = {
-    val na = text.normalize(a)
-    val nb = text.normalize(b)
-    if (na == nb) 1.0
-    else p.jaccardWeight * text.tokenJaccard(na, nb) +
-      p.editWeight * text.editSimilarity(na, nb)
+  /** The per-string half of the pair kernel: (normalized label, its word
+    * token set). Pure, so callers may memoize it per label. */
+  def prep(s: String): (String, Set[String]) = {
+    val n = text.normalize(s)
+    (n, text.wordTokens(n).toSet)
   }
 
-  /** Batched kernel: one call per `batchSize` rows, mirroring the tensor
-    * forward pass shape (bert_classifier_map.py:127-134). */
-  def scoreBatch(p: ScorerParams, batch: Array[(String, String)]): Array[Double] = {
-    val out = new Array[Double](batch.length)
-    var i = 0
-    while (i < batch.length) {
-      out(i) = scorePair(p, batch(i)._1, batch(i)._2)
-      i += 1
-    }
-    out
-  }
+  /** The one lexical pair kernel over two prepared halves, in [0,1]:
+    * exact normalized match ⇒ 1.0, else jaccardWeight·Jaccard +
+    * editWeight·NES. */
+  def kernel(p: ScorerParams, a: (String, Set[String]), b: (String, Set[String])): Double =
+    if (a._1 == b._1) 1.0
+    else p.jaccardWeight * text.jaccard(a._2, b._2) +
+      p.editWeight * text.editSimilarity(a._1, b._1)
+
+  /** Deterministic pair score in [0,1]: the kernel over unmemoized halves. */
+  def scorePair(p: ScorerParams, a: String, b: String): Double =
+    kernel(p, prep(a), prep(b))
 
   /**
    * Batched scorer over (from_id, to_id, l1, l2) pairs, appending
@@ -77,32 +74,18 @@ object score {
         // unchanged; bounded so a high-cardinality partition cannot
         // balloon task memory.
         val memo = new java.util.HashMap[String, (String, Set[String])]()
-        def prep(s: String): (String, Set[String]) = {
+        def memoPrep(s: String): (String, Set[String]) = {
           var v = memo.get(s)
           if (v == null) {
             if (memo.size >= 65536) memo.clear()
-            val n = text.normalize(s)
-            v = (n, text.wordTokens(n).toSet)
+            v = prep(s)
             memo.put(s, v)
           }
           v
         }
         it.grouped(p.batchSize).flatMap { rows =>
           rows.iterator.map { r =>
-            val (na, ta) = prep(r._3)
-            val (nb, tb) = prep(r._4)
-            val s =
-              if (na == nb) 1.0
-              else {
-                val jac =
-                  if (ta.isEmpty && tb.isEmpty) 1.0
-                  else {
-                    val inter = ta.intersect(tb).size
-                    inter.toDouble / (ta.size + tb.size - inter)
-                  }
-                p.jaccardWeight * jac + p.editWeight * text.editSimilarity(na, nb)
-              }
-            (r._1, r._2, r._3, r._4, s)
+            (r._1, r._2, r._3, r._4, kernel(p, memoPrep(r._3), memoPrep(r._4)))
           }
         }
       }
@@ -212,7 +195,7 @@ object score {
    * Column form of the lexical pair score — the codegen'd scorer variant:
    * built entirely from whole-stage-codegen functions (levenshtein, array
    * ops), so unlike the mapPartitions kernel it never breaks the codegen
-   * span or the optimizer's view of the plan. Exactly `scorePair`'s
+   * span or the optimizer's view of the plan. Exactly `kernel`'s
    * arithmetic: normalize both sides, exact match ⇒ 1.0, else
    * jaccardWeight·tokenJaccard + editWeight·NES, where NES =
    * 1 − levenshtein/max(len) is the reference's own `nes` mapping mode

@@ -1,9 +1,11 @@
 package graft.plans
 
+import scala.concurrent.{Await, Future, blocking}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.stage.implicits._
-import org.apache.spark.sql.expressions.Window
 import graft.model._
 import graft.functions.text
 import graft.operators._
@@ -64,7 +66,13 @@ object Pipeline {
                                     // size); auto routes on the count
       maxDfFrac: Double = 1.0,
       saltBuckets: Int = 1,
-      scorer: score.ScorerParams = score.ScorerParams())
+      scorer: score.ScorerParams = score.ScorerParams()) {
+    require(Set("classifier", "nes", "embeds")(mode),
+      s"unknown mapping mode '$mode' (classifier | nes | embeds, run_bertmap.py:293-367)")
+    require(Set("auto", "trie", "join")(linker), s"linker must be auto|trie|join, got $linker")
+    require(Set("mean", "max")(pooling),
+      s"pooling must be mean|max (bert_classifier_map.py:38), got $pooling")
+  }
 
   /** Index tokenizer for `p`: a real broadcast WordPiece vocab when given,
     * else the vocab-free sub-word splitter (Pipeline default), else plain
@@ -95,73 +103,36 @@ object Pipeline {
     * vocab / vocab-free sub-word / plain words, onto_index.py:38-47). */
   def sidePostings(labels: DataFrame, tokenCut: Int,
                    tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : DataFrame = {
-    labels
-      .select(col("id").as("class_id"), explode(tok(col("label"))).as("token"))
-      .filter(length(col("token")) > tokenCut).distinct()
-  }
+      : DataFrame =
+    index.postingsFromText(labels, "id", "label", tokenCut, tok)
 
-  /** One alignment direction: fix `from` side, search `to` side
-    * (bert_classifier_map.py:54-88). Returns (from_id, to_id, score).
-    * `fromPostings`/`toPostings` are the cached outputs of `sidePostings`;
-    * `d` is the to-side catalog size (computed once by the caller). */
-  def alignOneSide(spark: SparkSession, fromLabels: DataFrame, toLabels: DataFrame,
-                   fromPostings: DataFrame, toPostings: DataFrame, d: Long,
-                   p: Params): DataFrame = {
-    val qTokens = fromPostings.withColumnRenamed("class_id", "query_id")
-
-    // the postings side is a catalog dimension: force the broadcast while
-    // `d` is within route.MaxCatalog, past it let AQE's size statistics
-    // pick the join strategy.
-    // widthHint pins ONE query_id exchange at cluster parallelism: the IDF
-    // aggregation, the top-k window AND the downstream scorer kernel all
-    // run that wide — AQE sizes partitions by bytes and would otherwise
-    // coalesce this CPU-dense catalog-side chain to single-task stages
-    // (measured: 2.1 s single-task scorer stages)
-    val cands = index.idfCandidates(qTokens, toPostings, d, p.candidateLimit,
-        p.maxDfFrac, p.saltBuckets,
-        broadcastPostings = route.broadcastCatalog(d, "alignOneSide postings"),
-        widthHint = spark.sparkContext.defaultParallelism)
-      .select(col("query_id").as("from_id"), col("class_id").as("to_id"))
-
-    val pairs = cands
-      .join(fromLabels.select(col("id").as("from_id"), col("label").as("l1")), "from_id")
-      .join(toLabels.select(col("id").as("to_id"), col("label").as("l2")), "to_id")
-      .select("from_id", "to_id", "l1", "l2")
-    // fused string-match + scoring (see scorePooledWithStringMatch: same
-    // semantics as the stringMatchSplit anti-join path, half the plan; the
-    // split path remains the choice for expensive neural scorers)
-    val all = score.scorePooledWithStringMatch(spark, pairs, p.pooling, p.scorer)
-    align.nBest(score.clamp(all), p.nbest)
-  }
-
-  /** Both directions + union (onto_map.py:146), dispatched on `p.mode`
-    * exactly like the reference's run_bertmap mode switch: `classifier`
-    * (batched-kernel scorer — the default), `nes` (codegen'd lexical
-    * Column scorer), `embeds` (class-embedding cosine). */
+  /** Both directions + union (onto_map.py:146) for every mapping mode,
+    * like the reference's run_bertmap mode switch (run_bertmap.py:243-367):
+    * the modes share `align.direction` and differ only in the scorer hop —
+    * `classifier` (fused string-match + batched-kernel scorer, the
+    * default), `nes` (codegen'd lexical Column scorer), `embeds`
+    * (class-embedding cosine). `srcLabels`/`tgtLabels` are (id, label)
+    * long form (`sideLabels`). */
   def rawMappings(spark: SparkSession, srcLabels: DataFrame, tgtLabels: DataFrame,
-                  p: Params): DataFrame = p.mode match {
-    case "classifier" => rawMappingsClassifier(spark, srcLabels, tgtLabels, p)
-    case "nes" =>
-      val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
-      val tok = tokenizerFor(spark, p)
-      align.combine(
-        align.orient(nes.alignOneSide(srcLabels, tgtLabels, dTgt,
-          p.candidateLimit, p.nbest, tok), fromIsSrc = true),
-        align.orient(nes.alignOneSide(tgtLabels, srcLabels, dSrc,
-          p.candidateLimit, p.nbest, tok), fromIsSrc = false))
-    case "embeds" =>
-      val tok = tokenizerFor(spark, p)
-      // threshold 0: run() applies the acceptance threshold uniformly
-      embeds.alignEmbeds(spark, srcLabels, tgtLabels, 0.0,
-        p.candidateLimit, p.nbest, tokenizer = tok)
-    case other => throw new IllegalArgumentException(
-      s"unknown mapping mode '$other' (classifier | nes | embeds, run_bertmap.py:293-367)")
-  }
-
-  /** Classifier-mode raw mappings (the default path). */
-  def rawMappingsClassifier(spark: SparkSession, srcLabels: DataFrame,
-                            tgtLabels: DataFrame, p: Params): DataFrame = {
+                  p: Params): DataFrame = {
+    type Hop = (DataFrame, DataFrame) => DataFrame => DataFrame
+    // per mode: what each side hands the hop, and the hop over (from, to)
+    val (srcIn, tgtIn, hop): (DataFrame, DataFrame, Hop) = p.mode match {
+      case "classifier" => (srcLabels, tgtLabels, (f, t) => cands =>
+        // fused string-match + scoring (see scorePooledWithStringMatch: same
+        // semantics as the stringMatchSplit anti-join path, half the plan;
+        // the split path remains the choice for expensive neural scorers)
+        score.clamp(score.scorePooledWithStringMatch(spark,
+          align.labelPairs(cands, f, t), p.pooling, p.scorer)))
+      case "nes" => (srcLabels, tgtLabels, (f, t) => nes.hop(f, t))
+      case "embeds" =>
+        // stage.materialize, not cache: the class-vector tables are read by
+        // both directions then never again — cache() would pin them in the
+        // session CacheManager, checkpoint blocks release on GC
+        (embeds.classEmbeddings(spark, srcLabels).materialize,
+          embeds.classEmbeddings(spark, tgtLabels).materialize,
+          (f, t) => embeds.hop(f, t))
+    }
     val tok = tokenizerFor(spark, p)
     val srcPost = sidePostings(srcLabels, p.tokenCut, tok).cache()
     val tgtPost = sidePostings(tgtLabels, p.tokenCut, tok).cache()
@@ -171,15 +142,14 @@ object Pipeline {
     // plan + materialize them on concurrent threads. `blocking` tells the
     // global pool (parallelism = nproc) that each body parks on Spark
     // jobs, so a small host still runs both directions side by side.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val s2tF = Future(blocking(align.orient(
-      alignOneSide(spark, srcLabels, tgtLabels, srcPost, tgtPost, dTgt, p),
-      fromIsSrc = true).materialize))
-    val t2sF = Future(blocking(align.orient(
-      alignOneSide(spark, tgtLabels, srcLabels, tgtPost, srcPost, dSrc, p),
-      fromIsSrc = false).materialize))
+    def direction(from: DataFrame, to: DataFrame, fromPost: DataFrame,
+                  toPost: DataFrame, d: Long, fromIsSrc: Boolean) =
+      Future(blocking(align.orient(
+        align.direction(fromPost, toPost, d, p.candidateLimit, p.nbest,
+          p.maxDfFrac, p.saltBuckets)(hop(from, to)),
+        fromIsSrc).materialize))
+    val s2tF = direction(srcIn, tgtIn, srcPost, tgtPost, dTgt, fromIsSrc = true)
+    val t2sF = direction(tgtIn, srcIn, tgtPost, srcPost, dSrc, fromIsSrc = false)
     val (s2t, t2s) = (Await.result(s2tF, Duration.Inf), Await.result(t2sF, Duration.Inf))
     // both directions are materialized: nothing reads the postings again
     srcPost.unpersist(blocking = false)
@@ -201,10 +171,6 @@ object Pipeline {
   def run(spark: SparkSession, turns: Dataset[Turn], classes: Dataset[ClassText],
           edges: Dataset[Edge], p: Params = Params(),
           precomputedRaw: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-
     // The transcript-proportional stage (mention detect over 10^12 turns at
     // target scale) is independent of the catalog-side alignment chain —
     // submit it concurrently so the alignment chain's many small jobs hide
@@ -214,8 +180,6 @@ object Pipeline {
     // a Spark job.
     val mensF = Future(blocking {
       val dictDs = classes.filter(col("onto") === "src")
-      require(Seq("auto", "trie", "join").contains(p.linker),
-        s"linker must be auto|trie|join, got ${p.linker}")
       // one route probe decides trie vs join AND feeds the trie; a catalog
       // past maxDictEntities takes the join linker (auto) or fails (trie)
       val dict =

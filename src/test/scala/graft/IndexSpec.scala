@@ -55,13 +55,15 @@ class IndexSpec extends SparkSuite {
     val posting = index.postings(classes, "cid", "labels")
     val q = Seq((1L, "heart"), (1L, "failure"), (2L, "renal"), (2L, "heart"))
       .toDF("query_id", "token")
-    val a = index.idfCandidates(q, posting, 3, 3, saltBuckets = 1)
-      .orderBy("query_id", "class_id")
-      .select("query_id", "class_id").as[(Long, Long)].collect().toList
-    val b = index.idfCandidates(q, posting, 3, 3, saltBuckets = 8)
-      .orderBy("query_id", "class_id")
-      .select("query_id", "class_id").as[(Long, Long)].collect().toList
-    assert(a == b && a.nonEmpty)
+    // both IDF weights: the salted join serves the fixed-point one too
+    for (fixedPointIdf <- Seq(false, true)) {
+      def cands(salt: Int) =
+        index.idfCandidates(q, posting, 3, 3, saltBuckets = salt, fixedPointIdf = fixedPointIdf)
+          .orderBy("query_id", "class_id")
+          .select("query_id", "class_id", "idf_w", "rank").collect().toList
+      val (a, b) = (cands(1), cands(8))
+      assert(a == b && a.nonEmpty, s"fixedPointIdf=$fixedPointIdf")
+    }
   }
 
   test("maxDfFrac drops stop-tokens from scoring") {
@@ -117,7 +119,7 @@ class IndexSpec extends SparkSuite {
       .toDF("query_id", "token")
     val a = index.idfCandidates(q, posting, 3, 3)
       .select("class_id").as[Long].collect().toList
-    val b = index.idfCandidatesFixedPoint(q, posting, 3, 3)
+    val b = index.idfCandidates(q, posting, 3, 3, fixedPointIdf = true)
       .select("class_id").as[Long].collect().toList
     assert(a == b)
   }

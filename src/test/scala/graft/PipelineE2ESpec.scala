@@ -57,9 +57,19 @@ class PipelineE2ESpec extends SparkSuite {
   test("mode dispatch: nes mode equals classifier mode (same lexical kernel), embeds mode aligns") {
     val src = Pipeline.sideLabels(classes, "src")
     val tgt = Pipeline.sideLabels(classes, "tgt")
-    def maps(mode: String) =
-      Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = mode))
-        .select("entity1", "entity2").as[(String, String)].collect().toSet
+    val tok = Pipeline.tokenizerFor(spark, Pipeline.Params())
+    // every mode releases both sides' postings once its directions are done
+    def postingsReleased(mode: String): Unit =
+      for ((side, labels) <- Seq("src" -> src, "tgt" -> tgt))
+        assert(spark.sharedState.cacheManager.lookupCachedData(
+          Pipeline.sidePostings(labels, 0, tok)
+            .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
+          s"$mode left the $side postings cached")
+    def maps(mode: String) = {
+      val m = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = mode))
+      postingsReleased(mode)
+      m.select("entity1", "entity2").as[(String, String)].collect().toSet
+    }
     // the classifier stand-in IS the lexical kernel, so nes mode must
     // produce the identical mapping set
     assert(maps("nes") == maps("classifier"))
@@ -68,6 +78,7 @@ class PipelineE2ESpec extends SparkSuite {
     val ref = refs.filter(!$"is_ignored")
       .select("entity1", "entity2").as[(String, String)].collect().toSet
     val emb = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "embeds"))
+    postingsReleased("embeds")
     val embBest = graft.operators.align.atThreshold(emb, 0.5)
       .select("entity1", "entity2").as[(String, String)].collect().toSet
     val tp = embBest.intersect(ref).size.toDouble
@@ -76,6 +87,10 @@ class PipelineE2ESpec extends SparkSuite {
       s"embeds-mode precision ${tp / embBest.size} unusably low")
     intercept[IllegalArgumentException](
       Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "bogus")))
+    // Params checks its own choices when it is built, before any job runs
+    intercept[IllegalArgumentException](Pipeline.Params(mode = "bogus"))
+    intercept[IllegalArgumentException](Pipeline.Params(linker = "bogus"))
+    intercept[IllegalArgumentException](Pipeline.Params(pooling = "bogus"))
   }
 
   test("linker=join fallback: identical triples to the broadcast-trie kernel") {

@@ -13,13 +13,6 @@ class ScoreAlignSpec extends SparkSuite {
     assert(s > 0.0 && s < 1.0)
   }
 
-  test("scoreBatch matches per-pair kernel") {
-    val p = score.ScorerParams(batchSize = 2)
-    val batch = Array(("a b", "a c"), ("x", "x"))
-    assert(score.scoreBatch(p, batch).toList ==
-      List(score.scorePair(p, "a b", "a c"), 1.0))
-  }
-
   test("scoreLabelPairsTyped: mapPartitions scorer appends pair_score") {
     val pairs = Seq((1L, 2L, "heart failure", "heart failure"),
       (1L, 3L, "heart failure", "renal disease"))
@@ -79,15 +72,16 @@ class ScoreAlignSpec extends SparkSuite {
     assert(align.atThreshold(a, 0.5).count() == 1)
   }
 
-  test("alignEmbeds: full embeds-mode mapping (class-embedding mean + IDF candidates + cosine n-best)") {
-    import graft.operators.embeds
+  test("embeds mode via rawMappings: class-embedding mean + IDF candidates + cosine") {
+    import graft.plans.Pipeline
     // src class s1 and tgt class t1 share a label text -> cosine 1.0 top
     val src = Seq(("s1", "acute heart failure"), ("s1", "cardiac failure"),
       ("s2", "kidney stone")).toDF("id", "label")
     val tgt = Seq(("t1", "acute heart failure"), ("t2", "renal calculus stone"))
       .toDF("id", "label")
-    val out = embeds.alignEmbeds(spark, src, tgt, threshold = 0.1,
-        candidateLimit = 5, nbest = 1)
+    val p = Pipeline.Params(mode = "embeds", candidateLimit = 5, nbest = 1,
+      subwordIndex = false)
+    val out = align.atThreshold(Pipeline.rawMappings(spark, src, tgt, p), 0.1)
       .select("entity1", "entity2", "value").as[(String, String, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(out.contains(("s1", "t1")))
