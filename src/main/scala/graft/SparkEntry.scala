@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.text
+import graft.functions.{rnd, text}
 import graft.operators._
-import graft.plans.Pipeline
+import graft.plans.{Pipeline, stage}
 
 /**
  * Driver contract (SURVEY.md §7): one entry per implemented operator from
@@ -22,24 +22,12 @@ import graft.plans.Pipeline
  */
 object SparkEntry {
 
+  /** A testdata table. These are single-split parquet, so a chain of
+    * narrow ops over one runs on ONE task unless the query spreads it with
+    * `stage.pinned(df)` (measured: q31's 8M Levenshtein pairs on one core,
+    * 31 s); at production scale the input's natural splits do that. */
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Pin a CPU-dense derivation at cluster width. The testdata tables are
-    * single-split parquet, and a chain of narrow ops (explode, broadcast
-    * join, codegen'd scoring) introduces NO exchange — so without this the
-    * whole chain runs on ONE task no matter how many cores exist
-    * (measured: q31's 8M Levenshtein pairs on one core, 31 s). At
-    * production scale the input's natural splits provide the width; this
-    * reproduces that shape on the tiny battery inputs. Results are
-    * partition-invariant throughout (determinism contract), so the extra
-    * exchange never changes values. */
-  private def wide(s: SparkSession, df: DataFrame): DataFrame =
-    df.repartition(s.sparkContext.defaultParallelism)
-
-  /** Portable seeded pseudo-random column: LCG over a bigint key. */
-  private def lcg(c: Column): Column =
-    pmod(c * lit(1103515245L) + lit(12345L), lit(2147483648L))
 
   /** Hand WordPiece vocab for q54 — the single source of truth for the
     * Spark query AND its DuckDB oracle twin (rendered as a VALUES list).
@@ -223,7 +211,7 @@ object SparkEntry {
         col("p_name").as("sent2"), col("p_brand").as("o_brand"))
       val drawn = idx
         .withColumn("o_idx",
-          pmod(col("idx") + lit(1L) + pmod(lcg(col("p_partkey")), lit(d - 1)), lit(d)))
+          pmod(col("idx") + lit(1L) + pmod(rnd.lcg(col("p_partkey")), lit(d - 1)), lit(d)))
         .join(partner, "o_idx")
         .select(col("p_name").as("sent1"), col("sent2"), col("p_brand"), col("o_brand"))
       // negative_sample_check: reject same-class (here same-brand) partners
@@ -324,8 +312,8 @@ object SparkEntry {
     "q17_splits" -> ((s, dir) =>
       // train/val/test 0.2/0.1/0.7 split, LCG-keyed (cross_onto.py:36-66)
       t(s, dir, "orders").select(col("o_orderkey"),
-        when(lcg(col("o_orderkey")) < 429496729L, "train")
-          .when(lcg(col("o_orderkey")) < 644245094L, "val")
+        when(rnd.lcg(col("o_orderkey")) < 429496729L, "train")
+          .when(rnd.lcg(col("o_orderkey")) < 644245094L, "val")
           .otherwise("test").as("split"))),
 
     "q18_downsample" -> ((s, dir) =>
@@ -334,7 +322,7 @@ object SparkEntry {
       corpus.downsampleNegatives(
         t(s, dir, "orders").select(col("o_orderkey")),
         nSyn = 100, negRate = 1.0, seed = 0L, keyCols = Seq("o_orderkey"),
-        uCol = Some(lcg(col("o_orderkey"))))
+        uCol = Some(rnd.lcg(col("o_orderkey"))))
         .select(col("o_orderkey"), col("rn").cast("int").as("rnk"))),
 
     // --- dedup family -------------------------------------------------------
@@ -342,16 +330,16 @@ object SparkEntry {
       dedup.exact(t(s, dir, "documents"), "doc_id", "text")),
 
     "q20_shingles" -> ((s, dir) =>
-      dedup.shingles(wide(s, t(s, dir, "documents")), "doc_id", "text", 2)),
+      dedup.shingles(stage.pinned(t(s, dir, "documents")), "doc_id", "text", 2)),
 
     "q21_minhash_sig" -> ((s, dir) =>
-      dedup.minhashLong(wide(s, t(s, dir, "documents")), "doc_id", "text", 2, 8)),
+      dedup.minhashLong(stage.pinned(t(s, dir, "documents")), "doc_id", "text", 2, 8)),
 
     "q22_lsh_pairs" -> ((s, dir) =>
-      dedup.lshCandidates(wide(s, t(s, dir, "documents")), "doc_id", "text", 2, 8, 2)),
+      dedup.lshCandidates(stage.pinned(t(s, dir, "documents")), "doc_id", "text", 2, 8, 2)),
 
     "q23_ngram_jaccard" -> ((s, dir) =>
-      dedup.ngramJaccardPairs(wide(s, t(s, dir, "documents")), "doc_id", "text", 2, 0.2, 500)
+      dedup.ngramJaccardPairs(stage.pinned(t(s, dir, "documents")), "doc_id", "text", 2, 0.2, 500)
         .withColumn("jaccard", round(col("jaccard"), 6))),
 
     // --- end-to-end near-dup canonicalization: the training-data dedup
@@ -360,7 +348,7 @@ object SparkEntry {
     // exactly the "keep one copy per duplicate cluster" selection a
     // pretraining pipeline runs ------------------------------------------
     "q60_dedup_canonical" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       val pairs = dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.2, 500)
       val comps = canonical.connectedComponents(s,
         pairs.select(col("id1").as("entity1"), col("id2").as("entity2")), 10)
@@ -430,7 +418,7 @@ object SparkEntry {
     // both sides feeding the fixed-point IDF candidate join — the
     // candidate-recall path a real-vocab user runs ------------------------
     "q58_wordpiece_candidates" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       val vocabBc = s.sparkContext.broadcast(WpVocab.toSet)
       val tok = (c: Column) => graft.functions.text.wordpieceTokensCol(vocabBc)(c)
       val from = docs.filter(col("doc_id") < 250)
@@ -444,7 +432,7 @@ object SparkEntry {
       // 143 MB at sf0.1; same argument as align.direction)
       index.idfCandidates(qTok, post, to.count(), 5,
           broadcastPostings = Some(true),
-          widthHint = s.sparkContext.defaultParallelism, fixedPointIdf = true)
+          widthHint = stage.width(s), fixedPointIdf = true)
         .withColumnRenamed("rank", "rnk")
     }),
 
@@ -490,7 +478,7 @@ object SparkEntry {
       // wide left side × broadcast right: the pair generation AND the
       // scorer inherit cluster width (a 1-split × broadcast join has no
       // exchange — measured as 8M pairs scored on one core without this)
-      val pairs = wide(s, p).as("a").join(broadcast(p).as("b"),
+      val pairs = stage.pinned(p).as("a").join(broadcast(p).as("b"),
           col("a.p_brand") === col("b.p_brand") && col("a.p_partkey") < col("b.p_partkey"))
         .select(col("a.p_partkey").as("from_id"), col("b.p_partkey").as("to_id"),
           col("a.p_name").as("l1"), col("b.p_name").as("l2"))
@@ -737,7 +725,7 @@ object SparkEntry {
     // candidates + cosine n-best over per-doc vectors from the embeddings
     // table (the class-embedding MEAN is oracled separately by q41) --------
     "q49_embeds_align" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       val vecs = t(s, dir, "embeddings").select(
         col("vec_id").cast("string").as("id"),
         similarity.toDoubleArray(col("embedding")).as("emb"))
@@ -753,7 +741,7 @@ object SparkEntry {
     // --- NES-mode alignment (nes_map.py:36-77) — the codegen'd Column
     // scorer over IDF candidates, fully declarative --------------------------
     "q50_nes_align" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       val fromLab = docs.filter(col("doc_id") < 250)
         .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
       val toLab = docs.filter(col("doc_id") >= 250)
@@ -798,7 +786,7 @@ object SparkEntry {
     // shuffles with map-side combine) — the filter signals a pretraining
     // pipeline thresholds on ------------------------------------------------
     "q62_repetition" -> ((s, dir) =>
-      quality.repetitionMetrics(wide(s, t(s, dir, "documents")), "doc_id", "text")
+      quality.repetitionMetrics(stage.pinned(t(s, dir, "documents")), "doc_id", "text")
         .withColumn("dup_word_frac", round(col("dup_word_frac"), 6))
         .withColumn("top_bigram_frac", round(col("top_bigram_frac"), 6))
         .withColumn("dup_bigram_frac", round(col("dup_bigram_frac"), 6))),
@@ -808,7 +796,7 @@ object SparkEntry {
     // formulation — no per-domain single-task window), keep <= quota, with
     // per-domain quotas carried as data ------------------------------------
     "q63_quota_sample" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       val quotas = docs.select(col("source").as("grp")).distinct()
         .withColumn("quota", when(length(col("grp")) === 4, 8).otherwise(4))
       quality.quotaSample(docs, "doc_id", "source", quotas)
@@ -821,7 +809,7 @@ object SparkEntry {
     "q64_decontaminate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       quality.decontaminate(
-        wide(s, docs.filter(pmod(col("doc_id"), lit(20)) =!= 0)),
+        stage.pinned(docs.filter(pmod(col("doc_id"), lit(20)) =!= 0)),
         docs.filter(pmod(col("doc_id"), lit(20)) === 0),
         "doc_id", "text", 3, 2L)
     }),
@@ -868,14 +856,14 @@ object SparkEntry {
     // order (q19's min-id rule) and the two operators stay distinguishable
     "q68_dedup_ledger" -> ((s, dir) =>
       dedup.firstSeenLedger(t(s, dir, "documents"), "doc_id", "text",
-        lcg(col("doc_id")))),
+        rnd.lcg(col("doc_id")))),
 
     // --- random-hyperplane embedding LSH near-dup pairs: md5-derived ±1
     // projections in 10^6 fixed point → banded bit signatures → bucket
     // self-join → exact-cosine verify. The no-blocking-key embedding-dedup
     // scale path (q27 needs a caller-supplied block) ------------------------
     "q69_embed_lsh" -> ((s, dir) =>
-      dedup.embeddingLshPairs(wide(s, t(s, dir, "embeddings")), "vec_id", "embedding",
+      dedup.embeddingLshPairs(stage.pinned(t(s, dir, "embeddings")), "vec_id", "embedding",
           planes = 32, bands = 4, threshold = 0.3)
         .withColumn("cosine", round(col("cosine"), 6))),
 
@@ -900,7 +888,7 @@ object SparkEntry {
     // suffix (one email, one IP, one phone per doc); the oracle injects
     // the identical string and runs the identical RE2-safe patterns ---------
     "q71_redact_pii" -> ((s, dir) => {
-      val injected = wide(s, t(s, dir, "documents")).select(col("doc_id"),
+      val injected = stage.pinned(t(s, dir, "documents")).select(col("doc_id"),
         concat(col("text"),
           lit(" contact user"), col("doc_id").cast("string"),
           lit("@example.com via 10."),
@@ -917,7 +905,7 @@ object SparkEntry {
     // contentKeys → duplicate positions → per-doc gaps-and-islands merge
     // into maximal (span_start, span_end) token spans -----------------------
     "q72_dup_spans" -> ((s, dir) =>
-      dedup.duplicateSpans(wide(s, t(s, dir, "documents")), "doc_id", "text",
+      dedup.duplicateSpans(stage.pinned(t(s, dir, "documents")), "doc_id", "text",
         k = dupSpanK)),
 
     // --- GPT-style concat-and-chunk sequence packing: deterministic
@@ -925,7 +913,7 @@ object SparkEntry {
     // exclusive prefix sum via 256 md5-prefix range buckets + a
     // dimension-sized bucket-base table (no single-task global window) ------
     "q73_pack_sequences" -> ((s, dir) =>
-      quality.packSequences(wide(s, t(s, dir, "documents")), "doc_id",
+      quality.packSequences(stage.pinned(t(s, dir, "documents")), "doc_id",
         "text", 64L)),
 
     // --- CCNet-style bigram-LM perplexity scoring: add-one-smoothed
@@ -933,7 +921,7 @@ object SparkEntry {
     // fixed-point NLL (Σ floor(−10⁶·ln p) as BIGINT — associative, so
     // partition- and engine-invariant) ---------------------------------------
     "q74_lm_perplexity" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       quality.lmPerplexity(docs, docs, "doc_id", "text")
     }),
 
@@ -950,7 +938,7 @@ object SparkEntry {
     // background LM (whole corpus), log w = NLL_bg − NLL_target in the
     // exact fixed-point domain; one scoring pass over the corpus ------------
     "q76_dsir_weights" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       quality.dsirWeights(docs.filter(col("source") === "src0"), docs, docs,
         "doc_id", "text")
     }),
@@ -959,7 +947,7 @@ object SparkEntry {
     // selection step (sampling without replacement ∝ softmax of log w);
     // content-keyed noise, exact fixed-point keys, global top-50 ----------
     "q77_gumbel_topk" -> ((s, dir) => {
-      val docs = wide(s, t(s, dir, "documents"))
+      val docs = stage.pinned(t(s, dir, "documents"))
       val wts = quality.dsirWeights(docs.filter(col("source") === "src0"),
         docs, docs, "doc_id", "text")
       quality.gumbelTopK(wts, "id", "logw_fp", 50, seed = 7L)

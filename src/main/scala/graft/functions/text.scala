@@ -52,30 +52,31 @@ object text {
   def wordTokens(s: String): Seq[String] =
     s.toLowerCase.split("[^a-z0-9]+").toSeq.filter(_.nonEmpty)
 
+  /** Piece length of the vocab-free sub-word splitter. */
+  private val Piece = 4
+
   /** Deterministic vocab-free sub-word splitter standing in for WordPiece
-    * (onto_index.py:46-47): words longer than `piece` are additionally split
+    * (onto_index.py:46-47): words longer than `Piece` are additionally split
     * into a head piece and "##"-prefixed continuation pieces of length
-    * `piece`. Purely a function of the input string — what the dataflow
+    * `Piece`. Purely a function of the input string — what the dataflow
     * requires is tokenize: string -> array<string>, deterministic. */
-  def subwordTokens(s: String, piece: Int = 4): Seq[String] = {
-    val words = wordTokens(s)
-    words.flatMap { w =>
-      if (w.length <= piece) Seq(w)
-      else w.take(piece) +: w.drop(piece).grouped(piece).map("##" + _).toSeq
+  def subwordTokens(s: String): Seq[String] =
+    wordTokens(s).flatMap { w =>
+      if (w.length <= Piece) Seq(w)
+      else w.take(Piece) +: w.drop(Piece).grouped(Piece).map("##" + _).toSeq
     }
-  }
 
   /** Column form of `subwordTokens` — the tokenizer the inverted index
     * plugs in to match the reference's WordPiece postings
     * (onto_index.py:46-47). Same closed form as the plain-Scala twin:
-    * head piece of `piece` chars + "##"-prefixed continuations. */
-  def subwordTokensCol(c: Column, piece: Int = 4): Column =
+    * head piece of `Piece` chars + "##"-prefixed continuations. */
+  def subwordTokensCol(c: Column): Column =
     flatten(transform(wordTokensCol(c), w =>
-      when(length(w) <= piece, array(w))
+      when(length(w) <= Piece, array(w))
         .otherwise(concat(
-          array(substring(w, 1, piece)),
-          transform(sequence(lit(piece + 1), length(w), lit(piece)),
-            i => concat(lit("##"), w.substr(i, lit(piece))))))))
+          array(substring(w, 1, Piece)),
+          transform(sequence(lit(Piece + 1), length(w), lit(Piece)),
+            i => concat(lit("##"), w.substr(i, lit(Piece))))))))
 
   // -------------------------------------------------------------------------
   // Vocab-driven WordPiece (onto_index.py:38-47 tokenizes with a real BERT

@@ -35,7 +35,7 @@ object align {
     val cands = index.idfCandidates(fromPost.withColumnRenamed("class_id", "query_id"),
         toPost, d, limit, maxDfFrac, saltBuckets,
         broadcastPostings = graft.plans.route.broadcastCatalog(d, "candidate postings"),
-        widthHint = fromPost.sparkSession.sparkContext.defaultParallelism,
+        widthHint = graft.plans.stage.width(fromPost.sparkSession),
         fixedPointIdf = fixedPointIdf)
       .select(col("query_id").as("from_id"), col("class_id").as("to_id"))
     nBest(hop(cands), nbest)
@@ -53,11 +53,9 @@ object align {
     * slice at log re-parse, onto_map.py:131-143). Deterministic tie-break:
     * score desc, then to_id asc (the reference inherits Python sort
     * stability; we pin total order for reproducibility across partitions). */
-  def nBest(scored: DataFrame, n: Int,
-            fromCol: String = "from_id", toCol: String = "to_id",
-            scoreCol: String = "score"): DataFrame = {
-    val w = Window.partitionBy(col(fromCol))
-      .orderBy(col(scoreCol).desc, col(toCol).asc)
+  def nBest(scored: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col("from_id"))
+      .orderBy(col("score").desc, col("to_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= n)
       .drop("rank")

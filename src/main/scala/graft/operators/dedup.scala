@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.text
+import graft.plans.stage
 
 /**
  * Document deduplication family for large-scale training-data pipelines.
@@ -85,8 +86,7 @@ object dedup {
     * realistic corpus), identically in the DuckDB twin. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, threshold: Double,
-                        maxDf: Long = 1000L,
-                        widthHint: Int = -1): DataFrame = {
+                        maxDf: Long = 1000L): DataFrame = {
     // materialized ONCE (r7): the distinct shingle-key table has THREE
     // consumers below (per-doc sizes, the df count, and the self-join
     // probe), each needing a different distribution — ReuseExchange does
@@ -96,7 +96,7 @@ object dedup {
     // (id, 8-byte key) projection replaces two full corpus scans with
     // reads of a table that is a small multiple of the token count —
     // exactly the guide §5 cache rule (reused AND expensive to recompute).
-    val sh = graft.plans.stage.materialize(
+    val sh = stage.materialize(
       shingles(docs, idCol, textCol, k)
         .select(col("id"), contentKey(col("shingle")).as("shingle")))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_shingles"))
@@ -110,16 +110,14 @@ object dedup {
         .filter(col("df") <= maxDf && col("df") >= 2),
       "shingle")
       .select("shingle", "id")
-    // pin the self-join at cluster width (-1 = defaultParallelism, 0 =
-    // off): AQE sizes the exchange by its INPUT bytes, but this stage's
-    // cost is the per-shingle-bucket pair EXPLOSION — quadratic in bucket
-    // size, invisible to byte-based coalescing (measured: 3.8 MB in,
-    // 89.7 MB + 23 s CPU out, coalesced to ONE task). An explicit
-    // numPartitions repartition is exempt from AQE coalescing, and both
-    // join sides share it, so the SMJ stays co-partitioned.
-    val width = if (widthHint == -1)
-      docs.sparkSession.sparkContext.defaultParallelism else widthHint
-    val rare = if (width > 0) rare0.repartition(width, col("shingle")) else rare0
+    // pin the self-join at cluster width: AQE sizes the exchange by its
+    // INPUT bytes, but this stage's cost is the per-shingle-bucket pair
+    // EXPLOSION — quadratic in bucket size, invisible to byte-based
+    // coalescing (measured: 3.8 MB in, 89.7 MB + 23 s CPU out, coalesced
+    // to ONE task). An explicit numPartitions repartition is exempt from
+    // AQE coalescing, and both join sides share it, so the SMJ stays
+    // co-partitioned.
+    val rare = stage.pinned(rare0, col("shingle"))
     val joined = rare.as("a")
       .join(rare.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
@@ -134,8 +132,7 @@ object dedup {
     // hash partitions, so the partial agg was collapsing little (measured:
     // exchange grew 254 → 280 MB (+10%) while the agg went from 8 to
     // `width` tasks — q23 wall 6.9 s → 3.1 s).
-    val shared = (if (width > 0) joined.repartition(width, col("id1"), col("id2"))
-      else joined)
+    val shared = stage.pinned(joined, col("id1"), col("id2"))
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("shared"))
     shared
@@ -177,10 +174,7 @@ object dedup {
     * 10^10-document corpus the candidate-join shuffle is the dominant
     * exchange and its width is the key width. */
   def lshCandidates(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int, numHashes: Int, rowsPerBand: Int,
-                    widthHint: Int = -1): DataFrame = {
-    val width = if (widthHint == -1)
-      docs.sparkSession.sparkContext.defaultParallelism else widthHint
+                    k: Int, numHashes: Int, rowsPerBand: Int): DataFrame = {
     // r7: the signature is ONE wide aggregation instead of the long-form
     // minhashLong → minhashBands chain. The old plan exploded every
     // (id, shingle) row numHashes ways, shuffled (id, seed, 32-char hex)
@@ -207,8 +201,7 @@ object dedup {
       .select(col("id"), explode(array(bandStructs: _*)).as("e"))
       .select(col("id"), col("e.band").as("band"), col("e.band_sig").as("band_sig"))
     // same bucket-explosion width pin as ngramJaccardPairs
-    val bands = if (width > 0)
-      bands0.repartition(width, col("band"), col("band_sig")) else bands0
+    val bands = stage.pinned(bands0, col("band"), col("band_sig"))
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
@@ -268,11 +261,9 @@ object dedup {
     * then verify the true distance with bit_count(xor) over the 4 bands.
     * Never compares documents that agree on no band. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, widthHint: Int = -1): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       "4-band LSH only guarantees recall for Hamming distance <= 3 (pigeonhole)")
-    val width = if (widthHint == -1)
-      docs.sparkSession.sparkContext.defaultParallelism else widthHint
     val sig = simhash(docs, idCol, textCol)
     val long0 = sig.select(col("id"), col("b0"), col("b1"), col("b2"), col("b3"),
         explode(array(
@@ -283,8 +274,7 @@ object dedup {
       .select(col("id"), col("b0"), col("b1"), col("b2"), col("b3"),
         col("e.band").as("band"), col("e.bv").as("bv"))
     // same bucket-explosion width pin as ngramJaccardPairs
-    val long = if (width > 0)
-      long0.repartition(width, col("band"), col("bv")) else long0
+    val long = stage.pinned(long0, col("band"), col("bv"))
     long.as("a").join(long.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
           && col("a.id") < col("b.id"))
@@ -298,10 +288,7 @@ object dedup {
   /** Embedding-cosine near-dup pairs within a blocking key (e.g., an LSH
     * bucket or a label/category column): avoids the global cross join. */
   def embeddingNearDups(vecs: DataFrame, idCol: String, vecCol: String,
-                        blockCol: String, threshold: Double,
-                        widthHint: Int = -1): DataFrame = {
-    val width = if (widthHint == -1)
-      vecs.sparkSession.sparkContext.defaultParallelism else widthHint
+                        blockCol: String, threshold: Double): DataFrame = {
     // r7: per-ROW norm computed before the pair cross (8 extra bytes
     // through the block exchange vs three interpreted array passes per
     // PAIR; dot/(na·nb) keeps cosineCol's exact grouping — bit-identical)
@@ -310,7 +297,7 @@ object dedup {
       .withColumn("n", similarity.normCol(col("v")))
     // same bucket-explosion width pin as ngramJaccardPairs (the per-block
     // pair cross is quadratic in block size, the cosine is CPU-dense)
-    val v = if (width > 0) v0.repartition(width, col("blk")) else v0
+    val v = stage.pinned(v0, col("blk"))
     v.as("a").join(v.as("b"),
         col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .withColumn("cosine",
@@ -339,7 +326,7 @@ object dedup {
    * Scale: signatures are one codegen pass over the vector table (the
    * weight matrix is a literal — no join, no shuffle); the bucket
    * self-join carries (id, band, sig) integer rows and gets the explicit
-   * `repartition(width, band, sig)` pin (AQE sizes the exchange by input
+   * `stage.pinned(band, sig)` width pin (AQE sizes the exchange by input
    * bytes, not the quadratic per-bucket explosion — the 1-task disease);
    * the exact-cosine verify joins the distinct candidate PAIRS back to
    * the vector table by id instead of dragging vectors through the
@@ -360,25 +347,19 @@ object dedup {
   def embeddingLshPairs(vecs: DataFrame, idCol: String, vecCol: String,
                         planes: Int = 32, bands: Int = 4,
                         threshold: Double = 0.8,
-                        widthHint: Int = -1, maxBucket: Long = 0L): DataFrame = {
+                        maxBucket: Long = 0L): DataFrame = {
     require(planes > 0 && bands > 0 && planes % bands == 0,
       s"planes must be a positive multiple of bands, got planes=$planes bands=$bands")
     require(planes / bands <= 62, "band signature must fit a BIGINT")
     val r = planes / bands
-    val width = if (widthHint == -1)
-      vecs.sparkSession.sparkContext.defaultParallelism else widthHint
-    // one cheap dimension peek (the requireDim pattern): the weight matrix
-    // is a literal sized to the data's dimensionality. Peek past null
-    // vectors (size(null) is null → getInt would NPE) and fail loudly on
-    // a degenerate dimension: dim = 0 would collapse EVERY signature into
-    // the (band, 0) bucket — the quadratic one-task explosion the width
-    // pin cannot split. Dimension consistency across rows stays the
-    // caller's contract (same one-row peek as similarity.requireDim).
-    val dimRow = vecs.filter(col(vecCol).isNotNull)
-      .select(size(col(vecCol)).as("d")).limit(1).collect()
-    val dim = if (dimRow.isEmpty) 0 else dimRow(0).getInt(0)
-    require(dim > 0 || dimRow.isEmpty,
-      s"embeddingLshPairs: vector column '$vecCol' has dimension $dim")
+    // one cheap dimension peek: the weight matrix is a literal sized to the
+    // data's dimensionality. Fail loudly on a degenerate dimension: dim = 0
+    // would collapse EVERY signature into the (band, 0) bucket — the
+    // quadratic one-task explosion the width pin cannot split.
+    val peek = similarity.vectorDim(vecs, vecCol)
+    peek.foreach(d => require(d > 0,
+      s"embeddingLshPairs: vector column '$vecCol' has dimension $d"))
+    val dim = peek.getOrElse(0)
     val md = java.security.MessageDigest.getInstance("MD5")
     def wSign(p: Int, d: Int): Long = {
       val hex = md.digest(s"hp:$p:$d".getBytes("UTF-8"))
@@ -401,8 +382,7 @@ object dedup {
             acc + element_at(col("bits"), (b * r + i + 1).cast("int")) *
               element_at(pow2, (i + 1).cast("int"))).as("sig")))).as("e"))
       .select(col("id"), col("e.band").as("band"), col("e.sig").as("sig"))
-    val sig1 = if (width > 0) sig0.repartition(width, col("band"), col("sig"))
-      else sig0
+    val sig1 = stage.pinned(sig0, col("band"), col("sig"))
     val sig = if (maxBucket > 0) {
       // bucket-size window runs on the pinned exchange (same keys)
       val wB = Window.partitionBy(col("band"), col("sig"))

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{text, vecagg}
+import graft.functions.vecagg
 
 /**
  * Embeds-mode alignment — the reference's `bertembeds` baseline shipped as
@@ -43,17 +43,16 @@ object embeds {
       .select(col("from_id"), col("to_id"),
         similarity.cosineCol(col("fv"), col("tv")).as("score"))
 
-  /** One direction over (id, label) long-form sides: token postings of
-    * each side, then `align.direction` with the embeds hop. `d` is the
+  /** One direction over (id, label) long-form sides: word-token postings
+    * of each side, then `align.direction` with the embeds hop. `d` is the
     * to-side class count; `fixedPointIdf` ranks candidates by the integer
     * IDF surrogate (`index.idfCandidates`), as the oracle-checked query
     * does. */
   def alignOneSide(fromLabels: DataFrame, toLabels: DataFrame,
                    fromVecs: DataFrame, toVecs: DataFrame, d: Long,
                    candidateLimit: Int = 25, nbest: Int = 1,
-                   tokenizer: Column => Column = text.wordTokensCol,
                    fixedPointIdf: Boolean = false): DataFrame =
-    align.direction(index.postingsFromText(fromLabels, "id", "label", 0, tokenizer),
-        index.postingsFromText(toLabels, "id", "label", 0, tokenizer), d,
+    align.direction(index.postingsFromText(fromLabels, "id", "label"),
+        index.postingsFromText(toLabels, "id", "label"), d,
         candidateLimit, nbest, fixedPointIdf = fixedPointIdf)(hop(fromVecs, toVecs))
 }

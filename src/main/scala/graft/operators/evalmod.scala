@@ -174,9 +174,9 @@ object evalmod {
     * baselines, idxmax of F1 taken separately over each slice). The report
     * here carries an explicit `source` column ("system" / "string_match")
     * instead of positional last-3 rows. */
-  def bestByF1PerSource(report: DataFrame, sourceCol: String = "source"): DataFrame = {
+  def bestByF1PerSource(report: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(sourceCol))
+    val w = Window.partitionBy(col("source"))
       .orderBy(col("f1").desc, col("threshold").asc)
     report.withColumn("rk", row_number().over(w)).filter(col("rk") === 1).drop("rk")
   }

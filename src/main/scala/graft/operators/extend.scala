@@ -65,11 +65,9 @@ object extend {
         .join(seen, pairCols, "left_anti") // seen-set dedup (bert_classifier_extend.py:48-50)
 
       // score: string-match 1.0 short-circuit then lexical scorer
-      val withLabels = candidates
-        .join(srcLabels.select(col("id").as("entity1"), col("label").as("l1")), "entity1")
-        .join(tgtLabels.select(col("id").as("entity2"), col("label").as("l2")), "entity2")
-        .select(col("entity1").as("from_id"), col("entity2").as("to_id"),
-          col("l1"), col("l2"))
+      val withLabels = align.labelPairs(
+        candidates.select(col("entity1").as("from_id"), col("entity2").as("to_id")),
+        srcLabels, tgtLabels)
       // string-match short-circuit (bert_classifier_extend.py:53-56): ANY
       // identical label pair fixes the whole mapping at 1.0; otherwise the
       // pooled mean of the scorer output.

@@ -19,6 +19,9 @@ import graft.plans.stage.implicits._
  */
 object hierarchy {
 
+  /** Round bound of the distributed frontier loop: deeper DAGs stop here. */
+  private val MaxRounds = 64
+
   /** (id, depth) with depth = length of the LONGEST path to a root when
     * `longest`, else the shortest. Roots (no parent) have depth 0.
     *
@@ -31,7 +34,7 @@ object hierarchy {
     * inputs and everything else keep the distributed loop (a cycle never
     * drains the Kahn queue: detected, not wrong). */
   def depth(spark: SparkSession, edges: DataFrame, longest: Boolean,
-            maxRounds: Int = 64, maxLocalEdges: Long = 5000000L): DataFrame = {
+            maxLocalEdges: Long = 5000000L): DataFrame = {
     val e = edges.select(col("child_iri"), col("parent_iri")).distinct()
       .materialize
     val localOut = route.local(e, maxLocalEdges, "hierarchy.depth", Seq("child_iri", "parent_iri"))
@@ -47,7 +50,7 @@ object hierarchy {
     val pick: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
       if (longest) (a, b) => greatest(a, b) else (a, b) => least(a, b)
 
-    while (round < maxRounds && !frontier.isEmpty) {
+    while (round < MaxRounds && !frontier.isEmpty) {
       val proposals = frontier
         .join(e.select(col("parent_iri").as("id"), col("child_iri")), "id")
         .select(col("child_iri").as("id"), (col("depth") + 1).as("depth"))

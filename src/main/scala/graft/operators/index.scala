@@ -89,8 +89,9 @@ object index {
    *                     size statistics (autoBroadcastJoinThreshold) — the
    *                     safe default when the candidate side might not fit
    *                     an executor
-   * @param widthHint    >0 pins ONE query_id exchange of that width ahead
-   *                     of the aggregation; the (query,class) groupBy, the
+   * @param widthHint    >0 (callers pass `stage.width`) pins ONE query_id
+   *                     exchange of that width ahead of the
+   *                     aggregation; the (query,class) groupBy, the
    *                     top-k window AND everything downstream of the
    *                     returned frame reuse it (query_id ⊆ both keys).
    *                     For catalog-sized inputs this stops AQE from

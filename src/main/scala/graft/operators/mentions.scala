@@ -157,8 +157,9 @@ object mentions {
         lag(col("turn_idx"), 1).over(wAll) =!= col("turn_idx") ||
         lag(col("onto"), 1).over(wAll) =!= col("onto") ||
         lag(col("class_iri"), 1).over(wAll) =!= col("class_iri")
-    // widthHint > 0 pins the conv_id exchange at that width: the mention
-    // stream is transcript-proportional (the 12M-turn bench run shuffles
+    // widthHint > 0 (`stage.width` from Pipeline.run) pins the conv_id
+    // exchange at that width: the mention stream is
+    // transcript-proportional (the 12M-turn bench run shuffles
     // ~490 MB through this ONE exchange), and the default
     // shuffle.partitions is sized for the catalog-side tiny stages —
     // measured 119 core-s squeezed into 10 tasks at local[32] without the

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.text
+import graft.plans.stage
 
 /**
  * NES-mode alignment — the reference's third mapping mode (`nes`,
@@ -38,24 +38,22 @@ object nes {
   def hop(fromLabels: DataFrame, toLabels: DataFrame,
           jaccardWeight: Double = 0.5, editWeight: Double = 0.5)
          (cands: DataFrame): DataFrame =
-    align.labelPairs(cands, fromLabels, toLabels)
-      .repartition(cands.sparkSession.sparkContext.defaultParallelism,
+    stage.pinned(align.labelPairs(cands, fromLabels, toLabels),
         col("from_id"), col("to_id"))
       .groupBy("from_id", "to_id")
       .agg(max(score.pairScoreCol(col("l1"), col("l2"),
         jaccardWeight, editWeight)).as("score"))
 
-  /** One direction over (id, label) long-form sides: token postings of
-    * each side, then `align.direction` with the nes hop. `d` is the
+  /** One direction over (id, label) long-form sides: word-token postings
+    * of each side, then `align.direction` with the nes hop. `d` is the
     * to-side class count. */
   def alignOneSide(fromLabels: DataFrame, toLabels: DataFrame, d: Long,
                    candidateLimit: Int = 25, nbest: Int = 1,
-                   tokenizer: Column => Column = text.wordTokensCol,
                    fixedPointIdf: Boolean = false,
                    jaccardWeight: Double = 0.5,
                    editWeight: Double = 0.5): DataFrame =
-    align.direction(index.postingsFromText(fromLabels, "id", "label", 0, tokenizer),
-        index.postingsFromText(toLabels, "id", "label", 0, tokenizer), d,
+    align.direction(index.postingsFromText(fromLabels, "id", "label"),
+        index.postingsFromText(toLabels, "id", "label"), d,
         candidateLimit, nbest, fixedPointIdf = fixedPointIdf)(
       hop(fromLabels, toLabels, jaccardWeight, editWeight))
 }

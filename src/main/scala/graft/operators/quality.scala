@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{rnd, text}
+import graft.plans.stage
 
 /**
  * Document-quality operators for large-scale training-data pipelines:
@@ -151,15 +152,14 @@ object quality {
    * a caller "decontaminating" against a corpus slice rather than an eval
    * suite — the operator falls back to a width-pinned co-partitioned
    * shuffled join instead of force-broadcasting past Spark's limits into
-   * a driver OOM. The explicit `repartition(width, shk)` on BOTH sides is
+   * a driver OOM. The `stage.pinned(shk)` width pin on BOTH sides is
    * load-bearing in the fallback: AQE sizes the exchange by input bytes,
    * not by the join fan-out (the 1-task disease, BENCH/BASELINE.md).
    */
   def decontaminate(train: DataFrame, bench: DataFrame,
                     idCol: String, textCol: String,
                     k: Int = 3, minOverlap: Long = 2L,
-                    maxBenchShingles: Long = 20000000L,
-                    widthHint: Int = 0): DataFrame = {
+                    maxBenchShingles: Long = 20000000L): DataFrame = {
     val trainSh = dedup.shingles(train, idCol, textCol, k)
       .select(col("id"), dedup.contentKey(col("shingle")).as("shk"))
     // persisted across the routing count and the join it routes: without
@@ -186,17 +186,15 @@ object quality {
         // shuffled join (raise maxBenchShingles if the broadcast is intended)
         graft.plans.route.note("decontaminate bench shingles", maxBenchShingles,
           nBench.toString, "over bound")
-        val w = if (widthHint > 0) widthHint
-          else train.sparkSession.sparkContext.defaultParallelism
         // materialize the per-doc overlap NOW so the over-cap bench cache
         // (>1 GB regime by definition) is released here instead of staying
         // pinned in executor storage for the rest of the session (the
         // returned frame otherwise keeps referencing it; r6 ADVICE).
         // Overlap is one narrow row per train doc with >= 1 hit — the
         // cheapest thing on this path to hold instead.
-        val m = graft.plans.stage.materialize(
-          trainSh.repartition(w, col("shk"))
-            .join(benchSh.repartition(w, col("shk")), Seq("shk"))
+        val m = stage.materialize(
+          stage.pinned(trainSh, col("shk"))
+            .join(stage.pinned(benchSh, col("shk")), Seq("shk"))
             .groupBy("id").agg(count(lit(1)).as("n_overlap")))
         benchSh.unpersist(blocking = false)
         m

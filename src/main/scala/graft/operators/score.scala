@@ -178,8 +178,8 @@ object score {
     // AQE sizes partitions by bytes and would coalesce this CPU-dense
     // stage (per-pair edit-distance kernels on KB-sized rows) to a single
     // task, serializing the scorer.
-    val perPair = scoreLabelPairsTyped(spark, pairs, params)
-      .repartition(spark.sparkContext.defaultParallelism, col("from_id"))
+    val perPair = graft.plans.stage.pinned(scoreLabelPairsTyped(spark, pairs, params),
+        col("from_id"))
       .groupBy("from_id", "to_id")
       .agg(agg.as("pooled"),
         max(when(col("l1") === col("l2"), 1).otherwise(0)).as("is_exact"))
@@ -227,7 +227,7 @@ object score {
   }
 
   /** Score clamp: scores <= 0.01 -> 0.0 (bert_classifier_map.py:83-84). */
-  def clamp(mappings: DataFrame, scoreCol: String = "score"): DataFrame =
-    mappings.withColumn(scoreCol,
-      when(col(scoreCol) <= 0.01, 0.0).otherwise(col(scoreCol)))
+  def clamp(mappings: DataFrame): DataFrame =
+    mappings.withColumn("score",
+      when(col("score") <= 0.01, 0.0).otherwise(col("score")))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.plans.route
+import graft.plans.{route, stage}
 
 /**
  * Similarity search over an embedding column (array<float>) — approximate
@@ -35,12 +35,11 @@ object similarity {
   /**
    * Brute-force cosine top-k: for each query vector, the k nearest
    * candidates. `queries`/`candidates` must carry (idCol, vecCol).
-   * The query side is broadcast (callers bound it); ties broken on
-   * candidate id ascending for determinism.
+   * The query side is broadcast (callers bound it); a query never matches
+   * itself; ties broken on candidate id ascending for determinism.
    */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame,
-                     idCol: String, vecCol: String, k: Int,
-                     excludeSelf: Boolean = true): DataFrame = {
+                     idCol: String, vecCol: String, k: Int): DataFrame = {
     // r7: norms precomputed once per ROW on each side — higher-order
     // functions evaluate interpreted, so cosineCol's three array passes
     // per PAIR (dot + both norms) were 3× the necessary work; dot/(nq·nc)
@@ -50,7 +49,7 @@ object similarity {
     val c = candidates.select(col(idCol).as("cand_id"), toDoubleArray(col(vecCol)).as("cv"))
       .withColumn("cn", normCol(col("cv")))
     val joined = broadcast(q).crossJoin(c)
-      .filter(if (excludeSelf) col("query_id") =!= col("cand_id") else lit(true))
+      .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine", dotCol(col("qv"), col("cv")) / (col("qn") * col("cn")))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id").asc)
     joined.withColumn("rank", row_number().over(w))
@@ -180,14 +179,17 @@ object similarity {
   // Seeded k-means centroid fit — makes IVF self-contained at scale
   // -------------------------------------------------------------------------
 
+  /** The fixed-point scale: 10^6 units per 1.0. */
+  private val FixedPoint = 1000000L
+
   /** Fixed-point projection of a float vector: floor(x·10^6) per element.
     * All k-means arithmetic below is integer (BIGINT sums, truncating
     * division), so the fit is bit-identical at any partitioning AND across
     * engines (a float mean's summation order is partition-dependent; an
     * integer sum is associative). Cosine over a uniformly scaled vector
     * equals cosine over the original up to the 10^-6 quantization. */
-  def toFixedPoint(c: Column, scale: Long = 1000000L): Column =
-    transform(c, x => floor(x.cast("double") * scale).cast("long"))
+  def toFixedPoint(c: Column): Column =
+    transform(c, x => floor(x.cast("double") * FixedPoint).cast("long"))
 
   /**
    * Deterministic Lloyd's k-means over an embedding column, the centroid
@@ -288,7 +290,7 @@ object similarity {
     * `ivfTopK`/`assignCells` consume. */
   def fitCentroidsForIvf(fit: DataFrame): DataFrame =
     fit.select(col("cell"),
-      transform(col("centroid"), x => x.cast("double") / 1000000.0).as("cvec"))
+      transform(col("centroid"), x => x.cast("double") / FixedPoint.toDouble).as("cvec"))
 
   /**
    * IVF top-k: probe the `nProbe` nearest cells per query, brute-force only
@@ -332,15 +334,20 @@ object similarity {
   // Product quantization (PQ) — the memory-compression ANN scale path
   // -------------------------------------------------------------------------
 
+  /** Dimension of the first non-null vector in `vecCol` (None when no row
+    * has one): ONE bounded row read, never a full pass — dimension
+    * consistency across rows is the caller's contract. Null vectors are
+    * skipped because `size(null)` is null under ANSI mode. */
+  def vectorDim(df: DataFrame, vecCol: String): Option[Int] =
+    df.filter(col(vecCol).isNotNull).select(size(col(vecCol)))
+      .limit(1).collect().headOption.map(_.getInt(0))
+
   /** Loud fail-fast when m·subDim exceeds the vector dimension — a
     * mismatched slice would otherwise zip against nulls and "encode" every
-    * vector to an arbitrary cell. Reads ONE row (dims are uniform by
-    * construction), never a full pass. */
-  private def requireDim(df: DataFrame, vecCol: String, need: Int, who: String): Unit = {
-    val d = df.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(d.isEmpty || d(0).getInt(0) >= need,
-      s"$who: m*subDim = $need exceeds vector dimension ${d(0).getInt(0)}")
-  }
+    * vector to an arbitrary cell. */
+  private def requireDim(df: DataFrame, vecCol: String, need: Int, who: String): Unit =
+    vectorDim(df, vecCol).foreach(d =>
+      require(d >= need, s"$who: m*subDim = $need exceeds vector dimension $d"))
 
   /**
    * Fit one k-means codebook per subspace: the embedding is cut into `m`
@@ -571,7 +578,7 @@ object similarity {
    * Scale: the cluster blocking is what makes semantic dedup possible at
    * 10^10 vectors — pairwise cosine runs only within a cell, so cost is
    * Σ_c |cell_c|² instead of n². `k` must grow with n (the paper's layout:
-   * k ≈ n / desired-cluster-size) — the explicit `repartition(w, cell)`
+   * k ≈ n / desired-cluster-size) — the `stage.pinned(cell)` width pin
    * on both self-join sides pins the pair-generation width to the cell
    * count granularity (AQE sizes that exchange by input bytes, not the
    * quadratic fan-out — the 1-task disease, BENCH/BASELINE.md); with
@@ -581,26 +588,21 @@ object similarity {
    */
   def semanticDedup(vectors: DataFrame, fit: DataFrame,
                     idCol: String, vecCol: String,
-                    k: Int, iters: Int, tau: Double,
-                    widthHint: Int = 0): DataFrame = {
+                    k: Int, iters: Int, tau: Double): DataFrame = {
     val cen = fitCentroidsForIvf(kmeansFit(fit, idCol, vecCol, k, iters))
     // materialized ONCE: three consumers below (both self-join sides + the
     // full-record projection) would otherwise each re-run the assignment's
     // broadcast-join + window over the 10^10-vector input — two extra full
     // scans at the scale this operator exists for
-    val assigned = graft.plans.stage.materialize(
+    val assigned = stage.materialize(
       assignCells(vectors, cen, idCol, vecCol))
-    val w = if (widthHint > 0) widthHint
-      else vectors.sparkSession.sparkContext.defaultParallelism
     // per-ROW norms computed before the pair join (8 extra bytes through
     // the cell exchange vs three interpreted array passes per PAIR —
     // identical dot/(na·nb) arithmetic, see bruteForceTopK)
-    val a = assigned.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-      .withColumn("na", normCol(col("va")))
-      .repartition(w, col("cell"))
-    val b = assigned.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
-      .withColumn("nb", normCol(col("vb")))
-      .repartition(w, col("cell"))
+    val a = stage.pinned(assigned.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
+      .withColumn("na", normCol(col("va"))), col("cell"))
+    val b = stage.pinned(assigned.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
+      .withColumn("nb", normCol(col("vb"))), col("cell"))
     val dup = a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .filter(dotCol(col("va"), col("vb")) / (col("na") * col("nb")) >= tau)

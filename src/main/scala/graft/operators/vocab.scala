@@ -182,7 +182,7 @@ object vocab {
   }
 
   /** Merge-eligibility floor and driver-heap guard (see `learnMerges`),
-    * shared by `learnMerges`' defaults and `induce`. */
+    * shared by `learnMerges` and `induce`. */
   val MinCount = 2L
   val MaxLocalHistWords = 1000000L
 
@@ -191,7 +191,7 @@ object vocab {
    * (merge_ord, left, right, merged, pair_count) — the merge table IS the
    * tokenizer model; `vocabFrom` turns it into the piece set
    * `text.wordpieceTokensCol` consumes. Stops early when no adjacent pair
-   * occurs at least `minCount` times.
+   * occurs at least `MinCount` times.
    *
    * Two execution paths, bit-identical (VocabSpec): when the histogram has
    * at most `maxLocalHistWords` distinct words — vocabularies are
@@ -210,11 +210,10 @@ object vocab {
    * transcript table (`wordHistogram` is the only corpus-proportional job).
    */
   def learnMerges(spark: SparkSession, hist: DataFrame, nMerges: Int,
-                  minCount: Long = MinCount,
                   maxLocalHistWords: Long = MaxLocalHistWords): DataFrame = {
     import spark.implicits._
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    merges(spark, hist, nMerges, minCount, localHist(hist, maxLocalHistWords))
+    merges(spark, hist, nMerges, MinCount, localHist(hist, maxLocalHistWords))
       .toDF("merge_ord", "left", "right", "merged", "pair_count")
   }
 

@@ -195,8 +195,7 @@ object Pipeline {
       }
       // transcript-proportional exchange at cluster width (the catalog-side
       // shuffle.partitions default is sized for tiny dimension stages)
-      val m = mentions.stabilize(detected.toDF(),
-        spark.sparkContext.defaultParallelism)
+      val m = mentions.stabilize(detected.toDF(), stage.width(spark))
       // stabilize = the per-conversation ordering window over
       // (conv_id, turn_idx) from the BASELINE invariant. Deliberately LAZY
       // — re-validated in round 7: the mention stream has exactly ONE

@@ -55,15 +55,9 @@ object lineage {
     }
   }
 
-  def writeManifest(spark: SparkSession, dir: String, m: Manifest): Unit = {
-    val (fs, base) = fsFor(dir, hadoopConf(spark))
-    fs.mkdirs(base)
-    val out = fs.create(new Path(base, "_GRAFT_MANIFEST.json"), true)
-    try out.write(
-      s"""{"fingerprint":"${m.fingerprint}","rows":${m.rows}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def writeManifest(spark: SparkSession, dir: String, m: Manifest): Unit =
+    writeText(spark, dir, "_GRAFT_MANIFEST.json",
+      s"""{"fingerprint":"${m.fingerprint}","rows":${m.rows}}""")
 
   /** Write a small text artifact (metrics, reports) next to the stage
     * manifests through the same Hadoop FileSystem resolution — a

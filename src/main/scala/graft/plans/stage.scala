@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 
 /**
  * Materialization strategy for consumed-then-dead intermediates and
@@ -33,8 +33,26 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  * conf, so spark-submit `--conf` switches policy without a code change).
  * Both modes are EAGER — they run a job at call time; call sites are
  * placed where the result is consumed immediately after.
+ *
+ * The partition-width pin is the second physical-plan policy kept here.
+ * AQE sizes an exchange by its INPUT bytes, so a stage whose cost is a
+ * quadratic join explosion or a CPU-dense kernel over a few MB of input
+ * is coalesced onto one task (the 1-task disease, BENCH/BASELINE.md). An
+ * explicit `repartition(n, ...)` is exempt from that coalescing, and
+ * `pinned` is the one place that picks `n`: the cluster width.
  */
 object stage {
+
+  /** The cluster width every pin uses: `defaultParallelism`. */
+  def width(spark: SparkSession): Int = spark.sparkContext.defaultParallelism
+
+  /** `df` repartitioned at cluster width on `keys`; with no keys, the
+    * round-robin `df.repartition(width)`. Results are partition-invariant
+    * throughout (determinism contract), so a pin never changes values. */
+  def pinned(df: DataFrame, keys: Column*): DataFrame = {
+    val w = width(df.sparkSession)
+    if (keys.isEmpty) df.repartition(w) else df.repartition(w, keys: _*)
+  }
 
   def materialize(df: DataFrame): DataFrame = materializeDs(df)
 

@@ -146,6 +146,16 @@ class DedupSimSpec extends SparkSuite {
     val bc = similarity.pqEncodeBroadcast(vecs, cb, "vid", "vec", 2, 2)
       .as[(Long, Int, Int)].collect().toSet
     assert(lit == bc && lit.size == 8)
+    // a null vector in the FIRST row: the dimension peek skips it, and the
+    // literal argmax maps it to the same cell as the window plan
+    val nullFirst = (Seq(0L -> Option.empty[Seq[Float]]) ++
+      vecs.as[(Long, Seq[Float])].collect().sortBy(_._1).map { case (i, v) => i -> Some(v) })
+      .toDF("vid", "vec")
+    val litN = similarity.pqEncode(nullFirst, cb, "vid", "vec", 2, 2)
+      .as[(Long, Int, Int)].collect().toSet
+    val bcN = similarity.pqEncodeBroadcast(nullFirst, cb, "vid", "vec", 2, 2)
+      .as[(Long, Int, Int)].collect().toSet
+    assert(litN == bcN && litN.size == 10)
   }
 
   test("assignCells / pqEncode: string, tied and null cells give the broadcast plan's answer") {
@@ -370,6 +380,20 @@ class DedupSimSpec extends SparkSuite {
     val b = dedup.embeddingLshPairs(vs.coalesce(1), "vid", "vec", 8, 4, 0.9)
       .orderBy("id1", "id2").collect().toSeq
     assert(a == b) // fixed-point projections: partition-invariant signatures
+
+    // maxBucket, the hot-bucket guard: identical vectors share every band
+    // bucket, so a trio fills buckets of 3 and a pair of its negation (no
+    // projection is 0, so every bit flips) fills disjoint buckets of 2
+    val trio = Seq(1.3f, 2.9f, 3.7f, 0.45f)
+    val hot = Seq(11L -> trio, 12L -> trio, 13L -> trio,
+      14L -> trio.map(-_), 15L -> trio.map(-_)).toDF("vid", "vec")
+    def capped(maxBucket: Long) = dedup.embeddingLshPairs(hot, "vid", "vec",
+        8, 4, 0.9, maxBucket = maxBucket)
+      .select("id1", "id2").as[(Long, Long)].collect().toSet
+    val uncapped = capped(0L)
+    assert(uncapped == Set((11L, 12L), (11L, 13L), (12L, 13L), (14L, 15L)))
+    assert(capped(2L) == Set((14L, 15L))) // cap below the trio's buckets drops its pairs
+    assert(capped(3L) == uncapped && capped(100L) == uncapped)
   }
 
   test("pqTopK at m=4 is BIT-exact across partitionings (fixed subspace fold order)") {

@@ -254,11 +254,32 @@ class PlanShapeSpec extends SparkSuite {
   // exchange by input bytes (the 1-task disease). The join-free
   // hyperplane projection is enforced by construction (typedLit), not
   // asserted here: the plan's legitimate joins make a substring-level
-  // "no join below the exchange" assertion impossible.
+  // "no join below the exchange" assertion impossible. Every other
+  // operator that pins through `stage.pinned` keeps its exact number of
+  // explicit width pins (counted in the formatted plan before execution).
   test("embeddingLshPairs: width-pinned bucket join") {
     assertPlan(dedup.embeddingLshPairs(read("embeddings"), "vec_id", "embedding",
         planes = 32, bands = 4, threshold = 0.3),
       wanted = Seq("REPARTITION_BY_NUM"), execute = true)
+    val docs = read("documents")
+    val e = read("embeddings")
+    def labels(side: org.apache.spark.sql.Column) = docs.filter(side)
+      .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
+    val pinned = Seq(
+      ("ngramJaccardPairs", dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.2, 500), 3),
+      ("lshCandidates", dedup.lshCandidates(docs, "doc_id", "text", 2, 8, 2), 2),
+      ("simhashPairs", dedup.simhashPairs(docs, "doc_id", "text", 3), 2),
+      ("embeddingNearDups",
+        dedup.embeddingNearDups(e, "vec_id", "embedding", "label", 0.3), 2),
+      ("semanticDedup", similarity.semanticDedup(e, e.filter(col("vec_id") < 200),
+        "vec_id", "embedding", 4, 2, 0.4), 2),
+      ("nes.alignOneSide", nes.alignOneSide(labels(col("doc_id") < 100),
+        labels(col("doc_id") >= 100), 400, 5, 1), 2))
+    pinned.foreach { case (name, df, want) =>
+      val pins = "REPARTITION_BY_NUM".r
+        .findAllIn(df.queryExecution.explainString(ExplainMode.fromString("formatted"))).size
+      assert(pins == want, s"$name: $pins explicit width pins, expected $want")
+    }
   }
 
   // the within-cell pair self-join must carry the explicit width pin on

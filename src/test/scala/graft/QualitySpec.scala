@@ -140,7 +140,7 @@ class QualitySpec extends SparkSuite {
     // RDD left pinned by the call (the r6 ADVICE leak).
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val fallback = quality.decontaminate(train, bench, "doc_id", "text", 3, 2L,
-      maxBenchShingles = 1L, widthHint = 4)
+      maxBenchShingles = 1L)
     assert(fallback.orderBy("id").collect().toSeq == broadcastPath)
     // exactly ONE new persistent entry may remain: the overlap's own
     // localCheckpoint blocks (released when the frame is GC'd). A pinned
