@@ -179,61 +179,8 @@ object text {
   // Text analysis for training-data pipelines (graft additions)
   // -------------------------------------------------------------------------
 
-  private val StopWords: Set[String] = Set(
+  /** Stopword list of the Column-level quality score (q28). */
+  val stopWords: Set[String] = Set(
     "the", "a", "an", "and", "or", "of", "to", "in", "on", "for", "with",
     "is", "are", "was", "be", "as", "at", "by", "it", "this", "that")
-
-  /** Stopword list shared with the Column-level quality score. */
-  def stopWords: Set[String] = StopWords
-
-  /** Heuristic quality score in [0,1]: blend of length sanity, alpha ratio
-    * and stopword ratio — the shape of a Gopher/C4-style filter. */
-  def qualityScore(s: String): Double = {
-    val n = s.length
-    if (n == 0) return 0.0
-    val toks = wordTokens(s)
-    val nTok = toks.size
-    if (nTok == 0) return 0.0
-    val lenOk = if (n >= 20 && n <= 20000) 1.0 else 0.0
-    val alpha = s.count(_.isLetter).toDouble / n
-    val stop = toks.count(StopWords.contains).toDouble / nTok
-    val stopOk = math.min(1.0, stop / 0.05)
-    0.25 * lenOk + 0.5 * alpha + 0.25 * stopOk
-  }
-
-  /** n-gram-profile language ID heuristic: scores text against tiny
-    * per-language marker sets; deterministic, dependency-free. */
-  private val LangMarkers: Map[String, Set[String]] = Map(
-    "en" -> Set("the", "and", "of", "to", "is", "with", "that"),
-    "de" -> Set("der", "die", "das", "und", "ist", "mit", "ein"),
-    "fr" -> Set("le", "la", "les", "et", "est", "avec", "une"),
-    "es" -> Set("el", "la", "los", "y", "es", "con", "una"))
-
-  def languageId(s: String): String = {
-    val toks = wordTokens(s)
-    if (toks.isEmpty) "und"
-    else {
-      val scored = LangMarkers.toSeq.map { case (lang, markers) =>
-        (toks.count(markers.contains), lang)
-      }
-      // deterministic tie-break: highest count, then language name ascending
-      val (cnt, lang) = scored.sortBy { case (c, l) => (-c, l) }.head
-      if (cnt == 0) "und" else lang
-    }
-  }
-
-  /** BPE-ish token count: whitespace words plus an extra token per 4 chars
-    * of long words — a cheap, deterministic proxy for subword token counts. */
-  def tokenCount(s: String): Long =
-    subwordTokens(s).size.toLong
-
-  /** 64-bit rolling polynomial fingerprint (Rabin-Karp style) of the
-    * normalized text — for cheap document identity at scale. */
-  def fingerprint(s: String): Long = {
-    val t = normalize(s)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < t.length) { h = 31 * h + t.charAt(i); i += 1 }
-    h
-  }
 }

@@ -40,26 +40,4 @@ object model {
 
   /** Hierarchy edge (child is-a parent) — cf. onto_box.py:154-161. */
   final case class Edge(onto: String, child_iri: String, parent_iri: String)
-
-  /** Sub-word inverted index posting — cf. onto_index.py:49-60. */
-  final case class Posting(onto: String, token: String, class_idx: Long)
-
-  /** A scored cross-catalog mapping — the reference's (Entity1, Entity2,
-    * Value) TSV contract, onto_map.py:144-146. */
-  final case class Mapping(entity1: String, entity2: String, value: Double)
-
-  /** Corpus pair in long form (reference nests these in a dict keyed by
-    * label text, basic_corpus.py:20-29). kind ∈ {id_syn, syn, soft_neg,
-    * hard_neg}; label 1 = synonym, 0 = nonsynonym. */
-  final case class CorpusPair(
-      sent1: String, sent2: String, label: Int, kind: String, split: String)
-
-  /** Output triple of the KG-construction pipeline.
-    * pred ∈ {sameAs, mentions, broader}. */
-  final case class Triple(subj: String, pred: String, obj: String, score: Double)
-
-  /** Evaluation row — cf. onto_map.py:101-116 report shape. */
-  final case class EvalRow(
-      set_type: String, threshold: Double, n_mappings: Long, n_ignored: Long,
-      p: Double, r: Double, f1: Double)
 }

@@ -32,14 +32,6 @@ object corpus {
       .withColumn("label", lit(1))
       .withColumn("kind", lit("syn"))
 
-  /** Identity synonyms: every distinct label paired with itself, label 1
-    * (basic_corpus.py:111-114). */
-  def identitySynonyms(classes: DataFrame): DataFrame =
-    classes
-      .select(explode(col("labels")).as("sent1")).distinct()
-      .select(col("sent1"), col("sent1").as("sent2"),
-        lit(1).as("label"), lit("id_syn").as("kind"))
-
   /** Enforced bound on the dimension tables whose global index window
     * funnels through one task (classes in softNonsynonyms, mappings in
     * crossSoftNonsynonyms). The catalogs the reference aligns are 10^3-10^4
@@ -134,27 +126,6 @@ object corpus {
   def hardNonsynonyms(classes: DataFrame, edges: DataFrame,
                       depthThreshold: Int = Int.MaxValue,
                       parentDepths: Option[DataFrame] = None): DataFrame = {
-    val raw = hardNonsynonymRaw(classes, edges, depthThreshold, parentDepths)
-    raw.filter(col("sent1") =!= col("sent2"))
-      .join(synonymPairsBothOf(classes), Seq("sent1", "sent2"), "left_anti")
-      .withColumn("label", lit(0))
-      .withColumn("kind", lit("hard_neg"))
-  }
-
-  /** Rejected hard-negative pairs — the violations side of hardNonsynonyms
-    * (intra_onto.py:143-147: sibling label pairs failing
-    * negative_sample_check are appended to `violations` and counted as
-    * removed_violations at intra_onto.py:58). */
-  def hardNonsynonymViolations(classes: DataFrame, edges: DataFrame,
-                               depthThreshold: Int = Int.MaxValue,
-                               parentDepths: Option[DataFrame] = None): DataFrame =
-    violationsOf(hardNonsynonymRaw(classes, edges, depthThreshold, parentDepths),
-      synonymPairsBothOf(classes), "hard_neg_violation")
-
-  /** Raw sibling label cross-pairs BEFORE negative_sample_check. */
-  private def hardNonsynonymRaw(classes: DataFrame, edges: DataFrame,
-                                depthThreshold: Int,
-                                parentDepths: Option[DataFrame]): DataFrame = {
     val keptEdges = parentDepths match {
       case Some(d) if depthThreshold != Int.MaxValue =>
         edges.join(
@@ -173,6 +144,10 @@ object corpus {
       .join(lab.select(col("class_iri").as("c1"), col("l").as("sent1")), "c1")
       .join(lab.select(col("class_iri").as("c2"), col("l").as("sent2")), "c2")
       .select("sent1", "sent2")
+      .filter(col("sent1") =!= col("sent2"))
+      .join(synonymPairsBothOf(classes), Seq("sent1", "sent2"), "left_anti")
+      .withColumn("label", lit(0))
+      .withColumn("kind", lit("hard_neg"))
   }
 
   /** Draws failing negative_sample_check (identical labels or an existing
@@ -309,43 +284,12 @@ object corpus {
         lit(0).as("label"), lit("co_soft_neg").as("kind"))
     if (m < 2) return empty
     requireDim(m, "crossSoftNonsynonyms mappings")
-    val (drawn0, synBoth) = crossSoftDraws(maps, srcClasses, tgtClasses, rate, seed, m)
-    val drawn = drawn0.filter(col("sent1") =!= col("sent2"))
-    val kept = drawn.join(synBoth, Seq("sent1", "sent2"), "left_anti").distinct()
-    kept.unionByName(kept.select(col("sent2").as("sent1"), col("sent1").as("sent2")))
-      .distinct()
-      .withColumn("label", lit(0))
-      .withColumn("kind", lit("co_soft_neg"))
-  }
-
-  /** Rejected cross-catalog soft-negative draws (cross_onto.py:139-147:
-    * draws failing negative_sample_check against the cross-synonym alias
-    * sets go to `violations`; removed_violations counts them at
-    * cross_onto.py:79). */
-  def crossSoftNonsynonymViolations(maps: DataFrame, srcClasses: DataFrame,
-                                    tgtClasses: DataFrame, rate: Int,
-                                    seed: Long): DataFrame = {
-    val m = maps.select("entity1", "entity2").distinct().count()
-    if (m < 2) return maps.sparkSession.emptyDataFrame
-      .withColumn("sent1", lit("")).limit(0)
-      .select(col("sent1"), col("sent1").as("sent2"),
-        lit("co_soft_neg_violation").as("kind"))
-    requireDim(m, "crossSoftNonsynonyms mappings")
-    val (drawn, synBoth) = crossSoftDraws(maps, srcClasses, tgtClasses, rate, seed, m)
-    violationsOf(drawn, synBoth, "co_soft_neg_violation")
-  }
-
-  /** Raw cross-soft draws (both sides, multiplicity preserved) plus the
-    * cross-synonym pair set the check consults. Intermediates are
-    * stage.materialize'd, NOT cache()'d: cached plans pin storage memory
-    * in the shared CacheManager for the session's lifetime, while
-    * checkpoint blocks are released when the DataFrame is garbage-collected
-    * — repeated corpus builds in a long-lived session stay flat (see
-    * plans/stage.scala for the local-vs-reliable fault-tolerance knob). */
-  private def crossSoftDraws(maps: DataFrame, srcClasses: DataFrame,
-                             tgtClasses: DataFrame, rate: Int, seed: Long,
-                             m: Long): (DataFrame, DataFrame) = {
-    // mapping set is seed/alignment-sized (bounded — requireDim'd by callers)
+    // mapping set is seed/alignment-sized (bounded — requireDim'd above).
+    // Intermediates are stage.materialize'd, NOT cache()'d: cached plans
+    // pin storage memory in the shared CacheManager for the session's
+    // lifetime, while checkpoint blocks are released when the DataFrame is
+    // garbage-collected — repeated corpus builds in a long-lived session
+    // stay flat (see plans/stage.scala for the fault-tolerance knob).
     val w = Window.orderBy("entity1", "entity2")
     val idx = maps.select("entity1", "entity2").distinct()
       .withColumn("midx", row_number().over(w).cast("long") - 1)
@@ -371,8 +315,13 @@ object corpus {
     }
     val drawn = side("src_labels", "tgt_labels", "s2t")
       .unionByName(side("tgt_labels", "src_labels", "t2s"))
+      .filter(col("sent1") =!= col("sent2"))
     val synBoth = crossSynonyms(idx, srcClasses, tgtClasses).select("sent1", "sent2")
-    (drawn, synBoth)
+    val kept = drawn.join(synBoth, Seq("sent1", "sent2"), "left_anti").distinct()
+    kept.unionByName(kept.select(col("sent2").as("sent1"), col("sent1").as("sent2")))
+      .distinct()
+      .withColumn("label", lit(0))
+      .withColumn("kind", lit("co_soft_neg"))
   }
 
   /**
@@ -388,7 +337,7 @@ object corpus {
   def assembleSplits(corpusLong: DataFrame, softNegRate: Double,
                      hardNegRate: Double, valRatio: Double, seed: Long): DataFrame = {
     val pairCols = Seq("sent1", "sent2", "label", "kind").map(col)
-    // stage.materialize, not cache: see crossSoftDraws — checkpoint blocks
+    // stage.materialize, not cache: see crossSoftNonsynonyms — checkpoint blocks
     // are GC-released, cached plans pin storage memory for the session life
     val syn = corpusLong.filter(col("label") === 1 && col("kind") =!= "id_syn")
       .select(pairCols: _*).distinct().materialize

@@ -34,16 +34,12 @@ object dedup {
       .withColumn("is_canonical", (col("id") === min(col("id")).over(w)).cast("int"))
   }
 
-  /** Batch twin of the streaming first-seen dedup ledger
-    * (stream.dedupStream): one survivor per normalized-content hash — the
-    * copy with the smallest (arrival, id) — i.e. exactly what the
-    * streaming ledger emits when rows arrive in `arrival` order (in-batch
-    * ties break on min id, the same rule as the stream's per-batch minBy).
-    * The emitted HASH set equals `exact`'s canonical set for ANY arrival
-    * order; only the surviving id depends on arrival. Backfill contract:
-    * seeding the streaming job's RocksDB ledger state from a historical
-    * corpus is this operator. One hash-keyed window — no pairs, no loop;
-    * the shuffle carries (id, arrival, 32-byte hash) rows only. */
+  /** First-seen dedup ledger: one survivor per normalized-content hash —
+    * the copy with the smallest (arrival, id), so ties in `arrival` break
+    * on min id. The surviving HASH set equals `exact`'s canonical set for
+    * ANY arrival order; only the surviving id depends on arrival. One
+    * hash-keyed window — no pairs, no loop; the shuffle carries (id,
+    * arrival, 32-byte hash) rows only. */
   def firstSeenLedger(docs: DataFrame, idCol: String, textCol: String,
                       arrivalCol: Column): DataFrame = {
     val w = Window.partitionBy("text_hash").orderBy(col("_arr").asc, col("id").asc)
@@ -156,17 +152,6 @@ object dedup {
       .agg(min(col("h")).as("mh"))
   }
 
-  /** LSH band signatures: seeds grouped into bands of `rowsPerBand`; the
-    * band signature is the ordered concat of its minhashes. Candidate pairs
-    * are documents sharing any (band, signature) bucket. */
-  def minhashBands(sig: DataFrame, rowsPerBand: Int): DataFrame =
-    sig
-      .withColumn("band", (col("seed") / rowsPerBand).cast("int"))
-      .groupBy("id", "band")
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("seed"), col("mh")))),
-          x => x.getField("mh")), ",").as("band_sig"))
-
   /** MinHash-LSH candidate pairs (id1 < id2, distinct).
     *
     * Scale: the bucket join carries `contentKey(band_sig)` (8 bytes), not
@@ -176,7 +161,7 @@ object dedup {
   def lshCandidates(docs: DataFrame, idCol: String, textCol: String,
                     k: Int, numHashes: Int, rowsPerBand: Int): DataFrame = {
     // r7: the signature is ONE wide aggregation instead of the long-form
-    // minhashLong → minhashBands chain. The old plan exploded every
+    // minhashLong → band-signature chain. The old plan exploded every
     // (id, shingle) row numHashes ways, shuffled (id, seed, 32-char hex)
     // rows into groupBy(id, seed), then shuffled AGAIN into
     // groupBy(id, band) with a collect_list sort. Here the numHashes min()
@@ -184,8 +169,8 @@ object dedup {
     // partial combine — one (id)-keyed exchange carrying one narrow row
     // per id per partition, two exchanges removed. The md5 count and the
     // per-band ordered concat are unchanged, so the band signatures (and
-    // the pair set) are bit-identical (q22 oracle; minhashLong/
-    // minhashBands stay as the long-form operators q21 pins).
+    // the pair set) are bit-identical (q22 oracle; minhashLong stays
+    // as the long-form operator q21 pins).
     val mhAggs = (0 until numHashes).map { s =>
       min(md5(concat(col("shingle"), lit("#"), lit(s)))).as(s"mh$s")
     }

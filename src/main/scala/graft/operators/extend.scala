@@ -37,8 +37,6 @@ object extend {
                      srcLabels: DataFrame, tgtLabels: DataFrame,
                      kappa: Double = 0.9, maxIter: Int = 50,
                      params: score.ScorerParams = score.ScorerParams()): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-
     val pairCols = Seq("entity1", "entity2")
     var seen = seeds.select(pairCols.map(col): _*).distinct()
       .materialize

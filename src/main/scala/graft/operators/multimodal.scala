@@ -5,15 +5,10 @@ import org.apache.spark.sql.functions._
 
 /**
  * Multimodal column plumbing: image/audio/video payloads are opaque
- * `binary` columns with typed metadata; decode / feature-extract run as
- * *batched* partition-local functions (the Scala analogue of mapInPandas —
- * Iterator-of-batches in, Iterator-of-batches out), so a real codec drops
- * into `decodeStub` without touching the plan.
- *
- * The actual media codecs are unavailable in this environment, so the
- * decode step is a clearly-marked deterministic fake: it derives a fixed
- * "feature vector" from the payload bytes. The Spark-side contract —
- * schema, partitioning, batch shape — is real and tested.
+ * `binary` columns with typed metadata — relational byte statistics
+ * (`mediaMeta`) and container headers parsed by a typed mapPartitions
+ * (`headerMeta`), so the metadata feeds downstream joins and filters
+ * without an optimizer barrier.
  */
 object multimodal {
 
@@ -30,8 +25,7 @@ object multimodal {
   // Real container-header decode — no codec needed: PNG/JPEG/GIF/WAV store
   // their dimensions/audio params in fixed, documented header fields, so
   // deterministic byte parsing recovers the typed metadata from the opaque
-  // binary column. Only the FEATURE extraction below remains a declared
-  // fake (it would need the actual pixel/sample codecs).
+  // binary column.
   // -------------------------------------------------------------------------
 
   /** Parsed media header. width/height for images; channels/sample_rate
@@ -185,43 +179,5 @@ object multimodal {
         (id, m.format, m.width, m.height, m.channels, m.sample_rate)
       })
       .toDF("id", "format", "width", "height", "channels", "sample_rate")
-  }
-
-  /** DETERMINISTIC FAKE DECODER — stands in for an image/audio codec.
-    * Emits `dim` pseudo-features from byte statistics of the payload. */
-  def fakeDecode(payload: Array[Byte], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    if (payload == null || payload.isEmpty) return out
-    var i = 0
-    while (i < payload.length) {
-      out(i % dim) += (payload(i) & 0xFF) / 255.0f
-      i += 1
-    }
-    var j = 0
-    while (j < dim) { out(j) = out(j) / (payload.length.toFloat / dim); j += 1 }
-    out
-  }
-
-  /**
-   * Batched decode: (id, payload: binary) → (id, n_bytes, features:
-   * array<float>). Batches of `batchSize` rows per kernel invocation —
-   * the shape a vectorized (Arrow) UDF would see. A typed mapPartitions
-   * (MapPartitions *logical* node, like `headerMeta` and the pair
-   * scorer), so Catalyst/AQE keep owning the plan if decoded features
-   * feed downstream joins — no df.rdd optimizer barrier.
-   */
-  def decodeFeatures(spark: SparkSession, df: DataFrame, idCol: String,
-                     payloadCol: String, dim: Int = 16,
-                     batchSize: Int = 64): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("string").as("id"), col(payloadCol).as("payload"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap { batch =>
-        // one "kernel call" per batch: decode all payloads together
-        batch.iterator.map { case (id, p) =>
-          (id, if (p == null) 0L else p.length.toLong, fakeDecode(p, dim))
-        }
-      })
-      .toDF("id", "n_bytes", "features")
   }
 }

@@ -31,7 +31,6 @@ object fixtures {
       branching: Int = 4)       // hierarchy fan-in
 
   val tiny: Config = Config()
-  val small: Config = Config(nConcepts = 500, nConvs = 2000)
   def bench(nConvs: Int = 200000): Config = Config(nConcepts = 2000, nConvs = nConvs)
 
   // -- deterministic word material ------------------------------------------

@@ -1,179 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model._
-import graft.operators.mentions
 
 /**
- * Streaming ingest (graft addition — the reference is pure batch,
- * SURVEY.md §2.11): mention detection is per-turn-local, so it lifts to
- * Structured Streaming unchanged — readStream → the same broadcast-trie
- * mapPartitions kernel → append sink. The candidate join / extension /
- * repair stages are deliberately NOT streamed (cross-catalog global state;
- * they run batch over the accumulated mention table).
- *
- * Also provides the event-time windowed mention-rate aggregation with a
- * watermark — late turns beyond the watermark are dropped, matching the
- * at-most-once-per-turn mention contract.
+ * Batch gap sessionization over an event table (q70). The object keeps
+ * its package so the query's call site stays `graft.streaming.stream`;
+ * nothing here reads a stream.
  */
 object stream {
-
-  /** Streaming mention detection: same kernel, streaming Dataset in/out. */
-  def detectStream(spark: SparkSession, turns: Dataset[Turn],
-                   classes: Seq[ClassText]): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(mentions.surfaceDict(classes))
-    turns.mapPartitions { it =>
-      val trie = mentions.buildTrie(bc.value)
-      it.flatMap { t =>
-        mentions.detectInTrie(trie, mentions.fastTokens(t.text)).map {
-          case (onto, iri, surface) =>
-            (t.conv_id, t.turn_idx, onto, iri, surface, t.ts)
-        }
-      }
-    }.toDF("conv_id", "turn_idx", "onto", "class_iri", "surface", "ts")
-  }
-
-  /** Streaming mention row (detectStream output shape). */
-  final case class StreamMention(conv_id: String, turn_idx: Int, onto: String,
-                                 class_iri: String, surface: String,
-                                 ts: java.sql.Timestamp)
-
-  /** StreamMention + the stable per-conversation ordinal. */
-  final case class OrderedMention(conv_id: String, turn_idx: Int, onto: String,
-                                  class_iri: String, surface: String,
-                                  ts: java.sql.Timestamp, mention_ord: Int)
-
-  /** Per-conversation keyed state: next ordinal + (turn,onto,class) keys
-    * already emitted. Bounded by conversation length; evicted wholesale
-    * when the conversation goes idle past the event-time horizon. */
-  final case class ConvState(nextOrd: Int, seen: Set[String])
-
-  /**
-   * Streaming twin of `mentions.stabilize` — the custom-state operator of
-   * the engine (KeyValueGroupedDataset.flatMapGroupsWithState): assigns
-   * the stable per-conversation mention ordinal and collapses duplicate
-   * (turn, onto, class) evidence ACROSS micro-batches, keyed by conv_id.
-   *
-   * State discipline for 10^12-turn scale: state per active conversation
-   * is O(len(conversation)); conversations idle past `idleHorizon` (event
-   * time, driven by the input watermark) are evicted with their state —
-   * total state is bounded by the number of conversations active inside
-   * the watermark horizon, not by stream history.
-   *
-   * Ordering contract: rows are ordered by (turn_idx, onto, class_iri,
-   * surface) WITHIN each micro-batch before assignment, so for in-order
-   * per-conversation delivery (the transcript table contract) the
-   * ordinals equal the batch `stabilize` output; under cross-batch
-   * duplicate delivery the first-arrived surface wins (batch collapses to
-   * min(surface) globally — equal whenever delivery is turn-ordered).
-   */
-  def stabilizeStream(spark: SparkSession, mens: Dataset[StreamMention],
-                      idleHorizonMs: Long = 3600000L): Dataset[OrderedMention] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    def assign(convId: String, it: Iterator[StreamMention],
-               state: GroupState[ConvState]): Iterator[OrderedMention] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val st = state.getOption.getOrElse(ConvState(1, Set.empty))
-        val rows = it.toVector
-          .sortBy(m => (m.turn_idx, m.onto, m.class_iri, m.surface))
-        var ord = st.nextOrd
-        var seen = st.seen
-        var maxTs = Long.MinValue
-        val out = Vector.newBuilder[OrderedMention]
-        rows.foreach { m =>
-          maxTs = math.max(maxTs, m.ts.getTime)
-          val k = s"${m.turn_idx}\u0001${m.onto}\u0001${m.class_iri}"
-          if (!seen(k)) {
-            seen += k
-            out += OrderedMention(m.conv_id, m.turn_idx, m.onto, m.class_iri,
-              m.surface, m.ts, ord)
-            ord += 1
-          }
-        }
-        state.update(ConvState(ord, seen))
-        if (maxTs != Long.MinValue)
-          state.setTimeoutTimestamp(maxTs + idleHorizonMs)
-        out.result().iterator
-      }
-    }
-    mens
-      .withWatermark("ts", "30 minutes")
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(assign)
-  }
-
-  /**
-   * Streaming triple materialization: canonicalize a live mention stream
-   * against the BATCH-computed entity components (a stream-static join —
-   * the components table is a bounded dimension, so Spark broadcasts it
-   * per micro-batch) and emit append-only `mentions` triples in the graph
-   * table's (subj, pred, obj, score) shape. This is the "stream new
-   * transcripts into the existing KG" path: alignment/extension/repair
-   * stay batch (cross-catalog global state, deliberately un-streamed);
-   * the transcript-proportional mention evidence flows continuously.
-   * Writing with `writeStream.format("parquet").option(
-   * "checkpointLocation", ...)` gives exactly-once file-sink semantics by
-   * Structured Streaming's sink contract. Same canonicalization rule as
-   * the batch path (Pipeline.run): mention OBJECTS are rewritten to the
-   * canonical representative; unknown entities pass through unchanged.
-   */
-  def triplesStream(mens: DataFrame, components: DataFrame): DataFrame =
-    mens
-      .join(org.apache.spark.sql.functions.broadcast(
-        components.select(col("id").as("class_iri"), col("canonical"))),
-        Seq("class_iri"), "left")
-      .select(
-        concat(col("conv_id"), lit("#"), col("turn_idx")).as("subj"),
-        lit("mentions").as("pred"),
-        coalesce(col("canonical"), col("class_iri")).as("obj"),
-        lit(1.0).as("score"))
-
-  /** Streaming-dedup input row. */
-  final case class StreamDoc(doc_id: Long, text: String)
-
-  /** StreamDoc + its normalized-content hash (the dedup ledger key). */
-  final case class DedupedDoc(doc_id: Long, text_hash: String, text: String)
-
-  /**
-   * Streaming exact dedup — the first-seen ledger: emits a document only
-   * if no document with the same normalized-content md5 has been emitted
-   * before, across micro-batches. Within a batch the minimum doc_id wins,
-   * so for any arrival order the SET of emitted hashes equals the batch
-   * `dedup.exact` canonical set (the survivor id matches batch whenever
-   * the min-id copy arrives first or in the same batch — cross-batch, a
-   * streaming first-seen ledger is by definition arrival-ordered).
-   *
-   * State discipline: one boolean per DISTINCT content hash — the state IS
-   * the dedup index, so it grows with distinct content, not stream length;
-   * at 10^12-turn scale it lives in the RocksDB state store and is exactly
-   * the structure a batch backfill would build anyway. Keys are md5 hex
-   * (32 B) — content-keyed, partition- and arrival-invariant membership.
-   */
-  def dedupStream(spark: SparkSession, docs: Dataset[StreamDoc]): Dataset[DedupedDoc] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    def keep(hash: String, it: Iterator[StreamDoc],
-             state: GroupState[Boolean]): Iterator[DedupedDoc] = {
-      if (state.exists) Iterator.empty
-      else {
-        state.update(true)
-        val first = it.minBy(_.doc_id)
-        Iterator(DedupedDoc(first.doc_id, hash, first.text))
-      }
-    }
-    // one md5 implementation repo-wide (lineage.fingerprint): the hash
-    // domain must stay byte-identical to dedup.exact's md5(normText)
-    docs
-      .groupByKey(d => graft.plans.lineage.fingerprint(
-        graft.functions.text.normalize(d.text)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(keep)
-  }
 
   /**
    * Gap-based batch sessionization — the classic training-pipeline
@@ -195,7 +31,6 @@ object stream {
    */
   def sessionizeGap(events: DataFrame, keyCol: String, tsCol: String,
                     idCol: String, gapSeconds: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol).asc, col(idCol).asc)
     events
@@ -212,14 +47,4 @@ object stream {
         sum(col("_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .drop("_prev", "_new")
   }
-
-  /** Windowed mention rate: 10-minute tumbling windows per entity with a
-    * 30-minute watermark for late data. */
-  def mentionRate(mentionsWithTs: DataFrame): DataFrame =
-    mentionsWithTs
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("class_iri"))
-      .agg(count(lit(1)).as("n_mentions"))
-      .select(col("window.start").as("window_start"), col("class_iri"),
-        col("n_mentions"))
 }

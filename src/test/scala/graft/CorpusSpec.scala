@@ -23,13 +23,6 @@ class CorpusSpec extends SparkSuite {
       ("dd", "ee"), ("ee", "dd"), ("dd", "ff"), ("ff", "dd"), ("ee", "ff"), ("ff", "ee")))
   }
 
-  test("identitySynonyms: every distinct label with itself, label 1") {
-    val out = corpus.identitySynonyms(classes)
-    assert(out.count() == 6)
-    assert(out.filter("sent1 <> sent2").count() == 0)
-    assert(out.filter("label <> 1").count() == 0)
-  }
-
   test("softNonsynonyms: seeded, never same-class, never an existing synonym") {
     val out = corpus.softNonsynonyms(classes, rate = 3, seed = 42L)
     val rows = out.select("sent1", "sent2").as[(String, String)].collect()
@@ -49,6 +42,12 @@ class CorpusSpec extends SparkSuite {
     // siblings under root: c1 x c2 -> labels {aa,bb} x {cc}
     assert(out == Set(("aa", "cc"), ("bb", "cc"), ("cc", "aa"), ("cc", "bb")) ||
       out == Set(("aa", "cc"), ("bb", "cc"))) // direction depends on c1<c2 ordering
+    // siblings c1 {x,y} and c2 {x} under root: the sibling cross pairs are
+    // (x,x) [identical] and (y,x) [an intra synonym of c1] -> nothing kept
+    val collide = Seq(("c1", Seq("x", "y")), ("c2", Seq("x")))
+      .toDF("class_iri", "labels")
+    val ed = Seq(("c1", "root"), ("c2", "root")).toDF("child_iri", "parent_iri")
+    assert(corpus.hardNonsynonyms(collide, ed).count() == 0)
   }
 
   test("crossSynonyms: label cross product of mapped classes, both directions") {
@@ -185,46 +184,6 @@ class CorpusSpec extends SparkSuite {
     assert(viol.filter($"kind" =!= "soft_neg_violation").count() == 0)
     // deterministic + partition-invariant
     val again = corpus.softNonsynonymViolations(cls.repartition(7), rate, 11L)
-    assert(viol.count() == again.count())
-  }
-
-  test("hardNonsynonymViolations: sibling label collisions counted with multiplicity (intra_onto.py:143-147)") {
-    // siblings c1 {x,y} and c2 {x} under root: raw cross pairs are
-    // (x,x) [identical] and (y,x)/(x,y) [intra synonyms of c1] -> ALL
-    // sibling pairs are violations, kept set is empty
-    val cls = Seq(("c1", Seq("x", "y")), ("c2", Seq("x")))
-      .toDF("class_iri", "labels")
-    val ed = Seq(("c1", "root"), ("c2", "root")).toDF("child_iri", "parent_iri")
-    val kept = corpus.hardNonsynonyms(cls, ed)
-    val viol = corpus.hardNonsynonymViolations(cls, ed)
-    assert(kept.count() == 0)
-    // one sibling direction survives the c1<c2 distinct: {x,y} x {x} = 2 pairs
-    assert(viol.count() == 2)
-    val v = viol.select("sent1", "sent2").as[(String, String)].collect().toSet
-    assert(v == Set(("x", "x"), ("y", "x")) || v == Set(("x", "x"), ("x", "y")))
-  }
-
-  test("crossSoftNonsynonymViolations: draws failing the cross-synonym check, draw-count conservation (cross_onto.py:139-147)") {
-    // t-side label "sa" collides with s1's label -> identical-label
-    // violations are reachable; same-mapping synonym draws impossible by
-    // construction, but OTHER mappings' labels can equal a cross synonym
-    val maps = Seq(("s1", "t1"), ("s2", "t2"), ("s3", "t3")).toDF("entity1", "entity2")
-    val src = Seq(("s1", Seq("sa")), ("s2", Seq("sb")), ("s3", Seq("sc")))
-      .toDF("class_iri", "labels")
-    val tgt = Seq(("t1", Seq("ta")), ("t2", Seq("sa")), ("t3", Seq("tc")))
-      .toDF("class_iri", "labels")
-    val rate = 3
-    val viol = corpus.crossSoftNonsynonymViolations(maps, src, tgt, rate, seed = 5L)
-    // every violation is identical-label or a cross-synonym pair
-    val crossSyn = corpus.crossSynonyms(maps, src, tgt)
-      .select("sent1", "sent2").as[(String, String)].collect().toSet
-    viol.select("sent1", "sent2").as[(String, String)].collect().foreach { p =>
-      assert(p._1 == p._2 || crossSyn.contains(p), s"non-violation $p")
-    }
-    assert(viol.filter($"kind" =!= "co_soft_neg_violation").count() == 0)
-    // partition-invariant
-    val again = corpus.crossSoftNonsynonymViolations(
-      maps.repartition(5), src.repartition(3), tgt, rate, 5L)
     assert(viol.count() == again.count())
   }
 

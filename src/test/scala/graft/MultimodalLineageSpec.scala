@@ -15,19 +15,6 @@ class MultimodalLineageSpec extends SparkSuite {
     assert(row.getAs[Long]("shard") == 3L)
   }
 
-  test("decodeFeatures: batched fake decode with stable schema") {
-    val df = (1 to 100).map(i => (i.toLong, s"payload-$i".getBytes("UTF-8")))
-      .toDF("id", "payload")
-    val out = multimodal.decodeFeatures(spark, df, "id", "payload", dim = 8, batchSize = 16)
-    assert(out.columns.toSeq == Seq("id", "n_bytes", "features"))
-    val r = out.filter($"id" === "1").head()
-    assert(r.getSeq[Float](2).length == 8)
-    // determinism across batch sizes
-    val again = multimodal.decodeFeatures(spark, df, "id", "payload", dim = 8, batchSize = 7)
-      .filter($"id" === "1").head()
-    assert(r.getSeq[Float](2).toList == again.getSeq[Float](2).toList)
-  }
-
   test("parseHeader: real byte fixtures for all four containers") {
     import multimodal.{parseHeader, MediaHeader}
     assert(parseHeader(multimodal.pngBytes(640, 480)) ==

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.model._
 import graft.sources.{fixtures, tables}
-import graft.streaming.stream
 
 class SourcesStreamingSpec extends SparkSuite {
   import spark.implicits._
@@ -220,144 +218,6 @@ class SourcesStreamingSpec extends SparkSuite {
     assert(plan.contains("PartitionFilters") || plan.contains("pred"))
   }
 
-  test("streaming mention detect over MemoryStream emits same rows as batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val classes = Seq(ClassText("src", "src:C1", 0L, Seq("heart failure")))
-    val turns = Seq(
-      Turn("c1", 0, "user", "about heart failure", null, new Timestamp(1000L)),
-      Turn("c1", 1, "assistant", "nothing", null, new Timestamp(2000L)))
-
-    val ms = MemoryStream[Turn]
-    val out = stream.detectStream(spark, ms.toDS(), classes)
-    val q = out.writeStream.format("memory").queryName("mentions_out")
-      .outputMode("append").start()
-    ms.addData(turns: _*)
-    q.processAllAvailable()
-    val rows = spark.sql("select conv_id, turn_idx, class_iri from mentions_out")
-      .as[(String, Int, String)].collect().toSet
-    q.stop()
-    assert(rows == Set(("c1", 0, "src:C1")))
-  }
-
-  test("stabilizeStream: per-conversation ordinals + cross-batch dedup via flatMapGroupsWithState") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.stream.StreamMention
-    val ms = MemoryStream[StreamMention]
-    val out = graft.streaming.stream.stabilizeStream(spark, ms.toDS())
-    val q = out.writeStream.format("memory").queryName("stab_out")
-      .outputMode("append").start()
-    // batch 1: two mentions in turn order + a duplicate inside the batch
-    ms.addData(
-      StreamMention("c1", 0, "src", "e1", "alpha", new Timestamp(1000L)),
-      StreamMention("c1", 0, "src", "e1", "alpha", new Timestamp(1000L)),
-      StreamMention("c1", 1, "src", "e2", "beta", new Timestamp(2000L)),
-      StreamMention("c2", 0, "src", "e9", "gamma", new Timestamp(1000L)))
-    q.processAllAvailable()
-    // batch 2: a cross-batch duplicate of (c1, 1, e2) plus a new mention
-    ms.addData(
-      StreamMention("c1", 1, "src", "e2", "beta", new Timestamp(2000L)),
-      StreamMention("c1", 2, "src", "e3", "delta", new Timestamp(3000L)))
-    q.processAllAvailable()
-    val rows = spark.sql("select conv_id, turn_idx, class_iri, mention_ord from stab_out")
-      .as[(String, Int, String, Int)].collect().toSet
-    q.stop()
-    // duplicates (in-batch AND cross-batch) collapsed; ordinals dense per conv
-    assert(rows == Set(
-      ("c1", 0, "e1", 1), ("c1", 1, "e2", 2), ("c1", 2, "e3", 3),
-      ("c2", 0, "e9", 1)))
-    // matches the batch stabilize ordinals for the same in-order data
-    import org.apache.spark.sql.functions.col
-    val batch = graft.operators.mentions.stabilize(Seq(
-      ("c1", 0, "src", "e1", "alpha"), ("c1", 1, "src", "e2", "beta"),
-      ("c1", 2, "src", "e3", "delta"), ("c2", 0, "src", "e9", "gamma"))
-      .toDF("conv_id", "turn_idx", "onto", "class_iri", "surface"))
-      .select("conv_id", "turn_idx", "class_iri", "mention_ord")
-      .as[(String, Int, String, Int)].collect().toSet
-    assert(batch == rows)
-  }
-
-  test("stabilizeStream: event-time timeout actually evicts idle conversation state (bounded state)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.stream.StreamMention
-    val ms = MemoryStream[StreamMention]
-    // 1-second idle horizon: any conversation is evictable as soon as the
-    // 30-minute watermark passes its last event
-    val out = graft.streaming.stream.stabilizeStream(spark, ms.toDS(),
-      idleHorizonMs = 1000L)
-    val q = out.writeStream.format("memory").queryName("stab_state")
-      .outputMode("append").start()
-    def at(hour: Int, conv: String) =
-      StreamMention(conv, 0, "src", "e1", "s", new Timestamp(hour * 3600000L))
-    // epoch 1: three conversations hold state
-    ms.addData(at(1, "a1"), at(1, "a2"), at(1, "a3"))
-    q.processAllAvailable()
-    val afterEpoch1 = q.lastProgress.stateOperators.head.numRowsTotal
-    assert(afterEpoch1 == 3L, s"expected 3 live conv states, got $afterEpoch1")
-    // three watermark epochs, each jumping event time 2 hours: the
-    // watermark (maxEventTime - 30 min) passes every earlier epoch's
-    // timeout (lastEvent + 1 s), so their states must be REMOVED — state
-    // is bounded by conversations inside the horizon, not stream history
-    ms.addData(at(3, "b1")); q.processAllAvailable()
-    ms.addData(at(5, "c1")); q.processAllAvailable()
-    ms.addData(at(7, "d1")); q.processAllAvailable()
-    val afterEpochs = q.lastProgress.stateOperators.head.numRowsTotal
-    q.stop()
-    // 7 conversations ever seen; only the last two epochs' can still be
-    // inside the horizon (the newest, plus the one whose timeout the
-    // watermark hasn't crossed yet)
-    assert(afterEpochs <= 2L,
-      s"state grew with stream history: $afterEpochs rows live after eviction epochs")
-  }
-
-  test("triplesStream: stream-static canonicalize join emits the batch triples' mention rows") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.stream.StreamMention
-    // batch-computed components: e1 and e2 share a canonical representative
-    val comps = Seq(("e1", "e1"), ("e2", "e1")).toDF("id", "canonical")
-    val ms = MemoryStream[StreamMention]
-    val trip = graft.streaming.stream.triplesStream(ms.toDS().toDF(), comps)
-    val q = trip.writeStream.format("memory").queryName("trip_out")
-      .outputMode("append").start()
-    ms.addData(
-      StreamMention("c1", 0, "src", "e2", "beta", new Timestamp(1000L)), // canonicalized -> e1
-      StreamMention("c1", 1, "src", "e9", "x", new Timestamp(2000L)))    // unknown passes through
-    q.processAllAvailable()
-    val rows = spark.sql("select subj, pred, obj, score from trip_out")
-      .as[(String, String, String, Double)].collect().toSet
-    q.stop()
-    assert(rows == Set(
-      ("c1#0", "mentions", "e1", 1.0),
-      ("c1#1", "mentions", "e9", 1.0)))
-    // identical to the batch canonicalization + triples mention rows
-    val batchMens = Seq(("c1", 0, "src", "e1", "beta"), ("c1", 1, "src", "e9", "x"))
-      .toDF("conv_id", "turn_idx", "onto", "class_iri", "surface")
-    val batch = graft.operators.canonical.triples(
-        Seq.empty[(String, String, Double)].toDF("entity1", "entity2", "value"),
-        batchMens, Seq.empty[(String, String)].toDF("child_iri", "parent_iri"))
-      .as[(String, String, String, Double)].collect().toSet
-    assert(batch == rows)
-  }
-
-  test("windowed mention rate with watermark (streaming agg)") {
-    implicit val sqlCtx = spark.sqlContext
-    val classes = Seq(ClassText("src", "src:C1", 0L, Seq("alpha")))
-    val ms = MemoryStream[Turn]
-    val agg = stream.mentionRate(stream.detectStream(spark, ms.toDS(), classes))
-    val q = agg.writeStream.format("memory").queryName("rate_out")
-      .outputMode("append").start()
-    ms.addData(
-      Turn("c1", 0, "user", "alpha one", null, new Timestamp(0L)),
-      Turn("c1", 1, "user", "alpha two", null, new Timestamp(60000L)))
-    q.processAllAvailable()
-    // push the watermark far forward so the first window closes
-    ms.addData(Turn("c2", 0, "user", "alpha late", null, new Timestamp(7200000L)))
-    q.processAllAvailable()
-    val rows = spark.sql("select class_iri, n_mentions from rate_out")
-      .as[(String, Long)].collect().toList
-    q.stop()
-    assert(rows.contains(("src:C1", 2L)))
-  }
-
   test("JSONL transcript ingest: roundtrip + corrupt-line quarantine (asserted schema, one pass)") {
     val dir = Files.createTempDirectory("graft-jsonl").toString
     val turns = Seq(
@@ -406,42 +266,6 @@ class SourcesStreamingSpec extends SparkSuite {
       .sessionizeGap(edge, "user_id", "ts", "event_id", 600.0)
       .select("event_id", "session_ord").as[(Long, Long)].collect().toMap
     assert(e == Map(1L -> 1L, 2L -> 1L))
-  }
-
-  test("dedupStream: first-seen ledger across micro-batches matches batch canonical set") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.stream.StreamDoc
-    val ms = MemoryStream[StreamDoc]
-    val out = graft.streaming.stream.dedupStream(spark, ms.toDS())
-    val q = out.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    // batch 1: an in-batch duplicate pair (2 wins on min id) + a singleton
-    ms.addData(
-      StreamDoc(3L, "The  quick_brown fox"),
-      StreamDoc(2L, "the quick brown fox"),
-      StreamDoc(5L, "something else entirely"))
-    q.processAllAvailable()
-    // batch 2: a cross-batch duplicate (suppressed) + a new doc
-    ms.addData(
-      StreamDoc(1L, "the quick brown fox"),
-      StreamDoc(7L, "a genuinely new document"))
-    q.processAllAvailable()
-    val rows = spark.sql("select doc_id from dedup_out").as[Long].collect().toSet
-    q.stop()
-    // first-seen per content: 2 (min id in its arrival batch), 5, 7; the
-    // later-arriving duplicate 1 is suppressed by the ledger
-    assert(rows == Set(2L, 5L, 7L))
-    // the emitted HASH set equals the batch dedup.exact canonical set over
-    // the union of both batches
-    val batchHashes = graft.operators.dedup.exact(
-      Seq((3L, "The  quick_brown fox"), (2L, "the quick brown fox"),
-        (5L, "something else entirely"), (1L, "the quick brown fox"),
-        (7L, "a genuinely new document")).toDF("id", "text"), "id", "text")
-      .filter(org.apache.spark.sql.functions.col("is_canonical") === 1)
-      .select("text_hash").as[String].collect().toSet
-    val streamHashes = spark.sql("select text_hash from dedup_out")
-      .as[String].collect().toSet
-    assert(streamHashes == batchHashes)
   }
 
   test("Main: staged run resumes from manifests (second run reuses stages)") {

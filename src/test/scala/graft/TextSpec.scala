@@ -57,22 +57,4 @@ class TextSpec extends AnyFunSuite {
     assert(text.tokenJaccard("a b c", "b c d") == 2.0 / 4)
     assert(text.tokenJaccard("", "") == 1.0)
   }
-
-  test("languageId: marker voting, deterministic tie-break, und fallback") {
-    assert(text.languageId("der hund ist gut und das haus") == "de")
-    assert(text.languageId("the cat and the dog") == "en")
-    assert(text.languageId("zzz qqq") == "und")
-  }
-
-  test("tokenCount and fingerprint deterministic") {
-    assert(text.tokenCount("hyperthermia ab") == 4L)
-    assert(text.fingerprint("A_b") == text.fingerprint("a b"))
-    assert(text.fingerprint("a b") != text.fingerprint("a c"))
-  }
-
-  test("qualityScore bounds") {
-    val q = text.qualityScore("the quick brown fox jumps over the lazy dog again")
-    assert(q > 0.5 && q <= 1.0)
-    assert(text.qualityScore("") == 0.0)
-  }
 }

@@ -10,6 +10,14 @@ Line 2: the options, i.e. the defaulted parameters (`name: T = v`) in the
 parameter lists of every `def` and `case class`, outside comments and
 string literals.
 
+Line 3: the test-only definitions, i.e. the `def`, `val`, `case class` and
+`object` names (not `override`s, not objects with a `main`) that occur
+nowhere in the counted trees or in perfbench/src except where they are
+defined: only specs, or a caller outside the repo such as the driver
+that calls `SparkEntry.entry`, reach them.
+Names are matched as whole words in the code without comments and strings,
+so a local that shares a used name is not listed.
+
     python3 tools/loc.py            # src/main/scala under the repo root
     python3 tools/loc.py DIR...     # any other source trees
 """
@@ -44,7 +52,8 @@ def code_lines(path):
 
 
 def code_only(src):
-    """`src` without comments, every string or char literal as `""`."""
+    """`src` without comments, every string or char literal as `""`. The
+    code of `${...}` splices and the names of `$name` splices stay."""
     out = []
 
     def skip_code(i, in_splice):
@@ -96,6 +105,13 @@ def code_only(src):
                 return i + 1
             elif interp and src[i:i + 2] == "$$":
                 i += 2
+            elif interp and src[i] == "$" and (src[i + 1:i + 2].isalpha() or
+                                               src[i + 1:i + 2] == "_"):
+                j = i + 1
+                while j < len(src) and (src[j].isalnum() or src[j] == "_"):
+                    j += 1
+                out.append(" " + src[i + 1:j] + " ")
+                i = j
             elif interp and src[i:i + 2] == "${":
                 i = skip_code(i + 2, True)
             else:
@@ -179,13 +195,51 @@ def options(path):
     return n
 
 
+DEFN = re.compile(r"(\boverride\s+(?:\w+\s+)*)?"
+                  r"\b(?:def|val|case\s+class|object)\s+(`[^`]*`|[A-Za-z_$][\w$]*)")
+WORD = re.compile(r"`[^`]*`|[A-Za-z_$][\w$]*")
+
+
+def is_main_object(code, m):
+    """An `object` whose body defines `main`: a JVM entry point."""
+    if not m.group(0).startswith("object"):
+        return False
+    i = code.find("{", m.end())
+    body = code[i:balanced(code, i, "{", "}")] if i >= 0 else ""
+    return re.search(r"\bdef\s+main\s*\(", body) is not None
+
+
+def test_only(defining, referencing):
+    """Names defined in `defining` whose every occurrence in `referencing`
+    (which includes `defining`) is a definition."""
+    defs, uses = {}, {}
+    for path in referencing:
+        with open(path, encoding="utf-8") as f:
+            code = code_only(f.read())
+        for w in WORD.findall(code):
+            uses[w] = uses.get(w, 0) + 1
+        if path in defining:
+            for m in DEFN.finditer(code):
+                if not m.group(1) and not is_main_object(code, m):
+                    defs[m.group(2)] = defs.get(m.group(2), 0) + 1
+    # a name inside an `override` definition counts as a use of that name
+    return sorted(n for n, k in defs.items() if uses.get(n, 0) <= k)
+
+
+def scala_files(dirs):
+    return [os.path.join(base, f) for d in dirs for base, _, files in os.walk(d)
+            for f in files if f.endswith(".scala")]
+
+
 def main(argv):
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     dirs = argv or [os.path.join(root, "src", "main", "scala")]
-    paths = [os.path.join(base, f) for d in dirs for base, _, files in os.walk(d)
-             for f in files if f.endswith(".scala")]
+    paths = scala_files(dirs)
     print(f"{sum(code_lines(p) for p in paths):,}")
     print(f"{sum(options(p) for p in paths):,} options")
+    harness = scala_files([os.path.join(root, "perfbench", "src")])
+    names = test_only(set(paths), paths + harness)
+    print(f"{len(names)} test-only: {' '.join(names)}")
 
 
 if __name__ == "__main__":
