@@ -47,7 +47,7 @@ object SparkEntry {
   // ---------------------------------------------------------------------
   // Flagship: end-to-end KG construction on the tiny synthetic fixture
   // ---------------------------------------------------------------------
-  def entry(spark: SparkSession): DataFrame = Pipeline.flagship(spark)
+  def entry(spark: SparkSession): DataFrame = Pipeline.flagship(spark)._2
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- §2.2 projections / scalar functions -----------------------------
@@ -610,7 +610,7 @@ object SparkEntry {
         .withColumn("value", round(col("value"), 6))
     }),
 
-    "q40_pipeline_e2e" -> ((s, dir) => Pipeline.flagship(s)),
+    "q40_pipeline_e2e" -> ((s, dir) => Pipeline.flagship(s)._2),
 
     // --- flagship GOLDEN gate: the whole-program mapping quality as one
     // machine-checkable row. Runs the full alignment on the deterministic
@@ -621,17 +621,8 @@ object SparkEntry {
     // (DeterminismSpec), so these six numbers are constants of the code —
     // the oracle pins them as a constant SELECT ---------------------------
     "q40g_golden_prf" -> ((s, dir) => {
-      val cfg = graft.sources.fixtures.tiny
-      val refs = graft.sources.fixtures.refMappings(s, cfg)
-      val classes = graft.sources.fixtures.classes(s, cfg)
-      // the production index path (flagship contract): real induced
-      // WordPiece vocab, same as Pipeline.flagship
-      val (mappings, _) = Pipeline.run(s,
-        graft.sources.fixtures.transcripts(s, cfg),
-        classes,
-        graft.sources.fixtures.edges(s, cfg),
-        Pipeline.Params(wordpieceVocab =
-          Some(Pipeline.induceCatalogVocab(s, classes))))
+      val refs = graft.sources.fixtures.refMappings(s, graft.sources.fixtures.tiny)
+      val (mappings, _) = Pipeline.flagship(s)
       val ref = refs.filter(!col("is_ignored")).select("entity1", "entity2", "value")
       val ign = refs.filter(col("is_ignored")).select("entity1", "entity2", "value")
       val sweep = evalmod.thresholdSweep(s, mappings, ref, ign)
@@ -648,7 +639,7 @@ object SparkEntry {
     // of the code; canonical.tripleDigest). Closes the one rows-only gap:
     // q40's emitted triples are now hash-compared by the driver, not just
     // counted. -----------------------------------------------------------
-    "q40t_triples_hash" -> ((s, dir) => canonical.tripleDigest(Pipeline.flagship(s))),
+    "q40t_triples_hash" -> ((s, dir) => canonical.tripleDigest(Pipeline.flagship(s)._2)),
 
     // --- index-tokenizer cross-path gate: the flagship now runs the
     // PRODUCTION index path (real induced WordPiece vocab — q40/q40g/q40t);

@@ -165,8 +165,7 @@ object score {
                                  pooling: String,
                                  params: ScorerParams = ScorerParams()): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(pooling == "mean" || pooling == "max")
-    val agg = if (pooling == "mean") avg(col("pair_score")) else max(col("pair_score"))
+    val agg = poolingAgg(pooling)
     // one explicit from_id exchange right after the scorer barrier: the
     // (from,to) pooling group (from ⊆ keys ⇒ clustering satisfied), the
     // abandonment window and the caller's n-best window all reuse it —
@@ -217,14 +216,19 @@ object score {
       .otherwise(lit(jaccardWeight) * jac + lit(editWeight) * nes)
   }
 
-  /** Per-class-pair pooling of label-pair scores: mean (default) or max
-    * (batch_pooling, bert_classifier_map.py:155-159). */
-  def pool(scored: DataFrame, strategy: String = "mean"): DataFrame = {
-    require(strategy == "mean" || strategy == "max",
-      s"pooling must be mean|max (bert_classifier_map.py:38), got $strategy")
-    val agg = if (strategy == "mean") avg(col("pair_score")) else max(col("pair_score"))
-    scored.groupBy("from_id", "to_id").agg(agg.as("score"))
+  /** The pooling aggregate over `pair_score`: mean or max (batch_pooling,
+    * bert_classifier_map.py:38,155-159); any other name throws
+    * IllegalArgumentException. */
+  def poolingAgg(strategy: String): org.apache.spark.sql.Column = strategy match {
+    case "mean" => avg(col("pair_score"))
+    case "max" => max(col("pair_score"))
+    case other => throw new IllegalArgumentException(
+      s"pooling must be mean|max (bert_classifier_map.py:38), got $other")
   }
+
+  /** Per-class-pair pooling of label-pair scores: mean (default) or max. */
+  def pool(scored: DataFrame, strategy: String = "mean"): DataFrame =
+    scored.groupBy("from_id", "to_id").agg(poolingAgg(strategy).as("score"))
 
   /** Score clamp: scores <= 0.01 -> 0.0 (bert_classifier_map.py:83-84). */
   def clamp(mappings: DataFrame): DataFrame =

@@ -15,10 +15,12 @@ import graft.sources.{fixtures, tables}
  *   spark-submit --class graft.plans.Main graft.jar \
  *     <transcriptsPath|fixture:N> <catalogDir|fixture> <workDir>
  *
- * Stages (each a lineage.stage — skipped when its manifest matches):
- *   mentions → mappings → triples
- * Re-running with the same inputs reuses every stage; deleting a stage dir
- * (or changing an upstream input) rebuilds from that point only.
+ * Stages (`Pipeline.run`'s phases, each a lineage.stage through its
+ * `keep` hook — skipped when its manifest matches):
+ *   mentions → mappings → repaired → triples
+ * A stage's fingerprint is its name + the inputs + `Params`, so re-running
+ * with the same inputs reuses every stage, and deleting a stage dir
+ * rebuilds that stage only.
  */
 object Main {
 
@@ -73,42 +75,31 @@ object Main {
     // --- staged run ---------------------------------------------------------
     val params = Pipeline.Params()
     val paramsFp = params.toString
-
-    val mappings = lineage.stage(spark, workDir, "mappings", inputFp + paramsFp) {
-      val srcLabels = Pipeline.sideLabels(classes, "src").cache()
-      val tgtLabels = Pipeline.sideLabels(classes, "tgt").cache()
-      graft.operators.align.atThreshold(
-        Pipeline.rawMappings(spark, srcLabels, tgtLabels, params), params.threshold)
-    }
-
-    // the materialized mappings stage feeds the triples stage directly —
-    // a cold run executes the alignment chain exactly once, and a resumed
-    // run (matching triples manifest) executes it zero times
-    var triplesRebuilt = false
-    val triples = lineage.stage(spark, workDir, "triples", inputFp + paramsFp) {
-      triplesRebuilt = true
-      val (_, trip) = Pipeline.run(spark, observedTurns, classes, edges, params,
-        precomputedRaw = Some(mappings))
-      trip
-    }
+    // the mentions phase calls the hook on its own thread
+    val rebuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val (mappings, triples) = Pipeline.run(spark, observedTurns, classes, edges, params,
+      keep = (name, df) => lineage.stage(spark, workDir, name, inputFp + paramsFp) {
+        rebuilt.add(name)
+        df
+      })
 
     tables.writeTriples(triples, s"$workDir/graph")
-    // the observed metric exists only when the triples stage actually
-    // scanned the transcripts this run; a resumed run scans nothing
+    // the observed metric exists only when the mentions stage scanned the
+    // transcripts this run (`get` blocks otherwise); a resumed one scans nothing
     val turnsSeen: Long =
-      if (triplesRebuilt) turnMetrics.get("turns").asInstanceOf[Long] else 0L
+      if (rebuilt.contains("mentions")) turnMetrics.get("turns").asInstanceOf[Long] else 0L
     val predCounts = spark.read.parquet(s"$workDir/graph")
       .groupBy("pred").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val byPred = predCounts.map { case (p, n) => s"$p=$n" }.mkString(", ")
     val nMappings = mappings.count()
     println(s"[graft] mappings=$nMappings triples by pred: $byPred; " +
-      s"turns seen (observed)=$turnsSeen resumed=${!triplesRebuilt}")
+      s"turns seen (observed)=$turnsSeen resumed=${rebuilt.isEmpty}")
     // run metrics alongside the stage manifests (north_rule: resumable with
     // per-partition lineage + metrics)
     val metricsJson = predCounts.map { case (p, n) => s""""$p":$n""" }
       .mkString(
-        s"""{"mappings":$nMappings,"turns_seen":$turnsSeen,"resumed":${!triplesRebuilt},"triples":{""",
+        s"""{"mappings":$nMappings,"turns_seen":$turnsSeen,"resumed":${rebuilt.isEmpty},"triples":{""",
         ",", "}}")
     // through the Hadoop FS API like the manifests: a hdfs:///s3a:// workDir
     // gets the metrics on the cluster store, not the driver's local disk

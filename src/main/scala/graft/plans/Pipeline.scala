@@ -37,7 +37,7 @@ object Pipeline {
       maxDictEntities: Long = route.MaxCatalog, // guard on the driver-side catalog
                                     // collect feeding the broadcast trie —
                                     // larger catalogs must use the
-                                    // join-based linker (operators.link)
+                                    // join-based linker (mentions.detectJoin)
       nbest: Int = 1,               // config.json:49
       pooling: String = "max",      // mean|max (config.json uses mean; max
                                     // suits the lexical stand-in scorer,
@@ -70,8 +70,7 @@ object Pipeline {
     require(Set("classifier", "nes", "embeds")(mode),
       s"unknown mapping mode '$mode' (classifier | nes | embeds, run_bertmap.py:293-367)")
     require(Set("auto", "trie", "join")(linker), s"linker must be auto|trie|join, got $linker")
-    require(Set("mean", "max")(pooling),
-      s"pooling must be mean|max (bert_classifier_map.py:38), got $pooling")
+    score.poolingAgg(pooling) // throws on anything but mean|max
   }
 
   /** Index tokenizer for `p`: a real broadcast WordPiece vocab when given,
@@ -159,18 +158,22 @@ object Pipeline {
 
   /** Full run over in-memory inputs; returns (mappings, triples).
     *
-    * The label caches are released once `repaired` is materialized. The
-    * two edge caches stay: the returned triples are lazy and read them
-    * (the `broader` predicate).
+    * The phases, in order: `mentions` (detect → stabilize, on its own
+    * thread beside the alignment chain), `mappings` (both alignment
+    * directions at the threshold), `repaired` (extension → union →
+    * repair) and `triples` (canonicalization). `run` passes each phase's
+    * body to `keep` under its name. The default evaluates the body;
+    * `plans.Main` stages it through `lineage.stage`, so a phase whose
+    * manifest matches is read back and its body never runs. `keep` is
+    * called for `mentions` on the mentions thread.
     *
-    * @param precomputedRaw thresholded raw mappings from an earlier
-    *        materialized stage (spark-submit resume path): when given, the
-    *        alignment chain is NOT re-planned or re-executed — the staged
-    *        output is consumed directly, so the flagship job pays for
-    *        alignment exactly once per cold run. */
+    * Nothing stays cached after `run`: the label caches are released once
+    * `repaired` exists, and the lazy triples re-read the edges from
+    * `edges`. */
   def run(spark: SparkSession, turns: Dataset[Turn], classes: Dataset[ClassText],
           edges: Dataset[Edge], p: Params = Params(),
-          precomputedRaw: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+          keep: (String, => DataFrame) => DataFrame = (_, df) => df)
+      : (DataFrame, DataFrame) = {
     // The transcript-proportional stage (mention detect over 10^12 turns at
     // target scale) is independent of the catalog-side alignment chain —
     // submit it concurrently so the alignment chain's many small jobs hide
@@ -178,7 +181,7 @@ object Pipeline {
     // these are two independent stage DAGs the scheduler runs side by side.
     // `blocking`: the route probe below parks this global-pool thread on
     // a Spark job.
-    val mensF = Future(blocking {
+    val mensF = Future(blocking(keep("mentions", {
       val dictDs = classes.filter(col("onto") === "src")
       // one route probe decides trie vs join AND feeds the trie; a catalog
       // past maxDictEntities takes the join linker (auto) or fails (trie)
@@ -211,60 +214,62 @@ object Pipeline {
       // The single final action computes the fused scan→detect→stabilize
       // DAG exactly once instead.
       m
-    })
+    })))
 
     // catalog sides are dimension tables: cache once, reused ~6 times
     val srcLabels = sideLabels(classes, "src").cache()
     val tgtLabels = sideLabels(classes, "tgt").cache()
 
-    val raw = precomputedRaw.getOrElse(
+    val raw = keep("mappings",
       align.atThreshold(rawMappings(spark, srcLabels, tgtLabels, p), p.threshold)
         .materialize)
 
     val srcEdges = edges.toDF().filter(col("onto") === "src")
-      .select("child_iri", "parent_iri").cache()
+      .select("child_iri", "parent_iri")
     val tgtEdges = edges.toDF().filter(col("onto") === "tgt")
-      .select("child_iri", "parent_iri").cache()
+      .select("child_iri", "parent_iri")
 
-    val expansion = extend.extendMappings(spark, raw, srcEdges, tgtEdges,
-      srcLabels, tgtLabels, p.kappa, p.maxExtendIter, p.scorer)
-    // lazy: raw and the expansion parts are already materialized, so the
-    // downstream re-reads recompute only a small groupBy — cheaper than a
-    // dedicated checkpoint execution on the serial path
-    val extended = raw.unionByName(expansion)
-      .groupBy("entity1", "entity2").agg(max(col("value")).as("value"))
-
-    val repaired = repair.repairMappings(extended, srcEdges, tgtEdges)
-      .materialize
+    val repaired = keep("repaired", {
+      val expansion = extend.extendMappings(spark, raw, srcEdges, tgtEdges,
+        srcLabels, tgtLabels, p.kappa, p.maxExtendIter, p.scorer)
+      // lazy: raw and the expansion parts are already materialized, so the
+      // downstream re-reads recompute only a small groupBy — cheaper than a
+      // dedicated checkpoint execution on the serial path
+      val extended = raw.unionByName(expansion)
+        .groupBy("entity1", "entity2").agg(max(col("value")).as("value"))
+      repair.repairMappings(extended, srcEdges, tgtEdges).materialize
+    })
     srcLabels.unpersist(blocking = false)
     tgtLabels.unpersist(blocking = false)
 
     val mens = Await.result(mensF, Duration.Inf)
 
-    // repaired is 1-to-1 by construction (repair.oneToOne), so components
-    // are single edges — the O(1)-round rule replaces the iterative CC
-    // (canonical.connectedComponents stays the general-graph operator)
-    val comps = canonical.matchingComponents(repaired)
+    val trip = keep("triples", {
+      // repaired is 1-to-1 by construction (repair.oneToOne), so components
+      // are single edges — the O(1)-round rule replaces the iterative CC
+      // (canonical.connectedComponents stays the general-graph operator)
+      val comps = canonical.matchingComponents(repaired)
 
-    // canonicalization rewrites the *references* to entities (mentions,
-    // hierarchy) onto canonical ids; the sameAs edges keep their original
-    // endpoints — they ARE the alignment evidence
-    val mensCanon = mens
-      .join(broadcast(comps.select(col("id").as("class_iri"), col("canonical"))),
-        Seq("class_iri"), "left")
-      .select(col("conv_id"), col("turn_idx"), col("onto"),
-        coalesce(col("canonical"), col("class_iri")).as("class_iri"), col("surface"))
-    val broaderCanon = srcEdges.unionByName(tgtEdges)
-      .join(broadcast(comps.select(col("id").as("child_iri"), col("canonical").as("cc"))),
-        Seq("child_iri"), "left")
-      .join(broadcast(comps.select(col("id").as("parent_iri"), col("canonical").as("cp"))),
-        Seq("parent_iri"), "left")
-      .select(coalesce(col("cc"), col("child_iri")).as("child_iri"),
-        coalesce(col("cp"), col("parent_iri")).as("parent_iri"))
-      .filter(col("child_iri") =!= col("parent_iri"))
-      .distinct()
+      // canonicalization rewrites the *references* to entities (mentions,
+      // hierarchy) onto canonical ids; the sameAs edges keep their original
+      // endpoints — they ARE the alignment evidence
+      val mensCanon = mens
+        .join(broadcast(comps.select(col("id").as("class_iri"), col("canonical"))),
+          Seq("class_iri"), "left")
+        .select(col("conv_id"), col("turn_idx"), col("onto"),
+          coalesce(col("canonical"), col("class_iri")).as("class_iri"), col("surface"))
+      val broaderCanon = srcEdges.unionByName(tgtEdges)
+        .join(broadcast(comps.select(col("id").as("child_iri"), col("canonical").as("cc"))),
+          Seq("child_iri"), "left")
+        .join(broadcast(comps.select(col("id").as("parent_iri"), col("canonical").as("cp"))),
+          Seq("parent_iri"), "left")
+        .select(coalesce(col("cc"), col("child_iri")).as("child_iri"),
+          coalesce(col("cp"), col("parent_iri")).as("parent_iri"))
+        .filter(col("child_iri") =!= col("parent_iri"))
+        .distinct()
 
-    val trip = canonical.triples(repaired, mensCanon, broaderCanon)
+      canonical.triples(repaired, mensCanon, broaderCanon)
+    })
     (repaired, trip)
   }
 
@@ -281,18 +286,18 @@ object Pipeline {
       .select(explode(text.normalizeLabelsCol(col("labels"))).as("label")), "label"), nMerges)
 
   /** Tiny flagship for the driver smoke-check (rows>0 at sf0.001-ish
-    * scale). Runs the PRODUCTION index path: a real induced WordPiece
-    * vocab, not the vocab-free splitter (which remains the no-vocab
-    * fallback). PipelineE2ESpec + the q40g/q40t constants pin that this
-    * path reproduces the flagship mapping quality and triple set. */
-  def flagship(spark: SparkSession): DataFrame = {
+    * scale); returns `run`'s (mappings, triples). Runs the PRODUCTION
+    * index path: a real induced WordPiece vocab, not the vocab-free
+    * splitter (which remains the no-vocab fallback). PipelineE2ESpec + the
+    * q40g/q40t constants pin that this path reproduces the flagship
+    * mapping quality and triple set. */
+  def flagship(spark: SparkSession): (DataFrame, DataFrame) = {
     val cfg = fixtures.tiny
     val classes = fixtures.classes(spark, cfg)
-    val (_, trip) = run(spark,
+    run(spark,
       fixtures.transcripts(spark, cfg),
       classes,
       fixtures.edges(spark, cfg),
       Params(wordpieceVocab = Some(induceCatalogVocab(spark, classes))))
-    trip
   }
 }

@@ -20,7 +20,7 @@ class DedupSimSpec extends SparkSuite {
     assert(rows(3L) == (1L, 1) && rows(4L) == (1L, 1))
   }
 
-  test("firstSeenLedger: batch twin of the streaming ledger") {
+  test("firstSeenLedger: first arrival wins, exact()'s canonical hash set") {
     import org.apache.spark.sql.functions._
     // arrival REVERSES id order: the (1, 2) duplicate pair must now keep
     // id 2 (first arrival), while the emitted hash set stays exactly

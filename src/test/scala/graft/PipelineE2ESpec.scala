@@ -42,11 +42,15 @@ class PipelineE2ESpec extends SparkSuite {
   }
 
   test("run releases its label caches; the lazy triples still read") {
+    // other suites share the session and may leave their own caches
+    spark.catalog.clearCache()
     val (_, trip) = Pipeline.run(spark, turns, classes, edges)
     val cm = spark.sharedState.cacheManager
     for (side <- Seq("src", "tgt"))
       assert(cm.lookupCachedData(Pipeline.sideLabels(classes, side)
         .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty, side)
+    // nothing else stays pinned either (the edges included)
+    assert(cm.isEmpty, "run left data in the CacheManager")
     assert(trip.filter($"pred" === "broader").count() > 0)
   }
 
@@ -111,22 +115,23 @@ class PipelineE2ESpec extends SparkSuite {
       trips(Pipeline.Params(linker = "trie", maxDictEntities = 1L)))
   }
 
-  test("run consumes precomputed mappings: alignment chain executes zero times on resume") {
-    // hand the run a crafted mapping set that natural alignment would never
-    // produce alone; if the chain re-ran, sameAs would contain its full
-    // output instead of (at most the extension closure of) this one pair
+  test("a kept phase's body is never evaluated") {
+    // keep the mappings phase as a crafted mapping set that natural
+    // alignment would never produce alone; if the chain ran, sameAs would
+    // contain its full output instead of (at most the extension closure
+    // of) this one pair
     val src = classes.filter(_.onto == "src").head().class_iri
     val tgt = classes.filter(_.onto == "tgt").head().class_iri
     val crafted = Seq((src, tgt, 1.0)).toDF("entity1", "entity2", "value")
     val (_, triples) = Pipeline.run(spark, turns, classes, edges,
-      precomputedRaw = Some(crafted))
+      keep = (n, df) => if (n == "mappings") crafted else df)
     val sameAs = triples.filter($"pred" === "sameAs")
       .select("subj", "obj").as[(String, String)].collect().toSet
     val natural = result._1.count()
     assert(sameAs.contains((src, tgt)))
     // extension can add 1-hop neighbors of the seed, never the full natural set
     assert(sameAs.size < natural,
-      s"sameAs=${sameAs.size} >= natural=$natural: alignment chain re-ran despite precomputedRaw")
+      s"sameAs=${sameAs.size} >= natural=$natural: alignment chain ran despite the kept mappings")
   }
 
   test("production path: flagship runs a real INDUCED WordPiece vocab at P/R = 1.0") {

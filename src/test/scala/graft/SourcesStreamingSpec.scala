@@ -270,13 +270,27 @@ class SourcesStreamingSpec extends SparkSuite {
 
   test("Main: staged run resumes from manifests (second run reuses stages)") {
     val work = Files.createTempDirectory("graft-main").toString
+    val stages = Seq("mentions", "mappings", "repaired", "triples")
+    def manifest(s: String) = new java.io.File(s"$work/$s/_GRAFT_MANIFEST.json")
     graft.plans.Main.main(Array("fixture:40", "fixture", work))
+    // every phase of Pipeline.run is a stage
+    for (s <- stages) assert(manifest(s).isFile, s"no $s manifest")
     val m1 = graft.plans.lineage.readManifest(spark, s"$work/triples")
     assert(m1.isDefined && m1.get.rows > 0)
     // second run must hit the manifests (same fingerprint, same rows)
     graft.plans.Main.main(Array("fixture:40", "fixture", work))
     val m2 = graft.plans.lineage.readManifest(spark, s"$work/triples")
     assert(m2.get.fingerprint == m1.get.fingerprint && m2.get.rows == m1.get.rows)
+    assert(spark.read.parquet(s"$work/graph").count() == m1.get.rows)
+    // ... and so scans no transcripts
+    val metrics = Files.readString(java.nio.file.Paths.get(s"$work/metrics.json"))
+    assert(metrics.contains("\"resumed\":true") && metrics.contains("\"turns_seen\":0"), metrics)
+    // a deleted stage is rebuilt alone: the other manifests stay untouched
+    val before = stages.map(s => s -> manifest(s).lastModified()).toMap
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$work/mentions"))
+    graft.plans.Main.main(Array("fixture:40", "fixture", work))
+    assert(manifest("mentions").isFile)
+    for (s <- stages.tail) assert(manifest(s).lastModified() == before(s), s"$s was rebuilt")
     assert(spark.read.parquet(s"$work/graph").count() == m1.get.rows)
   }
 }
