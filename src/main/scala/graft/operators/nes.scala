@@ -36,7 +36,7 @@ object nes {
     * pair on one core (measured 14 s at 1 task on document-length labels);
     * the hash(from_id, to_id) exchange feeds the agg with no further one. */
   def hop(fromLabels: DataFrame, toLabels: DataFrame,
-          jaccardWeight: Double = 0.5, editWeight: Double = 0.5)
+          jaccardWeight: Double, editWeight: Double)
          (cands: DataFrame): DataFrame =
     stage.pinned(align.labelPairs(cands, fromLabels, toLabels),
         col("from_id"), col("to_id"))

@@ -29,10 +29,12 @@ object Main {
     val catalogArg = args.lift(1).getOrElse("fixture")
     val workDir = args.lift(2).getOrElse("/tmp/graft-work")
 
+    // a live session (a spec, a notebook) is used as it is: its confs are
+    // its owner's, and getOrCreate would rewrite the runtime SQL ones
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val builder0 = SparkSession.builder().appName("graft-kg-construct")
     // spark-submit injects spark.master; standalone sbt runs default local
-    val spark = (if (sys.props.contains("spark.master") || preexisting.nonEmpty) builder0
+    val spark = preexisting.getOrElse((if (sys.props.contains("spark.master")) builder0
       else builder0.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -45,7 +47,7 @@ object Main {
       .config("spark.memory.offHeap.size",
         sys.env.getOrElse("SPARK_GRAFT_OFFHEAP", "8g"))
       .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+      .getOrCreate())
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 
@@ -75,20 +77,27 @@ object Main {
     // --- staged run ---------------------------------------------------------
     val params = Pipeline.Params()
     val paramsFp = params.toString
-    // the mentions phase calls the hook on its own thread
-    val rebuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val rebuilt = scala.collection.mutable.Set.empty[String]
     val (mappings, triples) = Pipeline.run(spark, observedTurns, classes, edges, params,
       keep = (name, df) => lineage.stage(spark, workDir, name, inputFp + paramsFp) {
         rebuilt.add(name)
         df
       })
 
-    tables.writeTriples(triples, s"$workDir/graph")
+    // graph/ carries a copy of the triples stage's manifest (Spark's reader
+    // skips `_` files): a graph written from the same triples is kept. The
+    // copy is written last, so a crash mid-write leaves no match.
+    val graphDir = s"$workDir/graph"
+    val tripleManifest = lineage.readManifest(spark, s"$workDir/triples").get
+    if (!lineage.readManifest(spark, graphDir).contains(tripleManifest)) {
+      tables.writeTriples(triples, graphDir)
+      lineage.writeManifest(spark, graphDir, tripleManifest)
+    }
     // the observed metric exists only when the mentions stage scanned the
     // transcripts this run (`get` blocks otherwise); a resumed one scans nothing
     val turnsSeen: Long =
       if (rebuilt.contains("mentions")) turnMetrics.get("turns").asInstanceOf[Long] else 0L
-    val predCounts = spark.read.parquet(s"$workDir/graph")
+    val predCounts = spark.read.parquet(graphDir)
       .groupBy("pred").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val byPred = predCounts.map { case (p, n) => s"$p=$n" }.mkString(", ")

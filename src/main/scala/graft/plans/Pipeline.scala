@@ -1,8 +1,5 @@
 package graft.plans
 
-import scala.concurrent.{Await, Future, blocking}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.stage.implicits._
@@ -97,7 +94,7 @@ object Pipeline {
 
   /** Token postings of one side, shared by both alignment directions
     * (the same explode+distinct serves as index postings and as query
-    * tokens — build once, cache). `tok` is the index tokenizer — use
+    * tokens). `tok` is the index tokenizer — use
     * `tokenizerFor(spark, p)` to resolve it from Params (real WordPiece
     * vocab / vocab-free sub-word / plain words, onto_index.py:38-47). */
   def sidePostings(labels: DataFrame, tokenCut: Int,
@@ -111,7 +108,8 @@ object Pipeline {
     * `classifier` (fused string-match + batched-kernel scorer, the
     * default), `nes` (codegen'd lexical Column scorer), `embeds`
     * (class-embedding cosine). `srcLabels`/`tgtLabels` are (id, label)
-    * long form (`sideLabels`). */
+    * long form (`sideLabels`). Returns both directions as one lazy plan,
+    * so Spark schedules the independent direction DAGs itself. */
   def rawMappings(spark: SparkSession, srcLabels: DataFrame, tgtLabels: DataFrame,
                   p: Params): DataFrame = {
     type Hop = (DataFrame, DataFrame) => DataFrame => DataFrame
@@ -123,7 +121,8 @@ object Pipeline {
         // the split path remains the choice for expensive neural scorers)
         score.clamp(score.scorePooledWithStringMatch(spark,
           align.labelPairs(cands, f, t), p.pooling, p.scorer)))
-      case "nes" => (srcLabels, tgtLabels, (f, t) => nes.hop(f, t))
+      case "nes" => (srcLabels, tgtLabels,
+        (f, t) => nes.hop(f, t, p.scorer.jaccardWeight, p.scorer.editWeight))
       case "embeds" =>
         // stage.materialize, not cache: the class-vector tables are read by
         // both directions then never again — cache() would pin them in the
@@ -133,39 +132,28 @@ object Pipeline {
           (f, t) => embeds.hop(f, t))
     }
     val tok = tokenizerFor(spark, p)
-    val srcPost = sidePostings(srcLabels, p.tokenCut, tok).cache()
-    val tgtPost = sidePostings(tgtLabels, p.tokenCut, tok).cache()
+    val srcPost = sidePostings(srcLabels, p.tokenCut, tok)
+    val tgtPost = sidePostings(tgtLabels, p.tokenCut, tok)
     val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
-    // each direction is an independent ~40-operator DAG whose Catalyst
-    // analysis/optimization is serial driver CPU (~2s each measured);
-    // plan + materialize them on concurrent threads. `blocking` tells the
-    // global pool (parallelism = nproc) that each body parks on Spark
-    // jobs, so a small host still runs both directions side by side.
     def direction(from: DataFrame, to: DataFrame, fromPost: DataFrame,
                   toPost: DataFrame, d: Long, fromIsSrc: Boolean) =
-      Future(blocking(align.orient(
+      align.orient(
         align.direction(fromPost, toPost, d, p.candidateLimit, p.nbest,
           p.maxDfFrac, p.saltBuckets)(hop(from, to)),
-        fromIsSrc).materialize))
-    val s2tF = direction(srcIn, tgtIn, srcPost, tgtPost, dTgt, fromIsSrc = true)
-    val t2sF = direction(tgtIn, srcIn, tgtPost, srcPost, dSrc, fromIsSrc = false)
-    val (s2t, t2s) = (Await.result(s2tF, Duration.Inf), Await.result(t2sF, Duration.Inf))
-    // both directions are materialized: nothing reads the postings again
-    srcPost.unpersist(blocking = false)
-    tgtPost.unpersist(blocking = false)
-    align.combine(s2t, t2s)
+        fromIsSrc)
+    align.combine(
+      direction(srcIn, tgtIn, srcPost, tgtPost, dTgt, fromIsSrc = true),
+      direction(tgtIn, srcIn, tgtPost, srcPost, dSrc, fromIsSrc = false))
   }
 
   /** Full run over in-memory inputs; returns (mappings, triples).
     *
-    * The phases, in order: `mentions` (detect → stabilize, on its own
-    * thread beside the alignment chain), `mappings` (both alignment
-    * directions at the threshold), `repaired` (extension → union →
-    * repair) and `triples` (canonicalization). `run` passes each phase's
-    * body to `keep` under its name. The default evaluates the body;
-    * `plans.Main` stages it through `lineage.stage`, so a phase whose
-    * manifest matches is read back and its body never runs. `keep` is
-    * called for `mentions` on the mentions thread.
+    * The phases, in order: `mentions` (detect → stabilize), `mappings`
+    * (both alignment directions at the threshold), `repaired` (extension
+    * → union → repair) and `triples` (canonicalization). `run` passes
+    * each phase's body to `keep` under its name. The default evaluates
+    * the body; `plans.Main` stages it through `lineage.stage`, so a phase
+    * whose manifest matches is read back and its body never runs.
     *
     * Nothing stays cached after `run`: the label caches are released once
     * `repaired` exists, and the lazy triples re-read the edges from
@@ -174,14 +162,7 @@ object Pipeline {
           edges: Dataset[Edge], p: Params = Params(),
           keep: (String, => DataFrame) => DataFrame = (_, df) => df)
       : (DataFrame, DataFrame) = {
-    // The transcript-proportional stage (mention detect over 10^12 turns at
-    // target scale) is independent of the catalog-side alignment chain —
-    // submit it concurrently so the alignment chain's many small jobs hide
-    // behind the big scan instead of serializing after it. On a cluster
-    // these are two independent stage DAGs the scheduler runs side by side.
-    // `blocking`: the route probe below parks this global-pool thread on
-    // a Spark job.
-    val mensF = Future(blocking(keep("mentions", {
+    val mens = keep("mentions", {
       val dictDs = classes.filter(col("onto") === "src")
       // one route probe decides trie vs join AND feeds the trie; a catalog
       // past maxDictEntities takes the join linker (auto) or fails (trie)
@@ -196,25 +177,15 @@ object Pipeline {
         case Some(d) => mentions.detect(spark, turns, d.toSeq)
         case None => mentions.detectJoin(spark, turns, dictDs)
       }
-      // transcript-proportional exchange at cluster width (the catalog-side
-      // shuffle.partitions default is sized for tiny dimension stages)
-      val m = mentions.stabilize(detected.toDF(), stage.width(spark))
-      // stabilize = the per-conversation ordering window over
-      // (conv_id, turn_idx) from the BASELINE invariant. Deliberately LAZY
-      // — re-validated in round 7: the mention stream has exactly ONE
-      // downstream consumer (the triples materialization), and an eager
-      // in-future stage.materialize here (to overlap the 6.5 s transcript
-      // compute with the ~4.8 s serial alignment chain, guide §2.6)
-      // measured WORSE same-window (14.4 s vs 12.3 s best-of-reps): the
-      // store + re-read of ~12M materialized mention rows adds a full
-      // memory-traffic pass, and the mention job's 32-wide stages starve
-      // the alignment chain's small jobs under FIFO — the overlap buys
-      // less than the materialization costs. (Round 6 had already
-      // rejected the eager `.cache()+count` variant: columnar build + GC.)
-      // The single final action computes the fused scan→detect→stabilize
-      // DAG exactly once instead.
-      m
-    })))
+      // stabilize = the per-conversation ordering window over (conv_id,
+      // turn_idx), at cluster width: the catalog-side shuffle.partitions
+      // default is sized for tiny dimension stages. Deliberately lazy: the
+      // triples are the mentions' one consumer, and an eager materialize
+      // here measured slower (the store + re-read of the mention rows costs
+      // more than it saves), so the one final action runs the fused
+      // scan → detect → stabilize DAG once.
+      mentions.stabilize(detected.toDF(), stage.width(spark))
+    })
 
     // catalog sides are dimension tables: cache once, reused ~6 times
     val srcLabels = sideLabels(classes, "src").cache()
@@ -241,8 +212,6 @@ object Pipeline {
     })
     srcLabels.unpersist(blocking = false)
     tgtLabels.unpersist(blocking = false)
-
-    val mens = Await.result(mensF, Duration.Inf)
 
     val trip = keep("triples", {
       // repaired is 1-to-1 by construction (repair.oneToOne), so components

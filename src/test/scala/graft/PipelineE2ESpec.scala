@@ -97,6 +97,34 @@ class PipelineE2ESpec extends SparkSuite {
     intercept[IllegalArgumentException](Pipeline.Params(pooling = "bogus"))
   }
 
+  test("nes mode scores with Params.scorer") {
+    val src = Pipeline.sideLabels(classes, "src")
+    val tgt = Pipeline.sideLabels(classes, "tgt")
+    val sp = graft.operators.score.ScorerParams(jaccardWeight = 0.0, editWeight = 1.0)
+    val rows = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "nes", scorer = sp))
+      .as[(String, String, Double)].collect()
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String)].collect().groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val (l1s, l2s) = (labels(src), labels(tgt))
+    assert(rows.nonEmpty)
+    for ((e1, e2, v) <- rows) {
+      val want = (for (a <- l1s(e1); b <- l2s(e2))
+        yield graft.operators.score.scorePair(sp, a, b)).max
+      assert(math.abs(v - want) < 1e-12, s"($e1, $e2): value=$v scorePair=$want")
+    }
+  }
+
+  test("keep sees the phases in order, each on the calling thread") {
+    val caller = Thread.currentThread()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Thread)]
+    Pipeline.run(spark, turns, classes, edges, keep = (n, df) => {
+      seen += n -> Thread.currentThread()
+      df
+    })
+    assert(seen.map(_._1) == Seq("mentions", "mappings", "repaired", "triples"))
+    for ((n, t) <- seen) assert(t eq caller, s"$n ran on ${t.getName}")
+  }
+
   test("linker=join fallback: identical triples to the broadcast-trie kernel") {
     // the graceful-degradation path for catalogs past maxDictEntities: the
     // distributed n-gram dictionary join must be a drop-in replacement

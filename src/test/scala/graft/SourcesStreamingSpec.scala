@@ -272,7 +272,21 @@ class SourcesStreamingSpec extends SparkSuite {
     val work = Files.createTempDirectory("graft-main").toString
     val stages = Seq("mentions", "mappings", "repaired", "triples")
     def manifest(s: String) = new java.io.File(s"$work/$s/_GRAFT_MANIFEST.json")
+    // Main runs inside this live session and leaves its confs as they are
+    val confKeys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst", "spark.sql.session.timeZone")
+    def confs() = confKeys.map(k => k -> spark.conf.getOption(k))
+    val confsBefore = confs()
+    // graph/ files and their mtimes: a resumed run leaves them untouched
+    def graphFiles() = {
+      import scala.jdk.CollectionConverters._
+      org.apache.commons.io.FileUtils
+        .listFiles(new java.io.File(s"$work/graph"), null, true).asScala
+        .map(f => f.getPath -> f.lastModified()).toMap
+    }
     graft.plans.Main.main(Array("fixture:40", "fixture", work))
+    assert(confs() == confsBefore)
+    val graph1 = graphFiles()
     // every phase of Pipeline.run is a stage
     for (s <- stages) assert(manifest(s).isFile, s"no $s manifest")
     val m1 = graft.plans.lineage.readManifest(spark, s"$work/triples")
@@ -282,6 +296,7 @@ class SourcesStreamingSpec extends SparkSuite {
     val m2 = graft.plans.lineage.readManifest(spark, s"$work/triples")
     assert(m2.get.fingerprint == m1.get.fingerprint && m2.get.rows == m1.get.rows)
     assert(spark.read.parquet(s"$work/graph").count() == m1.get.rows)
+    assert(graphFiles() == graph1, "the resumed run rewrote graph/")
     // ... and so scans no transcripts
     val metrics = Files.readString(java.nio.file.Paths.get(s"$work/metrics.json"))
     assert(metrics.contains("\"resumed\":true") && metrics.contains("\"turns_seen\":0"), metrics)
@@ -292,5 +307,7 @@ class SourcesStreamingSpec extends SparkSuite {
     assert(manifest("mentions").isFile)
     for (s <- stages.tail) assert(manifest(s).lastModified() == before(s), s"$s was rebuilt")
     assert(spark.read.parquet(s"$work/graph").count() == m1.get.rows)
+    assert(graphFiles() == graph1, "a run on unchanged triples rewrote graph/")
+    assert(confs() == confsBefore)
   }
 }
