@@ -29,11 +29,10 @@ object align {
     * onto one task (measured: 14 s of 1-task CPU at sf0.1). The IDF sums
     * are associative, so the pin never changes results. */
   def direction(fromPost: DataFrame, toPost: DataFrame, d: Long, limit: Int,
-                nbest: Int, maxDfFrac: Double = 1.0, saltBuckets: Int = 1,
-                fixedPointIdf: Boolean = false)
+                nbest: Int, fixedPointIdf: Boolean = false)
                (hop: DataFrame => DataFrame): DataFrame = {
     val cands = index.idfCandidates(fromPost.withColumnRenamed("class_id", "query_id"),
-        toPost, d, limit, maxDfFrac, saltBuckets,
+        toPost, d, limit,
         broadcastPostings = graft.plans.route.broadcastCatalog(d, "candidate postings"),
         widthHint = graft.plans.stage.width(fromPost.sparkSession),
         fixedPointIdf = fixedPointIdf)

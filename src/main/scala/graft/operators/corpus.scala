@@ -198,15 +198,16 @@ object corpus {
    * global rank as `rn`.
    *
    * Scale design: a naive `Window.orderBy(u)` funnels the ENTIRE negative
-   * set through one task. Instead the draw space [0, 2^31) is range-bucketed,
-   * ranks are computed per bucket (parallel), the tiny per-bucket histogram
-   * (`buckets` rows) is collected, and global rank = bucket offset + local
-   * rank — exact top-`target` selection with no single-task sort and one
-   * extra count-only job.
+   * set through one task. Instead the draw space [0, 2^31) is range-bucketed
+   * into 256 buckets, ranks are computed per bucket (parallel), the tiny
+   * per-bucket histogram (≤ 256 rows) is collected, and global rank =
+   * bucket offset + local rank — exact top-`target` selection with no
+   * single-task sort and one extra count-only job.
    */
   def downsampleNegatives(negatives: DataFrame, nSyn: Long, negRate: Double,
                           seed: Long, keyCols: Seq[String] = Seq("sent1", "sent2"),
-                          uCol: Option[Column] = None, buckets: Int = 256): DataFrame = {
+                          uCol: Option[Column] = None): DataFrame = {
+    val buckets = 256
     val target = (negRate * nSyn).toLong
     if (target <= 0) return negatives.limit(0).withColumn("rn", lit(0L))
     val u = uCol.getOrElse(rnd.keyed(seed, keyCols.map(col): _*))

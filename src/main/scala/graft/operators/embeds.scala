@@ -19,13 +19,12 @@ import graft.functions.vecagg
  */
 object embeds {
 
-  /** Per-class embedding: embed each (id, label) row with the batched
-    * sentence embedder, then mean-pool per id (the custom VectorMean
+  /** Per-class embedding: embed each (id, label) row with the sentence
+    * embedder (64 dimensions), then mean-pool per id (the custom VectorMean
     * Aggregator — the reference's class-embedding mean). */
-  def classEmbeddings(spark: SparkSession, labels: DataFrame,
-                      dim: Int = 64): DataFrame = {
+  def classEmbeddings(spark: SparkSession, labels: DataFrame): DataFrame = {
     import spark.implicits._
-    score.embedSentences(spark, labels, "id", "label", dim)
+    score.embedSentences(spark, labels, "id", "label", 64)
       .as[(String, Array[Float])]
       .map { case (id, v) => (id, v.map(_.toDouble)) }
       .groupByKey(_._1)

@@ -23,42 +23,11 @@ object evalmod {
    * both sides:
    *   P = |pre∖ign ∩ ref| / |pre∖ign|,  R = |ref∖ign ∩ pre| / |ref∖ign|
    * matching onto_eval.py:56-85 (the reference counts TP on the
-   * ignored-filtered sides). Returns the -1.0 sentinel row when a
-   * denominator is empty (onto_eval.py:47-54).
+   * ignored-filtered sides). P, R and F1 are the -1.0 sentinel when a
+   * denominator is empty (onto_eval.py:47-54). One declarative row
+   * (n_mappings, n_ignored, n_ref, tp, p, r, f1), no driver-side
+   * collection — usable as a query/operator; `prf` collects it.
    */
-  def prf(pre0: DataFrame, ref: DataFrame, ignored: DataFrame): PRF = {
-    val keyCols = Seq("entity1", "entity2")
-    val pre = dropIdentity(pre0).select(keyCols.map(col): _*).distinct()
-    val refK = ref.select(keyCols.map(col): _*).distinct()
-    val ignK = ignored.select(keyCols.map(col): _*).distinct()
-
-    val preKept = pre.join(ignK, keyCols, "left_anti")
-    val refKept = refK.join(ignK, keyCols, "left_anti")
-
-    // one pass: full-outer membership flags, then a single agg
-    val counts = preKept.withColumn("in_pre", lit(1))
-      .join(refKept.withColumn("in_ref", lit(1)), keyCols, "full_outer")
-      .agg(
-        sum(coalesce(col("in_pre"), lit(0))).as("n_pre"),
-        sum(coalesce(col("in_ref"), lit(0))).as("n_ref"),
-        sum(when(col("in_pre").isNotNull && col("in_ref").isNotNull, 1).otherwise(0)).as("tp"))
-      .head()
-    val nPre = counts.getLong(0)
-    val nRef = counts.getLong(1)
-    val tp = counts.getLong(2)
-    val nIgnoredPre = pre.count() - nPre
-
-    if (nPre == 0 || nRef == 0) PRF(nPre, nIgnoredPre, -1.0, -1.0, -1.0)
-    else {
-      val p = tp.toDouble / nPre
-      val r = tp.toDouble / nRef
-      val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      PRF(nPre, nIgnoredPre, p, r, f1)
-    }
-  }
-
-  /** Fully-declarative one-row P/R/F1 report (same arithmetic as `prf`,
-    * no driver-side collection — usable as a query/operator). */
   def prfReport(pre0: DataFrame, ref: DataFrame, ignored: DataFrame): DataFrame = {
     val keyCols = Seq("entity1", "entity2")
     val pre = dropIdentity(pre0).select(keyCols.map(col): _*).distinct()
@@ -66,12 +35,13 @@ object evalmod {
     val ignK = ignored.select(keyCols.map(col): _*).distinct()
     val preKept = pre.join(ignK, keyCols, "left_anti")
     val refKept = refK.join(ignK, keyCols, "left_anti")
+    // one pass: full-outer membership flags, then a single agg
     val core = preKept.withColumn("in_pre", lit(1))
       .join(refKept.withColumn("in_ref", lit(1)), keyCols, "full_outer")
       .agg(
-        sum(coalesce(col("in_pre"), lit(0))).as("n_mappings"),
-        sum(coalesce(col("in_ref"), lit(0))).as("n_ref"),
-        sum(when(col("in_pre").isNotNull && col("in_ref").isNotNull, 1).otherwise(0)).as("tp"))
+        count(col("in_pre")).as("n_mappings"),
+        count(col("in_ref")).as("n_ref"),
+        count(when(col("in_pre").isNotNull && col("in_ref").isNotNull, 1)).as("tp"))
     val ignCount = pre.join(ignK, keyCols, "left_semi")
       .agg(count(lit(1)).as("n_ignored"))
     core.crossJoin(ignCount)
@@ -83,6 +53,13 @@ object evalmod {
         .when(col("p") + col("r") === 0.0, 0.0)
         .otherwise(lit(2) * col("p") * col("r") / (col("p") + col("r"))))
       .select("n_mappings", "n_ignored", "n_ref", "tp", "p", "r", "f1")
+  }
+
+  /** `prfReport`'s row on the driver. */
+  def prf(pre: DataFrame, ref: DataFrame, ignored: DataFrame): PRF = {
+    val r = prfReport(pre, ref, ignored).head()
+    PRF(r.getAs[Long]("n_mappings"), r.getAs[Long]("n_ignored"),
+      r.getAs[Double]("p"), r.getAs[Double]("r"), r.getAs[Double]("f1"))
   }
 
   /** The reference's validation threshold grid: evenly_divide(0,0.8,8) +

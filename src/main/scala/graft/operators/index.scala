@@ -11,8 +11,8 @@ import graft.functions.text
  * /root/reference/bertmap/onto/onto_index.py:49-60 and select_candidates at
  * onto_box.py:63-94), rebuilt as declarative Spark dataflow:
  *
- *   classes(class_iri, labels)
- *     → explode labels → explode tokens → filter len>cut   = postings
+ *   labels(id, label), one row per label
+ *     → explode tokens → filter len>cut → distinct          = postings
  *   postings.groupBy(token).count                           = document freq
  *   queryTokens ⋈ postings on token                          (broadcast/salted)
  *     → groupBy(query, candidate).sum(idf weight)            = summed IDF
@@ -29,25 +29,14 @@ import graft.functions.text
  */
 object index {
 
-  /** Build postings (one row per (id, token)) from a table with an
-    * `idCol` and an array<string> `labelsCol`.
-    * Reference: onto_index.py:49-60 (tokenize each label, keep len>cut).
-    * The tokenizer is pluggable: `text.wordTokensCol` (default) or
-    * `text.subwordTokensCol(_)` to match the reference's WordPiece
-    * sub-word postings (onto_index.py:46-47) — morphologically-related
-    * labels then share head-piece postings. */
-  def postings(classes: DataFrame, idCol: String, labelsCol: String,
-               cut: Int = 0,
-               tokenizer: Column => Column = text.wordTokensCol): DataFrame = {
-    classes
-      .select(col(idCol).as("class_id"), explode(col(labelsCol)).as("label"))
-      .select(col("class_id"), explode(tokenizer(col("label"))).as("token"))
-      .filter(length(col("token")) > cut)
-      .distinct() // a token appearing in several labels of one class posts once
-  }
-
-  /** Postings straight from a text column (graft path: mention/document
-    * text rather than label bags). Same pluggable tokenizer contract. */
+  /** Postings (one row per (id, token)) from a text column: a class's
+    * label long form (`Pipeline.sideLabels`) or mention/document text.
+    * Reference: onto_index.py:49-60 (tokenize each label, keep len>cut). A
+    * token appearing in several labels of one class posts once. The
+    * tokenizer is pluggable: `text.wordTokensCol` (default),
+    * `text.subwordTokensCol(_)` to match the reference's WordPiece sub-word
+    * postings (onto_index.py:46-47) — morphologically-related labels then
+    * share head-piece postings — or `text.wordpieceTokensCol` over a vocab. */
   def postingsFromText(docs: DataFrame, idCol: String, textCol: String,
                        cut: Int = 0,
                        tokenizer: Column => Column = text.wordTokensCol): DataFrame =

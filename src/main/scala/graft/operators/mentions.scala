@@ -116,7 +116,8 @@ object mentions {
     * otherwise make `mention_ord` partition-dependent). The window order
     * (turn_idx, onto, class_iri) is a total key after the groupBy, so
     * `mention_ord` is the stable per-conversation ordinal downstream
-    * consumers key on. */
+    * consumers key on. Returns `Mention`'s five columns plus `mention_ord`;
+    * any other input column is dropped. */
   def stabilize(mens: org.apache.spark.sql.DataFrame,
                 widthHint: Int = 0): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -130,26 +131,9 @@ object mentions {
     val keyCols = Seq("conv_id", "turn_idx", "onto", "class_iri", "surface")
     require(keyCols.forall(mens.columns.contains),
       s"stabilize needs columns $keyCols, got ${mens.columns.toSeq}")
-    // Extra (non-key) columns ride along on the surviving row, so they must
-    // be part of the survivor's total order too: two rows tying on the full
-    // 5-col key but differing in an extra column (e.g. duplicate mention
-    // evidence with two distinct `ts` values) would otherwise make the
-    // survivor's extras partition-dependent — exactly the nondeterminism
-    // this function exists to remove. Appending them after the key keeps
-    // wOrd's sort a prefix of wAll's (no second exchange or sort). Only
-    // ORDERABLE extras join the sort — a map-typed column cannot appear in
-    // an order specification, and failing analysis for a column this
-    // function never touches would be a regression; unorderable extras
-    // keep the pre-existing ride-along behavior (well-defined whenever the
-    // input is unique on the 5-col key plus the orderable extras).
-    val extraCols = mens.columns.filterNot(keyCols.contains).toSeq
-      .filter { c =>
-        org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(
-          mens.schema(c).dataType)
-      }
     val wAll = Window.partitionBy(col("conv_id"))
-      .orderBy((Seq(col("turn_idx").asc, col("onto").asc, col("class_iri").asc,
-        col("surface").asc) ++ extraCols.map(c => col(c).asc)): _*)
+      .orderBy(col("turn_idx").asc, col("onto").asc, col("class_iri").asc,
+        col("surface").asc)
     val wOrd = Window.partitionBy(col("conv_id"))
       .orderBy(col("turn_idx").asc, col("onto").asc, col("class_iri").asc)
     val firstOfGroup =
@@ -165,12 +149,9 @@ object mentions {
     // measured 119 core-s squeezed into 10 tasks at local[32] without the
     // pin. HashPartitioning(conv_id) satisfies both window distributions,
     // so the explicit exchange REPLACES the window's own, never adds one.
+    val keyed = mens.select(keyCols.map(col): _*)
     val in = if (widthHint > 0)
-      mens.repartition(widthHint, col("conv_id")) else mens
-    // NO projection: extra columns (e.g. event-time `ts` on timestamped
-    // mention frames) ride along on the surviving first-of-group row,
-    // which is well-defined — exactly one row per (turn, onto, class)
-    // group passes the lag filter
+      keyed.repartition(widthHint, col("conv_id")) else keyed
     in
       .withColumn("_first", firstOfGroup)
       .filter(col("_first")).drop("_first")

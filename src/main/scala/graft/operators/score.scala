@@ -14,11 +14,11 @@ import graft.functions.text
  * cross-encoder; its own `nes`/`bertembeds` modes (run_bertmap.py:293-367)
  * prove the scorer slot is pluggable without touching the dataflow. Here the
  * scorer is a deterministic lexical blend (token Jaccard + normalized edit
- * similarity) executed as a *batched* function inside mapPartitions over a
- * typed projection, with its parameters shipped via SparkContext.broadcast —
- * the same physical contract a real broadcast-weights batched-inference hop
- * would use (north_star: "batched inference, broadcast model weights,
- * Arrow-ish batching"). Swapping in an ONNX/embedding scorer changes only
+ * similarity) executed row by row inside mapPartitions over a typed
+ * projection, with its parameters shipped via SparkContext.broadcast — the
+ * slot a real broadcast-weights inference hop would fill, batching rows
+ * inside the same mapPartitions (north_star: "batched inference, broadcast
+ * model weights"). Swapping in an ONNX/embedding scorer changes only
  * `ScorerParams`/`kernel`, never the plan around it.
  */
 object score {
@@ -26,8 +26,7 @@ object score {
   /** Broadcastable scorer parameters (the "model weights"). */
   final case class ScorerParams(
       jaccardWeight: Double = 0.5,
-      editWeight: Double = 0.5,
-      batchSize: Int = 32) // config.json batch_size=32
+      editWeight: Double = 0.5)
 
   /** The per-string half of the pair kernel: (normalized label, its word
     * token set). Pure, so callers may memoize it per label. */
@@ -49,7 +48,7 @@ object score {
     kernel(p, prep(a), prep(b))
 
   /**
-   * Batched scorer over (from_id, to_id, l1, l2) pairs, appending
+   * Scorer over (from_id, to_id, l1, l2) pairs, appending
    * `pair_score`: a MapPartitions *logical* node over a typed projection,
    * so Catalyst/AQE still own the plan around it. (An earlier `df.rdd`
    * variant compiled its upstream non-adaptively and inserted an
@@ -83,11 +82,7 @@ object score {
           }
           v
         }
-        it.grouped(p.batchSize).flatMap { rows =>
-          rows.iterator.map { r =>
-            (r._1, r._2, r._3, r._4, kernel(p, memoPrep(r._3), memoPrep(r._4)))
-          }
-        }
+        it.map(r => (r._1, r._2, r._3, r._4, kernel(p, memoPrep(r._3), memoPrep(r._4))))
       }
       .toDF("from_id", "to_id", "l1", "l2", "pair_score")
   }
@@ -96,7 +91,7 @@ object score {
    * Deterministic sentence embedder — the stand-in for the reference's
    * `bertembeds` mode (bert_static.py:34-75: masked mean of hidden states).
    * Hashed bag-of-words features over word tokens: a pure function of the
-   * text, batched in mapPartitions like the scorer (swap in a real encoder
+   * text, run in mapPartitions like the scorer (swap in a real encoder
    * by replacing `embedKernel` only). L2-normalized so dot = cosine.
    */
   def embedKernel(s: String, dim: Int): Array[Float] = {
@@ -110,19 +105,13 @@ object score {
     v
   }
 
-  /** (id, text) -> (id, embedding: array<float>), batched mapPartitions. */
+  /** (id, text) -> (id, embedding: array<float>), one mapPartitions pass. */
   def embedSentences(spark: SparkSession, df: DataFrame, idCol: String,
-                     textCol: String, dim: Int = 64,
-                     batchSize: Int = 32): DataFrame = {
+                     textCol: String, dim: Int): DataFrame = {
     import spark.implicits._
     df.select(col(idCol).cast("string").as("id"), col(textCol).as("txt"))
       .as[(String, String)]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // one "forward pass" per batch
-          batch.iterator.map { case (id, s) => (id, embedKernel(s, dim)) }
-        }
-      }
+      .mapPartitions(_.map { case (id, s) => (id, embedKernel(s, dim)) })
       .toDF("id", "embedding")
   }
 
@@ -199,7 +188,7 @@ object score {
    * jaccardWeight·tokenJaccard + editWeight·NES, where NES =
    * 1 − levenshtein/max(len) is the reference's own `nes` mapping mode
    * (nes_map.py:73-77). Use this for lexical/NES alignment; keep the
-   * mapPartitions kernel for batched model inference.
+   * mapPartitions kernel for model inference.
    */
   def pairScoreCol(l1: org.apache.spark.sql.Column, l2: org.apache.spark.sql.Column,
                    jaccardWeight: Double = 0.5, editWeight: Double = 0.5)

@@ -18,9 +18,11 @@ import graft.sources.{fixtures, tables}
  * Stages (`Pipeline.run`'s phases, each a lineage.stage through its
  * `keep` hook — skipped when its manifest matches):
  *   mentions → mappings → repaired → triples
- * A stage's fingerprint is its name + the inputs + `Params`, so re-running
- * with the same inputs reuses every stage, and deleting a stage dir
- * rebuilds that stage only.
+ * A stage's fingerprint is its name + the inputs + the settable `Params`,
+ * so re-running with the same inputs reuses every stage, and deleting a
+ * stage dir rebuilds that stage only. Fixed settings (the `Params`
+ * members) and code are not fingerprinted: after a code change, use a
+ * fresh work dir.
  */
 object Main {
 
@@ -76,7 +78,7 @@ object Main {
 
     // --- staged run ---------------------------------------------------------
     val params = Pipeline.Params()
-    val paramsFp = params.toString
+    val paramsFp = params.toString // the settable fields only
     val rebuilt = scala.collection.mutable.Set.empty[String]
     val (mappings, triples) = Pipeline.run(spark, observedTurns, classes, edges, params,
       keep = (name, df) => lineage.stage(spark, workDir, name, inputFp + paramsFp) {

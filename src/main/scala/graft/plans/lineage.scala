@@ -12,9 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * lineage + metrics"). The reference memoizes stages by bare file existence
  * (/root/reference/run_bertmap.py:62-67,98-99,107,136-137,213-214); we
  * strengthen that to a content-addressed manifest: a stage's Parquet output
- * is reused only when the recorded fingerprint (stage name + version + the
- * fingerprints of its inputs) matches, otherwise it is recomputed and
- * rewritten atomically (write to tmp dir, rename).
+ * is reused only when the recorded fingerprint (stage name + the caller's
+ * inputs string) matches, otherwise it is recomputed and rewritten
+ * atomically (write to tmp dir, rename). Code is not fingerprinted: in
+ * `plans.Main` the inputs string is the input source plus the settable
+ * `Pipeline.Params`, so fixed settings and operator code can change under a
+ * matching manifest — after a code change, use a fresh work dir.
  *
  * All filesystem traffic goes through the Hadoop FileSystem API resolved
  * from the path itself, so a workDir on hdfs:// or s3a:// behaves exactly

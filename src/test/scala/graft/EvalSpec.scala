@@ -29,11 +29,20 @@ class EvalSpec extends SparkSuite {
   }
 
   test("prfReport agrees with prf") {
+    val empty = Seq.empty[(String, String, Double)].toDF("entity1", "entity2", "value")
+    for ((p, r) <- Seq((pre, ref), (empty, ref), (empty, empty))) {
+      val row = evalmod.prfReport(p, r, ign).head()
+      val viaPrf = evalmod.prf(p, r, ign)
+      assert(viaPrf == evalmod.PRF(row.getAs[Long]("n_mappings"), row.getAs[Long]("n_ignored"),
+        row.getAs[Double]("p"), row.getAs[Double]("r"), row.getAs[Double]("f1")))
+    }
     val row = evalmod.prfReport(pre, ref, ign).head()
     assert(row.getAs[Long]("n_mappings") == 3)
     assert(row.getAs[Long]("n_ignored") == 1)
     assert(row.getAs[Long]("tp") == 2)
     assert(math.abs(row.getAs[Double]("f1") - 2.0 / 3) < 1e-12)
+    // both sides empty: zero counts and the sentinel, not NULL sums
+    assert(evalmod.prf(empty, empty, ign) == evalmod.PRF(0, 0, -1.0, -1.0, -1.0))
   }
 
   test("-1.0 sentinel on empty prediction set (onto_eval.py:47-54)") {

@@ -12,8 +12,16 @@ class IndexSpec extends SparkSuite {
     (3L, Seq("kidney failure", "renal failure"))
   ).toDF("cid", "labels")
 
+  /** Postings of a (cid, labels: array) table: the labels in long form,
+    * then `index.postingsFromText`. */
+  private def postings(classes: org.apache.spark.sql.DataFrame, cut: Int = 0,
+                       tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+                         graft.functions.text.wordTokensCol) =
+    index.postingsFromText(classes.select(col("cid"), explode(col("labels")).as("label")),
+      "cid", "label", cut, tok)
+
   test("postings: explode + tokenize + distinct per class") {
-    val p = index.postings(classes, "cid", "labels")
+    val p = postings(classes)
       .as[(Long, String)].collect().toSet
     assert(p == Set(
       (1L, "heart"), (1L, "failure"),
@@ -22,19 +30,18 @@ class IndexSpec extends SparkSuite {
   }
 
   test("postings honor the length cut (onto_index.py:55-58)") {
-    val p = index.postings(Seq((1L, Seq("a bb ccc"))).toDF("cid", "labels"),
-      "cid", "labels", cut = 2)
+    val p = postings(Seq((1L, Seq("a bb ccc"))).toDF("cid", "labels"), cut = 2)
     assert(p.select("token").as[String].collect().toSet == Set("ccc"))
   }
 
   test("docFreq counts classes per token") {
-    val df = index.docFreq(index.postings(classes, "cid", "labels"))
+    val df = index.docFreq(postings(classes))
       .as[(String, Long)].collect().toMap
     assert(df("heart") == 2 && df("failure") == 2 && df("renal") == 1)
   }
 
   test("idfCandidates: summed-IDF ranking with deterministic tie-break") {
-    val posting = index.postings(classes, "cid", "labels")
+    val posting = postings(classes)
     val q = Seq((10L, "heart"), (10L, "failure")).toDF("query_id", "token")
     val out = index.idfCandidates(q, posting, totalDocs = 3, limit = 2)
       .select("query_id", "class_id").as[(Long, Long)].collect().toList
@@ -44,7 +51,7 @@ class IndexSpec extends SparkSuite {
   }
 
   test("unique rare token dominates common token (idf ordering)") {
-    val posting = index.postings(classes, "cid", "labels")
+    val posting = postings(classes)
     val q = Seq((7L, "renal"), (7L, "heart")).toDF("query_id", "token")
     val top = index.idfCandidates(q, posting, 3, 1)
       .select("class_id").as[Long].head()
@@ -52,7 +59,7 @@ class IndexSpec extends SparkSuite {
   }
 
   test("salted aggregation produces identical results to unsalted") {
-    val posting = index.postings(classes, "cid", "labels")
+    val posting = postings(classes)
     val q = Seq((1L, "heart"), (1L, "failure"), (2L, "renal"), (2L, "heart"))
       .toDF("query_id", "token")
     // both IDF weights: the salted join serves the fixed-point one too
@@ -67,7 +74,7 @@ class IndexSpec extends SparkSuite {
   }
 
   test("maxDfFrac drops stop-tokens from scoring") {
-    val posting = index.postings(classes, "cid", "labels")
+    val posting = postings(classes)
     // 'heart'/'failure' have df=2 of 3 docs = 0.67 > 0.5 -> dropped
     val q = Seq((9L, "heart"), (9L, "renal")).toDF("query_id", "token")
     val out = index.idfCandidates(q, posting, 3, 5, maxDfFrac = 0.5)
@@ -80,11 +87,11 @@ class IndexSpec extends SparkSuite {
     // word-level postings: 'cardiomyopathy' vs 'cardiomegaly' share nothing
     val cls = Seq((1L, Seq("cardiomyopathy")), (2L, Seq("cardiomegaly")))
       .toDF("cid", "labels")
-    val word = index.postings(cls, "cid", "labels")
+    val word = postings(cls)
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(word(1L).intersect(word(2L)).isEmpty)
     // sub-word postings: both split to head piece 'card' (+ continuations)
-    val sub = index.postings(cls, "cid", "labels", 0, c => text.subwordTokensCol(c))
+    val sub = postings(cls, 0, c => text.subwordTokensCol(c))
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(sub(1L).intersect(sub(2L)).contains("card"))
     // Column tokenizer agrees with the plain-Scala twin exactly
@@ -100,7 +107,7 @@ class IndexSpec extends SparkSuite {
     val cls = Seq((1L, Seq("cardiomyopathy", "acute")), (2L, Seq("cardiomegaly")))
       .toDF("cid", "labels")
     val bc = spark.sparkContext.broadcast(vocab)
-    val got = index.postings(cls, "cid", "labels", 0, c => text.wordpieceTokensCol(bc)(c))
+    val got = postings(cls, 0, c => text.wordpieceTokensCol(bc)(c))
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     // plain-Scala twin as the oracle
     assert(got(1L) ==
@@ -114,7 +121,7 @@ class IndexSpec extends SparkSuite {
   }
 
   test("fixed-point variant agrees with double variant on ranking") {
-    val posting = index.postings(classes, "cid", "labels")
+    val posting = postings(classes)
     val q = Seq((1L, "heart"), (1L, "failure"), (1L, "renal"))
       .toDF("query_id", "token")
     val a = index.idfCandidates(q, posting, 3, 3)
@@ -128,8 +135,8 @@ class IndexSpec extends SparkSuite {
     val s = spark.newSession()
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import s.implicits._
-    val posting = index.postings(Seq((1L, Seq("heart failure")), (2L, Seq("heart attack")))
-      .toDF("cid", "labels"), "cid", "labels")
+    val posting = postings(Seq((1L, Seq("heart failure")), (2L, Seq("heart attack")))
+      .toDF("cid", "labels"))
     val q = Seq((10L, "heart"), (10L, "failure")).toDF("query_id", "token")
     def broadcasts(hint: Option[Boolean]) =
       index.idfCandidates(q, posting, 2, 5, broadcastPostings = hint)

@@ -100,33 +100,14 @@ class MentionsSpec extends SparkSuite {
     assert(out == Set(Mention("c1", 0, "src", "src:L2", "one two")))
   }
 
-  test("stabilize: extra-column survivor is partition-invariant (full-row tiebreak)") {
-    // two rows tying on the full 5-col key but differing in an extra column:
-    // the survivor's extra value must not depend on partitioning
-    val rows = Seq(
-      ("c1", 0, "src", "e1", "s", new Timestamp(500L)),
-      ("c1", 0, "src", "e1", "s", new Timestamp(100L)),
-      ("c1", 1, "src", "e2", "t", new Timestamp(900L)))
-    def run(parts: Int) = {
-      val df = rows.toDF("conv_id", "turn_idx", "onto", "class_iri", "surface", "ts")
-        .repartition(parts)
-      mentions.stabilize(df)
-        .select("conv_id", "turn_idx", "class_iri", "ts")
-        .as[(String, Int, String, Timestamp)].collect().sortBy(r => (r._1, r._2)).toList
-    }
-    val a = run(1)
-    val b = run(7)
-    assert(a == b)
-    assert(a.head._4 == new Timestamp(100L)) // min ts survives, deterministically
-  }
-
-  test("stabilize: a map-typed extra column still analyzes (excluded from the survivor sort)") {
-    import org.apache.spark.sql.functions.{col, map, lit}
-    val df = Seq(("c1", 0, "src", "e1", "s"))
-      .toDF("conv_id", "turn_idx", "onto", "class_iri", "surface")
-      .withColumn("attrs", map(lit("k"), lit("v"))) // unorderable type
+  test("stabilize: output columns are exactly the key plus mention_ord") {
+    val df = Seq(("c1", 0, "src", "e1", "s", new Timestamp(500L)),
+      ("c1", 0, "src", "e1", "s", new Timestamp(100L)))
+      .toDF("conv_id", "turn_idx", "onto", "class_iri", "surface", "ts")
     val out = mentions.stabilize(df)
-    assert(out.columns.contains("attrs") && out.count() == 1)
+    assert(out.columns.toSeq ==
+      Seq("conv_id", "turn_idx", "onto", "class_iri", "surface", "mention_ord"))
+    assert(out.count() == 1)
   }
 
   test("stabilize: two distinct surfaces for one (turn, entity) collapse to min(surface) deterministically") {

@@ -94,7 +94,6 @@ class PipelineE2ESpec extends SparkSuite {
     // Params checks its own choices when it is built, before any job runs
     intercept[IllegalArgumentException](Pipeline.Params(mode = "bogus"))
     intercept[IllegalArgumentException](Pipeline.Params(linker = "bogus"))
-    intercept[IllegalArgumentException](Pipeline.Params(pooling = "bogus"))
   }
 
   test("nes mode scores with Params.scorer") {

@@ -79,8 +79,7 @@ class ScoreAlignSpec extends SparkSuite {
       ("s2", "kidney stone")).toDF("id", "label")
     val tgt = Seq(("t1", "acute heart failure"), ("t2", "renal calculus stone"))
       .toDF("id", "label")
-    val p = Pipeline.Params(mode = "embeds", candidateLimit = 5, nbest = 1,
-      subwordIndex = false)
+    val p = Pipeline.Params(mode = "embeds", candidateLimit = 5, subwordIndex = false)
     val out = align.atThreshold(Pipeline.rawMappings(spark, src, tgt, p), 0.1)
       .select("entity1", "entity2", "value").as[(String, String, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap

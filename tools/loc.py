@@ -11,12 +11,16 @@ parameter lists of every `def` and `case class`, outside comments and
 string literals.
 
 Line 3: the test-only definitions, i.e. the `def`, `val`, `case class` and
-`object` names (not `override`s, not objects with a `main`) that occur
-nowhere in the counted trees or in perfbench/src except where they are
-defined: only specs, or a caller outside the repo such as the driver
-that calls `SparkEntry.entry`, reach them.
-Names are matched as whole words in the code without comments and strings,
-so a local that shares a used name is not listed.
+`object` names (not `override`s, not `main` or objects with a `main`) that
+nothing in the counted trees or in perfbench/src uses: only specs, or a
+caller outside the repo such as one of `SparkEntry.entry`, reach them.
+Names are matched as whole words in the code without comments and strings.
+A use counts when it lies in the defining file, outside a def with a
+parameter of that name, or, in another file, when it reaches the
+definition's owner: `O.name` (or a wildcard import of `O`) for a member of
+`object O`, any `x.name` for a member of a class or trait, and any bare
+word for a package-level definition. So a same-named parameter, local or
+String method (`split`) hides no member.
 
     python3 tools/loc.py            # src/main/scala under the repo root
     python3 tools/loc.py DIR...     # any other source trees
@@ -198,6 +202,7 @@ def options(path):
 DEFN = re.compile(r"(\boverride\s+(?:\w+\s+)*)?"
                   r"\b(?:def|val|case\s+class|object)\s+(`[^`]*`|[A-Za-z_$][\w$]*)")
 WORD = re.compile(r"`[^`]*`|[A-Za-z_$][\w$]*")
+OWNER = re.compile(r"\b(object|class|trait)\s+([A-Za-z_$][\w$]*)")
 
 
 def is_main_object(code, m):
@@ -209,21 +214,132 @@ def is_main_object(code, m):
     return re.search(r"\bdef\s+main\s*\(", body) is not None
 
 
+def body_start(code, i):
+    """Index of the `{` opening the body of the template whose header ends
+    the name at `i`, or None when the template has no body."""
+    while i < len(code):
+        c = code[i]
+        if c in "([":
+            i = balanced(code, i, c, ")" if c == "(" else "]")
+        elif c == "{":
+            return i
+        elif c == "\n":
+            rest = code[i:].lstrip()
+            if not re.match(r"(extends|with)\b|\{", rest):
+                return None
+            i += 1
+        elif c in ";}=":
+            return None
+        else:
+            i += 1
+    return None
+
+
+def owners(code):
+    """(start, end, kind, name) of every object, class and trait body."""
+    out = []
+    for m in OWNER.finditer(code):
+        i = body_start(code, m.end())
+        if i is not None:
+            out.append((i, balanced(code, i, "{", "}"), m.group(1), m.group(2)))
+    return out
+
+
+def owner_at(spans, pos):
+    """(kind, name) of the innermost body holding `pos`, None at top level."""
+    inside = [s for s in spans if s[0] < pos < s[1]]
+    return min(inside, key=lambda s: s[1] - s[0])[2:] if inside else None
+
+
+MEMBER = re.compile(r"\b(?:def|va[lr]|case\s+class|object|class|trait)\b")
+
+
+def param_scopes(code):
+    """(name, start, end) of every `def` parameter: inside [start, end), the
+    def's header and body, the word `name` is the parameter, not a member.
+    A def ends at the next member at its brace depth or at the close of
+    the enclosing braces."""
+    depth, d = [], 0
+    for c in code:
+        d += (c == "{") - (c == "}")
+        depth.append(d)
+    out = []
+    for m in HEAD.finditer(code):
+        if not m.group(0).startswith("def"):
+            continue
+        i = m.end()
+        names = []
+        while True:
+            while i < len(code) and code[i].isspace():
+                i += 1
+            if code[i:i + 1] == "[":
+                i = balanced(code, i, "[", "]")
+            elif code[i:i + 1] == "(":
+                j = balanced(code, i, "(", ")")
+                for part in top_level(code[i + 1:j - 1], ","):
+                    w = WORD.findall(part.split(":")[0])
+                    if w:
+                        names.append(w[-1])
+                i = j
+            else:
+                break
+        d0, end = depth[m.start()], len(code)
+        for n in MEMBER.finditer(code, i):
+            if depth[n.start()] <= d0:
+                end = n.start()
+                break
+        for k in range(i, end):
+            if depth[k] < d0:
+                end = k
+                break
+        out += [(n, m.start(), end) for n in names]
+    return out
+
+
+def reaches(code, k, name, owner, same_file, imports):
+    """Whether the occurrence of `name` at `code[k]` uses a definition
+    owned by `owner` (see the module doc)."""
+    if same_file or owner is None:
+        return True
+    before = code[:k].rstrip()
+    kind, obj = owner
+    if kind != "object":
+        return before.endswith(".")
+    return re.search(r"(?<![\w$])" + re.escape(obj) + r"\s*\.$", before) is not None \
+        or obj in imports
+
+
 def test_only(defining, referencing):
-    """Names defined in `defining` whose every occurrence in `referencing`
-    (which includes `defining`) is a definition."""
-    defs, uses = {}, {}
+    """Names defined in `defining` that no occurrence in `referencing`
+    (which includes `defining`) uses."""
+    codes = {}
     for path in referencing:
         with open(path, encoding="utf-8") as f:
-            code = code_only(f.read())
-        for w in WORD.findall(code):
-            uses[w] = uses.get(w, 0) + 1
-        if path in defining:
-            for m in DEFN.finditer(code):
-                if not m.group(1) and not is_main_object(code, m):
-                    defs[m.group(2)] = defs.get(m.group(2), 0) + 1
-    # a name inside an `override` definition counts as a use of that name
-    return sorted(n for n, k in defs.items() if uses.get(n, 0) <= k)
+            codes[path] = code_only(f.read())
+    # definition sites are no uses; an `override`'s name is not a site, so
+    # it counts as a use of the member it overrides
+    defs, sites = {}, set()
+    for path in defining:
+        code, spans = codes[path], owners(codes[path])
+        for m in DEFN.finditer(code):
+            if not m.group(1):
+                sites.add((path, m.start(2)))
+                if not is_main_object(code, m) and m.group(2) != "main":
+                    defs.setdefault(m.group(2), []).append(
+                        (path, owner_at(spans, m.start(2))))
+    used = set()
+    for path, code in codes.items():
+        # objects whose members this file imports by wildcard
+        imports = set(re.findall(r"\bimport\s+[\w.]*?([\w$]+)\._", code))
+        params = [p for p in param_scopes(code) if p[0] in defs]
+        for w in WORD.finditer(code):
+            n = w.group(0)
+            if n in defs and n not in used and (path, w.start()) not in sites and \
+                    not any(p == n and s <= w.start() < e for p, s, e in params) and \
+                    any(reaches(code, w.start(), n, owner, path == dpath, imports)
+                        for dpath, owner in defs[n]):
+                used.add(n)
+    return sorted(n for n in defs if n not in used)
 
 
 def scala_files(dirs):
