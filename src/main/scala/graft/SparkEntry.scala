@@ -641,20 +641,22 @@ object SparkEntry {
     // counted. -----------------------------------------------------------
     "q40t_triples_hash" -> ((s, dir) => canonical.tripleDigest(Pipeline.flagship(s)._2)),
 
-    // --- index-tokenizer cross-path gate: the flagship now runs the
-    // PRODUCTION index path (real induced WordPiece vocab — q40/q40g/q40t);
-    // this query runs the identical pipeline on the vocab-free sub-word
-    // splitter (the no-vocab fallback) and digests its triples. The oracle
-    // pins the SAME constants as q40t: on the fixture the two index paths
-    // must land the identical triple set, so the fallback keeps driver
-    // coverage and any divergence between the tokenizer paths turns a
-    // constant red --------------------------------------------------------
+    // --- index-vocab cross-path gate: q40/q40g/q40t run the default path
+    // (`plans.Main`'s: rawMappings induces the WordPiece vocab from the
+    // labels it aligns); this query runs the identical pipeline with the
+    // vocab passed in as `Params.wordpieceVocab`, as perfbench and
+    // graft.Bench do, and digests its triples. The oracle pins the SAME
+    // constants as q40t: on the fixture the two ways to get the vocab must
+    // land the identical triple set, so any divergence turns a constant
+    // red -------------------------------------------------------------------
     "q61_subword_flagship" -> ((s, dir) => {
       val cfg = graft.sources.fixtures.tiny
+      val classes = graft.sources.fixtures.classes(s, cfg)
       val (_, trip) = Pipeline.run(s,
         graft.sources.fixtures.transcripts(s, cfg),
-        graft.sources.fixtures.classes(s, cfg),
-        graft.sources.fixtures.edges(s, cfg))
+        classes,
+        graft.sources.fixtures.edges(s, cfg),
+        Pipeline.Params(wordpieceVocab = Some(Pipeline.induceCatalogVocab(s, classes))))
       canonical.tripleDigest(trip)
     }),
 
@@ -1958,10 +1960,10 @@ object SparkEntry {
       },
 
       "q61_subword_flagship" -> {
-        // SAME constants as q40t by design: the vocab-free sub-word index
-        // (fallback) must land the identical flagship triple set as the
-        // production induced-WordPiece index (PipelineE2ESpec pins the
-        // digest invariant across nMerges 30/100/400)
+        // SAME constants as q40t by design: the catalog vocab passed in
+        // must land the identical flagship triple set as the vocab the
+        // default run induces (PipelineE2ESpec pins the digest invariant
+        // across nMerges 30/100/400)
         """SELECT CAST(476 AS BIGINT) AS n_triples,
           |  CAST(100 AS BIGINT) AS n_sameas, CAST(280 AS BIGINT) AS n_mentions,
           |  CAST(96 AS BIGINT) AS n_broader,

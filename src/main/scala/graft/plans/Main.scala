@@ -18,8 +18,12 @@ import graft.sources.{fixtures, tables}
  * Stages (`Pipeline.run`'s phases, each a lineage.stage through its
  * `keep` hook — skipped when its manifest matches):
  *   mentions → mappings → repaired → triples
- * A stage's fingerprint is its name + the inputs + the settable `Params`,
- * so re-running with the same inputs reuses every stage, and deleting a
+ * A stage's fingerprint is its name + the inputs it reads + the settable
+ * `Params`. A path input is fingerprinted by its file listing (path,
+ * length, mtime; `lineage.listing`): `mentions` and `triples` read the
+ * transcripts and the catalog, `mappings` and `repaired` the catalog only.
+ * So re-running with the same inputs reuses every stage, a changed
+ * transcript file rebuilds `mentions` and `triples` only, and deleting a
  * stage dir rebuilds that stage only. Fixed settings (the `Params`
  * members) and code are not fingerprinted: after a code change, use a
  * fresh work dir.
@@ -54,18 +58,24 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     // --- inputs ------------------------------------------------------------
-    val (turns, classes, edges, inputFp) = transcriptsArg match {
+    // (transcripts, catalog) fingerprints: the fixture settings each one
+    // depends on, or each input directory's file listing
+    val (turns, classes, edges, turnsFp, catalogFp) = transcriptsArg match {
       case s if s.startsWith("fixture:") =>
         val n = s.stripPrefix("fixture:").toInt
         val cfg = fixtures.tiny.copy(nConvs = n)
         (fixtures.transcripts(spark, cfg), fixtures.classes(spark, cfg),
-          fixtures.edges(spark, cfg), s"fixture:$n:seed=${cfg.seed}")
+          fixtures.edges(spark, cfg), s"fixture:$n:seed=${cfg.seed}", s"fixture:seed=${cfg.seed}")
       case path =>
         val t = tables.readTranscripts(spark, path).as[Turn]
         val c = spark.read.parquet(s"$catalogArg/classes").as[ClassText]
         val e = spark.read.parquet(s"$catalogArg/edges").as[Edge]
-        (t, c, e, s"$path|$catalogArg")
+        (t, c, e, lineage.listing(spark, path), lineage.listing(spark, catalogArg))
     }
+    // each stage is fingerprinted over what it reads: the alignment chain
+    // reads the catalog only, so a transcript change resumes it
+    def reads(stage: String) =
+      if (Set("mappings", "repaired")(stage)) catalogFp else turnsFp + catalogFp
 
     // turns-processed metric via CollectMetrics (df.observe): rides the
     // existing scan for free. The previous typed .map accumulator was a
@@ -81,7 +91,7 @@ object Main {
     val paramsFp = params.toString // the settable fields only
     val rebuilt = scala.collection.mutable.Set.empty[String]
     val (mappings, triples) = Pipeline.run(spark, observedTurns, classes, edges, params,
-      keep = (name, df) => lineage.stage(spark, workDir, name, inputFp + paramsFp) {
+      keep = (name, df) => lineage.stage(spark, workDir, name, reads(name) + paramsFp) {
         rebuilt.add(name)
         df
       })

@@ -13,7 +13,8 @@ import graft.sources.fixtures
  * §3.1 re-expressed Spark-first):
  *
  *   transcripts ──mention-detect──▶ mentions
- *   catalogs ──normalize──▶ classtexts ──explode──▶ postings ──▶ IDF cands
+ *   catalogs ──normalize──▶ labels ──induce──▶ WordPiece vocab
+ *   labels ──WordPiece──▶ postings ──▶ IDF cands
  *   candidates ──string-match split──▶ (1.0 pairs) ∪ (scored pairs)
  *   pooled ──n-best per side──▶ union ──▶ raw mappings
  *   raw ──greedy 1-hop extension──▶ extended ──repair──▶ final mappings
@@ -35,18 +36,12 @@ object Pipeline {
                                     // collect feeding the broadcast trie —
                                     // larger catalogs must use the
                                     // join-based linker (mentions.detectJoin)
-      subwordIndex: Boolean = true, // WordPiece-style sub-word postings
-                                    // (onto_index.py:46-47) — matches the
-                                    // reference's candidate recall for
-                                    // morphologically-related labels
       wordpieceVocab: Option[Set[String]] = None,
-                                    // a real WordPiece vocab (the
+                                    // the index's WordPiece vocab (the
                                     // reference's AutoTokenizer checkpoint
-                                    // vocab, onto_index.py:38-47): when
-                                    // set, the index tokenizes with
-                                    // vocab-driven greedy longest-match
-                                    // (text.wordpieceTokensCol, broadcast
-                                    // once) and overrides subwordIndex
+                                    // vocab, onto_index.py:38-47); unset,
+                                    // rawMappings induces one from the
+                                    // labels it aligns
       linker: String = "auto",      // trie | join | auto — mention-detect
                                     // kernel: collected broadcast trie
                                     // (fast, bounded by maxDictEntities) vs
@@ -73,19 +68,16 @@ object Pipeline {
     val saltBuckets: Int = 1        // no skew-join salt (index.idfCandidates)
   }
 
-  /** Index tokenizer for `p`: a real broadcast WordPiece vocab when given,
-    * else the vocab-free sub-word splitter (Pipeline default), else plain
-    * word tokens — all pluggable into the same postings slot. */
+  /** Index tokenizer for `p`: greedy longest-match WordPiece
+    * (`text.wordpieceTokensCol`) over `p.wordpieceVocab`, broadcast once.
+    * Fails without a vocab: `rawMappings` induces one first. */
   def tokenizerFor(spark: SparkSession, p: Params)
-      : org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    p.wordpieceVocab match {
-      case Some(vocab) =>
-        val bc = spark.sparkContext.broadcast(vocab)
-        c => text.wordpieceTokensCol(bc)(c)
-      case None if p.subwordIndex =>
-        text.subwordTokensCol(_: org.apache.spark.sql.Column)
-      case None => text.wordTokensCol(_: org.apache.spark.sql.Column)
-    }
+      : org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
+    val pieces = p.wordpieceVocab.getOrElse(throw new IllegalArgumentException(
+      "tokenizerFor needs Params.wordpieceVocab (rawMappings induces one from the labels)"))
+    val bc = spark.sparkContext.broadcast(pieces)
+    c => text.wordpieceTokensCol(bc)(c)
+  }
 
   /** Normalized (id, label) long form of one catalog side. */
   def sideLabels(classes: Dataset[ClassText], onto: String): DataFrame =
@@ -97,9 +89,8 @@ object Pipeline {
 
   /** Token postings of one side, shared by both alignment directions
     * (the same explode+distinct serves as index postings and as query
-    * tokens). `tok` is the index tokenizer — use
-    * `tokenizerFor(spark, p)` to resolve it from Params (real WordPiece
-    * vocab / vocab-free sub-word / plain words, onto_index.py:38-47). */
+    * tokens). `tok` is the index tokenizer, `tokenizerFor(spark, p)` in
+    * the flagship (onto_index.py:38-47). */
   def sidePostings(labels: DataFrame, tokenCut: Int,
                    tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : DataFrame =
@@ -111,8 +102,10 @@ object Pipeline {
     * `classifier` (fused string-match + batched-kernel scorer, the
     * default), `nes` (codegen'd lexical Column scorer), `embeds`
     * (class-embedding cosine). `srcLabels`/`tgtLabels` are (id, label)
-    * long form (`sideLabels`). Returns both directions as one lazy plan,
-    * so Spark schedules the independent direction DAGs itself. */
+    * long form (`sideLabels`). The index tokenizes with `p.wordpieceVocab`,
+    * or, unset, with the vocab induced from both sides' label words
+    * (`labelVocab`). Returns both directions as one lazy plan, so Spark
+    * schedules the independent direction DAGs itself. */
   def rawMappings(spark: SparkSession, srcLabels: DataFrame, tgtLabels: DataFrame,
                   p: Params): DataFrame = {
     type Hop = (DataFrame, DataFrame) => DataFrame => DataFrame
@@ -134,7 +127,8 @@ object Pipeline {
           embeds.classEmbeddings(spark, tgtLabels).materialize,
           (f, t) => embeds.hop(f, t))
     }
-    val tok = tokenizerFor(spark, p)
+    val tok = tokenizerFor(spark, p.copy(wordpieceVocab = p.wordpieceVocab.orElse(
+      Some(labelVocab(spark, srcLabels.unionByName(tgtLabels), VocabMerges)))))
     val srcPost = sidePostings(srcLabels, p.tokenCut, tok)
     val tgtPost = sidePostings(tgtLabels, p.tokenCut, tok)
     val (dSrc, dTgt) = align.sideSizes(srcLabels, tgtLabels)
@@ -244,31 +238,35 @@ object Pipeline {
     (repaired, trip)
   }
 
-  /** A real WordPiece vocab induced from the catalog's OWN label words
-    * (`vocab.induce` over the catalog's word histogram): the production
-    * index tokenizer, mirroring the reference's always-real-vocab flagship
+  /** Merge rounds of the induced index vocab. */
+  private val VocabMerges = 200
+
+  /** A real WordPiece vocab induced from label words (`vocab.induce`, `nMerges`
+    * merges over the word histogram of the `label` column): the flagship's
+    * index tokenizer, mirroring the reference's always-real-vocab index
     * (onto_index.py:38-47) without an external checkpoint file. The
     * histogram is catalog-dimension (never transcript-proportional) and
-    * the result is a pure function of the catalog, deterministic at any
-    * parallelism (VocabSpec). */
+    * the result is deterministic at any parallelism (VocabSpec). */
+  private def labelVocab(spark: SparkSession, labels: DataFrame, nMerges: Int): Set[String] =
+    vocab.induce(spark, vocab.wordHistogram(labels, "label"), nMerges)
+
+  /** `labelVocab` over both catalog sides' `sideLabels`: at the default
+    * `nMerges`, the vocab `run`'s `rawMappings` induces when the caller
+    * sets none. */
   def induceCatalogVocab(spark: SparkSession, classes: Dataset[ClassText],
-                         nMerges: Int = 200): Set[String] =
-    vocab.induce(spark, vocab.wordHistogram(classes.toDF()
-      .select(explode(text.normalizeLabelsCol(col("labels"))).as("label")), "label"), nMerges)
+                         nMerges: Int = VocabMerges): Set[String] =
+    labelVocab(spark, sideLabels(classes, "src").unionByName(sideLabels(classes, "tgt")), nMerges)
 
   /** Tiny flagship for the driver smoke-check (rows>0 at sf0.001-ish
-    * scale); returns `run`'s (mappings, triples). Runs the PRODUCTION
-    * index path: a real induced WordPiece vocab, not the vocab-free
-    * splitter (which remains the no-vocab fallback). PipelineE2ESpec + the
-    * q40g/q40t constants pin that this path reproduces the flagship
-    * mapping quality and triple set. */
+    * scale); returns `run`'s (mappings, triples) with default `Params`, so
+    * the index runs the vocab induced from the catalog, as `plans.Main`
+    * does. PipelineE2ESpec + the q40g/q40t constants pin that this path
+    * reproduces the flagship mapping quality and triple set. */
   def flagship(spark: SparkSession): (DataFrame, DataFrame) = {
     val cfg = fixtures.tiny
-    val classes = fixtures.classes(spark, cfg)
     run(spark,
       fixtures.transcripts(spark, cfg),
-      classes,
-      fixtures.edges(spark, cfg),
-      Params(wordpieceVocab = Some(induceCatalogVocab(spark, classes))))
+      fixtures.classes(spark, cfg),
+      fixtures.edges(spark, cfg))
   }
 }

@@ -14,10 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * strengthen that to a content-addressed manifest: a stage's Parquet output
  * is reused only when the recorded fingerprint (stage name + the caller's
  * inputs string) matches, otherwise it is recomputed and rewritten
- * atomically (write to tmp dir, rename). Code is not fingerprinted: in
- * `plans.Main` the inputs string is the input source plus the settable
- * `Pipeline.Params`, so fixed settings and operator code can change under a
- * matching manifest — after a code change, use a fresh work dir.
+ * atomically (write to tmp dir, rename). In `plans.Main` the inputs string
+ * is the `listing` of each input directory the stage reads plus the
+ * settable `Pipeline.Params`, so a changed input file rebuilds the stages
+ * that read it. Code is not fingerprinted: fixed settings and operator code
+ * can change under a matching manifest — after a code change, use a fresh
+ * work dir.
  *
  * All filesystem traffic goes through the Hadoop FileSystem API resolved
  * from the path itself, so a workDir on hdfs:// or s3a:// behaves exactly
@@ -73,6 +75,21 @@ object lineage {
     val out = fs.create(new Path(base, name), true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** Fingerprint of an input directory (or file) by its Hadoop FS
+    * listing: path, length and modification time of every data file,
+    * sorted and hashed. Names starting with `_` or `.` are skipped, as
+    * Spark's file index skips them. No Spark job runs. */
+  def listing(spark: SparkSession, dir: String): String = {
+    val (fs, base) = fsFor(dir, hadoopConf(spark))
+    val root = fs.makeQualified(base).toUri.getPath.stripSuffix("/")
+    val files = fs.listFiles(base, true)
+    val rows = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toUri.getPath.stripPrefix(root), f.getLen, f.getModificationTime))
+      .filterNot(_._1.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+      .map { case (path, len, mtime) => s"$path|$len|$mtime" }
+    fingerprint((dir +: rows.toSeq.sorted).mkString("\n"))
   }
 
   def fingerprint(parts: String*): String = {

@@ -61,18 +61,15 @@ class PipelineE2ESpec extends SparkSuite {
   test("mode dispatch: nes mode equals classifier mode (same lexical kernel), embeds mode aligns") {
     val src = Pipeline.sideLabels(classes, "src")
     val tgt = Pipeline.sideLabels(classes, "tgt")
-    val tok = Pipeline.tokenizerFor(spark, Pipeline.Params())
-    // every mode releases both sides' postings once its directions are done
-    def postingsReleased(mode: String): Unit =
-      for ((side, labels) <- Seq("src" -> src, "tgt" -> tgt))
-        assert(spark.sharedState.cacheManager.lookupCachedData(
-          Pipeline.sidePostings(labels, 0, tok)
-            .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
-          s"$mode left the $side postings cached")
+    // every mode leaves nothing in the CacheManager once its directions are done
+    def cacheReleased(mode: String): Unit =
+      assert(spark.sharedState.cacheManager.isEmpty, s"$mode left data in the CacheManager")
     def maps(mode: String) = {
+      spark.catalog.clearCache()
       val m = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = mode))
-      postingsReleased(mode)
-      m.select("entity1", "entity2").as[(String, String)].collect().toSet
+        .select("entity1", "entity2").as[(String, String)].collect().toSet
+      cacheReleased(mode)
+      m
     }
     // the classifier stand-in IS the lexical kernel, so nes mode must
     // produce the identical mapping set
@@ -81,10 +78,11 @@ class PipelineE2ESpec extends SparkSuite {
     // produces a usable alignment rather than identical output
     val ref = refs.filter(!$"is_ignored")
       .select("entity1", "entity2").as[(String, String)].collect().toSet
+    spark.catalog.clearCache()
     val emb = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "embeds"))
-    postingsReleased("embeds")
     val embBest = graft.operators.align.atThreshold(emb, 0.5)
       .select("entity1", "entity2").as[(String, String)].collect().toSet
+    cacheReleased("embeds")
     val tp = embBest.intersect(ref).size.toDouble
     info(s"embeds mode: ${embBest.size} mappings, P=${tp / embBest.size}, R=${tp / ref.size}")
     assert(embBest.nonEmpty && tp / embBest.size >= 0.5,
@@ -165,7 +163,8 @@ class PipelineE2ESpec extends SparkSuite {
     // the de-facto production index path (Pipeline.flagship, q40-family,
     // Bench): vocab induced from the catalog's own label words. Must be a
     // genuine sub-word vocab, hit full mapping quality, and land the same
-    // triple set as the vocab-free splitter fallback on this fixture.
+    // triple set as the default run, whose vocab rawMappings induces with
+    // its own merge count.
     val v = Pipeline.induceCatalogVocab(spark, classes, nMerges = 100)
     assert(v.exists(_.startsWith("##")), "vocab has no continuation pieces")
     assert(v.exists(p => p.length > 2 && !p.startsWith("##")),
@@ -180,7 +179,7 @@ class PipelineE2ESpec extends SparkSuite {
     val wpSet = trip.as[(String, String, String, Double)].collect().toSet
     val defSet = result._2.as[(String, String, String, Double)].collect().toSet
     assert(wpSet == defSet,
-      s"induced-vocab triples diverge from splitter fallback: " +
+      s"nMerges=100 induced-vocab triples diverge from the default run: " +
         s"only-wp=${(wpSet -- defSet).take(3)} only-def=${(defSet -- wpSet).take(3)}")
   }
 
@@ -198,24 +197,39 @@ class PipelineE2ESpec extends SparkSuite {
 
   test("wordpieceVocab: a whole-word vocab reproduces the word-tokenizer pipeline exactly") {
     // greedy longest-match against a vocab containing every catalog word
-    // matches each word whole — so the wordpiece-indexed pipeline must be
-    // BIT-IDENTICAL to the plain word-tokenizer pipeline. Pins the vocab
-    // plumbing (broadcast, tokenizer slot, candidate recall) end-to-end.
+    // matches each word whole — so each side's postings under the
+    // wordpiece tokenizer must be IDENTICAL to the plain word tokenizer's.
+    // Pins the vocab plumbing (broadcast, tokenizer slot) where the index
+    // is built.
     import graft.functions.text
     val vocab = classes.collect().toSeq
       .flatMap(c => text.normalizeLabels(c.labels))
       .flatMap(text.wordTokens).toSet
-    def triplesWith(p: Pipeline.Params) = {
-      val (_, trip) = Pipeline.run(spark, turns, classes, edges, p)
-      trip.as[(String, String, String, Double)].collect().toSet
+    val wp = Pipeline.tokenizerFor(spark, Pipeline.Params(wordpieceVocab = Some(vocab)))
+    for (side <- Seq("src", "tgt")) {
+      def postings(tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        Pipeline.sidePostings(Pipeline.sideLabels(classes, side), 0, tok).collect().toSet
+      val word = postings(text.wordTokensCol)
+      val piece = postings(wp)
+      assert(piece == word,
+        s"$side: wordpiece(all-words vocab) diverged from word tokenizer: " +
+          s"only-word=${(word -- piece).take(3)} only-wp=${(piece -- word).take(3)}")
+      assert(word.nonEmpty)
     }
-    val word = triplesWith(Pipeline.Params(subwordIndex = false))
-    val wp = triplesWith(Pipeline.Params(subwordIndex = false,
-      wordpieceVocab = Some(vocab)))
-    assert(wp == word,
-      s"wordpiece(all-words vocab) diverged from word tokenizer: " +
-        s"only-word=${(word -- wp).take(3)} only-wp=${(wp -- word).take(3)}")
-    assert(word.nonEmpty)
+  }
+
+  test("default index tokenizer: the vocab induced from the labels being aligned") {
+    // the vocab-free splitter shares no token between "ab" and "xab"; the
+    // vocab induced from these two labels, {a, ##a, ##b, x}, pieces both
+    // and shares "##b", so the default run aligns them
+    val src = Seq(("s1", "ab")).toDF("id", "label")
+    val tgt = Seq(("t1", "xab")).toDF("id", "label")
+    val rows = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params())
+      .as[(String, String, Double)].collect().toSeq
+    assert(rows.map(r => (r._1, r._2)) == Seq(("s1", "t1")), rows)
+    assert(math.abs(rows.head._3 - 1.0 / 3) < 1e-9, rows)
+    // the tokenizer itself never picks a vocab: rawMappings resolves it first
+    intercept[IllegalArgumentException](Pipeline.tokenizerFor(spark, Pipeline.Params()))
   }
 
   test("reliable materialization: the full pipeline (iterative loops included) is mode-invariant") {

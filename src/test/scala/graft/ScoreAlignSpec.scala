@@ -79,7 +79,10 @@ class ScoreAlignSpec extends SparkSuite {
       ("s2", "kidney stone")).toDF("id", "label")
     val tgt = Seq(("t1", "acute heart failure"), ("t2", "renal calculus stone"))
       .toDF("id", "label")
-    val p = Pipeline.Params(mode = "embeds", candidateLimit = 5, subwordIndex = false)
+    // a vocab of every label word: the index tokenizes whole words
+    val words = src.union(tgt).select("label").as[String].collect()
+      .flatMap(graft.functions.text.wordTokens).toSet
+    val p = Pipeline.Params(mode = "embeds", candidateLimit = 5, wordpieceVocab = Some(words))
     val out = align.atThreshold(Pipeline.rawMappings(spark, src, tgt, p), 0.1)
       .select("entity1", "entity2", "value").as[(String, String, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap

@@ -310,4 +310,37 @@ class SourcesStreamingSpec extends SparkSuite {
     assert(graphFiles() == graph1, "a run on unchanged triples rewrote graph/")
     assert(confs() == confsBefore)
   }
+
+  test("Main: a changed transcript directory rebuilds mentions and triples, not the alignment") {
+    val root = Files.createTempDirectory("graft-main-in").toString
+    val cfg = fixtures.tiny.copy(nConvs = 40)
+    fixtures.transcripts(spark, cfg).toDF().repartition(3).write.parquet(s"$root/turns")
+    fixtures.classes(spark, cfg).write.parquet(s"$root/catalog/classes")
+    fixtures.edges(spark, cfg).write.parquet(s"$root/catalog/edges")
+    def main(work: String) =
+      graft.plans.Main.main(Array(s"$root/turns", s"$root/catalog", work))
+    def digest(work: String) = graft.operators.canonical
+      .tripleDigest(tables.readTriples(spark, s"$work/graph")).head()
+    val work = s"$root/work"
+    val stages = Seq("mentions", "mappings", "repaired", "triples")
+    def mtimes() = stages.map(s =>
+      s -> new java.io.File(s"$work/$s/_GRAFT_MANIFEST.json").lastModified()).toMap
+    main(work)
+    val (before, digest1) = (mtimes(), digest(work))
+    // drop one of the three transcript parts (and its checksum file)
+    val part = new java.io.File(s"$root/turns").listFiles()
+      .filter(_.getName.startsWith("part-")).minBy(_.getName)
+    assert(part.delete())
+    new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    main(work)
+    val after = mtimes()
+    for (s <- Seq("mentions", "triples")) assert(after(s) != before(s), s"$s resumed")
+    for (s <- Seq("mappings", "repaired")) assert(after(s) == before(s), s"$s was rebuilt")
+    val metrics = Files.readString(java.nio.file.Paths.get(s"$work/metrics.json"))
+    assert(metrics.contains("\"resumed\":false"), metrics)
+    // the graph is the one a fresh work dir writes over the same files
+    assert(digest(work) != digest1)
+    main(s"$root/fresh")
+    assert(digest(work) == digest(s"$root/fresh"))
+  }
 }
