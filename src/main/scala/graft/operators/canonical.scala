@@ -145,17 +145,16 @@ object canonical {
       .distinct()
   }
 
-  /** Rewrite both endpoints of a mapping set to canonical representatives. */
-  def canonicalize(mappings: DataFrame, components: DataFrame): DataFrame =
-    mappings
-      .join(components.select(col("id").as("entity1"), col("canonical").as("c1")),
-        Seq("entity1"), "left")
-      .join(components.select(col("id").as("entity2"), col("canonical").as("c2")),
-        Seq("entity2"), "left")
-      .select(
-        coalesce(col("c1"), col("entity1")).as("entity1"),
-        coalesce(col("c2"), col("entity2")).as("entity2"),
-        col("value"))
+  /** Rewrite each named reference column of `df` onto its component's
+    * canonical id: a broadcast left join on `components`' (id, canonical)
+    * per column, so an id outside every component keeps its value. The
+    * other columns, and the column order, stay as they are. */
+  def rewrite(df: DataFrame, components: DataFrame, cols: String*): DataFrame =
+    cols.foldLeft(df) { (d, c) =>
+      d.join(broadcast(components.select(col("id").as(c), col("canonical"))), Seq(c), "left")
+        .select(d.columns.toSeq.map(n =>
+          if (n == c) coalesce(col("canonical"), col(c)).as(c) else col(n)): _*)
+    }
 
   /** Assemble the graph table. All inputs optional-empty-safe. */
   def triples(sameAs: DataFrame, mentions: DataFrame,

@@ -18,15 +18,16 @@ import graft.sources.{fixtures, tables}
  * Stages (`Pipeline.run`'s phases, each a lineage.stage through its
  * `keep` hook — skipped when its manifest matches):
  *   mentions → mappings → repaired → triples
- * A stage's fingerprint is its name + the inputs it reads + the settable
- * `Params`. A path input is fingerprinted by its file listing (path,
- * length, mtime; `lineage.listing`): `mentions` and `triples` read the
- * transcripts and the catalog, `mappings` and `repaired` the catalog only.
- * So re-running with the same inputs reuses every stage, a changed
- * transcript file rebuilds `mentions` and `triples` only, and deleting a
- * stage dir rebuilds that stage only. Fixed settings (the `Params`
- * members) and code are not fingerprinted: after a code change, use a
- * fresh work dir.
+ * The `triples` stage is the graph table: `<workDir>/triples/data`,
+ * partitioned by `pred` (`tables.writeTriples`). A stage's fingerprint is
+ * its name + the inputs it reads + the settable `Params` + the code
+ * (`lineage.code`, which covers the fixed `Params` members). A path input
+ * is fingerprinted by its file listing (path, length, mtime;
+ * `lineage.listing`): `mentions` and `triples` read the transcripts and
+ * the catalog, `mappings` and `repaired` the catalog only. So re-running
+ * with the same inputs and build reuses every stage, a changed transcript
+ * file rebuilds `mentions` and `triples` only, deleting a stage dir
+ * rebuilds that stage only, and a changed build rebuilds every stage.
  */
 object Main {
 
@@ -88,29 +89,21 @@ object Main {
 
     // --- staged run ---------------------------------------------------------
     val params = Pipeline.Params()
-    val paramsFp = params.toString // the settable fields only
+    // the settable fields, and the code (the fixed ones live there)
+    val runFp = params.toString + lineage.code(java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
     val rebuilt = scala.collection.mutable.Set.empty[String]
     val (mappings, triples) = Pipeline.run(spark, observedTurns, classes, edges, params,
-      keep = (name, df) => lineage.stage(spark, workDir, name, reads(name) + paramsFp) {
+      keep = (name, df) => lineage.stage(spark, workDir, name, reads(name) + runFp,
+        if (name == "triples") tables.writeTriples else lineage.parquet) {
         rebuilt.add(name)
         df
       })
-
-    // graph/ carries a copy of the triples stage's manifest (Spark's reader
-    // skips `_` files): a graph written from the same triples is kept. The
-    // copy is written last, so a crash mid-write leaves no match.
-    val graphDir = s"$workDir/graph"
-    val tripleManifest = lineage.readManifest(spark, s"$workDir/triples").get
-    if (!lineage.readManifest(spark, graphDir).contains(tripleManifest)) {
-      tables.writeTriples(triples, graphDir)
-      lineage.writeManifest(spark, graphDir, tripleManifest)
-    }
     // the observed metric exists only when the mentions stage scanned the
     // transcripts this run (`get` blocks otherwise); a resumed one scans nothing
     val turnsSeen: Long =
       if (rebuilt.contains("mentions")) turnMetrics.get("turns").asInstanceOf[Long] else 0L
-    val predCounts = spark.read.parquet(graphDir)
-      .groupBy("pred").count().collect()
+    val predCounts = triples.groupBy("pred").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val byPred = predCounts.map { case (p, n) => s"$p=$n" }.mkString(", ")
     val nMappings = mappings.count()

@@ -199,12 +199,10 @@ object Pipeline {
     val repaired = keep("repaired", {
       val expansion = extend.extendMappings(spark, raw, srcEdges, tgtEdges,
         srcLabels, tgtLabels, p.kappa, p.maxExtendIter, p.scorer)
-      // lazy: raw and the expansion parts are already materialized, so the
-      // downstream re-reads recompute only a small groupBy — cheaper than a
-      // dedicated checkpoint execution on the serial path
-      val extended = raw.unionByName(expansion)
-        .groupBy("entity1", "entity2").agg(max(col("value")).as("value"))
-      repair.repairMappings(extended, srcEdges, tgtEdges).materialize
+      // the union has no duplicate pair: raw is one row per pair
+      // (align.combine), and the expansion holds only pairs that neither
+      // the seeds nor an earlier iteration hold (extend's `seen` anti-join)
+      repair.repairMappings(raw.unionByName(expansion), srcEdges, tgtEdges).materialize
     })
     srcLabels.unpersist(blocking = false)
     tgtLabels.unpersist(blocking = false)
@@ -214,26 +212,14 @@ object Pipeline {
       // are single edges — the O(1)-round rule replaces the iterative CC
       // (canonical.connectedComponents stays the general-graph operator)
       val comps = canonical.matchingComponents(repaired)
-
       // canonicalization rewrites the *references* to entities (mentions,
       // hierarchy) onto canonical ids; the sameAs edges keep their original
       // endpoints — they ARE the alignment evidence
-      val mensCanon = mens
-        .join(broadcast(comps.select(col("id").as("class_iri"), col("canonical"))),
-          Seq("class_iri"), "left")
-        .select(col("conv_id"), col("turn_idx"), col("onto"),
-          coalesce(col("canonical"), col("class_iri")).as("class_iri"), col("surface"))
-      val broaderCanon = srcEdges.unionByName(tgtEdges)
-        .join(broadcast(comps.select(col("id").as("child_iri"), col("canonical").as("cc"))),
-          Seq("child_iri"), "left")
-        .join(broadcast(comps.select(col("id").as("parent_iri"), col("canonical").as("cp"))),
-          Seq("parent_iri"), "left")
-        .select(coalesce(col("cc"), col("child_iri")).as("child_iri"),
-          coalesce(col("cp"), col("parent_iri")).as("parent_iri"))
+      val broader = canonical.rewrite(srcEdges.unionByName(tgtEdges), comps,
+        "child_iri", "parent_iri")
         .filter(col("child_iri") =!= col("parent_iri"))
         .distinct()
-
-      canonical.triples(repaired, mensCanon, broaderCanon)
+      canonical.triples(repaired, canonical.rewrite(mens, comps, "class_iri"), broader)
     })
     (repaired, trip)
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -15,11 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * is reused only when the recorded fingerprint (stage name + the caller's
  * inputs string) matches, otherwise it is recomputed and rewritten
  * atomically (write to tmp dir, rename). In `plans.Main` the inputs string
- * is the `listing` of each input directory the stage reads plus the
- * settable `Pipeline.Params`, so a changed input file rebuilds the stages
- * that read it. Code is not fingerprinted: fixed settings and operator code
- * can change under a matching manifest — after a code change, use a fresh
- * work dir.
+ * is the `listing` of each input directory the stage reads, the settable
+ * `Pipeline.Params` and the `code` fingerprint, so a changed input file
+ * rebuilds the stages that read it and a changed build rebuilds them all.
  *
  * All filesystem traffic goes through the Hadoop FileSystem API resolved
  * from the path itself, so a workDir on hdfs:// or s3a:// behaves exactly
@@ -92,17 +91,41 @@ object lineage {
     fingerprint((dir +: rows.toSeq.sorted).mkString("\n"))
   }
 
-  def fingerprint(parts: String*): String = {
+  /** Fingerprint of the code at `root`, graft's code source: the bytes of
+    * a jar, or of every file under a classes dir (relative path plus bytes,
+    * sorted by path). Modification times do not count, so a rebuild of the
+    * same sources matches. */
+  def code(root: java.nio.file.Path): String = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(root) // a jar walks as itself
+    try md5(walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+      .sortBy(root.relativize(_).toString).iterator
+      .flatMap(f => Iterator(s"${root.relativize(f)}\u0000".getBytes(StandardCharsets.UTF_8),
+        Files.readAllBytes(f))))
+    finally walk.close()
+  }
+
+  def fingerprint(parts: String*): String =
+    md5(parts.iterator.map(_.getBytes(StandardCharsets.UTF_8)))
+
+  private def md5(parts: Iterator[Array[Byte]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    parts.foreach(p => md.update(p.getBytes(StandardCharsets.UTF_8)))
+    parts.foreach(md.update(_))
     md.digest().map("%02x".format(_)).mkString
   }
 
+  /** The writer of a plain stage: one unpartitioned parquet table. */
+  def parquet(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").parquet(path)
+
   /**
    * Run `build` for stage `name` unless a matching manifest already covers
-   * it; either way return the stage's materialized DataFrame. `inputsFp`
-   * should combine the fingerprints (or seeds/config strings) of everything
-   * the stage reads.
+   * it; either way return the stage's materialized DataFrame, read back
+   * from `<rootDir>/<name>/data`. `inputsFp` should combine the
+   * fingerprints (or seeds/config strings) of everything the stage reads.
+   * `write` stores the built frame at a path (`parquet`, or a partitioned
+   * writer such as `tables.writeTriples`): the stage's table is the one
+   * persisted copy.
    *
    * Publication is atomic as documented: the output is written to a tmp
    * dir and renamed into place, and the manifest (written last) records
@@ -111,7 +134,8 @@ object lineage {
    * resuming from truncated output.
    */
   def stage(spark: SparkSession, rootDir: String, name: String,
-            inputsFp: String)(build: => DataFrame): DataFrame = {
+            inputsFp: String, write: (DataFrame, String) => Unit)
+           (build: => DataFrame): DataFrame = {
     val dir = s"$rootDir/$name"
     val fp = fingerprint(name, inputsFp)
     val (fs, base) = fsFor(dir, hadoopConf(spark))
@@ -128,7 +152,7 @@ object lineage {
       val df = build
       val tmp = new Path(base, "data.tmp")
       if (fs.exists(tmp)) fs.delete(tmp, true)
-      df.write.mode("overwrite").parquet(tmp.toString)
+      write(df, tmp.toString)
       if (fs.exists(dataPath)) fs.delete(dataPath, true)
       if (!fs.rename(tmp, dataPath))
         sys.error(s"lineage.stage: rename $tmp -> $dataPath failed")

@@ -50,7 +50,7 @@ class CanonicalSpec extends SparkSuite {
   test("canonicalize rewrites endpoints to representatives") {
     val comps = Seq(("x", "a"), ("y", "a")).toDF("id", "canonical")
     val m = Seq(("x", "y", 0.9), ("z", "x", 0.8)).toDF("entity1", "entity2", "value")
-    val out = canonical.canonicalize(m, comps)
+    val out = canonical.rewrite(m, comps, "entity1", "entity2")
       .as[(String, String, Double)].collect().toSet
     assert(out == Set(("a", "a", 0.9), ("z", "a", 0.8)))
   }

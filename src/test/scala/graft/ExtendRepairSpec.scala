@@ -43,6 +43,30 @@ class ExtendRepairSpec extends SparkSuite {
     assert(out.filter($"value" < 0.9).count() == 0)
   }
 
+  test("multi-parent diamond: the expansion has no duplicate pair and none of the seeds") {
+    // p has children a1, a2 and (via m) a3; q mirrors it with b1, b2, n, b3.
+    // Iteration 1 reaches (p,q) from both (a1,b1) and (a2,b2), iteration 2
+    // reaches it again from (m,n): Pipeline.run unions raw ∪ expansion
+    // with no dedup on this
+    val sE = Seq(("a1", "p"), ("a2", "p"), ("a3", "m"), ("m", "p"))
+      .toDF("child_iri", "parent_iri")
+    val tE = Seq(("b1", "q"), ("b2", "q"), ("b3", "n"), ("n", "q"))
+      .toDF("child_iri", "parent_iri")
+    val names = Seq("1" -> "alpha", "2" -> "beta", "3" -> "gamma")
+    val sL = (names.map { case (i, l) => (s"a$i", l) } ++ Seq(("m", "middle"), ("p", "top")))
+      .toDF("id", "label")
+    val tL = (names.map { case (i, l) => (s"b$i", l) } ++ Seq(("n", "middle"), ("q", "top")))
+      .toDF("id", "label")
+    val seeds = Seq(("a1", "b1", 0.95), ("a2", "b2", 0.95), ("a3", "b3", 0.95))
+      .toDF("entity1", "entity2", "value")
+    val out = extend.extendMappings(spark, seeds, sE, tE, sL, tL, kappa = 0.9, maxIter = 10)
+      .as[(String, String, Double)].collect().toSeq
+    assert(out.sorted == Seq(("m", "n", 1.0), ("p", "q", 1.0)))
+    val pairs = out.map(r => (r._1, r._2))
+    assert(pairs.distinct.size == pairs.size, s"duplicate pairs in $out")
+    assert(pairs.intersect(Seq(("a1", "b1"), ("a2", "b2"), ("a3", "b3"))).isEmpty)
+  }
+
   test("oneToOne: best mapping per entity per side, deterministic ties") {
     val m = Seq(
       ("s1", "t1", 0.9), ("s1", "t2", 0.8), // s1 keeps t1

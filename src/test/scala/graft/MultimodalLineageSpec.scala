@@ -69,11 +69,29 @@ class MultimodalLineageSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft-lineage").toString
     var builds = 0
     def build = { builds += 1; Seq((1, "a"), (2, "b")).toDF("k", "v") }
-    val a = lineage.stage(spark, dir, "s1", "fp-A")(build)
+    val a = lineage.stage(spark, dir, "s1", "fp-A", lineage.parquet)(build)
     assert(builds == 1 && a.count() == 2)
-    val b = lineage.stage(spark, dir, "s1", "fp-A")(build)
+    val b = lineage.stage(spark, dir, "s1", "fp-A", lineage.parquet)(build)
     assert(builds == 1 && b.count() == 2) // manifest hit, no rebuild
-    val c = lineage.stage(spark, dir, "s1", "fp-B")(build)
+    val c = lineage.stage(spark, dir, "s1", "fp-B", lineage.parquet)(build)
     assert(builds == 2 && c.count() == 2) // input changed -> rebuilt
+  }
+
+  test("lineage code: a class file's bytes change the fingerprint, its mtime does not") {
+    val src = java.nio.file.Paths.get(
+      lineage.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    assert(Files.isDirectory(src), s"expected a classes dir, got $src")
+    val dir = Files.createTempDirectory("graft-classes")
+    org.apache.commons.io.FileUtils.copyDirectory(src.toFile, dir.toFile)
+    val cls = dir.resolve("graft/plans/lineage$.class")
+    val fp0 = lineage.code(dir)
+    assert(fp0 == lineage.code(src))
+    Files.setLastModifiedTime(cls,
+      java.nio.file.attribute.FileTime.fromMillis(Files.getLastModifiedTime(cls).toMillis - 60000))
+    assert(lineage.code(dir) == fp0, "an mtime change moved the fingerprint")
+    val bytes = Files.readAllBytes(cls)
+    bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 1).toByte
+    Files.write(cls, bytes)
+    assert(lineage.code(dir) != fp0, "a changed class file kept the fingerprint")
   }
 }

@@ -277,26 +277,30 @@ class SourcesStreamingSpec extends SparkSuite {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst", "spark.sql.session.timeZone")
     def confs() = confKeys.map(k => k -> spark.conf.getOption(k))
     val confsBefore = confs()
-    // graph/ files and their mtimes: a resumed run leaves them untouched
-    def graphFiles() = {
+    // triples/ files and their mtimes: a resumed run leaves them untouched
+    def tripleFiles() = {
       import scala.jdk.CollectionConverters._
       org.apache.commons.io.FileUtils
-        .listFiles(new java.io.File(s"$work/graph"), null, true).asScala
+        .listFiles(new java.io.File(s"$work/triples"), null, true).asScala
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     graft.plans.Main.main(Array("fixture:40", "fixture", work))
     assert(confs() == confsBefore)
-    val graph1 = graphFiles()
-    // every phase of Pipeline.run is a stage
+    val triples1 = tripleFiles()
+    // every phase of Pipeline.run is a stage, and the triples stage is the
+    // one graph table, partitioned by pred
     for (s <- stages) assert(manifest(s).isFile, s"no $s manifest")
+    assert(!new java.io.File(s"$work/graph").exists())
+    assert(new java.io.File(s"$work/triples/data").list().filter(_.startsWith("pred=")).sorted
+      .toSeq == Seq("pred=broader", "pred=mentions", "pred=sameAs"))
     val m1 = graft.plans.lineage.readManifest(spark, s"$work/triples")
     assert(m1.isDefined && m1.get.rows > 0)
     // second run must hit the manifests (same fingerprint, same rows)
     graft.plans.Main.main(Array("fixture:40", "fixture", work))
     val m2 = graft.plans.lineage.readManifest(spark, s"$work/triples")
     assert(m2.get.fingerprint == m1.get.fingerprint && m2.get.rows == m1.get.rows)
-    assert(spark.read.parquet(s"$work/graph").count() == m1.get.rows)
-    assert(graphFiles() == graph1, "the resumed run rewrote graph/")
+    assert(spark.read.parquet(s"$work/triples/data").count() == m1.get.rows)
+    assert(tripleFiles() == triples1, "the resumed run rewrote triples/")
     // ... and so scans no transcripts
     val metrics = Files.readString(java.nio.file.Paths.get(s"$work/metrics.json"))
     assert(metrics.contains("\"resumed\":true") && metrics.contains("\"turns_seen\":0"), metrics)
@@ -306,8 +310,8 @@ class SourcesStreamingSpec extends SparkSuite {
     graft.plans.Main.main(Array("fixture:40", "fixture", work))
     assert(manifest("mentions").isFile)
     for (s <- stages.tail) assert(manifest(s).lastModified() == before(s), s"$s was rebuilt")
-    assert(spark.read.parquet(s"$work/graph").count() == m1.get.rows)
-    assert(graphFiles() == graph1, "a run on unchanged triples rewrote graph/")
+    assert(spark.read.parquet(s"$work/triples/data").count() == m1.get.rows)
+    assert(tripleFiles() == triples1, "a run on unchanged triples rewrote triples/")
     assert(confs() == confsBefore)
   }
 
@@ -320,12 +324,15 @@ class SourcesStreamingSpec extends SparkSuite {
     def main(work: String) =
       graft.plans.Main.main(Array(s"$root/turns", s"$root/catalog", work))
     def digest(work: String) = graft.operators.canonical
-      .tripleDigest(tables.readTriples(spark, s"$work/graph")).head()
+      .tripleDigest(tables.readTriples(spark, s"$work/triples/data")).head()
     val work = s"$root/work"
     val stages = Seq("mentions", "mappings", "repaired", "triples")
     def mtimes() = stages.map(s =>
       s -> new java.io.File(s"$work/$s/_GRAFT_MANIFEST.json").lastModified()).toMap
     main(work)
+    assert(!new java.io.File(s"$work/graph").exists())
+    assert(new java.io.File(s"$work/triples/data").list().filter(_.startsWith("pred=")).sorted
+      .toSeq == Seq("pred=broader", "pred=mentions", "pred=sameAs"))
     val (before, digest1) = (mtimes(), digest(work))
     // drop one of the three transcript parts (and its checksum file)
     val part = new java.io.File(s"$root/turns").listFiles()
