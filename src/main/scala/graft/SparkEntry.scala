@@ -726,8 +726,9 @@ object SparkEntry {
         .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
       val toLab = docs.filter(col("doc_id") >= 250)
         .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
-      embeds.alignOneSide(fromLab, toLab, vecs, vecs, toLab.count(),
-          candidateLimit = 5, nbest = 1, fixedPointIdf = true)
+      align.direction(index.postingsFromText(fromLab, "id", "label"),
+          index.postingsFromText(toLab, "id", "label"), toLab.count(), 5, 1,
+          fixedPointIdf = true)(embeds.hop(vecs, vecs))
         .withColumn("score", round(col("score"), 6))
     }),
 
@@ -739,8 +740,9 @@ object SparkEntry {
         .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
       val toLab = docs.filter(col("doc_id") >= 250)
         .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
-      nes.alignOneSide(fromLab, toLab, toLab.count(),
-          candidateLimit = 5, nbest = 1, fixedPointIdf = true)
+      align.direction(index.postingsFromText(fromLab, "id", "label"),
+          index.postingsFromText(toLab, "id", "label"), toLab.count(), 5, 1,
+          fixedPointIdf = true)(nes.hop(fromLab, toLab, score.ScorerParams()))
         .withColumn("score", round(col("score"), 6))
     }),
 

@@ -1,5 +1,6 @@
 package graft.functions
 
+import java.util.Locale
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -26,7 +27,7 @@ object text {
     trim(regexp_replace(lower(regexp_replace(c, "_", " ")), "\\s+", " "))
 
   def normalize(s: String): String =
-    s.replace('_', ' ').toLowerCase.replaceAll("\\s+", " ").trim
+    s.replace('_', ' ').toLowerCase(Locale.ROOT).replaceAll("\\s+", " ").trim
 
   /** Order-preserving label-list normalization: normalize each, drop empties,
     * dedup keeping first occurrence (matches the reference's
@@ -50,7 +51,7 @@ object text {
     filter(split(lower(c), "[^a-z0-9]+"), t => t =!= "")
 
   def wordTokens(s: String): Seq[String] =
-    s.toLowerCase.split("[^a-z0-9]+").toSeq.filter(_.nonEmpty)
+    s.toLowerCase(Locale.ROOT).split("[^a-z0-9]+").toSeq.filter(_.nonEmpty)
 
   /** Piece length of the vocab-free sub-word splitter. */
   private val Piece = 4

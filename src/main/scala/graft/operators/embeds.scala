@@ -41,17 +41,4 @@ object embeds {
       .join(toVecs.select(col("id").as("to_id"), col("emb").as("tv")), "to_id")
       .select(col("from_id"), col("to_id"),
         similarity.cosineCol(col("fv"), col("tv")).as("score"))
-
-  /** One direction over (id, label) long-form sides: word-token postings
-    * of each side, then `align.direction` with the embeds hop. `d` is the
-    * to-side class count; `fixedPointIdf` ranks candidates by the integer
-    * IDF surrogate (`index.idfCandidates`), as the oracle-checked query
-    * does. */
-  def alignOneSide(fromLabels: DataFrame, toLabels: DataFrame,
-                   fromVecs: DataFrame, toVecs: DataFrame, d: Long,
-                   candidateLimit: Int = 25, nbest: Int = 1,
-                   fixedPointIdf: Boolean = false): DataFrame =
-    align.direction(index.postingsFromText(fromLabels, "id", "label"),
-        index.postingsFromText(toLabels, "id", "label"), d,
-        candidateLimit, nbest, fixedPointIdf = fixedPointIdf)(hop(fromVecs, toVecs))
 }

@@ -38,11 +38,13 @@ object extend {
                      kappa: Double = 0.9, maxIter: Int = 50,
                      params: score.ScorerParams = score.ScorerParams()): DataFrame = {
     val pairCols = Seq("entity1", "entity2")
-    var seen = seeds.select(pairCols.map(col): _*).distinct()
-      .materialize
+    // neither needs a dedup: `seen` feeds only the left-anti join, and
+    // `frontier` only joins whose candidates are distinct()ed. Both read
+    // `seeds` directly, so a costly seed plan should come materialized
+    // (Pipeline.run's `mappings` phase is)
+    var seen = seeds.select(pairCols.map(col): _*)
     var frontier = seeds.filter(col("value") >= kappa)
-      .select(pairCols.map(col): _*).distinct()
-      .materialize
+      .select(pairCols.map(col): _*)
     // accumulate checkpointed per-iteration outputs; union lazily (one
     // materialization per iteration — `kept` — instead of four)
     val expansionParts = scala.collection.mutable.ArrayBuffer[DataFrame]()

@@ -59,7 +59,11 @@ object mentions {
   }
 
   /** Allocation-light tokenizer: lowercase alnum runs, manual scan (the
-    * regex split allocates intermediate arrays per call). */
+    * regex split allocates intermediate arrays per call). At the first
+    * non-ASCII char it returns `text.wordTokens` instead: Unicode
+    * lowercasing can map such a char into a-z (U+212A KELVIN SIGN → "k",
+    * U+0130 → "i" + U+0307), and the dictionary side and the join linker
+    * tokenize with that full lowercasing. */
   def fastTokens(txt: String): Array[String] = {
     val out = new scala.collection.mutable.ArrayBuffer[String](16)
     val n = txt.length
@@ -67,6 +71,7 @@ object mentions {
     val sb = new java.lang.StringBuilder(24)
     while (i < n) {
       val c = txt.charAt(i)
+      if (c >= 0x80) return text.wordTokens(txt).toArray
       val lc = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
       if ((lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9')) sb.append(lc)
       else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
@@ -183,9 +188,9 @@ object mentions {
     * the driver and broadcast as a trie). Same output contract and greedy
     * longest-match semantics as `detect`:
     *
-    *   1. each turn explodes to word n-grams (n = 1..maxWords) keyed by
-    *      start position — transcript-proportional but shuffle-free until
-    *      the dictionary join;
+    *   1. each turn explodes to word n-grams (n up to the longest
+    *      surface) keyed by start position — transcript-proportional but
+    *      shuffle-free until the dictionary join;
     *   2. n-grams join the distributed dictionary on the canonical key
     *      (Spark picks broadcast vs shuffle join from the dict's size
     *      statistics — exactly the degradation path wanted: small dict ⇒
@@ -197,36 +202,14 @@ object mentions {
     *
     * MentionsSpec pins detectJoin ≡ detect on the fixture.
     *
-    * `maxWords` bounds the n-gram explode width. The default 0 means
-    * "derive from the dictionary": one cheap dimension-side agg computes
-    * the longest surface's token count, so the join kernel matches every
-    * dictionary surface — the same contract as the trie kernel, which is
-    * bounded only by trie depth. An explicit positive `maxWords` caps the
-    * transcript-side explode instead; dictionary surfaces longer than the
-    * cap can never match, so they are dropped from the join with a loud
-    * warning (count included) rather than silently producing a kernel
-    * whose results diverge from the trie's. */
+    * The n-gram explode width is derived from the dictionary: a position
+    * explodes only as far as the longest surface its token starts, so the
+    * join kernel matches every dictionary surface — the same contract as
+    * the trie kernel, which is bounded only by trie depth. */
   def detectJoin(spark: SparkSession, turns: Dataset[Turn],
-                 classes: Dataset[ClassText], maxWords: Int = 0): Dataset[Mention] = {
+                 classes: Dataset[ClassText]): Dataset[Mention] = {
     import spark.implicits._
-    val dict0 = surfaceDictDf(classes)
-      .withColumn("_kw", size(split(col("key"), " ")))
-    // one tiny action on the dimension side: longest surface + (when an
-    // explicit cap is given) how many surfaces the cap would drop
-    val dims = dict0.agg(
-        max(col("_kw")).as("mx"),
-        sum(when(col("_kw") > lit(if (maxWords > 0) maxWords else Int.MaxValue), 1L)
-          .otherwise(0L)).as("dropped"))
-      .collect()(0)
-    val dictMax = if (dims.isNullAt(0)) 1 else dims.getInt(0)
-    val effMaxWords = if (maxWords > 0) maxWords else math.max(1, dictMax)
-    val dropped = if (dims.isNullAt(1)) 0L else dims.getLong(1)
-    if (dropped > 0)
-      System.err.println(s"[graft] detectJoin: maxWords=$maxWords drops " +
-        s"$dropped dictionary surface(s) longer than the cap (longest has " +
-        s"$dictMax tokens) — those entities can never match; pass " +
-        s"maxWords=0 to derive the bound from the dictionary instead")
-    val dict = dict0.filter(col("_kw") <= effMaxWords).drop("_kw")
+    val dict = surfaceDictDf(classes)
     val toks = turns
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .withColumn("toks", text.wordTokensCol(col("text")))
@@ -240,7 +223,7 @@ object mentions {
     // load-bearing pruning step: a match can only start at a position
     // whose token begins some dictionary surface, and mention-bearing
     // positions are sparse in real transcripts — without the filter every
-    // position builds effMaxWords joined strings (measured on the 12M-turn
+    // position builds one joined string per n (measured on the 12M-turn
     // bench fixture: 416 core-s of gram building vs ~70 core-s for the
     // whole trie kernel; the filter removes ~90% of it). The first-token
     // dimension is distinct-token-bounded, far smaller than the dict.
@@ -253,9 +236,9 @@ object mentions {
     // collect; size statistics (+ AQE's runtime conversion) broadcast it
     // when small and degrade to a shuffle join when not, the same contract
     // as the key join below.
-    val firstToks = dict0
+    val firstToks = dict
       .groupBy(split(col("key"), " ").getItem(0).as("tok1"))
-      .agg(max(col("_kw")).as("maxw"))
+      .agg(max(size(split(col("key"), " "))).as("maxw"))
     val grams = toks
       .select(col("conv_id"), col("turn_idx"), col("toks"),
         explode(sequence(lit(1), size(col("toks")))).as("start"))
@@ -263,8 +246,7 @@ object mentions {
       .join(firstToks, Seq("tok1"))
       .select(col("conv_id"), col("turn_idx"), col("toks"), col("start"),
         explode(sequence(lit(1),
-          least(least(col("maxw"), lit(effMaxWords)),
-            size(col("toks")) - col("start") + 1))).as("len"))
+          least(col("maxw"), size(col("toks")) - col("start") + 1))).as("len"))
       .select(col("conv_id"), col("turn_idx"), col("start"), col("len"),
         array_join(slice(col("toks"), col("start"), col("len")), " ").as("key"))
     // the transcript-proportional shuffle into the greedy kernel carries

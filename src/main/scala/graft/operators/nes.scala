@@ -22,9 +22,9 @@ import graft.plans.stage
  *
  * The default kernel is the repo's blended lexical score (0.5·Jaccard +
  * 0.5·NES — the same kernel as the classifier stand-in, so the two modes
- * are directly comparable); `jaccardWeight = 0, editWeight = 1`
- * reproduces the reference's PURE normalized-edit-similarity scoring
- * (nes_map.py:73-77 max_norm_edit_sim) exactly.
+ * are directly comparable); `ScorerParams(0, 1)` reproduces the
+ * reference's PURE normalized-edit-similarity scoring (nes_map.py:73-77
+ * max_norm_edit_sim) exactly.
  */
 object nes {
 
@@ -35,25 +35,10 @@ object nes {
     * is O(len²) in the label length, and a narrow fused stage scores every
     * pair on one core (measured 14 s at 1 task on document-length labels);
     * the hash(from_id, to_id) exchange feeds the agg with no further one. */
-  def hop(fromLabels: DataFrame, toLabels: DataFrame,
-          jaccardWeight: Double, editWeight: Double)
+  def hop(fromLabels: DataFrame, toLabels: DataFrame, p: score.ScorerParams)
          (cands: DataFrame): DataFrame =
     stage.pinned(align.labelPairs(cands, fromLabels, toLabels),
         col("from_id"), col("to_id"))
       .groupBy("from_id", "to_id")
-      .agg(max(score.pairScoreCol(col("l1"), col("l2"),
-        jaccardWeight, editWeight)).as("score"))
-
-  /** One direction over (id, label) long-form sides: word-token postings
-    * of each side, then `align.direction` with the nes hop. `d` is the
-    * to-side class count. */
-  def alignOneSide(fromLabels: DataFrame, toLabels: DataFrame, d: Long,
-                   candidateLimit: Int = 25, nbest: Int = 1,
-                   fixedPointIdf: Boolean = false,
-                   jaccardWeight: Double = 0.5,
-                   editWeight: Double = 0.5): DataFrame =
-    align.direction(index.postingsFromText(fromLabels, "id", "label"),
-        index.postingsFromText(toLabels, "id", "label"), d,
-        candidateLimit, nbest, fixedPointIdf = fixedPointIdf)(
-      hop(fromLabels, toLabels, jaccardWeight, editWeight))
+      .agg(max(score.pairScoreCol(col("l1"), col("l2"), p)).as("score"))
 }

@@ -191,8 +191,7 @@ object score {
    * mapPartitions kernel for model inference.
    */
   def pairScoreCol(l1: org.apache.spark.sql.Column, l2: org.apache.spark.sql.Column,
-                   jaccardWeight: Double = 0.5, editWeight: Double = 0.5)
-      : org.apache.spark.sql.Column = {
+                   p: ScorerParams): org.apache.spark.sql.Column = {
     val a = text.normalizeCol(l1)
     val b = text.normalizeCol(l2)
     val ta = array_distinct(text.wordTokensCol(a))
@@ -202,7 +201,7 @@ object score {
       .otherwise(inter / (size(ta) + size(tb) - inter))
     val nes = lit(1.0) - levenshtein(a, b) / greatest(length(a), length(b))
     when(a === b, lit(1.0))
-      .otherwise(lit(jaccardWeight) * jac + lit(editWeight) * nes)
+      .otherwise(lit(p.jaccardWeight) * jac + lit(p.editWeight) * nes)
   }
 
   /** The pooling aggregate over `pair_score`: mean or max (batch_pooling,

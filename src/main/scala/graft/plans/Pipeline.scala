@@ -117,8 +117,7 @@ object Pipeline {
         // the split path remains the choice for expensive neural scorers)
         score.clamp(score.scorePooledWithStringMatch(spark,
           align.labelPairs(cands, f, t), p.pooling, p.scorer)))
-      case "nes" => (srcLabels, tgtLabels,
-        (f, t) => nes.hop(f, t, p.scorer.jaccardWeight, p.scorer.editWeight))
+      case "nes" => (srcLabels, tgtLabels, (f, t) => nes.hop(f, t, p.scorer))
       case "embeds" =>
         // stage.materialize, not cache: the class-vector tables are read by
         // both directions then never again — cache() would pin them in the

@@ -146,14 +146,13 @@ class IndexSpec extends SparkSuite {
   }
 
   test("postings broadcast is forced only while the to-side is within route.MaxCatalog") {
-    import graft.operators.nes
     import graft.plans.route
     val s = spark.newSession()
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import s.implicits._
     val from = Seq(("s1", "acute heart failure")).toDF("id", "label")
     val to = Seq(("t1", "acute heart failure"), ("t2", "kidney stone")).toDF("id", "label")
-    def broadcasts(d: Long) = nes.alignOneSide(from, to, d, 5, 1)
+    def broadcasts(d: Long) = specAlign.nesDirection(from, to, d)
       .queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
     assert(route.broadcastCatalog(route.MaxCatalog, "spec") == Some(true))
     assert(route.broadcastCatalog(route.MaxCatalog + 1, "spec").isEmpty)

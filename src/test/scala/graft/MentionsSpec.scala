@@ -86,18 +86,20 @@ class MentionsSpec extends SparkSuite {
     assert(joined == trie)
   }
 
-  test("detectJoin: explicit maxWords cap drops over-long dict surfaces loudly, not wrong results") {
+  test("trie and join linkers agree on non-ASCII turn text (Unicode lowercasing)") {
+    // U+212A KELVIN SIGN lowercases to "k", U+0130 to "i" + U+0307: the
+    // dictionary side and the join linker lowercase all of Unicode, so the
+    // trie's turn scanner must too
     val cls = Seq(
-      ClassText("src", "src:L1", 0L, Seq("one two three four five")),
-      ClassText("src", "src:L2", 1L, Seq("one two")))
+      ClassText("src", "src:K", 0L, Seq("kelvin scale")),
+      ClassText("src", "src:I", 1L, Seq("\u0130stanbul")))
     val turns = Seq(
-      Turn("c1", 0, "user", "text one two three four five end", null,
+      Turn("c1", 0, "user", "the \u212Aelvin scale in \u0130stanbul", null,
         new Timestamp(0L))).toDS()
-    val out = mentions.detectJoin(spark, turns, cls.toDS(), maxWords = 2)
-      .collect().toSet
-    // the capped kernel can never match the 5-token surface; it must fall
-    // back to the 2-token entity rather than emit a truncated phantom match
-    assert(out == Set(Mention("c1", 0, "src", "src:L2", "one two")))
+    val trie = mentions.detect(spark, turns, cls).collect().toSet
+    val joined = mentions.detectJoin(spark, turns, cls.toDS()).collect().toSet
+    assert(trie == joined, s"trie=$trie join=$joined")
+    assert(trie.map(_.class_iri) == Set("src:K", "src:I"))
   }
 
   test("stabilize: output columns are exactly the key plus mention_ord") {

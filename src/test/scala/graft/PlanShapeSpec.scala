@@ -169,8 +169,8 @@ class PlanShapeSpec extends SparkSuite {
       .read.parquet(s"$sfDir/documents.parquet")
     def labels(side: org.apache.spark.sql.Column) = docs.filter(side)
       .select(col("doc_id").cast("string").as("id"), col("text").as("label"))
-    val plan = nes.alignOneSide(labels(col("doc_id") < 100), labels(col("doc_id") >= 100),
-      400, 5, 1)
+    val plan = specAlign.nesDirection(labels(col("doc_id") < 100),
+      labels(col("doc_id") >= 100), 400)
     val pins = "REPARTITION_BY_NUM".r
       .findAllIn(plan.queryExecution.explainString(ExplainMode.fromString("formatted"))).size
     require(pins >= 2,
@@ -273,8 +273,8 @@ class PlanShapeSpec extends SparkSuite {
         dedup.embeddingNearDups(e, "vec_id", "embedding", "label", 0.3), 2),
       ("semanticDedup", similarity.semanticDedup(e, e.filter(col("vec_id") < 200),
         "vec_id", "embedding", 4, 2, 0.4), 2),
-      ("nes.alignOneSide", nes.alignOneSide(labels(col("doc_id") < 100),
-        labels(col("doc_id") >= 100), 400, 5, 1), 2))
+      ("nes.hop", specAlign.nesDirection(labels(col("doc_id") < 100),
+        labels(col("doc_id") >= 100), 400), 2))
     pinned.foreach { case (name, df, want) =>
       val pins = "REPARTITION_BY_NUM".r
         .findAllIn(df.queryExecution.explainString(ExplainMode.fromString("formatted"))).size

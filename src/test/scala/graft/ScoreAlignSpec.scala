@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{align, score}
+import graft.specAlign.nesDirection
 
 class ScoreAlignSpec extends SparkSuite {
   import spark.implicits._
@@ -110,7 +111,7 @@ class ScoreAlignSpec extends SparkSuite {
       ("", "x"), ("a b c", "c b a"))
       .toDF("l1", "l2")
     val colScores = pairs
-      .select($"l1", $"l2", score.pairScoreCol($"l1", $"l2").as("s"))
+      .select($"l1", $"l2", score.pairScoreCol($"l1", $"l2", score.ScorerParams()).as("s"))
       .as[(String, String, Double)].collect()
     colScores.foreach { case (a, b, s) =>
       val expected = score.scorePair(score.ScorerParams(), a, b)
@@ -118,21 +119,19 @@ class ScoreAlignSpec extends SparkSuite {
     }
   }
 
-  test("nes.alignOneSide: NES-mode mapping, exact label match tops") {
-    import graft.operators.nes
+  test("nes.hop: NES-mode mapping, exact label match tops") {
     val from = Seq(("s1", "acute heart failure"), ("s2", "kidney stone"))
       .toDF("id", "label")
     val to = Seq(("t1", "acute heart failure"), ("t2", "renal kidney calculus stone"))
       .toDF("id", "label")
-    val out = nes.alignOneSide(from, to, d = 2, candidateLimit = 5, nbest = 1)
+    val out = nesDirection(from, to, d = 2)
       .select("from_id", "to_id", "score").as[(String, String, Double)]
       .collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out("s1") == ("t1", 1.0))
     assert(out("s2")._1 == "t2" && out("s2")._2 > 0.0 && out("s2")._2 < 1.0)
   }
 
-  test("nes.alignOneSide pure-NES fidelity: jaccardWeight=0 reproduces max_norm_edit_sim exactly (nes_map.py:73-77)") {
-    import graft.operators.nes
+  test("nes.hop pure NES: ScorerParams(0, 1) is max_norm_edit_sim (nes_map.py:73-77)") {
     // token-permuted labels: Jaccard 1.0 but NES low — the pair that
     // separates the blended kernel from the reference's pure edit score
     val from = Seq(("s1", "beta alpha"), ("s2", "kidney stone"))
@@ -143,8 +142,7 @@ class ScoreAlignSpec extends SparkSuite {
       val (a, b) = (graft.functions.text.normalize(a0), graft.functions.text.normalize(b0))
       1.0 - graft.functions.text.levenshtein(a, b).toDouble / math.max(a.length, b.length)
     }
-    val pure = nes.alignOneSide(from, to, d = 2, candidateLimit = 5, nbest = 1,
-        jaccardWeight = 0.0, editWeight = 1.0)
+    val pure = nesDirection(from, to, d = 2, score.ScorerParams(0.0, 1.0))
       .select("from_id", "to_id", "score").as[(String, String, Double)]
       .collect().map(r => r._1 -> (r._2, r._3)).toMap
     // "beta alpha" vs "alpha beta": lev = 8 over len 10 -> NES 0.2, NOT the
@@ -152,7 +150,7 @@ class ScoreAlignSpec extends SparkSuite {
     assert(pure("s1")._1 == "t1")
     assert(math.abs(pure("s1")._2 - nesOf("beta alpha", "alpha beta")) < 1e-12)
     assert(math.abs(pure("s2")._2 - nesOf("kidney stone", "kidney stones")) < 1e-12)
-    val blended = nes.alignOneSide(from, to, d = 2, candidateLimit = 5, nbest = 1)
+    val blended = nesDirection(from, to, d = 2)
       .select("from_id", "score").as[(String, Double)].collect().toMap
     assert(blended("s1") > pure("s1")._2, "blended kernel must add the Jaccard term")
   }

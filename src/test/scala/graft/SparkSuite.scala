@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{align, index, nes, score}
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide). */
 trait SparkSuite extends AnyFunSuite {
@@ -13,4 +14,15 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
+}
+
+object specAlign {
+  /** One nes-mode direction over (id, label) long-form sides, top-1 of 5
+    * candidates: word-token postings of each side into `align.direction`
+    * with the nes hop (q50's plan, ranked by the float IDF). `d` is the
+    * to-side class count. */
+  def nesDirection(from: DataFrame, to: DataFrame, d: Long,
+                   p: score.ScorerParams = score.ScorerParams()): DataFrame =
+    align.direction(index.postingsFromText(from, "id", "label"),
+      index.postingsFromText(to, "id", "label"), d, 5, 1)(nes.hop(from, to, p))
 }

@@ -1,9 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.util.Locale
+import org.apache.spark.sql.functions.col
 import graft.functions.text
 
-class TextSpec extends AnyFunSuite {
+class TextSpec extends SparkSuite {
 
   test("normalize: lowercase, underscores, whitespace collapse") {
     assert(text.normalize("Heart_Failure  Acute") == "heart failure acute")
@@ -17,6 +18,21 @@ class TextSpec extends AnyFunSuite {
   test("wordTokens: alnum runs only") {
     assert(text.wordTokens("Heart-failure, acute!") == Seq("heart", "failure", "acute"))
     assert(text.wordTokens("") == Seq.empty)
+  }
+
+  test("normalize/wordTokens equal their Column twins under a Turkish default locale") {
+    import spark.implicits._
+    val s = "TITLE Index"
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try {
+      val (n, w) = Seq(s).toDF("s")
+        .select(text.normalizeCol(col("s")), text.wordTokensCol(col("s")))
+        .as[(String, Seq[String])].head()
+      assert(text.normalize(s) == n)
+      assert(text.wordTokens(s) == w)
+      assert(w == Seq("title", "index"))
+    } finally Locale.setDefault(saved)
   }
 
   test("subwordTokens: head + ##continuations of length 4") {
