@@ -22,9 +22,16 @@ object text {
   // Normalization (onto_text.py:158-161: lowercase, '_' -> ' ', dedup labels)
   // -------------------------------------------------------------------------
 
+  /** Spark's `lower` under the root locale, as `toLowerCase(Locale.ROOT)`
+    * in the plain-Scala twins. Plain `lower` lowercases any non-ASCII
+    * string with the JVM default locale (under tr-TR, "TITLE É" becomes
+    * "tıtle é"); the UNICODE collation's lower is ICU's root mapping. */
+  private def lowerRoot(c: Column): Column =
+    collate(lower(collate(c, "UNICODE")), "UTF8_BINARY")
+
   /** lowercase + underscores to spaces + collapse whitespace + trim. */
   def normalizeCol(c: Column): Column =
-    trim(regexp_replace(lower(regexp_replace(c, "_", " ")), "\\s+", " "))
+    trim(regexp_replace(lowerRoot(regexp_replace(c, "_", " ")), "\\s+", " "))
 
   def normalize(s: String): String =
     s.replace('_', ' ').toLowerCase(Locale.ROOT).replaceAll("\\s+", " ").trim
@@ -48,7 +55,7 @@ object text {
     * exactly; used for the inverted index (onto_index.py:49-60 uses WordPiece
     * — sub-word pieces are added on top by `subwordTokens`). */
   def wordTokensCol(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => t =!= "")
+    filter(split(lowerRoot(c), "[^a-z0-9]+"), t => t =!= "")
 
   def wordTokens(s: String): Seq[String] =
     s.toLowerCase(Locale.ROOT).split("[^a-z0-9]+").toSeq.filter(_.nonEmpty)

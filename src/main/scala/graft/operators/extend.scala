@@ -15,10 +15,16 @@ import graft.plans.stage.implicits._
  * (max 50 iterations, extend_bertmap.py:84).
  *
  * Spark shape: a driver while-loop over DataFrames; each iteration is two
- * hierarchy joins per side + a left-anti "seen" join + the scorer hop. The
- * accumulated set is stage.materialize'd every iteration to cut lineage
- * (50 self-join generations would otherwise blow up the plan), and the loop
- * exits early on an empty frontier (onto_extend.py:39).
+ * hierarchy joins per side + a left-anti "seen" join + the scorer hop. Each
+ * iteration's kept pairs are stage.materialize'd to cut lineage (50
+ * self-join generations would otherwise blow up the plan), the expansion is
+ * their lazy union, and the loop exits early on an empty frontier
+ * (onto_extend.py:39).
+ *
+ * `local` is the driver twin over collected inputs, the route
+ * `Pipeline.run` takes when the mappings, edges and labels are each
+ * within 1M rows: the same rows and bit-identical values
+ * (ExtendRepairSpec), without a job per iteration.
  */
 object extend {
 
@@ -70,12 +76,15 @@ object extend {
         srcLabels, tgtLabels)
       // string-match short-circuit (bert_classifier_extend.py:53-56): ANY
       // identical label pair fixes the whole mapping at 1.0; otherwise the
-      // pooled mean of the scorer output.
+      // pooled mean of the scorer output, summed as an ascending sorted fold
+      // (not avg's partition-order sum), so `local` gets the same bits.
       val scored = score.scoreLabelPairsTyped(spark, withLabels, params)
         .groupBy("from_id", "to_id")
-        .agg(greatest(avg(col("pair_score")),
-          max(when(col("l1") === col("l2"), 1.0).otherwise(0.0))).as("value"))
-        .select(col("from_id").as("entity1"), col("to_id").as("entity2"), col("value"))
+        .agg(array_sort(collect_list(col("pair_score"))).as("scores"),
+          max(when(col("l1") === col("l2"), 1.0).otherwise(0.0)).as("exact"))
+        .select(col("from_id").as("entity1"), col("to_id").as("entity2"),
+          greatest(aggregate(col("scores"), lit(0.0), _ + _) / size(col("scores")),
+            col("exact")).as("value"))
       val kept = scored.filter(col("value") >= kappa)
         .materialize // the ONE materialization per iteration
 
@@ -91,5 +100,53 @@ object extend {
     if (expansionParts.isEmpty)
       seeds.filter(lit(false)).select(col("entity1"), col("entity2"), col("value"))
     else expansionParts.reduce(_.unionByName(_))
+  }
+
+  /** Driver twin of `extendMappings` over collected rows: (entity1,
+    * entity2, value) seeds, (child, parent) edges and (id, label) labels,
+    * all non-null. Returns the same expansion rows. */
+  def local(seeds: Seq[(String, String, Double)],
+            srcEdges: Seq[(String, String)], tgtEdges: Seq[(String, String)],
+            srcLabels: Seq[(String, String)], tgtLabels: Seq[(String, String)],
+            kappa: Double, maxIter: Int,
+            params: score.ScorerParams): Seq[(String, String, Double)] = {
+    // parents×parents, then children×children
+    val hops = Seq(
+      (srcEdges.groupMap(_._1)(_._2), tgtEdges.groupMap(_._1)(_._2)),
+      (srcEdges.groupMap(_._2)(_._1), tgtEdges.groupMap(_._2)(_._1)))
+    val (l1, l2) = (srcLabels.groupMap(_._1)(_._2), tgtLabels.groupMap(_._1)(_._2))
+    val memo = scala.collection.mutable.HashMap.empty[String, (String, Set[String])]
+    def prep(s: String) = memo.getOrElseUpdate(s, score.prep(s))
+    // a label match fixes the pair at 1.0, else the mean over the sorted scores
+    def value(la: Seq[String], lb: Seq[String]): Double = {
+      val scores = (for (a <- la; b <- lb) yield score.kernel(params, prep(a), prep(b))).toArray
+      java.util.Arrays.sort(scores)
+      math.max(scores.foldLeft(0.0)(_ + _) / scores.length,
+        if (la.exists(lb.contains)) 1.0 else 0.0)
+    }
+    val seen = scala.collection.mutable.HashSet.from(seeds.map(m => (m._1, m._2)))
+    var frontier = seeds.filter(m => graft.plans.route.cmp(m._3, kappa) >= 0).map(m => (m._1, m._2))
+    val expansion = scala.collection.mutable.ArrayBuffer.empty[(String, String, Double)]
+    var iter = 0
+    while (iter < maxIter && frontier.nonEmpty) {
+      val candidates = (for {
+        (e1, e2) <- frontier
+        (h1, h2) <- hops
+        n1 <- h1.getOrElse(e1, Nil)
+        n2 <- h2.getOrElse(e2, Nil)
+      } yield (n1, n2)).distinct.filterNot(seen)
+      val kept = for {
+        (n1, n2) <- candidates
+        la <- l1.get(n1)
+        lb <- l2.get(n2)
+        v = value(la, lb)
+        if graft.plans.route.cmp(v, kappa) >= 0
+      } yield (n1, n2, v)
+      frontier = kept.map(k => (k._1, k._2))
+      seen ++= frontier
+      expansion ++= kept
+      iter += 1
+    }
+    expansion.toSeq
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StringType
+import graft.plans.route
 
 /**
  * Logical repair — conservative, in-engine replacement for the reference's
@@ -55,4 +57,30 @@ object repair {
   def repairMappings(mappings: DataFrame, srcEdges: DataFrame,
                      tgtEdges: DataFrame): DataFrame =
     dropCrosswise(oneToOne(mappings), srcEdges, tgtEdges)
+
+  /** Driver twin of `repairMappings` over collected, non-null (entity1,
+    * entity2, value) rows and (child, parent) edges: the same rows, in
+    * input order (ExtendRepairSpec). */
+  def local(mappings: Seq[(String, String, Double)], srcEdges: Seq[(String, String)],
+            tgtEdges: Seq[(String, String)]): Seq[(String, String, Double)] = {
+    type M = (String, String, Double)
+    val lt = route.lt(StringType)
+    // (a): each side's window top-1, value desc, then the partner id asc
+    def top(ms: Seq[M], key: M => String, partner: M => String): Seq[M] = {
+      val best = ms.groupMapReduce(key)(identity) { (a, b) =>
+        val c = route.cmp(a._3, b._3)
+        if (c > 0 || (c == 0 && !lt(partner(b), partner(a)))) a else b
+      }
+      ms.filter(m => best(key(m)) eq m)
+    }
+    val one = top(top(mappings, _._1, _._2), _._2, _._1)
+    // (b): a parent of entity1 mapped to a child of entity2 at a higher value
+    val parents = srcEdges.groupMap(_._1)(_._2)
+    val children = tgtEdges.groupMap(_._2)(_._1)
+    val values = one.groupMap(m => (m._1, m._2))(_._3)
+    one.filterNot { case (e1, e2, v) =>
+      parents.getOrElse(e1, Nil).exists(p1 => children.getOrElse(e2, Nil).exists(c2 =>
+        values.getOrElse((p1, c2), Nil).exists(route.cmp(_, v) > 0)))
+    }
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 /**
  * The one local-or-distributed decision behind every driver-collect guard
  * (linker trie, BPE merges, connected components, hierarchy depth, the
- * IVF/PQ literal argmax, the forced catalog broadcast).
+ * IVF/PQ literal argmax, the forced catalog broadcast, extension + repair).
  *
  * Contract of `local(ds, bound, name, keys)`:
  *  - ONE bounded probe, `limit(bound + 1).collect()`, never a separate
@@ -56,6 +56,11 @@ object route {
       (x, y) => graft.operators.vocab.utf8Lt(x.asInstanceOf[String], y.asInstanceOf[String])
     case _ => (x, y) => x.asInstanceOf[Number].longValue < y.asInstanceOf[Number].longValue
   }
+
+  /** Spark SQL's order for doubles (`SQLOrderingUtil.compareDoubles`):
+    * NaN is the greatest value and equals itself, and -0.0 equals 0.0. */
+  def cmp(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
 
   /** The broadcast hint for a catalog-side table of `d` classes: forced
     * while `d` is within `MaxCatalog`, else `None` (Spark's size statistics

@@ -122,6 +122,16 @@ class PipelineE2ESpec extends SparkSuite {
     for ((n, t) <- seen) assert(t eq caller, s"$n ran on ${t.getName}")
   }
 
+  test("the repaired phase is a local relation on the fixture: extension and repair ran on the driver") {
+    var repaired: org.apache.spark.sql.DataFrame = null
+    Pipeline.run(spark, turns, classes, edges,
+      keep = (n, df) => { if (n == "repaired") repaired = df; df })
+    val plan = repaired.queryExecution.logical
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], plan)
+    assert(!plan.collectLeaves().exists(_.getClass.getSimpleName == "LogicalRDD"))
+    assert(repaired.count() > 0)
+  }
+
   test("linker=join fallback: identical triples to the broadcast-trie kernel") {
     // the graceful-degradation path for catalogs past maxDictEntities: the
     // distributed n-gram dictionary join must be a drop-in replacement
@@ -233,9 +243,10 @@ class PipelineE2ESpec extends SparkSuite {
   }
 
   test("reliable materialization: the full pipeline (iterative loops included) is mode-invariant") {
-    // every stage.materialize site — extension loop, repair, the corpus-
-    // style lineage cuts — must produce identical triples under the
-    // cluster-safe checkpoint-dir policy as under localCheckpoint
+    // every stage.materialize site run takes must produce identical triples
+    // under the cluster-safe checkpoint-dir policy as under localCheckpoint.
+    // On the fixture, extension and repair take the driver route; the
+    // distributed loop's reliable mode is ExtendRepairSpec's
     val dir = java.nio.file.Files.createTempDirectory("graft-chk-e2e").toString
     spark.sparkContext.setCheckpointDir(dir)
     def triples() = {

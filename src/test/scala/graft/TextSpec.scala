@@ -35,6 +35,22 @@ class TextSpec extends SparkSuite {
     } finally Locale.setDefault(saved)
   }
 
+  test("non-ASCII strings lowercase under the root locale in both twins, under a Turkish default locale") {
+    // a non-ASCII string takes Spark's slow lowercasing path, which plain
+    // `lower` runs under the JVM default locale: "I" became dotless "ı"
+    import spark.implicits._
+    val ss = Seq("KELVIN İSTANBUL", "Kelvin TITLE É")
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try {
+      val cols = ss.toDF("s")
+        .select(text.normalizeCol(col("s")), text.wordTokensCol(col("s")))
+        .as[(String, Seq[String])].collect().toSeq
+      assert(cols == ss.map(s => (text.normalize(s), text.wordTokens(s))))
+      assert(cols.map(_._2) == Seq(Seq("kelvin", "i", "stanbul"), Seq("kelvin", "title")))
+    } finally Locale.setDefault(saved)
+  }
+
   test("subwordTokens: head + ##continuations of length 4") {
     assert(text.subwordTokens("hyperthermia") ==
       Seq("hype", "##rthe", "##rmia"))
