@@ -33,22 +33,29 @@ object canonical {
    * `edges` must carry (entity1, entity2). Returns (id, canonical).
    */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-                          maxIter: Int = 20,
-                          maxLocalEdges: Long = 5000000L): DataFrame = {
-    val e = edges.select(col("entity1").as("a"), col("entity2").as("b"))
-      .unionByName(edges.select(col("entity2").as("a"), col("entity1").as("b")))
-      .distinct()
-      .materialize
+                          maxIter: Int = 20): DataFrame = {
+    val e = undirected(edges)
     // Dup-graph-sized edge lists are solved driver-local by union-by-min,
     // the loop's converged answer (CanonicalSpec pins local ≡ distributed).
     // The loop's scheduler latency (~3 actions a round) dominates small
-    // graphs; graphs past maxLocalEdges (~hundreds of MB of driver heap at
+    // graphs; graphs past MaxLocalEdges (~hundreds of MB of driver heap at
     // 5M string rows) take the distributed pointer-jumping loop below.
-    route.local(e, maxLocalEdges, "connectedComponents", Seq("a", "b")) match {
+    route.local(e, MaxLocalEdges, "connectedComponents", Seq("a", "b")) match {
       case Some(rows) => componentsLocal(spark, rows, e.schema("a").dataType)
       case None => connectedComponentsLoop(spark, e, maxIter)
     }
   }
+
+  /** Edge lists past this many (a, b) rows take the distributed loop. */
+  private val MaxLocalEdges = 5000000L
+
+  /** The materialized, double-sided, distinct (a, b) edge list of
+    * (entity1, entity2) `edges`: the input of both routes. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("entity1").as("a"), col("entity2").as("b"))
+      .unionByName(edges.select(col("entity2").as("a"), col("entity1").as("b")))
+      .distinct()
+      .materialize
 
   /** Union-find with the min id (Spark's order) as every set's root. */
   private def componentsLocal(spark: SparkSession, rows: Array[Row],
@@ -76,10 +83,10 @@ object canonical {
       StructType(Seq(StructField("id", idType), StructField("canonical", idType))))
   }
 
-  /** The distributed pointer-jumping loop over a materialized, double-
-    * sided, distinct (a, b) edge list — the 100 TB path (and the null-id /
-    * unsupported-id-type fallback of the local route above). */
-  private def connectedComponentsLoop(spark: SparkSession, e0: DataFrame,
+  /** The distributed pointer-jumping loop over an `undirected` edge
+    * list — the 100 TB path (and the null-id / unsupported-id-type
+    * fallback of the local route above). */
+  private[graft] def connectedComponentsLoop(spark: SparkSession, e0: DataFrame,
                                       maxIter: Int): DataFrame = {
     var e = e0
     var labels = e.select(col("a").as("id")).distinct()

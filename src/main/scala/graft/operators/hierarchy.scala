@@ -28,18 +28,25 @@ object hierarchy {
     * Hierarchy edge lists are catalog-dimension by contract (ontology is-a
     * edges: even million-class ontologies are a few MB), and the frontier
     * loop costs ~3 actions per DAG level in scheduler latency. Edge lists
-    * the route admits (at most `maxLocalEdges`, integral or string ids, no
+    * the route admits (at most `MaxLocalEdges`, integral or string ids, no
     * nulls) are solved exactly by a driver-local Kahn pass, ≡ the converged
     * frontier relaxation (HierarchySpec pins local ≡ distributed). Cyclic
     * inputs and everything else keep the distributed loop (a cycle never
     * drains the Kahn queue: detected, not wrong). */
-  def depth(spark: SparkSession, edges: DataFrame, longest: Boolean,
-            maxLocalEdges: Long = 5000000L): DataFrame = {
+  def depth(spark: SparkSession, edges: DataFrame, longest: Boolean): DataFrame = {
     val e = edges.select(col("child_iri"), col("parent_iri")).distinct()
       .materialize
-    val localOut = route.local(e, maxLocalEdges, "hierarchy.depth", Seq("child_iri", "parent_iri"))
+    route.local(e, MaxLocalEdges, "hierarchy.depth", Seq("child_iri", "parent_iri"))
       .flatMap(depthLocal(spark, _, e.schema("child_iri").dataType, longest))
-    if (localOut.isDefined) return localOut.get
+      .getOrElse(depthLoop(e, longest))
+  }
+
+  /** Edge lists past this many distinct rows take the frontier loop. */
+  private val MaxLocalEdges = 5000000L
+
+  /** The distributed frontier loop over a (child_iri, parent_iri) edge
+    * list: the path for edge lists the route declines and for cycles. */
+  private[graft] def depthLoop(e: DataFrame, longest: Boolean): DataFrame = {
     val nodes = e.select(col("child_iri").as("id"))
       .unionByName(e.select(col("parent_iri").as("id"))).distinct()
     val roots = nodes.join(e.select(col("child_iri").as("id")), Seq("id"), "left_anti")
@@ -47,9 +54,6 @@ object hierarchy {
     var depths = roots.withColumn("depth", lit(0L)).materialize
     var frontier = depths
     var round = 0
-    val pick: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
-      if (longest) (a, b) => greatest(a, b) else (a, b) => least(a, b)
-
     while (round < MaxRounds && !frontier.isEmpty) {
       val proposals = frontier
         .join(e.select(col("parent_iri").as("id"), col("child_iri")), "id")

@@ -112,6 +112,17 @@ object similarity {
       .drop("_vn", "_sims")
   }
 
+  /** `withNearestIdx` per subspace: for each (s, matrix) appends `_ix<s>`,
+    * the index of the matrix row nearest to the subspace-s slice of
+    * `vdCol` (`subDim` elements from s·subDim). The Lloyd round (guarded)
+    * and `pqEncode`'s literal path (unguarded) both assign through it. */
+  private def withNearestIdxs(df: DataFrame, vdCol: String, subDim: Int,
+                              mats: Seq[(Int, Seq[Seq[Double]])], guarded: Boolean): DataFrame =
+    mats.foldLeft(df) { case (d, (s, mat)) =>
+      withNearestIdx(d.withColumn(s"_sv$s", slice(col(vdCol), s * subDim + 1, subDim)),
+        s"_sv$s", mat, guarded, s"_ix$s").drop(s"_sv$s")
+    }
+
   /** A centroid table on the driver, sorted by ascending cell id:
     * Some(cell ids, matrix) when the route admits it (at most
     * `maxLiteralCentroids` rows, integral cells, no null cell), else None
@@ -209,23 +220,35 @@ object similarity {
    *
    * Returns (cell: int, n_assigned: long, centroid: array<bigint>) in the
    * 10^6 fixed-point domain; `fitCentroidsForIvf` converts for `ivfTopK`.
+   * The loop is `lloyd`'s with one subspace, the whole vector.
    *
    * FIT CONTRACT: the fit Lloyd-iterates over the FULL `vectors` input —
-   * every round broadcasts the k centroids against every row. At 100 TB a
+   * every round evaluates the k centroids against every row. At 100 TB a
    * caller must fit on a deterministic sample (filter on pmod(md5(id), N))
    * — the plan is unchanged, only the input shrinks; each iteration is one
-   * broadcast-join pass + one (cell, pos)-keyed agg, k·dim rows of state.
+   * literal-argmax pass + one (cell, pos)-keyed agg, k·dim rows of state.
    * `maxFitRows` enforces this loudly: a fit over more rows than the guard
    * fails fast instead of silently running `iters` full-corpus passes.
    */
   def kmeansFit(vectors: DataFrame, idCol: String, vecCol: String,
-                k: Int, iters: Int, maxFitRows: Long = 2000000L,
-                preCountedRows: Option[Long] = None): DataFrame = {
+                k: Int, iters: Int, maxFitRows: Long = 2000000L): DataFrame =
+    lloyd(vectors, idCol, vecCol, 1, Int.MaxValue, k, iters, maxFitRows).drop("subspace")
+
+  /** The Lloyd loop of `kmeansFit` (m = 1, one subspace spanning the
+    * whole vector: `subDim` = Int.MaxValue) and `pqFitCodebooks` (`m`
+    * contiguous subspaces of `subDim` elements), on the caller's thread:
+    * one `maxFitRows` count, ONE seed collect — the k rows with the
+    * smallest (md5(id), id), sliced per subspace on the driver — and per
+    * round ONE (subspace, cell, pos)-keyed integer-sum agg collected to
+    * the driver. The subspace-s slice of `toFixedPoint(v)` is
+    * `toFixedPoint` of that slice, and the seeds are the same rows for
+    * every subspace, so each subspace's codebook is the fit a separate
+    * `kmeansFit` over its slice gives (DedupSimSpec). Returns (subspace,
+    * cell, n_assigned, centroid) in (subspace, cell) order. */
+  private def lloyd(vectors: DataFrame, idCol: String, vecCol: String, m: Int, subDim: Int,
+                    k: Int, iters: Int, maxFitRows: Long): DataFrame = {
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0, got k=$k iters=$iters")
-    // callers fitting the SAME input repeatedly (pqFitCodebooks: one fit
-    // per subspace) count once and pass it down instead of paying one
-    // count job per fit
-    val nFit = preCountedRows.getOrElse(vectors.count())
+    val nFit = vectors.count()
     require(nFit <= maxFitRows,
       s"kmeansFit over $nFit rows > maxFitRows=$maxFitRows: the fit runs " +
         s"$iters full passes over its input — fit on a deterministic sample " +
@@ -240,57 +263,49 @@ object similarity {
     // numbered 1..k in (h, id) order, exactly the old row_number window.
     val seeds = v.select(md5(col("id")).as("h"), col("id"), col("v"))
       .orderBy(col("h"), col("id")).limit(k)
-      .select(col("v")).collect()
-    // Driver-local Lloyd state: the centroid table is k·dim longs — the
-    // SAME driver footprint the per-round broadcast already paid. Each
-    // round is now ONE job (the (cell, pos) integer-sum agg collected to
-    // the driver, k·dim rows) instead of crossJoin(k per vector) → full
-    // id-keyed window shuffle → join → localCheckpoint: at 10^10 vectors
-    // the old shape shuffled the whole vector table once per round just
-    // to compute a per-row argmax; this shape's only per-round exchange
-    // is the (cell, pos)-keyed partial-combined agg (k·dim·width rows).
-    // Arithmetic is unchanged (fixed-point cosine, (sim desc, cell asc)
-    // tie-break via nearestIdxExpr, BIGINT sums, truncating div) — the
-    // fit is bit-identical (SimilaritySpec, q55/q57/q65/q66/q75 oracles).
-    var cen: Array[Seq[Long]] = seeds.map(_.getSeq[Long](0))
-    var nAssigned: Array[Long] = Array.fill(cen.length)(0L)
-    if (cen.nonEmpty) {
-      var it = 0
-      while (it < iters) {
-        // centroids enter as DOUBLES (long→double cast = the same values
-        // toDoubleArray produced inside the old cosFixed), with the
-        // zero-denominator guard preserved (guarded = true)
-        val matD = cen.toSeq.map(_.map(_.toDouble))
-        val sums = withNearestIdx(
-            v.withColumn("vd", toDoubleArray(col("v"))), "vd", matD,
-            guarded = true, "_ix")
-          .select((col("_ix") + 1).as("cell"), posexplode(col("v")).as(Seq("pos", "val")))
-          .groupBy("cell", "pos")
-          .agg(sum(col("val")).as("s"), count(lit(1)).as("n"))
-          .select(col("cell").cast("int"), col("pos"), col("s"), col("n"))
-          .as[(Int, Int, Long, Long)].collect()
-        val next = cen.clone()
-        val nNext = Array.fill(cen.length)(0L)
-        sums.groupBy(_._1).foreach { case (cell, rows) =>
-          // s div n (BIGINT) truncates toward zero — Long./ is identical
-          next(cell - 1) = rows.sortBy(_._2).toSeq.map(r => r._3 / r._4)
-          nNext(cell - 1) = rows.map(_._4).max
-        }
-        cen = next
-        nAssigned = nNext
-        it += 1
+      .select(col("v")).collect().map(_.getSeq[Long](0))
+    // Driver-local Lloyd state, cen(s)(c) = centroid of cell c + 1 in
+    // subspace s: k·dim longs, the footprint the per-round literal pays.
+    // Arithmetic: fixed-point cosine with the zero-denominator guard and
+    // the (sim desc, cell asc) tie-break via withNearestIdx, BIGINT sums,
+    // truncating div (q55/q57/q65/q66/q75 oracles).
+    val cen = Array.tabulate(m)(s => seeds.map(_.slice(s * subDim, s * subDim + subDim)))
+    var nAssigned = Array.fill(m, seeds.length)(0L)
+    if (seeds.nonEmpty) for (_ <- 1 to iters) {
+      // centroids enter as DOUBLES (long→double cast = the same values
+      // toDoubleArray gives the vector side)
+      val mats = cen.toSeq.zipWithIndex.map { case (c, s) => s -> c.toSeq.map(_.map(_.toDouble)) }
+      val sums = withNearestIdxs(v.withColumn("vd", toDoubleArray(col("v"))), "vd", subDim,
+          mats, guarded = true)
+        .select(array((0 until m).map(s => col(s"_ix$s")): _*).as("_ix"),
+          posexplode(col("v")).as(Seq("p", "val")))
+        .withColumn("subspace", floor(col("p") / subDim).cast("int"))
+        .filter(col("subspace") < m)
+        .groupBy(col("subspace"),
+          (element_at(col("_ix"), col("subspace") + 1) + 1).as("cell"),
+          (col("p") % subDim).as("pos"))
+        .agg(sum(col("val")).as("s"), count(lit(1)).as("n"))
+        .as[(Int, Int, Int, Long, Long)].collect()
+      nAssigned = Array.fill(m, seeds.length)(0L)
+      sums.groupBy(r => (r._1, r._2)).foreach { case ((s, cell), rows) =>
+        // s div n (BIGINT) truncates toward zero — Long./ is identical;
+        // cells no row chose keep their centroid
+        cen(s)(cell - 1) = rows.sortBy(_._3).toSeq.map(r => r._4 / r._5)
+        nAssigned(s)(cell - 1) = rows.map(_._5).max
       }
     }
-    spark.createDataFrame(
-      cen.toSeq.zipWithIndex.map { case (c, i) => (i + 1, nAssigned(i), c) })
-      .toDF("cell", "n_assigned", "centroid")
+    spark.createDataFrame(for (s <- 0 until m; c <- seeds.indices)
+        yield (s, c + 1, nAssigned(s)(c), cen(s)(c)))
+      .toDF("subspace", "cell", "n_assigned", "centroid")
   }
 
   /** Fitted fixed-point centroids → the (cell, cvec: array<double>) shape
     * `ivfTopK`/`assignCells` consume. */
   def fitCentroidsForIvf(fit: DataFrame): DataFrame =
-    fit.select(col("cell"),
-      transform(col("centroid"), x => x.cast("double") / FixedPoint.toDouble).as("cvec"))
+    fit.select(col("cell"), fromFixedPoint(col("centroid")).as("cvec"))
+
+  private def fromFixedPoint(c: Column): Column =
+    transform(c, x => x.cast("double") / FixedPoint.toDouble)
 
   /**
    * IVF top-k: probe the `nProbe` nearest cells per query, brute-force only
@@ -351,10 +366,12 @@ object similarity {
 
   /**
    * Fit one k-means codebook per subspace: the embedding is cut into `m`
-   * contiguous blocks of `subDim` and each block gets its own `kmeansFit`
-   * (same content-keyed init, fixed Lloyd rounds, all-integer update —
-   * deterministic at any partitioning). Returns (subspace, cell, cvec:
-   * array<double>) — the codebook `pqEncode`/`pqTopK` consume.
+   * contiguous blocks of `subDim` and every block gets the `kmeansFit`
+   * fit of its slice (same content-keyed init, fixed Lloyd rounds,
+   * all-integer update — deterministic at any partitioning), all m in one
+   * `lloyd` loop: one count, one seed collect and one agg job per round,
+   * whatever m is. Returns (subspace, cell, cvec: array<double>) — the
+   * codebook `pqEncode`/`pqTopK` consume.
    *
    * Scale: codebooks are fit on a bounded sample (the `kmeansFit` contract,
    * `maxFitRows`-guarded); the result is m·k rows — driver-trivial,
@@ -365,24 +382,8 @@ object similarity {
                      maxFitRows: Long = 2000000L): DataFrame = {
     require(m > 0 && subDim > 0, s"need m > 0 and subDim > 0, got m=$m subDim=$subDim")
     requireDim(vectors, vecCol, m * subDim, "pqFitCodebooks")
-    // one guard count for all m fits — the input is the same every time
-    val nFit = vectors.count()
-    // the m fits are INDEPENDENT jobs over the same input — submit
-    // them from concurrent driver threads so each fit's small per-round
-    // jobs back-fill the executors the others leave idle (guide §2.6).
-    // Each fit is deterministic on its own slice; the union order is the
-    // subspace order, unchanged. `blocking` lets the global pool add a
-    // thread while a fit waits on its jobs instead of starving other users.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    (0 until m).map { s => Future { blocking {
-      val sub = vectors.select(col(idCol).as("id"),
-        slice(col(vecCol), s * subDim + 1, subDim).as("sv"))
-      fitCentroidsForIvf(kmeansFit(sub, "id", "sv", k, iters, maxFitRows,
-          preCountedRows = Some(nFit)))
-        .select(lit(s).as("subspace"), col("cell"), col("cvec"))
-    } } }.map(Await.result(_, Duration.Inf)).reduce(_ union _)
+    lloyd(vectors, idCol, vecCol, m, subDim, k, iters, maxFitRows)
+      .select(col("subspace"), col("cell"), fromFixedPoint(col("centroid")).as("cvec"))
   }
 
   /**
@@ -425,14 +426,9 @@ object similarity {
         .select(col("id"), lit(0).as("subspace"), lit(null).cast(cellType).as("code"))
     def cell(r: Row): Long = r.getAs[Number](1).longValue
     val sortedBySub = present.map(s => s -> bySub(s).sortBy(cell))
-    var df = v
-    sortedBySub.foreach { case (s, sorted) =>
-      df = withNearestIdx(
-        df.withColumn(s"_sv$s", slice(col("v"), s * subDim + 1, subDim)),
-        s"_sv$s", sorted.toSeq.map(_.getSeq[Double](2)),
-        guarded = false, s"_ix$s")
-        .drop(s"_sv$s")
-    }
+    val df = withNearestIdxs(v, "v", subDim,
+      sortedBySub.map { case (s, sorted) => s -> sorted.toSeq.map(_.getSeq[Double](2)) },
+      guarded = false)
     val codeStructs = sortedBySub.map { case (s, sorted) =>
       struct(lit(s).as("subspace"),
         element_at(typedLit(sorted.toSeq.map(cell)),
@@ -575,7 +571,7 @@ object similarity {
    * row per input vector: (id, cell, n_dups_smaller, kept) — audits want
    * the full record, callers filter on `kept`.
    *
-   * Scale: the cluster blocking is what makes semantic dedup possible at
+   * Scale: the cluster partition is what makes semantic dedup possible at
    * 10^10 vectors — pairwise cosine runs only within a cell, so cost is
    * Σ_c |cell_c|² instead of n². `k` must grow with n (the paper's layout:
    * k ≈ n / desired-cluster-size) — the `stage.pinned(cell)` width pin

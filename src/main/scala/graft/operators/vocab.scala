@@ -194,26 +194,24 @@ object vocab {
    * occurs at least `MinCount` times.
    *
    * Two execution paths, bit-identical (VocabSpec): when the histogram has
-   * at most `maxLocalHistWords` distinct words — vocabularies are
+   * at most `MaxLocalHistWords` distinct words — vocabularies are
    * catalog-sized, so this is the normal case even for a 10^12-turn corpus
    * — it is collected ONCE behind the guard and the merge loop runs
    * driver-local (a 1,000-merge induction is seconds, not 1,000 Spark jobs
-   * + materializations). `maxLocalHistWords` guards DRIVER HEAP, not just
+   * + materializations). `MaxLocalHistWords` guards DRIVER HEAP, not just
    * row count: the local trainer holds per-word symbol arrays plus
    * pair-count and pair→word index maps — roughly 0.5-1 KB of heap per
-   * distinct word — so the 1M default budgets ~1 GB of driver heap; raise
-   * it only on a driver sized for several GB of headroom.
+   * distinct word — so the 1M bound budgets ~1 GB of driver heap.
    * Larger histograms take the distributed loop: one
    * small Spark job per merge over the histogram, corpus-size-independent
    * but driver-latency-bound. BPE merges are sequentially dependent — the
    * loop itself cannot fan out; what scales is keeping it OFF the
    * transcript table (`wordHistogram` is the only corpus-proportional job).
    */
-  def learnMerges(spark: SparkSession, hist: DataFrame, nMerges: Int,
-                  maxLocalHistWords: Long = MaxLocalHistWords): DataFrame = {
+  def learnMerges(spark: SparkSession, hist: DataFrame, nMerges: Int): DataFrame = {
     import spark.implicits._
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    merges(spark, hist, nMerges, MinCount, localHist(hist, maxLocalHistWords))
+    merges(spark, hist, nMerges, MinCount, localHist(hist, MaxLocalHistWords))
       .toDF("merge_ord", "left", "right", "merged", "pair_count")
   }
 
@@ -243,7 +241,7 @@ object vocab {
                      rows: Option[Array[(String, Long)]]): Seq[(Int, String, String, String, Long)] =
     rows.fold(learnMergesLoop(spark, hist, nMerges, minCount))(learnMergesLocal(_, nMerges, minCount))
 
-  private def learnMergesLoop(spark: SparkSession, hist: DataFrame, nMerges: Int,
+  private[graft] def learnMergesLoop(spark: SparkSession, hist: DataFrame, nMerges: Int,
       minCount: Long): Seq[(Int, String, String, String, Long)] = {
     import spark.implicits._
     val toSym = udf((w: String) => initSymbols(w))

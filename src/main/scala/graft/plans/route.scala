@@ -9,10 +9,15 @@ import org.apache.spark.sql.types._
  * IVF/PQ literal argmax, the forced catalog broadcast, extension + repair).
  *
  * Contract of `local(ds, bound, name, keys)`:
- *  - ONE bounded probe, `limit(bound + 1).collect()`, never a separate
- *    `count()`. An input within the bound arrives complete in that one job
- *    and comes back as `Some(rows)`. An input past it costs bound + 1 rows
- *    on the driver, never an OOM, and gives `None`.
+ *  - ONE bounded collect, `limit(bound + 1).collect()`, never a separate
+ *    `count()`. Spark may run that collect as several jobs: its take scans
+ *    one partition, then up to 4x as many per further job, until it holds
+ *    bound + 1 rows or has read every partition. A 10,000-row
+ *    `localCheckpoint`ed frame took 1/2/3/4/5 jobs at 1/4/8/32/200
+ *    partitions; a cached one took 1 job at every count under AQE. An
+ *    input within the bound comes back complete as `Some(rows)`. An input
+ *    past it costs bound + 1 rows on the driver, never an OOM, and gives
+ *    `None`.
  *  - The `keys` columns must have a type in `ids`. The default is `Ids`:
  *    integral and string ids, the types whose Spark order has a driver
  *    twin (`lt`). The check reads the schema only, so a rejected type runs

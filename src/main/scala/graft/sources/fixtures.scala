@@ -20,15 +20,13 @@ import graft.model._
  */
 object fixtures {
 
-  final case class Config(
-      nConcepts: Int = 100,
-      nConvs: Int = 40,
-      maxTurns: Int = 8,
-      seed: Long = 42L,
-      hotFrac: Double = 0.01,   // 1% of entities ...
-      hotMass: Double = 0.30,   // ... own 30% of mentions (skew knob)
-      sharedLabelFrac: Double = 0.7, // concepts whose src/tgt share one exact label
-      branching: Int = 4)       // hierarchy fan-in
+  final case class Config(nConcepts: Int = 100, nConvs: Int = 40, seed: Long = 42L)
+
+  private val MaxTurns = 8
+  private val HotFrac = 0.01         // 1% of entities ...
+  private val HotMass = 0.30         // ... own 30% of mentions (skew)
+  private val SharedLabelFrac = 0.7  // concepts whose src/tgt share one exact label
+  private val Branching = 4          // hierarchy fan-in
 
   val tiny: Config = Config()
   def bench(nConvs: Int = 200000): Config = Config(nConcepts = 2000, nConvs = nConvs)
@@ -59,13 +57,13 @@ object fixtures {
   }
 
   /** Label variants of concept i on side `onto`. Sides share the base label
-    * for `sharedLabelFrac` of concepts; otherwise the tgt side only carries
+    * for `SharedLabelFrac` of concepts; otherwise the tgt side only carries
     * morphological variants (suffix/prefix tweaks) — this controls the
     * string-match vs scorer-path split. */
   def labelsFor(cfg: Config, i: Int, onto: String): Seq[String] = {
     val base = conceptName(cfg, i)
     val s = mix(cfg.seed, i.toLong * 7919 + (if (onto == "src") 1 else 2))
-    val shared = pick(mix(cfg.seed, i.toLong * 104729), 3, 1000) < (cfg.sharedLabelFrac * 1000).toInt
+    val shared = pick(mix(cfg.seed, i.toLong * 104729), 3, 1000) < (SharedLabelFrac * 1000).toInt
     val variants = scala.collection.mutable.ArrayBuffer[String]()
     if (onto == "src" || shared) variants += base
     if (onto == "src") {
@@ -92,14 +90,14 @@ object fixtures {
     }
   }
 
-  /** DAG edges: concept i's parent is i/branching (both sides share
-    * topology; roots at index 0..branching-1 have no parent). */
+  /** DAG edges: concept i's parent is i/Branching (both sides share
+    * topology; roots at index 0..Branching-1 have no parent). */
   def edges(spark: SparkSession, cfg: Config): Dataset[Edge] = {
     import spark.implicits._
     spark.range(cfg.nConcepts.toLong).flatMap { i0 =>
       val i = i0.toInt
-      if (i < cfg.branching) Seq.empty[Edge]
-      else Seq("src", "tgt").map(o => Edge(o, iri(o, i), iri(o, i / cfg.branching)))
+      if (i < Branching) Seq.empty[Edge]
+      else Seq("src", "tgt").map(o => Edge(o, iri(o, i), iri(o, i / Branching)))
     }
   }
 
@@ -126,8 +124,8 @@ object fixtures {
 
   /** Pick a concept index with the configured hot/cold skew. */
   def sampleConcept(cfg: Config, s: Long): Int = {
-    val nHot = math.max(1, (cfg.nConcepts * cfg.hotFrac).toInt)
-    if (pick(s, 41, 1000) < (cfg.hotMass * 1000).toInt) pick(s, 42, nHot)
+    val nHot = math.max(1, (cfg.nConcepts * HotFrac).toInt)
+    if (pick(s, 41, 1000) < (HotMass * 1000).toInt) pick(s, 42, nHot)
     else pick(s, 43, cfg.nConcepts)
   }
 
@@ -140,7 +138,7 @@ object fixtures {
     val baseTs = 1700000000000L // fixed epoch base (no Date.now — determinism)
     spark.range(cfg.nConvs.toLong).flatMap { c =>
       val convSeed = mix(cfg.seed, 0xC0FFEEL + c)
-      val nTurns = 2 + pick(convSeed, 1, cfg.maxTurns - 1)
+      val nTurns = 2 + pick(convSeed, 1, MaxTurns - 1)
       (0 until nTurns).map { t =>
         val ts = mix(convSeed, 100L + t)
         val role = Vector("user", "assistant", "tool")(t % 3)

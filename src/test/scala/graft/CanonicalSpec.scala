@@ -28,21 +28,21 @@ class CanonicalSpec extends SparkSuite {
       .toDF("entity1", "entity2")
     val local = canonical.connectedComponents(spark, eStr)
       .as[(String, String)].collect().toMap
-    val dist = canonical.connectedComponents(spark, eStr, maxLocalEdges = 0L)
+    val dist = canonical.connectedComponentsLoop(spark, canonical.undirected(eStr), 20)
       .as[(String, String)].collect().toMap
     assert(local == dist)
     val eLong = Seq((2L, 1L), (2L, 3L), (10L, 11L), (100L, 11L))
       .toDF("entity1", "entity2")
     val localL = canonical.connectedComponents(spark, eLong)
       .as[(Long, Long)].collect().toMap
-    val distL = canonical.connectedComponents(spark, eLong, maxLocalEdges = 0L)
+    val distL = canonical.connectedComponentsLoop(spark, canonical.undirected(eLong), 20)
       .as[(Long, Long)].collect().toMap
     assert(localL == distL)
     // doubles are outside the route's id whitelist: the loop decides both
     val eDbl = Seq((2.0, 1.0), (2.0, 3.0), (10.0, 11.0)).toDF("entity1", "entity2")
     val localD = canonical.connectedComponents(spark, eDbl)
       .as[(Double, Double)].collect().toMap
-    val distD = canonical.connectedComponents(spark, eDbl, maxLocalEdges = 0L)
+    val distD = canonical.connectedComponentsLoop(spark, canonical.undirected(eDbl), 20)
       .as[(Double, Double)].collect().toMap
     assert(localD == distD && localD(3.0) == 1.0 && localD(11.0) == 10.0)
   }

@@ -362,6 +362,36 @@ class DedupSimSpec extends SparkSuite {
     assert(run(1) == run(5))
   }
 
+  test("pqFitCodebooks at m=3 ≡ kmeansFit over each subspace's slice (ties, a cell emptied after round 1)") {
+    import org.apache.spark.sql.functions.{col, slice}
+    // seeds are ids 6, 7, 4 (cells 1, 2, 3: smallest md5(id)). Subspace 0
+    // puts seed 4 between the other two cells, whose heavy members pull
+    // their centroids next to it after round 1: cell 3 empties in round 2
+    // and keeps its centroid. Subspace 1 has exact cosine ties ((1, 1)
+    // between (1, 0) and (0, 1); the zero vector, every sim 0.0 under the
+    // guard). Subspace 2 mirrors subspace 0.
+    val vecs = Seq(
+      6L -> Seq(0.6947f, 0.7193f, 1.0f, 0.0f, 0.7193f, 0.6947f),
+      1L -> Seq(6.7043f, 7.4198f, 1.0f, 1.0f, 7.4198f, 6.7043f),
+      4L -> Seq(0.6428f, 0.766f, -1.0f, 0.0f, 0.766f, 0.6428f),
+      2L -> Seq(0.5606f, 0.8281f, 0.0f, 0.0f, 0.8281f, 0.5606f),
+      8L -> Seq(5.5775f, 8.3001f, -1.0f, 1.0f, 8.3001f, 5.5775f),
+      7L -> Seq(0.4695f, 0.8829f, 0.0f, 1.0f, 0.8829f, 0.4695f)
+    ).toDF("vid", "vec")
+    def sub(s: Int) = vecs.select(col("vid"), slice(col("vec"), 2 * s + 1, 2).as("sv"))
+    def fit(s: Int, iters: Int) = similarity.kmeansFit(sub(s), "vid", "sv", 3, iters)
+    val pq = similarity.pqFitCodebooks(vecs, "vid", "vec", 3, 2, 3, 3)
+      .as[(Int, Int, Seq[Double])].collect().toList
+    val each = (0 until 3).toList.flatMap(s => similarity.fitCentroidsForIvf(fit(s, 3))
+      .as[(Int, Seq[Double])].collect().map { case (c, v) => (s, c, v) })
+    assert(pq == each, s"shared loop diverges:\npq  =$pq\neach=$each")
+    // the fixture exercises the empty-cell rule: every cell is chosen in
+    // round 1, cell 3 of subspace 0 by no row afterwards
+    def assigned(iters: Int) = fit(0, iters).select("cell", "n_assigned")
+      .as[(Int, Long)].collect().toMap
+    assert(assigned(1).values.forall(_ > 0L) && assigned(3)(3) == 0L)
+  }
+
   test("embeddingLshPairs: identical vectors always collide; every pair clears the exact threshold") {
     val vs = Seq(
       (1L, Seq(1.0f, 2.0f, 3.0f, 4.0f)),

@@ -72,14 +72,14 @@ class IriVecHierarchySpec extends SparkSuite {
     for (longest <- Seq(true, false)) {
       val local = hierarchy.depth(spark, e, longest)
         .as[(String, Long)].collect().toMap
-      val dist = hierarchy.depth(spark, e, longest, maxLocalEdges = 0L)
+      val dist = hierarchy.depthLoop(e, longest)
         .as[(String, Long)].collect().toMap
       assert(local == dist, s"longest=$longest")
     }
     // doubles are outside the route's id whitelist: the loop decides both
     val eDbl = Seq((1.0, 0.0), (2.0, 1.0), (2.0, 0.0)).toDF("child_iri", "parent_iri")
     val localD = hierarchy.depthMax(spark, eDbl).as[(Double, Long)].collect().toMap
-    val distD = hierarchy.depth(spark, eDbl, longest = true, maxLocalEdges = 0L)
+    val distD = hierarchy.depthLoop(eDbl, longest = true)
       .as[(Double, Long)].collect().toMap
     assert(localD == distD && localD == Map(0.0 -> 0L, 1.0 -> 1L, 2.0 -> 2L))
     // cycle: Kahn cannot drain -> local path declines, distributed loop

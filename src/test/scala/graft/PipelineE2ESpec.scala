@@ -242,7 +242,7 @@ class PipelineE2ESpec extends SparkSuite {
     intercept[IllegalArgumentException](Pipeline.tokenizerFor(spark, Pipeline.Params()))
   }
 
-  test("reliable materialization: the full pipeline (iterative loops included) is mode-invariant") {
+  test("reliable materialization: Pipeline.run's triples are mode-invariant") {
     // every stage.materialize site run takes must produce identical triples
     // under the cluster-safe checkpoint-dir policy as under localCheckpoint.
     // On the fixture, extension and repair take the driver route; the

@@ -56,14 +56,14 @@ class VocabSpec extends SparkSuite {
 
   test("driver-local merge loop ≡ distributed loop (incl. early stop)") {
     // a histogram with ties, repeats-within-word, multi-char growth and an
-    // exhaustion point; maxLocalHistWords = -1 forces the distributed path
+    // exhaustion point; learnMergesLoop is the distributed path
     val hist = (classicHist ++ Seq(
       ("slowest", 4L), ("lowly", 3L), ("aaaa", 2L), ("banana", 2L), ("q", 9L)))
       .toDF("word", "cnt")
     val local = vocab.learnMerges(spark, hist, 40)
       .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toList
-    val dist = vocab.learnMerges(spark, hist, 40, maxLocalHistWords = -1L)
-      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toList
+    val dist = vocab.learnMergesLoop(spark, hist, 40, vocab.MinCount)
+      .sortBy(_._1).toList
     assert(local == dist, s"paths diverge:\nlocal=$local\ndist =$dist")
     assert(local.nonEmpty && local.size < 40) // early stop exercised
   }
