@@ -39,12 +39,15 @@ object text {
   /** Order-preserving label-list normalization: normalize each, drop empties,
     * dedup keeping first occurrence (matches the reference's
     * dict.fromkeys-based uniqify, general_utils.py:33-35). Spark's
-    * array_distinct is order-preserving, matching those semantics. */
+    * array_distinct is order-preserving, matching those semantics. Both
+    * twins drop a null label (a null `l =!= ""` fails the filter) and give
+    * no label for a null list (the Column twin's null explodes to no
+    * rows). */
   def normalizeLabelsCol(labels: Column): Column =
     array_distinct(filter(transform(labels, l => normalizeCol(l)), l => l =!= ""))
 
   def normalizeLabels(labels: Seq[String]): Seq[String] =
-    labels.map(normalize).filter(_.nonEmpty).distinct
+    Option(labels).toSeq.flatten.filter(_ != null).map(normalize).filter(_.nonEmpty).distinct
 
   // -------------------------------------------------------------------------
   // Tokenization

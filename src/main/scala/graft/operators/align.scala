@@ -13,10 +13,12 @@ import org.apache.spark.sql.expressions.Window
 object align {
 
   /** One alignment direction, the one loop every mapping mode runs
-    * (onto_map.py:55-66; the modes swap only the scorer, run_bertmap.py:
-    * 243-367): the from-side postings query the to-side postings for the
-    * top-`limit` IDF candidates, `hop` scores the candidate class pairs
-    * (from_id, to_id) into (from_id, to_id, score), n-best per from-class.
+    * (onto_map.py:55-66; the reference's modes swap only the scorer,
+    * run_bertmap.py:243-367): the from-side postings query the to-side
+    * postings for the top-`limit` IDF candidates, `hop` scores the
+    * candidate class pairs (from_id, to_id) into (from_id, to_id, score),
+    * n-best per from-class. `Pipeline.rawMappings` passes the classifier
+    * hop; q49 and q50 pass `embeds.hop` and `nes.hop`.
     *
     * `d` is the to-side class count: the IDF `D` and the gate of the
     * forced postings broadcast (`route.broadcastCatalog`). Without the

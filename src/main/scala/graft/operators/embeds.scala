@@ -5,17 +5,18 @@ import org.apache.spark.sql.functions._
 import graft.functions.vecagg
 
 /**
- * Embeds-mode alignment — the reference's `bertembeds` baseline shipped as
- * a first-class mapping mode (/root/reference/bertmap/map/
- * bert_embeds_map.py:49-136, selected at run_bertmap.py:293-367):
- * class embedding = mean of per-label sentence embeddings
- * (bert_static.py:99-109), candidate selection via the token inverted
- * index, mapping score = cosine of the pooled class vectors, n-best per
- * from-class, both directions combined (`Pipeline.rawMappings`). The
- * dataflow is the shared `align.direction` — only the scorer hop differs
- * (a broadcast-free vector cosine instead of the pair cross-encoder), so at
- * scale it has the same plan shape: broadcast token join, partial
- * aggregation, window top-k.
+ * Embeds-mode scorer hop — the reference's `bertembeds` baseline
+ * (/root/reference/bertmap/map/bert_embeds_map.py:49-136, one of the modes
+ * run_bertmap.py:293-367 dispatches on): class embedding = mean of
+ * per-label sentence embeddings (bert_static.py:99-109), candidate
+ * selection via the token inverted index, mapping score = cosine of the
+ * pooled class vectors, n-best per from-class. The dataflow is the shared
+ * `align.direction` — only the scorer hop differs (a broadcast-free vector
+ * cosine instead of the pair cross-encoder), so at scale it has the same
+ * plan shape: broadcast token join, partial aggregation, window top-k. The
+ * flagship (`Pipeline.rawMappings`) runs the classifier hop only; q49
+ * feeds this hop stored class vectors, and the specs feed it
+ * `classEmbeddings`.
  */
 object embeds {
 

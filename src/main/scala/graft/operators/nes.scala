@@ -5,20 +5,21 @@ import org.apache.spark.sql.functions._
 import graft.plans.stage
 
 /**
- * NES-mode alignment — the reference's third mapping mode (`nes`,
- * /root/reference/bertmap/map/nes_map.py:36-77, dispatched at
- * run_bertmap.py:293-367): no model at all, the mapping score is the max
- * normalized-edit-similarity (blended with token Jaccard here, exactly
- * like the classifier stand-in's kernel) over the label cross-pairs of a
- * candidate class pair.
+ * NES-mode scorer hop — the reference's `nes` mapping mode
+ * (/root/reference/bertmap/map/nes_map.py:36-77, one of the modes
+ * run_bertmap.py:293-367 dispatches on): no model at all, the mapping
+ * score is the max normalized-edit-similarity (blended with token Jaccard
+ * here, exactly like the classifier stand-in's kernel) over the label
+ * cross-pairs of a candidate class pair. The flagship (`Pipeline.rawMappings`)
+ * runs the classifier hop only; this hop is called by q50 and the specs.
  *
  * Spark shape: the shared `align.direction` with the scorer hop
  * `score.pairScoreCol` — a pure Column expression, so the ENTIRE
  * direction (candidates → pairs → score → pooling → n-best) is one
  * declarative plan inside whole-stage codegen with no mapPartitions
  * barrier. This is the third point on the scorer-pluggability axis:
- * classifier (batched kernel), embeds (vector cosine), nes (codegen'd
- * lexical).
+ * classifier (row-by-row mapPartitions kernel), embeds (vector cosine),
+ * nes (codegen'd lexical).
  *
  * The default kernel is the repo's blended lexical score (0.5·Jaccard +
  * 0.5·NES — the same kernel as the classifier stand-in, so the two modes

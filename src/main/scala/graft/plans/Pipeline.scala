@@ -30,10 +30,6 @@ import graft.sources.fixtures
 object Pipeline {
 
   final case class Params(
-      mode: String = "classifier",  // classifier | nes | embeds — the
-                                    // reference's three mapping modes
-                                    // (run_bertmap.py:293-367 dispatch)
-      candidateLimit: Int = 25,     // config.json:41-47 uses {25..200}
       maxDictEntities: Long = route.MaxCatalog, // guard on the driver-side catalog
                                     // collect feeding the broadcast trie —
                                     // larger catalogs must use the
@@ -44,20 +40,22 @@ object Pipeline {
                                     // vocab, onto_index.py:38-47); unset,
                                     // rawMappings induces one from the
                                     // labels it aligns
-      linker: String = "auto",      // trie | join | auto — mention-detect
+      linker: String = "auto") {    // trie | join | auto — mention-detect
                                     // kernel: collected broadcast trie
                                     // (fast, bounded by maxDictEntities) vs
                                     // distributed n-gram dictionary join
                                     // (no driver collect, any catalog
                                     // size); auto routes on the count
-      scorer: score.ScorerParams = score.ScorerParams()) {
-    require(Set("classifier", "nes", "embeds")(mode),
-      s"unknown mapping mode '$mode' (classifier | nes | embeds, run_bertmap.py:293-367)")
     require(Set("auto", "trie", "join")(linker), s"linker must be auto|trie|join, got $linker")
 
     // Fixed settings: like BERTMap's config.json, one value each. They are
     // members rather than local constants because perfbench's traced copy
-    // of `run` reads them as `p.kappa` and so on.
+    // of `run` reads them as `p.candidateLimit`, `p.scorer`, `p.kappa` and
+    // so on.
+    val candidateLimit: Int = 25    // config.json:41-47 uses {25..200}
+    val scorer: score.ScorerParams = score.ScorerParams() // 0.5·Jaccard +
+                                    // 0.5·NES, the classifier stand-in's
+                                    // weights (score.kernel)
     val nbest: Int = 1              // config.json:49
     val pooling: String = "max"     // mean|max (config.json uses mean; max
                                     // suits the lexical stand-in scorer,
@@ -98,36 +96,17 @@ object Pipeline {
       : DataFrame =
     index.postingsFromText(labels, "id", "label", tokenCut, tok)
 
-  /** Both directions + union (onto_map.py:146) for every mapping mode,
-    * like the reference's run_bertmap mode switch (run_bertmap.py:243-367):
-    * the modes share `align.direction` and differ only in the scorer hop —
-    * `classifier` (fused string-match + batched-kernel scorer, the
-    * default), `nes` (codegen'd lexical Column scorer), `embeds`
-    * (class-embedding cosine). `srcLabels`/`tgtLabels` are (id, label)
-    * long form (`sideLabels`). The index tokenizes with `p.wordpieceVocab`,
-    * or, unset, with the vocab induced from both sides' label words
+  /** Both directions + union (onto_map.py:146) of the classifier mapping
+    * mode, the reference's default (run_bertmap.py:293-367): per direction
+    * `align.direction` with the classifier hop, the fused string-match +
+    * lexical scorer (`score.scorePooledWithStringMatch`, clamped to
+    * [0, 1]). `srcLabels`/`tgtLabels` are (id, label) long form
+    * (`sideLabels`). The index tokenizes with `p.wordpieceVocab`, or,
+    * unset, with the vocab induced from both sides' label words
     * (`labelVocab`). Returns both directions as one lazy plan, so Spark
     * schedules the independent direction DAGs itself. */
   def rawMappings(spark: SparkSession, srcLabels: DataFrame, tgtLabels: DataFrame,
                   p: Params): DataFrame = {
-    type Hop = (DataFrame, DataFrame) => DataFrame => DataFrame
-    // per mode: what each side hands the hop, and the hop over (from, to)
-    val (srcIn, tgtIn, hop): (DataFrame, DataFrame, Hop) = p.mode match {
-      case "classifier" => (srcLabels, tgtLabels, (f, t) => cands =>
-        // fused string-match + scoring (see scorePooledWithStringMatch: same
-        // semantics as the stringMatchSplit anti-join path, half the plan;
-        // the split path remains the choice for expensive neural scorers)
-        score.clamp(score.scorePooledWithStringMatch(spark,
-          align.labelPairs(cands, f, t), p.pooling, p.scorer)))
-      case "nes" => (srcLabels, tgtLabels, (f, t) => nes.hop(f, t, p.scorer))
-      case "embeds" =>
-        // stage.materialize, not cache: the class-vector tables are read by
-        // both directions then never again — cache() would pin them in the
-        // session CacheManager, checkpoint blocks release on GC
-        (embeds.classEmbeddings(spark, srcLabels).materialize,
-          embeds.classEmbeddings(spark, tgtLabels).materialize,
-          (f, t) => embeds.hop(f, t))
-    }
     val tok = tokenizerFor(spark, p.copy(wordpieceVocab = p.wordpieceVocab.orElse(
       Some(labelVocab(spark, srcLabels.unionByName(tgtLabels), VocabMerges)))))
     val srcPost = sidePostings(srcLabels, p.tokenCut, tok)
@@ -136,11 +115,18 @@ object Pipeline {
     def direction(from: DataFrame, to: DataFrame, fromPost: DataFrame,
                   toPost: DataFrame, d: Long, fromIsSrc: Boolean) =
       align.orient(
-        align.direction(fromPost, toPost, d, p.candidateLimit, p.nbest)(hop(from, to)),
+        align.direction(fromPost, toPost, d, p.candidateLimit, p.nbest) { cands =>
+          // fused string-match + scoring (see scorePooledWithStringMatch:
+          // same semantics as the stringMatchSplit anti-join path, half the
+          // plan; the split path remains the choice for expensive neural
+          // scorers)
+          score.clamp(score.scorePooledWithStringMatch(spark,
+            align.labelPairs(cands, from, to), p.pooling, p.scorer))
+        },
         fromIsSrc)
     align.combine(
-      direction(srcIn, tgtIn, srcPost, tgtPost, dTgt, fromIsSrc = true),
-      direction(tgtIn, srcIn, tgtPost, srcPost, dSrc, fromIsSrc = false))
+      direction(srcLabels, tgtLabels, srcPost, tgtPost, dTgt, fromIsSrc = true),
+      direction(tgtLabels, srcLabels, tgtPost, srcPost, dSrc, fromIsSrc = false))
   }
 
   /** Full run over in-memory inputs; returns (mappings, triples).

@@ -89,17 +89,20 @@ class MentionsSpec extends SparkSuite {
   test("trie and join linkers agree on non-ASCII turn text (Unicode lowercasing)") {
     // U+212A KELVIN SIGN lowercases to "k", U+0130 to "i" + U+0307: the
     // dictionary side and the join linker lowercase all of Unicode, so the
-    // trie's turn scanner must too
+    // trie's turn scanner must too. A null label list and a null label are
+    // no surface in either linker.
     val cls = Seq(
       ClassText("src", "src:K", 0L, Seq("kelvin scale")),
-      ClassText("src", "src:I", 1L, Seq("\u0130stanbul")))
+      ClassText("src", "src:I", 1L, Seq("\u0130stanbul")),
+      ClassText("src", "src:N", 2L, null),
+      ClassText("src", "src:E", 3L, Seq(null, "kelvin scale")))
     val turns = Seq(
       Turn("c1", 0, "user", "the \u212Aelvin scale in \u0130stanbul", null,
         new Timestamp(0L))).toDS()
     val trie = mentions.detect(spark, turns, cls).collect().toSet
     val joined = mentions.detectJoin(spark, turns, cls.toDS()).collect().toSet
     assert(trie == joined, s"trie=$trie join=$joined")
-    assert(trie.map(_.class_iri) == Set("src:K", "src:I"))
+    assert(trie.map(_.class_iri) == Set("src:K", "src:I", "src:E"))
   }
 
   test("stabilize: output columns are exactly the key plus mention_ord") {

@@ -58,47 +58,45 @@ class PipelineE2ESpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("mode dispatch: nes mode equals classifier mode (same lexical kernel), embeds mode aligns") {
+  test("nes hop over both directions equals rawMappings; embeds hop aligns") {
+    import graft.operators.{embeds, nes}
     val src = Pipeline.sideLabels(classes, "src")
     val tgt = Pipeline.sideLabels(classes, "tgt")
+    // the vocab rawMappings induces when Params sets none
+    val vocab = Pipeline.induceCatalogVocab(spark, classes)
     // every mode leaves nothing in the CacheManager once its directions are done
-    def cacheReleased(mode: String): Unit =
-      assert(spark.sharedState.cacheManager.isEmpty, s"$mode left data in the CacheManager")
-    def maps(mode: String) = {
+    def pairs(mode: String, df: => org.apache.spark.sql.DataFrame) = {
       spark.catalog.clearCache()
-      val m = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = mode))
-        .select("entity1", "entity2").as[(String, String)].collect().toSet
-      cacheReleased(mode)
+      val m = df.select("entity1", "entity2").as[(String, String)].collect().toSet
+      assert(spark.sharedState.cacheManager.isEmpty, s"$mode left data in the CacheManager")
       m
     }
-    // the classifier stand-in IS the lexical kernel, so nes mode must
+    // the classifier stand-in IS the lexical kernel, so the nes hop must
     // produce the identical mapping set
-    assert(maps("nes") == maps("classifier"))
-    // embeds mode is a different scorer (hashed-BoW cosine) — assert it
+    val sp = Pipeline.Params().scorer
+    assert(pairs("nes", specAlign.bothDirections(spark, src, tgt, vocab)((f, t) => nes.hop(f, t, sp))) ==
+      pairs("classifier", Pipeline.rawMappings(spark, src, tgt, Pipeline.Params())))
+    // the embeds hop is a different scorer (hashed-BoW cosine) — assert it
     // produces a usable alignment rather than identical output
     val ref = refs.filter(!$"is_ignored")
       .select("entity1", "entity2").as[(String, String)].collect().toSet
-    spark.catalog.clearCache()
-    val emb = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "embeds"))
-    val embBest = graft.operators.align.atThreshold(emb, 0.5)
-      .select("entity1", "entity2").as[(String, String)].collect().toSet
-    cacheReleased("embeds")
+    val embBest = pairs("embeds", graft.operators.align.atThreshold(
+      specAlign.bothDirections(spark, src, tgt, vocab)((f, t) =>
+        embeds.hop(embeds.classEmbeddings(spark, f), embeds.classEmbeddings(spark, t))), 0.5))
     val tp = embBest.intersect(ref).size.toDouble
-    info(s"embeds mode: ${embBest.size} mappings, P=${tp / embBest.size}, R=${tp / ref.size}")
+    info(s"embeds hop: ${embBest.size} mappings, P=${tp / embBest.size}, R=${tp / ref.size}")
     assert(embBest.nonEmpty && tp / embBest.size >= 0.5,
-      s"embeds-mode precision ${tp / embBest.size} unusably low")
-    intercept[IllegalArgumentException](
-      Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "bogus")))
+      s"embeds-hop precision ${tp / embBest.size} unusably low")
     // Params checks its own choices when it is built, before any job runs
-    intercept[IllegalArgumentException](Pipeline.Params(mode = "bogus"))
     intercept[IllegalArgumentException](Pipeline.Params(linker = "bogus"))
   }
 
-  test("nes mode scores with Params.scorer") {
+  test("nes hop scores with the ScorerParams it is given") {
     val src = Pipeline.sideLabels(classes, "src")
     val tgt = Pipeline.sideLabels(classes, "tgt")
     val sp = graft.operators.score.ScorerParams(jaccardWeight = 0.0, editWeight = 1.0)
-    val rows = Pipeline.rawMappings(spark, src, tgt, Pipeline.Params(mode = "nes", scorer = sp))
+    val rows = specAlign.bothDirections(spark, src, tgt, Pipeline.induceCatalogVocab(spark, classes))(
+        (f, t) => graft.operators.nes.hop(f, t, sp))
       .as[(String, String, Double)].collect()
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, String)].collect().groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
@@ -134,9 +132,15 @@ class PipelineE2ESpec extends SparkSuite {
 
   test("linker=join fallback: identical triples to the broadcast-trie kernel") {
     // the graceful-degradation path for catalogs past maxDictEntities: the
-    // distributed n-gram dictionary join must be a drop-in replacement
+    // distributed n-gram dictionary join must be a drop-in replacement,
+    // also for a null label list and a null label, which neither linker
+    // takes as a surface
+    val src0 = classes.filter(_.onto == "src").head()
+    val withNulls = classes.union(Seq(
+      graft.model.ClassText("src", "src:NullLabels", 1000000L, null),
+      graft.model.ClassText("src", "src:NullLabel", 1000001L, null +: src0.labels)).toDS())
     def trips(p: Pipeline.Params) = {
-      val (_, t) = Pipeline.run(spark, turns, classes, edges, p)
+      val (_, t) = Pipeline.run(spark, turns, withNulls, edges, p)
       t.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
     }
     val viaTrie = trips(Pipeline.Params(linker = "trie"))

@@ -73,8 +73,8 @@ class ScoreAlignSpec extends SparkSuite {
     assert(align.atThreshold(a, 0.5).count() == 1)
   }
 
-  test("embeds mode via rawMappings: class-embedding mean + IDF candidates + cosine") {
-    import graft.plans.Pipeline
+  test("embeds hop, both directions: class-embedding mean + IDF candidates + cosine") {
+    import graft.operators.embeds
     // src class s1 and tgt class t1 share a label text -> cosine 1.0 top
     val src = Seq(("s1", "acute heart failure"), ("s1", "cardiac failure"),
       ("s2", "kidney stone")).toDF("id", "label")
@@ -83,8 +83,9 @@ class ScoreAlignSpec extends SparkSuite {
     // a vocab of every label word: the index tokenizes whole words
     val words = src.union(tgt).select("label").as[String].collect()
       .flatMap(graft.functions.text.wordTokens).toSet
-    val p = Pipeline.Params(mode = "embeds", candidateLimit = 5, wordpieceVocab = Some(words))
-    val out = align.atThreshold(Pipeline.rawMappings(spark, src, tgt, p), 0.1)
+    val both = specAlign.bothDirections(spark, src, tgt, words, limit = 5)((f, t) =>
+      embeds.hop(embeds.classEmbeddings(spark, f), embeds.classEmbeddings(spark, t)))
+    val out = align.atThreshold(both, 0.1)
       .select("entity1", "entity2", "value").as[(String, String, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(out.contains(("s1", "t1")))

@@ -32,6 +32,13 @@ class TextSpec extends SparkSuite {
       assert(text.normalize(s) == n)
       assert(text.wordTokens(s) == w)
       assert(w == Seq("title", "index"))
+      // a null label is dropped and a null list is empty in both twins (the
+      // Column twin's null array explodes to no rows)
+      val lists = Seq(Seq("B_x", null, "b x", ""), null)
+      val ls = lists.toDF("l").select(text.normalizeLabelsCol(col("l")))
+        .as[Seq[String]].collect().toSeq.map(l => Option(l).getOrElse(Seq.empty))
+      assert(ls == lists.map(text.normalizeLabels))
+      assert(ls == Seq(Seq("b x"), Seq.empty))
     } finally Locale.setDefault(saved)
   }
 
